@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{DriverMemo, IndexStore}
+
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
   * Maps the reference's data model (products.csv / reviews.csv /
@@ -12,39 +14,25 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Warm-serving registry — the engine's analog of the reference's
-    * cached resources (app.py:63-102 `st.cache_resource`/`st.cache_data`
+  /** Warm serving — the engine's analog of the reference's cached
+    * resources (app.py:63-102 `st.cache_resource`/`st.cache_data`
     * keep the matrices and frames resident between interactions): a
     * long-lived serving session calls [[warm]] once, and every
     * operator that reads a warmed (dir, table) pair — all of them go
     * through [[table]] — plans an InMemoryTableScan instead of a file
-    * scan, so repeat queries never touch storage. Entries are
-    * per-session; sessions that stopped are evicted lazily.
+    * scan, so repeat queries never touch storage. The warmed frames
+    * are pinned [[DriverMemo]] entries.
     */
-  private val warmed = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Persist + materialize `names` under (spark, dir); idempotent. */
-  def warm(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
-    val it = warmed.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
+  def warm(spark: SparkSession, dir: String, names: Seq[String]): Unit =
     names.foreach { n =>
-      warmed.computeIfAbsent((spark, dir, n), { _ =>
-        val df = spark.read.parquet(s"$dir/$n.parquet").persist()
-        df.count() // materialize now: serving latency should not pay the first-touch build
-        df
-      })
+      val path = s"$dir/$n.parquet"
+      DriverMemo.pinned(spark, s"table|$path", IndexStore.mtime(spark, path))(
+        spark.read.parquet(path))
+        .count() // materialize now: serving latency should not pay the first-touch build
     }
-  }
 
-  /** Unpersist and drop every warmed table of this session. */
-  def cool(spark: SparkSession): Unit = {
-    val it = warmed.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(); it.remove() }
-    }
-  }
+  /** Unpersist and drop every table handle of this session. */
+  def cool(spark: SparkSession): Unit = DriverMemo.invalidate(spark, "table|")
 
   /** Memoized UNCACHED handles (guide §1.2 / §7.3 — driver-side work):
     * every `spark.read.parquet` pays DataSource resolution (file
@@ -54,37 +42,14 @@ object Tables {
     * 13-family eval's serving loop alone. The memo returns the SAME
     * lazy plan (no persist — every action still scans parquet, so this
     * is metadata reuse, not result caching; the production analog is a
-    * catalog table resolved once per session). Staleness: the key
-    * carries the table directory's mtime (one getFileStatus RPC), so a
-    * rewritten table (spec fixtures, regenerated corpora) maps to a
-    * new entry and an in-place rewrite can never serve a stale file
-    * list.
+    * catalog table resolved once per session), or the warmed frame.
+    * The stamp is the table directory's mtime (one getFileStatus RPC),
+    * so a rewritten table can never serve a stale file list.
     */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val hit = warmed.get((spark, dir, name))
-    if (hit != null) hit
-    else {
-      val it = resolved.keySet.iterator()
-      while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-      val path = s"$dir/$name.parquet"
-      val mtime =
-        try {
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .getFileStatus(p).getModificationTime
-        } catch { case _: java.io.IOException => -1L }
-      val key = (spark, path, mtime)
-      val cached = resolved.get(key)
-      if (cached != null) cached
-      else {
-        val df = spark.read.parquet(path)
-        val raced = resolved.putIfAbsent(key, df)
-        if (raced != null) raced else df
-      }
-    }
+    val path = s"$dir/$name.parquet"
+    DriverMemo.memo(spark, s"table|$path", IndexStore.mtime(spark, path))(
+      spark.read.parquet(path))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")

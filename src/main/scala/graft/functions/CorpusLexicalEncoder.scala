@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.TextRetrieval
-import graft.sources.IndexStore
+import graft.sources.{DriverMemo, IndexStore}
 
 /** A REAL text→embedding encoder learned from the corpus itself — the
   * working stand-in for the reference's sentence-transformer call
@@ -83,6 +83,10 @@ object CorpusLexicalEncoder {
     IndexStore.open(spark, path)
   }
 
+  /** Build-once artifact path of the reference-corpus lexicon. */
+  def referenceLexiconPath(spark: SparkSession, npyPath: String): String =
+    IndexStore.indexPath(spark, "lexenc-ref", npyPath, "v1")
+
   /** The REFERENCE-corpus lexicon: reviews.csv's combined_text rows
     * (file-order ids — [[graft.sources.Sources.readCsvRowIndexed]])
     * paired positionally with review_embeddings.npy rows, exactly the
@@ -97,7 +101,7 @@ object CorpusLexicalEncoder {
   def ensureReferenceLexicon(spark: SparkSession, csvPath: String,
                              npyPath: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = IndexStore.indexPath(spark, "lexenc-ref", npyPath, "v1")
+    val path = referenceLexiconPath(spark, npyPath)
     if (!IndexStore.isComplete(spark, path))
       IndexStore.publish(spark, path) { staging =>
         val schema = StructType(Seq("id", "asins", "brand", "categories",
@@ -148,7 +152,9 @@ object CorpusLexicalEncoder {
   *
   * The vocabulary is loaded ONCE per (session, corpus) and memoized:
   * top `maxVocab` terms by df (default 65536 — vocab is bounded by
-  * construction, so driver memory is too).
+  * construction, so driver memory is too). The memo entry is stamped
+  * with the lexicon's fingerprinted path and `maxVocab`, so rewriting
+  * the corpus or changing the bound replaces the vocabulary.
   */
 class CorpusLexicalQueryEncoder extends QueryEncoder {
 
@@ -167,34 +173,32 @@ class CorpusLexicalQueryEncoder extends QueryEncoder {
 object CorpusLexicalQueryEncoder {
   import CorpusLexicalEncoder._
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[String, Array[Float]]]()
+  private def maxVocab(spark: SparkSession): Int =
+    spark.conf.getOption(VocabKey).map(_.toInt).getOrElse(65536)
+
+  private def topTerms(lexicon: DataFrame, maxVocab: Int): Map[String, Array[Float]] =
+    lexicon.orderBy(col("df").desc, col("term"))
+      .limit(maxVocab)
+      .collect()
+      .map(r => r.getString(0) -> r.getSeq[Float](2).toArray)
+      .toMap
 
   private[graft] def vocabulary(spark: SparkSession,
-                                dir: String): Map[String, Array[Float]] =
-    cache.computeIfAbsent((spark, dir), { _ =>
-      val maxVocab = spark.conf.getOption(VocabKey).map(_.toInt).getOrElse(65536)
-      ensureLexicon(spark, dir)
-        .orderBy(col("df").desc, col("term"))
-        .limit(maxVocab)
-        .collect()
-        .map(r => r.getString(0) -> r.getSeq[Float](2).toArray)
-        .toMap
-    })
+                                dir: String): Map[String, Array[Float]] = {
+    val n = maxVocab(spark)
+    DriverMemo.memo(spark, s"vocab|$dir", (lexiconPath(spark, dir), n))(
+      topTerms(ensureLexicon(spark, dir), n))
+  }
 
   /** The reference-corpus vocabulary, loaded once per (session, npy)
     * from the [[CorpusLexicalEncoder.ensureReferenceLexicon]] artifact
     * — same top-`maxVocab`-by-df bound as the parquet-corpus path.
     */
   private[graft] def referenceVocabulary(spark: SparkSession, csvPath: String,
-                                         npyPath: String): Map[String, Array[Float]] =
-    cache.computeIfAbsent((spark, s"ref|$csvPath|$npyPath"), { _ =>
-      val maxVocab = spark.conf.getOption(VocabKey).map(_.toInt).getOrElse(65536)
-      ensureReferenceLexicon(spark, csvPath, npyPath)
-        .orderBy(col("df").desc, col("term"))
-        .limit(maxVocab)
-        .collect()
-        .map(r => r.getString(0) -> r.getSeq[Float](2).toArray)
-        .toMap
-    })
+                                         npyPath: String): Map[String, Array[Float]] = {
+    val n = maxVocab(spark)
+    DriverMemo.memo(spark, s"vocab|ref|$csvPath|$npyPath",
+        (referenceLexiconPath(spark, npyPath), n))(
+      topTerms(ensureReferenceLexicon(spark, csvPath, npyPath), n))
+  }
 }

@@ -93,30 +93,37 @@ object OnnxQueryEncoder {
 
   private[functions] val tokenRe = "[a-z0-9_]+".r
 
-  // process-wide memo — encode() is a per-query driver call
+  // process-wide memo — encode() is a per-query driver call. Get-then-
+  // putIfAbsent: the model parse must not run under the map's bin lock
   private val memo = new java.util.concurrent.ConcurrentHashMap[
     (String, String), (OnnxModel.Graph, String, Seq[String], Map[String, Int])]()
 
   private def cached(modelPath: String, vocabPath: String)
       : (OnnxModel.Graph, String, Seq[String], Map[String, Int]) =
-    memo.computeIfAbsent((modelPath, vocabPath), { case (mp, vp) =>
-      val g = OnnxModel.load(mp)
-      // data inputs = declared inputs that are NOT initializers
-      // (exporters list weights under both on old opsets). The token
-      // ids input is the one that is not a conventional companion
-      // (attention_mask / token_type_ids); companions are auto-fed.
-      val dataInputs = g.inputNames.filterNot(g.initializers.contains)
-      def isAux(n: String): Boolean = {
-        val l = n.toLowerCase(java.util.Locale.ROOT)
-        l.contains("mask") || l.contains("token_type") || l.contains("segment")
-      }
-      val inputName = dataInputs.filterNot(isAux)
-        .headOption.getOrElse(throw new IllegalArgumentException(
-          s"$mp: graph declares no token-ids data input (inputs: ${dataInputs.mkString(", ")})"))
-      val auxInputs = dataInputs.filter(isAux)
-      val vocab = scala.jdk.CollectionConverters.ListHasAsScala(
-        Files.readAllLines(Paths.get(vp))).asScala
-        .zipWithIndex.map { case (tok, i) => tok.trim -> i }.toMap
-      (g, inputName, auxInputs, vocab)
-    })
+    Option(memo.get((modelPath, vocabPath))).getOrElse {
+      val built = load(modelPath, vocabPath)
+      Option(memo.putIfAbsent((modelPath, vocabPath), built)).getOrElse(built)
+    }
+
+  private def load(mp: String, vp: String)
+      : (OnnxModel.Graph, String, Seq[String], Map[String, Int]) = {
+    val g = OnnxModel.load(mp)
+    // data inputs = declared inputs that are NOT initializers
+    // (exporters list weights under both on old opsets). The token
+    // ids input is the one that is not a conventional companion
+    // (attention_mask / token_type_ids); companions are auto-fed.
+    val dataInputs = g.inputNames.filterNot(g.initializers.contains)
+    def isAux(n: String): Boolean = {
+      val l = n.toLowerCase(java.util.Locale.ROOT)
+      l.contains("mask") || l.contains("token_type") || l.contains("segment")
+    }
+    val inputName = dataInputs.filterNot(isAux)
+      .headOption.getOrElse(throw new IllegalArgumentException(
+        s"$mp: graph declares no token-ids data input (inputs: ${dataInputs.mkString(", ")})"))
+    val auxInputs = dataInputs.filter(isAux)
+    val vocab = scala.jdk.CollectionConverters.ListHasAsScala(
+      Files.readAllLines(Paths.get(vp))).asScala
+      .zipWithIndex.map { case (tok, i) => tok.trim -> i }.toMap
+    (g, inputName, auxInputs, vocab)
+  }
 }

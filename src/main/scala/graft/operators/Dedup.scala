@@ -17,49 +17,15 @@ import graft.functions.VectorFunctions._
 object Dedup {
 
   /** Session-lifetime cached intermediates (shingle sets, minhash
-    * signatures), keyed by (session, corpus FINGERPRINT, params): the
+    * signatures): pinned [[graft.sources.DriverMemo]] frames keyed by
+    * kind|dir|params and stamped with the corpus FINGERPRINT, so the
     * expensive explode/digest passes are cached once and REUSED across
-    * invocations instead of stacking a fresh CacheManager entry per
-    * call (the leak pattern), and a regenerated corpus maps to a new
-    * key instead of stale data. [[clearCaches]] releases everything
-    * explicitly.
+    * invocations, and a regenerated corpus replaces its stale entry.
+    * [[clearCaches]] releases them explicitly.
     */
-  private case class Cached(fingerprint: String, df: DataFrame)
-
-  /** Keyed by LOGICAL identity (session, kind|dir|params); the corpus
-    * fingerprint rides in the VALUE as a validity stamp. A regenerated
-    * corpus therefore REPLACES its stale entry (which is unpersisted)
-    * instead of accumulating next to it — the memo holds at most one
-    * cached frame per logical key for the life of the session.
-    */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Cached]()
-
   private def memoized(spark: SparkSession, logicalKey: String, fingerprint: String)
-                      (build: => DataFrame): DataFrame = {
-    // evict entries of stopped sessions so session churn can't leak
-    val sit = memo.keySet.iterator()
-    while (sit.hasNext) if (sit.next()._1.sparkContext.isStopped) sit.remove()
-    val key = (spark, logicalKey)
-    val hit = memo.get(key)
-    if (hit != null && hit.fingerprint == fingerprint) {
-      // re-register after an external spark.catalog.clearCache() —
-      // .storageLevel is NONE once the session cache was wiped
-      if (hit.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) hit.df.cache()
-      hit.df
-    } else {
-      // get-then-put, never computeIfAbsent: the build runs full Spark
-      // jobs and may itself memoize a dependency — neither may happen
-      // under a ConcurrentHashMap bin lock (recursive update is
-      // documented-forbidden, and the lock would stall unrelated
-      // same-bin inserts for the build's duration)
-      val df = build.cache()
-      val prev = memo.put(key, Cached(fingerprint, df))
-      // stale-fingerprint predecessor, or a concurrent builder we raced
-      if (prev != null && (prev.df ne df)) prev.df.unpersist()
-      df
-    }
-  }
+                      (build: => DataFrame): DataFrame =
+    graft.sources.DriverMemo.pinned(spark, s"dedup|$logicalKey", fingerprint)(build)
 
   private def corpusKey(spark: SparkSession, dir: String): String =
     graft.sources.IndexStore.fingerprint(spark, s"$dir/documents.parquet")
@@ -108,20 +74,17 @@ object Dedup {
   private def cappedShingles(spark: SparkSession, dir: String, n: Int, maxDf: Long): DataFrame =
     dfCapped(cachedShingles(spark, dir, n), "shingle", maxDf)
 
-  private def cachedSignatures(spark: SparkSession, dir: String, n: Int, k: Int): DataFrame = {
-    // resolve the dependency BEFORE entering the memo: the signature
-    // build must not trigger a nested shingle memoization mid-insert
-    val sh = cachedShingles(spark, dir, n)
+  private def cachedSignatures(spark: SparkSession, dir: String, n: Int, k: Int): DataFrame =
     memoized(spark, s"sig|$dir|$n|$k", corpusKey(spark, dir)) {
       // |docs| rows × k minima — the persisted MinHash index artifact
       val base = graft.sources.IndexStore.indexPath(
         spark, "minhash_sig_v1", s"$dir/documents.parquet", s"n${n}k$k")
       graft.sources.IndexStore.publish(spark, base) { tmp =>
-        minhashSignatures(sh, k).write.mode("overwrite").parquet(s"$tmp/sig")
+        minhashSignatures(cachedShingles(spark, dir, n), k)
+          .write.mode("overwrite").parquet(s"$tmp/sig")
       }
       graft.sources.IndexStore.open(spark, s"$base/sig")
     }
-  }
 
   /** Memoized distinct winnowing fingerprints per doc —
     * [[substringDedup]] reads this frame FIVE times in one query (df
@@ -189,13 +152,8 @@ object Dedup {
   }
 
   /** Unpersist and drop every memoized intermediate for a session. */
-  def clearCaches(spark: SparkSession): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.df.unpersist(); it.remove() }
-    }
-  }
+  def clearCaches(spark: SparkSession): Unit =
+    graft.sources.DriverMemo.invalidate(spark, "dedup|")
 
   /** Exact dedup: content hash + keep-first flag per document. */
   def exact(spark: SparkSession, dir: String): DataFrame = {

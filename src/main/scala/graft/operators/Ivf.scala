@@ -296,9 +296,7 @@ object Ivf {
     fs.delete(cDst, true)
     require(fs.rename(fs.makeQualified(new Path(cTmp)), cDst),
       s"rebalance centroid swap failed under $path")
-    IndexStore.invalidate(spark, s"$path/cells")
-    IndexStore.invalidate(spark, s"$path/centroids")
-    graft.sources.DriverMemo.invalidatePrefix(spark, path)
+    IndexStore.invalidate(spark, path)
     true
   }
 
@@ -433,13 +431,13 @@ object Ivf {
   }
 
   /** The collected centroid table for (dir, nCells), memoized per
-    * fingerprinted index path ([[graft.sources.DriverMemo]] — bounded:
-    * nCells rows × dim doubles). Single-query probe planning ran one
+    * fingerprinted index path ([[graft.sources.DriverMemo]]; nCells
+    * rows × dim doubles). Single-query probe planning ran one
     * centroid-collect JOB per call (measured 30-80 ms at sf0.1, one
     * per family call in the 13-family eval); the table is immutable
     * per artifact path, so the second call should not re-run it.
-    * [[rebalanceIndex]] rewrites centroids in place and invalidates
-    * this entry alongside [[IndexStore.invalidate]].
+    * [[rebalanceIndex]] rewrites centroids in place and drops this
+    * entry with [[IndexStore.invalidate]].
     */
   private[operators] def centroidRows(spark: SparkSession, dir: String,
                                       nCells: Int): Array[(Int, Array[Double])] = {

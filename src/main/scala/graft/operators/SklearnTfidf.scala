@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 import graft.functions.{CorpusLexicalEncoder, CorpusLexicalQueryEncoder}
-import graft.sources.{JoblibSource, NpySource, Sources}
+import graft.sources.{DriverMemo, IndexStore, JoblibSource, NpySource, Sources}
 import graft.sources.JoblibSource.{CsrMatrix, TfidfVectorizerModel}
 
 /** Keyword and hybrid search served from the reference's OWN fitted
@@ -29,20 +29,15 @@ object SklearnTfidf {
   val VectorizerJoblib = "/root/reference/tfidf_vectorizer.joblib"
   val MatrixJoblib = "/root/reference/tfidf_matrix.joblib"
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), TfidfVectorizerModel]()
-  private val matrixCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), CsrMatrix]()
-
   private[graft] def model(spark: SparkSession,
                            path: String = VectorizerJoblib): TfidfVectorizerModel =
-    modelCache.computeIfAbsent((spark, path),
-      _ => JoblibSource.readTfidfVectorizer(spark, path))
+    DriverMemo.memo(spark, s"joblib-model|$path", IndexStore.mtime(spark, path))(
+      JoblibSource.readTfidfVectorizer(spark, path))
 
   private[graft] def matrix(spark: SparkSession,
                             path: String = MatrixJoblib): CsrMatrix =
-    matrixCache.computeIfAbsent((spark, path),
-      _ => JoblibSource.readCsrMatrix(spark, path))
+    DriverMemo.memo(spark, s"joblib-matrix|$path", IndexStore.mtime(spark, path))(
+      JoblibSource.readCsrMatrix(spark, path))
 
   /** sklearn `TfidfVectorizer.transform` of one query string, on the
     * driver (one string per search — the same driver-planned probe

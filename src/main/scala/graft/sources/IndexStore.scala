@@ -33,6 +33,14 @@ object IndexStore extends org.apache.spark.internal.Logging {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Modification time of `path` (-1 when absent): the [[DriverMemo]]
+    * stamp of sources read by path rather than by fingerprint. */
+  def mtime(spark: SparkSession, path: String): Long =
+    try {
+      val p = new Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getModificationTime
+    } catch { case _: java.io.IOException => -1L }
+
   /** 12-hex-char fingerprint of a table's file listing. Listing-based
     * (name + length + mtime), not content-based: O(files) driver-side
     * metadata calls, no data scan — the same trade Spark's own
@@ -167,9 +175,6 @@ object IndexStore extends org.apache.spark.internal.Logging {
     if (fs.exists(nested)) fs.delete(nested, true)
   }
 
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Memoized open of a persisted artifact: partition discovery +
     * schema inference (expensive for a 2^nBits-dir bucket layout) run
     * once per (session, path) — the probe-many analog of the reference
@@ -179,27 +184,16 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * data (regenerated corpora map to NEW paths) and pins no executor
     * memory.
     */
-  def open(spark: SparkSession, path: String): DataFrame = {
-    // evict entries of stopped sessions so session churn can't leak
-    val it = loaded.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    // get-then-putIfAbsent, not computeIfAbsent: partition discovery
-    // does driver-side I/O that must not run under the map's bin lock
-    val key = (spark, path)
-    val hit = loaded.get(key)
-    if (hit != null) hit
-    else {
-      val df = spark.read.parquet(path)
-      val raced = loaded.putIfAbsent(key, df)
-      if (raced != null) raced else df
-    }
-  }
+  def open(spark: SparkSession, path: String): DataFrame =
+    DriverMemo.memo(spark, path)(spark.read.parquet(path))
 
-  /** Drop a memoized artifact (call after appending to its path —
-    * the cached file listing no longer covers the new files).
+  /** Drop every memo entry derived from the artifact at `path` — its
+    * opened frames, collected metadata and tombstone probe (call after
+    * rewriting or appending to it: a cached file listing no longer
+    * covers the new files).
     */
   def invalidate(spark: SparkSession, path: String): Unit =
-    loaded.remove((spark, path))
+    DriverMemo.invalidate(spark, path)
 
   // ---------------------------------------------------------------
   // Epoch-partitioned maintenance: append and compaction
@@ -379,7 +373,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tomb = new Path(s"$root/_tombstones")
     if (fs.exists(tomb)) fs.delete(tomb, true)
-    tombstoneCache.remove((spark, root))
+    DriverMemo.invalidate(spark, tombstoneKey(root))
   }
 
   /** Deletion from an append-only index — FAISS `remove_ids()`
@@ -394,19 +388,17 @@ object IndexStore extends org.apache.spark.internal.Logging {
   def addTombstones(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
     ids.toDF("vec_id").write.mode("append").parquet(s"$path/_tombstones")
-    tombstoneCache.remove((spark, path))
+    DriverMemo.invalidate(spark, tombstoneKey(path))
   }
 
   // the exists() probe is one namenode call per query — memoize the
-  // result per (session, path) with a TTL so CROSS-session maintenance
-  // stays visible: a delete issued by another JVM appears within one
-  // TTL (a long-running server would otherwise cache the negative
-  // probe forever), and a compaction that REMOVES _tombstones stops
-  // being anti-joined within one TTL. Same-JVM addTombstones/compact
-  // invalidate immediately.
-  private case class TombstoneProbe(has: Boolean, atMs: Long)
-  private val tombstoneCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), TombstoneProbe]()
+  // result per (session, path), stamped with the TTL window it was
+  // probed in, so CROSS-session maintenance stays visible: a delete
+  // issued by another JVM appears within one TTL (a long-running
+  // server would otherwise cache the negative probe forever), and a
+  // compaction that REMOVES _tombstones stops being anti-joined within
+  // one TTL. Same-JVM addTombstones/compact invalidate immediately.
+  private def tombstoneKey(path: String): String = s"$path#tombstones"
 
   /** Tombstone-probe TTL (ms); conf `spark.graft.tombstone.ttl.ms`. */
   private def tombstoneTtlMs(spark: SparkSession): Long =
@@ -419,12 +411,10 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * after heavy deletion, [[compact]] instead.
     */
   def minusTombstones(spark: SparkSession, path: String, index: DataFrame): DataFrame = {
-    // evict entries of stopped sessions so session churn can't leak
-    val it = tombstoneCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    val key = (spark, path)
-    val now = System.currentTimeMillis()
-    val cached = tombstoneCache.get(key)
+    val tombs = s"$path/_tombstones"
+    val window = System.currentTimeMillis() / math.max(1L, tombstoneTtlMs(spark))
+    val probed = DriverMemo.memo(spark, tombstoneKey(path), window)(
+      java.lang.Boolean.valueOf(exists(spark, tombs)))
     // only NEGATIVE probes ride the TTL: a cached positive is
     // re-verified every call (one metadata op, paid only while deletes
     // exist), because acting on a stale positive after another
@@ -432,16 +422,10 @@ object IndexStore extends org.apache.spark.internal.Logging {
     // against a missing path and fail the query — a stale negative
     // merely serves deleted ids for one TTL, which degrades instead of
     // crashing
-    val has: Boolean =
-      if (cached != null && !cached.has && now - cached.atMs < tombstoneTtlMs(spark)) false
-      else {
-        val h = exists(spark, s"$path/_tombstones")
-        tombstoneCache.put(key, TombstoneProbe(h, now)); h
-      }
+    val has = probed.booleanValue && exists(spark, tombs)
     if (!has) index
     else index.join(
-      org.apache.spark.sql.functions.broadcast(
-        spark.read.parquet(s"$path/_tombstones")),
+      org.apache.spark.sql.functions.broadcast(spark.read.parquet(tombs)),
       Seq("vec_id"), "left_anti")
   }
 }

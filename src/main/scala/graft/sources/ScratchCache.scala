@@ -1,14 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.storage.StorageLevel
 
-/** Bounded per-process cache of PERSISTED intermediate frames for
-  * query-path materialization barriers (the hybrid blend's candidate
-  * triples, the IVF batch probe plan — subtrees that two downstream
-  * passes must read without executing twice).
+/** Persisted intermediate frames for query-path materialization
+  * barriers (the hybrid blend's candidate triples, the IVF batch probe
+  * plan — subtrees that two downstream passes must read without
+  * executing twice), stored as scratch entries of [[DriverMemo]].
   *
   * Why not `localCheckpoint()`: its blocks are stored NON-reliably on
   * the executors that computed them — under executor loss,
@@ -20,20 +17,20 @@ import org.apache.spark.storage.StorageLevel
   * Why not bare `persist()`: Spark's CacheManager keeps a registered
   * entry (memory + disk blocks) alive until `unpersist()` — a serving
   * session issuing thousands of distinct queries would accumulate one
-  * scratch entry per query, forever. This cache bounds that: an LRU of
-  * at most `spark.graft.scratch.cache.size` (default 64) persisted
-  * frames per process; eviction unpersists. The default leaves
-  * headroom for the iterative graph loops, which insert one (HITS:
-  * two) |V|-row state frame per round on top of their shared edge
-  * frame — at a cap of 8 the edge frame (whose LRU recency never
-  * refreshes: it is USED by every round's plan but materialize() is
-  * only CALLED on it once) was evicted mid-loop and the edge build
-  * re-ran for the remaining rounds; at 24, the 13-index-family eval
-  * harness (whose families insert ~2-8 scratch frames each) thrashed
-  * the earlier families out before their timed loops ran. Storage is
-  * MEMORY_AND_DISK, so lineage stays RECOMPUTABLE — a lost block is
-  * recomputed from source, not a query failure, and an evicted frame
-  * still referenced by an un-executed caller plan simply recomputes.
+  * scratch entry per query, forever. Scratch entries are the memo's
+  * only bounded kind (`spark.graft.scratch.cache.size`, default 64).
+  * The default leaves headroom for the iterative graph loops, which
+  * insert one (HITS: two) |V|-row state frame per round on top of
+  * their shared edge frame — at a cap of 8 the edge frame (whose
+  * recency never refreshes: it is USED by every round's plan but
+  * materialize() is only CALLED on it once) was evicted mid-loop and
+  * the edge build re-ran for the remaining rounds; at 24, the
+  * 13-index-family eval harness (whose families insert ~2-8 scratch
+  * frames each) thrashed the earlier families out before their timed
+  * loops ran. Storage is MEMORY_AND_DISK, so lineage stays
+  * RECOMPUTABLE — a lost block is recomputed from source, not a query
+  * failure, and an evicted frame still referenced by an un-executed
+  * caller plan simply recomputes.
   *
   * Keys are the frame's CANONICALIZED logical plan (structural
   * equality — auto-generated attribute ids normalized away), so a
@@ -44,42 +41,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object ScratchCache {
 
-  private def capacity(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.scratch.cache.size", "64").toInt
-
-  // access-ordered LinkedHashMap = LRU; guarded by this object's lock
-  // (driver-side planning only — never on a per-row path).
-  // The key carries the OUTPUT FIELD NAMES alongside the canonicalized
-  // plan: canonicalization normalizes aliases away, so two
-  // structurally identical frames differing only in column names
-  // would otherwise collide and the second caller's col("name")
-  // references would fail with AnalysisException.
-  private val lru =
-    new java.util.LinkedHashMap[(SparkSession, LogicalPlan, Seq[String]), DataFrame](
-      16, 0.75f, true)
-
-  /** Persist `df` (MEMORY_AND_DISK) under LRU lifecycle and return the
-    * cached frame. The first downstream action populates the cache;
-    * every later pass over the returned frame reads the stored rows.
-    * No eager job runs here.
+  /** Persist `df` (MEMORY_AND_DISK) as a bounded scratch entry and
+    * return the cached frame. The first downstream action populates
+    * the cache; every later pass over the returned frame reads the
+    * stored rows. No eager job runs here.
+    *
+    * The key carries the OUTPUT FIELD NAMES alongside the
+    * canonicalized plan: canonicalization normalizes aliases away, so
+    * two structurally identical frames differing only in column names
+    * would otherwise collide and the second caller's col("name")
+    * references would fail with AnalysisException.
     */
-  def materialize(df: DataFrame): DataFrame = synchronized {
-    // evict entries of stopped sessions so session churn can't leak
-    val dead = lru.keySet.iterator()
-    while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized,
-      df.schema.fieldNames.toSeq)
-    val hit = lru.get(key)
-    if (hit != null) {
-      // an external spark.catalog.clearCache() strips the storage but
-      // leaves the LRU entry — without re-registering, every consumer
-      // of the hit silently runs UNCACHED and a two-pass caller
-      // executes its subtree twice (measured as the bench-cold 2×
-      // overshoot on the hybrid/rec queries in round 10)
-      if (hit.storageLevel == StorageLevel.NONE) hit.persist(StorageLevel.MEMORY_AND_DISK)
-      hit
-    }
-    else {
+  def materialize(df: DataFrame): DataFrame =
+    DriverMemo.scratch(df.sparkSession,
+        (df.queryExecution.analyzed.canonicalized, df.schema.fieldNames.toSeq)) {
       // Cap the CACHED partition fan-out by Catalyst's size estimate
       // (guide §2.2 "fewer, larger reduce partitions"): a plan that is
       // persisted is excluded from AQE's post-shuffle coalescing
@@ -103,34 +78,8 @@ object ScratchCache {
         val cores = df.sparkSession.sparkContext.defaultParallelism
         ((bytes + perPart - 1) / perPart).min(BigInt(cores * 4)).max(BigInt(1)).toInt
       }
-      val p = df.coalesce(target).persist(StorageLevel.MEMORY_AND_DISK)
-      lru.put(key, p)
-      val cap = capacity(df.sparkSession)
-      val it = lru.entrySet().iterator()
-      while (lru.size() > cap && it.hasNext) {
-        it.next().getValue.unpersist(blocking = false)
-        it.remove()
-      }
-      p
+      df.coalesce(target)
     }
-  }
-
-  /** Re-pin a frame previously returned by [[materialize]] whose
-    * storage an external `spark.catalog.clearCache()` may have
-    * stripped — the hook for DRIVER-MEMOIZED DataFrame handles
-    * ([[DriverMemo]] keeps the analyzed frame per artifact
-    * fingerprint so repeat calls skip plan re-construction; without
-    * this re-pin, a cleared cache would leave every later consumer
-    * silently running the full build subtree uncached on EVERY pass —
-    * the round-10 bug class described on [[materialize]]'s hit path).
-    * The frame's lineage is intact, so the next action recomputes and
-    * re-caches from source; no staleness is possible (memo keys carry
-    * the corpus fingerprint).
-    */
-  def refresh(df: DataFrame): DataFrame = synchronized {
-    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
-    df
-  }
 
   /** [[materialize]] behind a LogicalRDD plan barrier — for
     * ITERATIVE-LOOP state frames (PageRank ranks, HITS scores, label
@@ -147,12 +96,9 @@ object ScratchCache {
   def materializeCut(df: DataFrame): DataFrame =
     materialize(df.sparkSession.createDataFrame(df.rdd, df.schema))
 
-  /** Test/ops hook: drop and unpersist everything. */
-  def clear(): Unit = synchronized {
-    val it = lru.entrySet().iterator()
-    while (it.hasNext) { it.next().getValue.unpersist(blocking = false); it.remove() }
-  }
+  /** Test/ops hook: drop and unpersist every scratch entry. */
+  def clear(): Unit = DriverMemo.clearScratch()
 
   /** Test hook: number of live scratch entries. */
-  def size: Int = synchronized(lru.size())
+  def size: Int = DriverMemo.scratchSize
 }

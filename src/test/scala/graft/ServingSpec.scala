@@ -44,4 +44,15 @@ class ServingSpec extends AnyFunSuite {
     val q = SparkEntry.queries("vs_topk")(spark, TestSpark.sf)
     assert(fileScans(q) > 0)
   }
+
+  test("warmed tables are re-pinned after spark.catalog.clearCache()") {
+    val cold = SparkEntry.queries("vs_topk")(spark, TestSpark.sf).collect().map(_.toSeq).toSeq
+    try {
+      Tables.warm(spark, TestSpark.sf, Seq("embeddings", "events", "orders"))
+      spark.catalog.clearCache()
+      val q = SparkEntry.queries("vs_topk")(spark, TestSpark.sf)
+      assert(fileScans(q) == 0, "a cleared warmed table must be re-pinned on its next read")
+      assert(q.collect().map(_.toSeq).toSeq == cold, "re-pinned results must equal cold results")
+    } finally Tables.cool(spark)
+  }
 }

@@ -663,6 +663,121 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("corpus-lexical vocabulary follows a rewritten corpus and a changed maxVocab") {
+    import graft.functions.{CorpusLexicalEncoder, CorpusLexicalQueryEncoder}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-vocab").toString
+    val prevRoot = spark.conf.get("spark.graft.index.root", "target/graft-index")
+    def write(docs: Seq[(Long, String)]): Unit = {
+      docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      docs.map { case (id, _) => (id, Array.tabulate(4)(j => if (j == id) 1f else 0f), id.toInt) }
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    spark.conf.set("spark.graft.index.root", s"$dir/index")
+    spark.conf.set(CorpusLexicalEncoder.DirKey, dir)
+    val enc = new CorpusLexicalQueryEncoder
+    try {
+      write(Seq((0L, "alpha shared"), (1L, "alpha beta")))
+      assert(enc.encode("beta").length == 4)
+      // same dir, new documents: the vocabulary must follow the corpus
+      write(Seq((0L, "gamma shared"), (1L, "gamma delta")))
+      assert(enc.encode("delta").length == 4, "a term only in the new corpus must encode")
+      val gone = intercept[IllegalArgumentException](enc.encode("beta"))
+      assert(gone.getMessage.contains("no query term"), gone.getMessage)
+      // maxVocab = 1 keeps only the highest-df term (gamma, df 2)
+      spark.conf.set(CorpusLexicalEncoder.VocabKey, "1")
+      val cut = intercept[IllegalArgumentException](enc.encode("delta"))
+      assert(cut.getMessage.contains("no query term"), cut.getMessage)
+      assert(enc.encode("gamma").length == 4)
+    } finally {
+      spark.conf.unset(CorpusLexicalEncoder.VocabKey)
+      spark.conf.unset(CorpusLexicalEncoder.DirKey)
+      spark.conf.set("spark.graft.index.root", prevRoot)
+    }
+  }
+
+  test("driver memo: builds run outside the lock, so nested and concurrent lookups complete") {
+    import graft.sources.DriverMemo
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    try {
+      val v = DriverMemo.memo(spark, "memo-spec|outer") {
+        // another thread's lookup while this build is in flight would
+        // block until the timeout if the build held the memo's lock
+        val other = Await.result(
+          Future(DriverMemo.memo(spark, "memo-spec|other")("other")), 30.seconds)
+        DriverMemo.memo(spark, "memo-spec|inner")("inner") + "+" + other
+      }
+      assert(v == "inner+other")
+      assert(DriverMemo.memo[String](spark, "memo-spec|outer")(fail("must hit")) eq v)
+    } finally DriverMemo.invalidate(spark, "memo-spec|")
+  }
+
+  test("driver memo: racing first lookups share one instance and the loser is unpersisted") {
+    import graft.sources.DriverMemo
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val bothBuilding = new java.util.concurrent.CountDownLatch(2)
+    val met = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Boolean]()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def lookup(i: Int): Future[DataFrame] = Future {
+      DriverMemo.pinned(spark, "memo-spec|race") {
+        val df = Seq(i).toDF("race") // distinct rows: distinct cache entries
+        built.add(df)
+        bothBuilding.countDown()
+        met.add(bothBuilding.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        df
+      }
+    }
+    try {
+      val got = Await.result(Future.sequence(Seq(lookup(1), lookup(2))), 2.minutes)
+      assert(met.asScala.toSeq.map(_.booleanValue) == Seq(true, true),
+        "both first lookups must build concurrently")
+      assert(got(0) eq got(1), "racers must get the same instance")
+      val loser = built.asScala.find(_ ne got(0)).get
+      assert(loser.storageLevel == StorageLevel.NONE, "the loser's frame must be unpersisted")
+      assert(got(0).storageLevel != StorageLevel.NONE)
+    } finally DriverMemo.invalidate(spark, "memo-spec|")
+  }
+
+  test("driver memo: a changed stamp replaces the entry instead of adding one") {
+    import graft.sources.DriverMemo
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    try {
+      val a = DriverMemo.pinned(spark, "memo-spec|stamp", "fp-a")(Seq(10).toDF("s"))
+      val live = DriverMemo.size
+      val b = DriverMemo.pinned(spark, "memo-spec|stamp", "fp-b")(Seq(11).toDF("s"))
+      assert(DriverMemo.size == live, "a restamped key must not add a second entry")
+      assert(a.storageLevel == StorageLevel.NONE, "the replaced frame must be released")
+      assert(DriverMemo.pinned(spark, "memo-spec|stamp", "fp-b")(fail("must hit")) eq b)
+    } finally DriverMemo.invalidate(spark, "memo-spec|")
+  }
+
+  test("DriverMemo holds the only session-keyed memo map and dead-session sweep") {
+    import scala.jdk.CollectionConverters._
+    val banned = Seq("sparkContext\\.isStopped", "ConcurrentHashMap\\[\\s*\\(SparkSession",
+      "LinkedHashMap\\[\\s*\\(SparkSession").map(_.r)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (cwd has no $root)")
+    val offenders = Files.walk(root).iterator.asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "DriverMemo.scala")
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        banned.flatMap(_.findAllMatchIn(text)).map { m =>
+          s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched}"
+        }
+      }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("vec_norm and vec_cosine compose the same kernel in SQL") {
     GraftExtensions.register(spark)
     Tables.embeddings(spark, TestSpark.sf).createOrReplaceTempView("emb")
