@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 /** Dense-vector column functions over `array<float>` embedding columns.
   *
@@ -14,7 +13,10 @@ import org.apache.spark.sql.types.DoubleType
   * All arithmetic is promoted to double BEFORE accumulation so results
   * are bit-stable across engines (the DuckDB oracle casts to DOUBLE[]
   * the same way); scores surfaced to users are rounded to 5 decimals
-  * so top-k order is reproducible.
+  * so top-k order is reproducible. The `*Local` functions and [[r5]]
+  * are the driver-side twins of the same convention, for probe
+  * planning and driver reranks that must agree with the plan bit for
+  * bit.
   */
 object VectorFunctions {
   /** Σ aᵢ·bᵢ accumulated in double, left-to-right — fused codegen
@@ -28,24 +30,50 @@ object VectorFunctions {
 
   def l2norm(a: Column): Column = sqrt(dotd(a, a))
 
-  def cosine(a: Column, b: Column): Column = dotd(a, b) / (l2norm(a) * l2norm(b))
-
-  /** Cosine rounded to 5 decimals — the engine's canonical score. */
-  def cosine5(a: Column, b: Column): Column = round(cosine(a, b), 5)
-
-  /** A constant long column Catalyst cannot constant-fold — it
-    * references `anchor`, though `pmod(anchor, 1)` is identically 0,
-    * so the value is exactly `value` on every row. Used as the
-    * rank-window partition key in the single-query serving paths: a
-    * bare `lit(value)` folds out of the window spec (leaving a
-    * partition-less WindowExec), while the previous shape — a 1-row
-    * `crossJoin(broadcast(Seq(value).toDF("q_id")))` — paid a
-    * broadcast-build JOB plus a BroadcastNestedLoopJoin per call
-    * (guide §2.4: remove joins/shuffles outright; measured one extra
-    * job + plan nodes on every ivf/graph/rptree serving call). The
-    * window stays partitioned, so the rk <= k filter still compiles
-    * to WindowGroupLimit (map-side top-k).
+  /** a·b / (an·bn) with caller-supplied norms, so each call site keeps
+    * its norm source (a persisted `nrm` column, a broadcast query norm,
+    * a driver literal or an inline [[l2norm]]) and its scores stay
+    * bit-identical. A zero denominator scores 0.0 — FAISS's inner
+    * product of a zero vector — instead of raising ANSI
+    * DIVIDE_BY_ZERO.
     */
-  def constKey(value: Long, anchor: Column): Column =
-    lit(value) + pmod(anchor, lit(1L))
+  def cosine(a: Column, b: Column, an: Column, bn: Column): Column =
+    when(an * bn === 0.0, lit(0.0)).otherwise(dotd(a, b) / (an * bn))
+
+  /** [[cosine]] rounded to 5 decimals — the engine's canonical score. */
+  def cosine5(a: Column, b: Column, an: Column, bn: Column): Column =
+    round(cosine(a, b, an, bn), 5)
+
+  /** Driver twin of [[dotd]]: the same left-to-right `s += aᵢ·bᵢ`
+    * double fold, so a driver-side projection or norm is bit-equal to
+    * the in-plan one (float inputs widen exactly with `.toDouble`).
+    */
+  def dotLocal(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Driver twin of [[cosine]], zero-denominator rule included. */
+  def cosineLocal(dot: Double, an: Double, bn: Double): Double =
+    if (an * bn == 0.0) 0.0 else dot / (an * bn)
+
+  /** HALF_UP at 5 decimals — SQL round()'s rule on Spark and DuckDB,
+    * for scores and metrics computed on the driver (rint's half-even
+    * would diverge on .000005).
+    */
+  def r5(x: Double): Double =
+    BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  def memberNotFound(dir: String, id: Long): IllegalArgumentException =
+    new IllegalArgumentException(s"query vector $id not found in $dir/embeddings.parquet")
+
+  /** A corpus member's embedding by id — the query of every by-id
+    * search — or [[memberNotFound]].
+    */
+  def memberVector(spark: SparkSession, dir: String, id: Long): Array[Float] =
+    graft.Tables.embeddings(spark, dir).where(col("vec_id") === id)
+      .select(col("embedding")).collect().headOption
+      .getOrElse(throw memberNotFound(dir, id))
+      .getSeq[Float](0).toArray
 }

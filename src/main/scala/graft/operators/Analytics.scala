@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.r5
 
 /** Relational/metadata operators: the reference's artifact-build
   * pipeline (review→product rollups, facet counts for the sidebar
@@ -2477,8 +2478,6 @@ object Analytics {
     val base = convMass(None)
     val effects = channels.map(ch => ch -> math.max(base - convMass(Some(ch)), 0L))
     val effTot = effects.map(_._2).sum
-    def r5(x: Double): Double =
-      BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     effects.map { case (ch, eff) =>
       (ch, r5(base.toDouble / Scale), r5((base - eff).toDouble / Scale),
         if (base == 0) 0.0 else r5(eff.toDouble / base),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.r5
 
 /** Corpus-curation utilities a large-scale training-data pipeline
   * needs around the reference's retrieval core: reproducible sampling,
@@ -951,7 +952,6 @@ object Curation {
     var selected = Vector(seed.getSeq[Float](1).map(_.toDouble))
     val picks = scala.collection.mutable.ArrayBuffer(
       (1L, seed.getLong(0), Option.empty[Double]))
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     var exhausted = false
     for (j <- 2 to k if !exhausted) {
       val mind = array_min(array(selected.map(d2): _*))

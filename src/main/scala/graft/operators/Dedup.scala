@@ -679,8 +679,7 @@ object Dedup {
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         col("a.label").cast("long").as("label"),
-        round(dotd(col("a.embedding"), col("b.embedding")) /
-          (col("a.nrm") * col("b.nrm")), 5).as("score"))
+        cosine5(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")).as("score"))
       .where(col("score") >= threshold)
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -985,8 +984,7 @@ object Dedup {
         col("a.bb") === col("b.bb") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         col("a.label").as("a_label"), col("b.label").as("b_label"),
-        round(dotd(col("a.embedding"), col("b.embedding")) /
-          (col("a.nrm") * col("b.nrm")), 5).as("score"))
+        cosine5(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")).as("score"))
   }
 
   /** Corpus dedup report — the per-source summary a curation run
@@ -1181,8 +1179,7 @@ object Dedup {
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         col("a.cell").cast("long").as("cell"),
-        round(dotd(col("a.embedding"), col("b.embedding")) /
-          (col("a.nrm") * col("b.nrm")), 5).as("score"))
+        cosine5(col("a.embedding"), col("b.embedding"), col("a.nrm"), col("b.nrm")).as("score"))
       .where(col("score") >= threshold)
     // duplicate groups are cell-local, so the keep decision is a
     // cell-local min — no cross-cell propagation needed
@@ -1241,7 +1238,6 @@ object Dedup {
     val truth = graft.sources.ScratchCache.materialize(
       ngramJaccard(spark, dir, n, threshold, maxDf).select(col("a_id"), col("b_id")))
     val nTruth = truth.count()
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     // ONE banded self-join for EVERY layout (guide §1.2/§2.4, the
     // lsh_bits_eval fusion applied here): the layout r rides as a
     // struct field, so all four band tables share one explode, one
@@ -1330,7 +1326,6 @@ object Dedup {
             col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
         .agg(min(col("a.df")).as("min_occ")))
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     // ONE action for EVERY cap: candidates nest by min_occ, so each
     // cap's (n_candidates, n_found) is a conditional count over the
     // shared tagged-pair frame joined once against the unique-pair
@@ -1377,7 +1372,6 @@ object Dedup {
     val nTruth = truth.count()
     val cand = graft.sources.ScratchCache.materialize(
       simhash(spark, dir, maxHamming = radiiU.max))
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     // ONE action for EVERY radius (the minhashCapSweep single-pass
     // shape): candidates nest by hamming, counts are conditional aggs
     // over one left join against the unique-pair truth — previously 2

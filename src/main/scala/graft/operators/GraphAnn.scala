@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.TopK.byScore
 import graft.sources.IndexStore
 
 /** Graph-based approximate nearest-neighbor search — the NSW/HNSW
@@ -188,8 +188,7 @@ object GraphAnn {
     val scored = emb.join(reps, col("vec_id") === col("lab"))
       .crossJoin(h)
       .select(col("vec_id").as("rep"),
-        round(dotd(col("embedding"), col("hv")) /
-          (l2norm(col("embedding")) * col("hn")), 5).as("score"))
+        cosine5(col("embedding"), col("hv"), l2norm(col("embedding")), col("hn")).as("score"))
     scored.select(lit(hub).as("src"), col("rep").as("dst"), col("score"), lit(0L).as("rk"))
       .unionByName(scored.select(col("rep").as("src"), lit(hub).as("dst"),
         col("score"), lit(0L).as("rk")))
@@ -232,13 +231,10 @@ object GraphAnn {
     val nv = newVectors
       .select(col("vec_id").as("n_vid"), col("embedding").as("n_emb"),
         l2norm(col("embedding")).as("n_nrm"))
-    val wk = Window.partitionBy(col("src")).orderBy(col("score").desc, col("dst"))
-    val newEdges = ex.join(broadcast(nv), col("vec_id") =!= col("n_vid"))
+    val newEdges = TopK.perKey(ex.join(broadcast(nv), col("vec_id") =!= col("n_vid"))
       .select(col("n_vid").as("src"), col("vec_id").as("dst"),
-        round(dotd(col("embedding"), col("n_emb")) /
-          (col("nrm") * col("n_nrm")), 5).as("score"))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .where(col("rk") <= g)
+        cosine5(col("embedding"), col("n_emb"), col("nrm"), col("n_nrm")).as("score")),
+      Seq(col("src")), g, "rk", byScore("dst"): _*)
     val back = newEdges.select(col("dst").as("src"), col("src").as("dst"),
       col("score"), lit(0L).as("rk"))
     val eStage = IndexStore.stageEpochPath(s"$path/edges", "add")
@@ -250,18 +246,18 @@ object GraphAnn {
     IndexStore.commitEpoch(spark, s"$path/vectors", vStage)
   }
 
-  /** HALF_UP at 5 decimals — the engines' shared round() convention,
-    * applied to the driver-side walk scores so the greedy decisions
-    * match the SQL replay bit-for-bit.
+  /** The walk's score for a candidate vector against `qv`: the rounded
+    * cosine the SQL rerank computes, bit for bit (driver twins
+    * [[dotLocal]], [[cosineLocal]], [[r5]]), so the greedy decisions
+    * match the SQL replay.
     */
-  private def r5(x: Double): Double =
-    BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Left-to-right double accumulation — bit-identical to VecDot. */
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
+  private def queryCosine(qv: Array[Float]): Array[Float] => Double = {
+    val qd = qv.map(_.toDouble)
+    val qn = math.sqrt(dotLocal(qd, qd))
+    v => {
+      val vd = v.map(_.toDouble)
+      r5(cosineLocal(dotLocal(qd, vd), math.sqrt(dotLocal(vd, vd)), qn))
+    }
   }
 
   /** The driver-side beam descent both [[graphTopK]] and [[hnswTopK]]
@@ -357,25 +353,16 @@ object GraphAnn {
 
   /** Exact distributed rerank of a visited set against the query.
     * `exclude` is the member query's own id (a non-member caller
-    * vector excludes nothing); the q_id broadcast row only keeps the
-    * rank window partitioned (WindowGroupLimit — see [[Ivf.ivfTopK]]).
+    * vector excludes nothing).
     */
-  private def rerank(spark: SparkSession, emb: DataFrame, exclude: Option[Long],
-                     qv: Array[Float], qn: Double, visited: Seq[Long],
-                     k: Int): DataFrame = {
-    // shuffle-free TakeOrdered + single-partition rank (the
-    // [[Ivf.ivfTopK]] convention): no exchange, no AQE stages
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    emb.where(col("vec_id").isin(visited: _*))
+  private def rerank(emb: DataFrame, exclude: Option[Long],
+                     qv: Array[Float], visited: Seq[Long], k: Int): DataFrame = {
+    val qd = qv.map(_.toDouble)
+    TopK.ranked(emb.where(col("vec_id").isin(visited: _*))
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
-      .select(col("vec_id").as("n_id"),
-        round(dotd(col("embedding"), typedlit(qv)) /
-          (l2norm(col("embedding")) * lit(qn)), 5).as("score"))
-      .orderBy(col("score").desc, col("n_id"))
-      .limit(k)
-      .withColumn("q_id", constKey(exclude.getOrElse(-1L), col("n_id")))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .select(col("n_id"), col("score"), col("rk"))
+      .select(col("vec_id").as("n_id"), cosine5(col("embedding"), typedlit(qv),
+        l2norm(col("embedding")), lit(math.sqrt(dotLocal(qd, qd)))).as("score")),
+      k, "rk", byScore("n_id"): _*)
       .orderBy(col("rk"))
   }
 
@@ -389,11 +376,8 @@ object GraphAnn {
     // this path previously ran three driver jobs — see [[seedLookup]]
     val (qvOpt, low, _) = seedLookup(emb, Some(queryId), Some(queryId),
       nLow = 1, promoted = false)
-    val qv = qvOpt.getOrElse(throw new IllegalArgumentException(
-      s"query vector $queryId not found in $dir/embeddings.parquet"))
-    val qn = math.sqrt(dot(qv, qv))
-    def qcos(v: Array[Float]): Double =
-      r5(dot(qv, v) / (math.sqrt(dot(v, v)) * qn))
+    val qv = qvOpt.getOrElse(throw memberNotFound(dir, queryId))
+    val qcos = queryCosine(qv)
     val (entry, entryEmb) = low.head
     val entryScore = qcos(entryEmb)
     // the query is a corpus MEMBER (by-id search, the reference's
@@ -405,7 +389,7 @@ object GraphAnn {
     // the walk stays one beam, and the rerank still excludes self
     val visited = beamWalk(graph, emb, qcos,
       Seq((entry, entryScore), (queryId, qcos(qv))), hops, beam)
-    rerank(spark, emb, Some(queryId), qv, qn, visited.map(_._1), k)
+    rerank(emb, Some(queryId), qv, visited.map(_._1), k)
   }
 
   /** NON-member graph search — the reference's free-text serving shape
@@ -422,16 +406,14 @@ object GraphAnn {
                    k: Int = 10): DataFrame = {
     val graph = ensureGraph(spark, dir, g)
     val emb = vectors(spark, dir, g)
-    val qn = math.sqrt(dot(qv, qv))
-    def qcos(v: Array[Float]): Double =
-      r5(dot(qv, v) / (math.sqrt(dot(v, v)) * qn))
+    val qcos = queryCosine(qv)
     // one bounded seed lookup (lowest corpus id + its embedding) —
     // previously two driver jobs
     val (_, low, _) = seedLookup(emb, None, None, nLow = 1, promoted = false)
     val (entry, entryEmb) = low.head
     val entryScore = qcos(entryEmb)
     val visited = beamWalk(graph, emb, qcos, Seq((entry, entryScore)), hops, beam)
-    rerank(spark, emb, None, qv, qn, visited.map(_._1), k)
+    rerank(emb, None, qv, visited.map(_._1), k)
   }
 
   /** BATCH graph-ANN kNN join — the graph-family answer to the
@@ -496,14 +478,13 @@ object GraphAnn {
       .join(e.select(col("vec_id").as("v"), col("embedding"), col("nrm")), "v")
       .join(broadcast(qs), "q_id")
       .select(col("q_id"), col("v"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("s"))
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("s"))
     // bounded driver read: the two lowest corpus ids
     val low2 = e.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
       .collect().map(_.getLong(0))
     require(low2.length == 2, s"graph kNN join needs >= 2 vectors in $dir")
     val fixedSeed = qs.select(col("q_id"),
       when(col("q_id") === low2(0), low2(1)).otherwise(low2(0)).as("v"))
-    val wb = Window.partitionBy(col("q_id")).orderBy(col("s").desc, col("v"))
     // one beam walk from one seed set → its visited set. entrySelf
     // runs TWO INDEPENDENT walks and unions the visited sets (below):
     // folding both seeds into one beam is NOT monotone — the self
@@ -523,8 +504,8 @@ object GraphAnn {
           .distinct()
         val us = graft.sources.ScratchCache.materializeCut(scored(u))
         visited = visited.unionByName(us)
-        frontier = us.withColumn("rk", row_number().over(wb))
-          .where(col("rk") <= beam).select(col("q_id"), col("v"), col("s"))
+        frontier = TopK.perKey(us, Seq(col("q_id")), beam, "rk", byScore("v", "s"): _*)
+          .select(col("q_id"), col("v"), col("s"))
       }
       visited
     }
@@ -537,11 +518,8 @@ object GraphAnn {
         // are corpus members, and the single-query walk (graphTopK)
         // seeds the same pair, keeping batch ≡ single row-identical
         walkFrom(fixedSeed.unionByName(selfSeed))
-    val wf = Window.partitionBy(col("q_id")).orderBy(col("s").desc, col("v"))
-    visited.where(col("v") =!= col("q_id"))
-      .dropDuplicates("q_id", "v")
-      .withColumn("rk", row_number().over(wf).cast("long"))
-      .where(col("rk") <= k)
+    TopK.perKey(visited.where(col("v") =!= col("q_id")).dropDuplicates("q_id", "v"),
+      Seq(col("q_id")), k, "rk", byScore("v", "s"): _*)
       .select(col("q_id"), col("v").as("n_id"), col("s").as("score"), col("rk"))
       .orderBy(col("q_id"), col("rk"))
   }
@@ -614,11 +592,8 @@ object GraphAnn {
     // jobs per call (qv collect, two min() aggs, two embedding heads)
     val (qvOpt, low, promo) = seedLookup(emb, Some(queryId), Some(queryId),
       nLow = 1, promoted = true)
-    val qv = qvOpt.getOrElse(throw new IllegalArgumentException(
-      s"query vector $queryId not found in $dir/embeddings.parquet"))
-    val qn = math.sqrt(dot(qv, qv))
-    def qcos(v: Array[Float]): Double =
-      r5(dot(qv, v) / (math.sqrt(dot(v, v)) * qn))
+    val qv = qvOpt.getOrElse(throw memberNotFound(dir, queryId))
+    val qcos = queryCosine(qv)
     val visited1 = promo match {
       case None => Seq.empty[(Long, Double)]
       case Some((e1, e1Emb)) =>
@@ -633,8 +608,7 @@ object GraphAnn {
     // (member-query self seed — see graphTopK)
     val visited0 = beamWalk(graph0, emb, qcos,
       Seq(entry0, (queryId, qcos(qv))), hops = 6, beam = 4)
-    rerank(spark, emb, Some(queryId), qv, qn,
-      (visited1 ++ visited0).map(_._1).distinct, k)
+    rerank(emb, Some(queryId), qv, (visited1 ++ visited0).map(_._1).distinct, k)
   }
 
   /** NON-member hierarchical search ([[graphTopKVec]]'s 2-level twin):
@@ -649,9 +623,7 @@ object GraphAnn {
     val graph0 = ensureGraph(spark, dir, g)
     val graph1 = ensureLevel1(spark, dir, g)
     val emb = vectors(spark, dir, g)
-    val qn = math.sqrt(dot(qv, qv))
-    def qcos(v: Array[Float]): Double =
-      r5(dot(qv, v) / (math.sqrt(dot(v, v)) * qn))
+    val qcos = queryCosine(qv)
     // one bounded seed lookup (hub + lowest promoted id) — previously
     // up to four driver jobs per call
     val (_, low, promo) = seedLookup(emb, None, None, nLow = 1, promoted = true)
@@ -667,7 +639,6 @@ object GraphAnn {
       else (hub, hubScore)
     val visited0 = beamWalk(graph0, emb, qcos,
       Seq(entry0, (hub, hubScore)), hops = 6, beam = 4)
-    rerank(spark, emb, None, qv, qn,
-      (visited1 ++ visited0).map(_._1).distinct, k)
+    rerank(emb, None, qv, (visited1 ++ visited0).map(_._1).distinct, k)
   }
 }

@@ -2,11 +2,11 @@ package graft.operators
 
 
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.TopK.byScore
 import graft.sources.IndexStore
 
 /** IVF (inverted-file) approximate nearest-neighbor index — the Spark
@@ -204,16 +204,14 @@ object Ivf {
     // once per row → ONE dot product per (vector, centroid) pair
     val centroids = IndexStore.open(spark, s"$path/centroids")
       .withColumn("cn2", dotd(col("centroid"), col("centroid")))
-    val wc = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cell"))
     val staging = IndexStore.stageEpochPath(s"$path/cells", "add")
-    newVectors
+    TopK.perKey(newVectors
       .withColumn("nrm", l2norm(col("embedding")))
       .crossJoin(broadcast(centroids))
       // ‖e−c‖² via the dot identity — same codegen kernel as search
       .withColumn("d2", col("nrm") * col("nrm") + col("cn2")
-        - lit(2) * dotd(col("embedding"), col("centroid")))
-      .withColumn("rk", row_number().over(wc))
-      .where(col("rk") === 1)
+        - lit(2) * dotd(col("embedding"), col("centroid"))),
+      Seq(col("vec_id")), 1, "rk", col("d2"), col("cell"))
       .select(col("vec_id"), col("label"), col("embedding"), col("nrm"), col("cell"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(staging)
@@ -314,32 +312,28 @@ object Ivf {
     */
   def search(assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
              nprobe: Int, k: Int): DataFrame = {
-    val wc = Window.partitionBy(col("q_id")).orderBy(col("cdist").desc, col("cell"))
     // scratch-persist: the probe plan (queries × centroids ranking) is
     // read twice — once to collect the pruning ids, once as the join's
     // build side — and must not execute twice. Recomputable lineage
     // (vs localCheckpoint's non-reliable blocks) + bounded LRU
     // lifecycle — see graft.sources.ScratchCache
-    val probed0 = queries
+    val probed0 = TopK.perKey(queries
       .withColumn("qn", l2norm(col("qv")))
       .crossJoin(broadcast(centroids))
       // reuse the precomputed qn — don't re-derive ||qv|| per centroid
       .withColumn("cdist",
-        dotd(col("qv"), col("centroid")) / (col("qn") * l2norm(col("centroid"))))
-      .withColumn("crk", row_number().over(wc))
-      .where(col("crk") <= nprobe)
+        cosine(col("qv"), col("centroid"), col("qn"), l2norm(col("centroid")))),
+      Seq(col("q_id")), nprobe, "crk", byScore("cell", "cdist"): _*)
       .select(col("q_id"), col("qv"), col("qn"), col("cell"))
     val probed = graft.sources.ScratchCache.materialize(probed0)
     // bounded driver read: ≤ nCells distinct ids, never rows
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.get(0)).toSeq
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    assigned.where(col("cell").isin(probedCells: _*)).join(probed, Seq("cell"))
+    TopK.perKey(assigned.where(col("cell").isin(probedCells: _*)).join(probed, Seq("cell"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), col("cell").cast("long").as("cell"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .where(col("rk") <= k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
+      Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
   }
 
   /** Single-query IVF top-k (the reference's interactive ANN demo,
@@ -350,37 +344,9 @@ object Ivf {
     * PlanSpec).
     */
   def ivfTopK(spark: SparkSession, dir: String, queryId: Long, nCells: Int,
-              nprobe: Int, k: Int): DataFrame = {
-    val (cells, _) = ensureIndex(spark, dir, nCells)
-    val qv = Tables.embeddings(spark, dir).where(col("vec_id") === queryId)
-      .select(col("embedding")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"query vector $queryId not found in $dir/embeddings.parquet"))
-      .getSeq[Float](0).toArray
-    val probedCells = rankCellsArr(centroidRows(spark, dir, nCells), qv).take(nprobe)
-    val q = typedlit(qv)
-    // shuffle-free single-query shape (guide §2.4 — remove shuffles
-    // outright): ORDER BY + LIMIT plans as TakeOrderedAndProject
-    // (per-partition bounded heaps merged at the driver — no
-    // Exchange, so no AQE stage coordination, measured as ~2/3 of
-    // this path's per-call wall at sf0.1), and the rank window then
-    // runs over the k-row SinglePartition result, which satisfies the
-    // window's clustering requirement — zero exchanges end to end.
-    // The same (score DESC, n_id) total order makes the rows and rk
-    // values identical to the old WindowGroupLimit shape.
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    cells.where(col("cell").isin(probedCells: _*))
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id").as("n_id"),
-        col("cell").cast("long").as("cell"),
-        round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-      .orderBy(col("score").desc, col("n_id"))
-      .limit(k)
-      .withColumn("q_id", constKey(queryId, col("n_id")))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .select(col("n_id"), col("cell"), col("score"), col("rk"))
-      .orderBy(col("rk"))
-  }
+              nprobe: Int, k: Int): DataFrame =
+    probe(spark, dir, memberVector(spark, dir, queryId), Some(queryId), lit(true),
+      nCells, nprobe, k).orderBy(col("rk"))
 
   /** [[ivfTopK]] for a CALLER-SUPPLIED query vector (non-member
     * serving — what the free-text front door routes here after
@@ -389,22 +355,28 @@ object Ivf {
     * row.
     */
   def ivfTopKVec(spark: SparkSession, dir: String, qv: Array[Float], nCells: Int,
-                 nprobe: Int, k: Int): DataFrame = {
+                 nprobe: Int, k: Int): DataFrame =
+    probe(spark, dir, qv, None, lit(true), nCells, nprobe, k).orderBy(col("rk"))
+
+  /** The single-query probe behind [[ivfTopK]], [[ivfTopKVec]] and
+    * [[plannedFilteredTopK]]'s postfilter route: the nprobe cells are
+    * ranked on the driver and pushed into the index scan as literal
+    * ids, the probed rows that pass `filter` (minus `exclude`, the
+    * member query's own id) are scored, and [[TopK.ranked]] cuts and
+    * ranks them — (n_id, cell, score, rk), zero exchanges.
+    */
+  private def probe(spark: SparkSession, dir: String, qv: Array[Float],
+                    exclude: Option[Long], filter: Column, nCells: Int, nprobe: Int,
+                    k: Int): DataFrame = {
     val (cells, _) = ensureIndex(spark, dir, nCells)
     val probedCells = rankCellsArr(centroidRows(spark, dir, nCells), qv).take(nprobe)
     val q = typedlit(qv)
-    // shuffle-free TakeOrdered + single-partition rank — see [[ivfTopK]]
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    cells.where(col("cell").isin(probedCells: _*))
+    TopK.ranked(cells.where(col("cell").isin(probedCells: _*))
+      .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)) && filter)
       .select(col("vec_id").as("n_id"),
         col("cell").cast("long").as("cell"),
-        round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-      .orderBy(col("score").desc, col("n_id"))
-      .limit(k)
-      .withColumn("q_id", constKey(-1L, col("n_id")))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .select(col("n_id"), col("cell"), col("score"), col("rk"))
-      .orderBy(col("rk"))
+        cosine5(col("embedding"), q, col("nrm"), l2norm(q)).as("score")),
+      k, "rk", byScore("n_id"): _*)
   }
 
   /** Cells ranked by centroid cosine against one query vector —
@@ -420,13 +392,10 @@ object Ivf {
     */
   private[operators] def rankCellsArr(cents: Array[(Int, Array[Double])],
                                       qv: Array[Float]): Seq[Int] = {
-    val qn = math.sqrt(qv.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
+    val qd = qv.map(_.toDouble)
+    val qn = math.sqrt(dotLocal(qd, qd))
     cents.map { case (cell, c) =>
-      var dot = 0.0; var cn = 0.0; var i = 0
-      while (i < c.length) {
-        dot += qv(i) * c(i); cn += c(i) * c(i); i += 1
-      }
-      (cell, dot / (math.sqrt(cn) * qn))
+      (cell, cosineLocal(dotLocal(qd, c), math.sqrt(dotLocal(c, c)), qn))
     }.sortBy { case (cell, s) => (-s, cell) }.map(_._1).toSeq
   }
 
@@ -746,34 +715,17 @@ object Ivf {
     val nCand = cnt.getLong(1)
     val prefilter = nCand * nprobe < k.toLong * nCells ||
       nCand <= (n * nprobe) / nCells
-    if (prefilter) {
-      val wk = Window.orderBy(col("score").desc, col("n_id"))
-      VectorSearch.topK(spark, dir, queryId, k, col("label").isin(labels: _*))
-        .select(lit("prefilter").as("strategy"), col("vec_id").as("n_id"), col("score"))
-        .withColumn("rk", row_number().over(wk).cast("long"))
+    if (prefilter)
+      TopK.ranked(VectorSearch.scoredById(Tables.embeddings(spark, dir), queryId,
+          _.where(col("label").isin(labels: _*)))
+        .select(lit("prefilter").as("strategy"), col("vec_id").as("n_id"), col("score")),
+        k, "rk", byScore("n_id"): _*)
         .orderBy(col("rk"))
-    } else {
-      val qv = Tables.embeddings(spark, dir).where(col("vec_id") === queryId)
-        .select(col("embedding")).collect().headOption
-        .getOrElse(throw new IllegalArgumentException(
-          s"query vector $queryId not found in $dir/embeddings.parquet"))
-        .getSeq[Float](0).toArray
-      val probedCells = rankCellsArr(centroidRows(spark, dir, nCells), qv).take(nprobe)
-      val q = typedlit(qv)
-      // shuffle-free TakeOrdered + single-partition rank — the
-      // [[ivfTopK]] convention
-      val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-      cells.where(col("cell").isin(probedCells: _*))
-        .where(col("vec_id") =!= queryId && col("label").isin(labels: _*))
-        .select(col("vec_id").as("n_id"),
-          round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-        .orderBy(col("score").desc, col("n_id"))
-        .limit(k)
-        .withColumn("q_id", constKey(queryId, col("n_id")))
-        .withColumn("rk", row_number().over(wk).cast("long"))
+    else
+      probe(spark, dir, memberVector(spark, dir, queryId), Some(queryId),
+        col("label").isin(labels: _*), nCells, nprobe, k)
         .select(lit("postfilter").as("strategy"), col("n_id"), col("score"), col("rk"))
         .orderBy(col("rk"))
-    }
   }
 
   /** Recall/MRR curve over the persisted IVF — ONE probe plan and ONE
@@ -807,14 +759,12 @@ object Ivf {
     val queries = assigned.where(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val npMax = nprobes.max
-    val wc = Window.partitionBy(col("q_id")).orderBy(col("cdist").desc, col("cell"))
-    val probed0 = queries
+    val probed0 = TopK.perKey(queries
       .withColumn("qn", l2norm(col("qv")))
       .crossJoin(broadcast(centroids))
       .withColumn("cdist",
-        dotd(col("qv"), col("centroid")) / (col("qn") * l2norm(col("centroid"))))
-      .withColumn("tier", row_number().over(wc))
-      .where(col("tier") <= npMax)
+        cosine(col("qv"), col("centroid"), col("qn"), l2norm(col("centroid")))),
+      Seq(col("q_id")), npMax, "tier", byScore("cell", "cdist"): _*)
       .select(col("q_id"), col("qv"), col("qn"), col("cell"), col("tier"))
     val probed = graft.sources.ScratchCache.materialize(probed0)
     // bounded driver read: ≤ nCells distinct ids, never rows — the
@@ -822,21 +772,15 @@ object Ivf {
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.get(0)).toSeq
     import spark.implicits._
-    val wt = Window.partitionBy(col("q_id"), col("tier"))
-      .orderBy(col("score").desc, col("n_id"))
-    val wk = Window.partitionBy(col("q_id"), col("nprobe"))
-      .orderBy(col("score").desc, col("n_id"))
     val npDf = nprobes.toDF("nprobe")
-    val ranked0 = assigned.where(col("cell").isin(probedCells: _*))
+    val perTier = TopK.perKey(assigned.where(col("cell").isin(probedCells: _*))
       .join(probed, Seq("cell"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), col("tier"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .withColumn("trk", row_number().over(wt))
-      .where(col("trk") <= k)
-      .join(broadcast(npDf), col("tier") <= col("nprobe"))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .where(col("rk") <= k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
+      Seq(col("q_id"), col("tier")), k, "trk", byScore("n_id"): _*)
+    val ranked0 = TopK.perKey(perTier.join(broadcast(npDf), col("tier") <= col("nprobe")),
+      Seq(col("q_id"), col("nprobe")), k, "rk", byScore("n_id"): _*)
       .select(col("q_id"), col("n_id"), col("nprobe"), col("rk"))
     val ranked = graft.sources.ScratchCache.materialize(ranked0)
     val gt = graft.sources.ScratchCache.materialize(
@@ -851,8 +795,6 @@ object Ivf {
       .join(ranked, Seq("q_id", "n_id"))
       .groupBy(col("nprobe")).agg(sum(lit(1.0) / col("rk")).as("rr"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    def r5(x: Double): Double =
-      BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = nprobes.map { np =>
       (np, r5(hitsByNp.getOrElse(np, 0L) / (nq * k)),
         r5(rrByNp.getOrElse(np, 0.0) / nq), nq.toLong)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.TopK.byScore
 import graft.sources.IndexStore
 
 /** Random-hyperplane LSH for cosine similarity — the bucketed ANN
@@ -222,14 +223,8 @@ object Lsh {
     * and Catalyst prunes the persisted index scan to the nBits+1
     * probed partitions. No corpus-wide work happens per query.
     */
-  def lshTopK(spark: SparkSession, dir: String, queryId: Long, nBits: Int, k: Int): DataFrame = {
-    val qv = Tables.embeddings(spark, dir).where(col("vec_id") === queryId)
-      .select(col("embedding")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"query vector $queryId not found in $dir/embeddings.parquet"))
-      .getSeq[Float](0).toArray
-    lshTopKCore(spark, dir, qv, Some(queryId), nBits, k)
-  }
+  def lshTopK(spark: SparkSession, dir: String, queryId: Long, nBits: Int, k: Int): DataFrame =
+    lshTopKCore(spark, dir, memberVector(spark, dir, queryId), Some(queryId), nBits, k)
 
   /** [[lshTopK]] for a CALLER-SUPPLIED query vector (non-member
     * serving): same driver bucket planning against the seed-fixed
@@ -244,24 +239,19 @@ object Lsh {
     requireBucketBits(nBits)
     val idx = ensureIndex(spark, dir, nBits)
     val planes = hyperplaneArrays(nBits, qv.length)
-    // left-to-right double accumulation — bit-identical to VecDot, so
-    // the driver-computed bucket matches the persisted assignment
-    def dot(p: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < qv.length) { s += qv(i).toDouble * p(i); i += 1 }
-      s
-    }
-    val qn = math.sqrt(dot(qv.map(_.toDouble)))
+    // dotLocal is bit-identical to VecDot, so the driver-computed
+    // bucket matches the persisted assignment
+    val qd = qv.map(_.toDouble)
+    val qn = math.sqrt(dotLocal(qd, qd))
     val qb = planes.zipWithIndex.foldLeft(0L) { case (acc, (p, j)) =>
-      if (dot(p) >= 0) acc | (1L << j) else acc
+      if (dotLocal(qd, p) >= 0) acc | (1L << j) else acc
     }
     val probeBuckets = qb +: (0 until nBits).map(j => qb ^ (1L << j))
-    idx.where(col("bucket").isin(probeBuckets: _*))
+    TopK.first(idx.where(col("bucket").isin(probeBuckets: _*))
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id"), col("bucket").cast("long").as("bucket"),
-        round(dotd(col("embedding"), typedlit(qv)) / (col("nrm") * lit(qn)), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), typedlit(qv), col("nrm"), lit(qn)).as("score")),
+      k, byScore("vec_id"): _*)
   }
 
   /** LSH bucket-width tuning curve — the [[Ivf.recallEval]] /
@@ -286,7 +276,6 @@ object Lsh {
                   queryMod: Int = 100, k: Int = 10,
                   maxQueries: Int = 64): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     import graft.sources.ScratchCache
     val dim = embeddingDim(spark, dir)
     val e = Tables.embeddings(spark, dir)
@@ -294,7 +283,6 @@ object Lsh {
     val q = ScratchCache.materialize(e.where(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
       .orderBy(col("q_id")).limit(maxQueries))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
     // GT seam: the default exact pass stays INLINE (bounded to the
     // maxQueries batch — cheaper than the full mod-sampled knnJoin);
     // spark.graft.recall.gt=graph swaps in the NSW batch descent
@@ -309,17 +297,13 @@ object Lsh {
             .join(broadcast(q.select(col("q_id"))), Seq("q_id"), "left_semi")
             .select(col("q_id"), col("n_id"), col("rk"))
         case _ =>
-          e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+          TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
             .select(col("q_id"), col("vec_id").as("n_id"),
-              round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5)
-                .as("score"))
-            .withColumn("rk", row_number().over(w).cast("long"))
-            .where(col("rk") <= k)
+              cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
+            Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
             .select(col("q_id"), col("n_id"), col("rk"))
       })
     val nq = q.count().toDouble
-    def r5(x: Double): Double =
-      BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     bitsSeq.map { bits =>
       val idx = ensureIndex(spark, dir, bits)
       val qb = assignBucketsOf(
@@ -330,14 +314,12 @@ object Lsh {
         .select(col("q_id"), when(col("j") < 0, col("qb"))
           .otherwise(expr("qb ^ (1 << cast(j AS int))").cast("long")).as("bucket"))
         .distinct()
-      val top = probes.join(idx, "bucket")
+      val top = TopK.perKey(probes.join(idx, "bucket")
         .where(col("vec_id") =!= col("q_id"))
         .join(broadcast(q), "q_id")
         .select(col("q_id"), col("vec_id").as("n_id"),
-          round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5)
-            .as("score"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .where(col("rk") <= k)
+          cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
+        Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
       // recall + MRR in ONE action per width (guide §1.2): the
       // previous two counts each re-executed the un-cached probe join
       // + rerank window. count(gt_rk) = the old left_semi count

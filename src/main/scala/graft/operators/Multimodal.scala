@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorFunctions.r5
 
 /** Multimodal (image/audio/video) column plumbing.
   *
@@ -498,8 +499,7 @@ object Multimodal {
       val active = silent.count(!_)
       (m.media_id, nFrames.toLong, active.toLong,
         if (nFrames == 0) 0.0
-        else BigDecimal(active.toDouble / nFrames)
-          .setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        else r5(active.toDouble / nFrames),
         lead.toLong, trail.toLong)
     }.toDF("media_id", "n_frames", "n_active", "activity_ratio",
         "trim_lead_frames", "trim_trail_frames")

@@ -124,14 +124,13 @@ object Quantized {
     val s = (mx - mn) / 256
     val dim = qd.length
     val p = dotd(col("codes").cast("array<double>"), typedlit(qd))
-    codes.where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
+    TopK.first(codes.where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id"),
         round(lit(dim) * lit(mn) * lit(mn)
           + lit(mn) * lit(s) * (col("csum") + lit(qsum) + lit(dim))
           + lit(s) * lit(s) * (p + lit(0.5) * col("csum") + lit(0.5) * lit(qsum)
-            + lit(0.25) * lit(dim)), 5).as("score_q"))
-      .orderBy(col("score_q").desc, col("vec_id"))
-      .limit(k)
+            + lit(0.25) * lit(dim)), 5).as("score_q")),
+      k, TopK.byScore("vec_id", "score_q"): _*)
   }
 
   /** Product-quantization codebooks: the embedding space split into
@@ -276,7 +275,8 @@ object Quantized {
     */
   def pqTopK(spark: SparkSession, dir: String, queryId: Long, k: Int,
              m: Int = 8, kCents: Int = 16): DataFrame =
-    pqTopKCore(spark, dir, queryVec(spark, dir, queryId), Some(queryId), k, m, kCents)
+    pqTopKCore(spark, dir, memberVector(spark, dir, queryId).map(_.toDouble), Some(queryId),
+      k, m, kCents)
 
   /** [[pqTopK]] for a CALLER-SUPPLIED query vector (non-member
     * serving): ADC is already asymmetric — the query stays an exact
@@ -292,11 +292,10 @@ object Quantized {
                          exclude: Option[Long], k: Int, m: Int, kCents: Int): DataFrame = {
     val (codes, codebooks) = ensurePqIndex(spark, dir, m, kCents)
     val adc = adcColumn(codebooks, qd)
-    codes
+    TopK.first(codes
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
-      .select(col("vec_id"), round(adc, 5).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), round(adc, 5).as("adc_dist")),
+      k, col("adc_dist"), col("vec_id"))
   }
 
   /** The ADC scoring column for one query against the codebooks: the
@@ -318,13 +317,6 @@ object Quantized {
     (0 until m).map(s =>
       element_at(typedlit(lut(s)), element_at(col("codes"), s + 1) + 1)).reduce(_ + _)
   }
-
-  private def queryVec(spark: SparkSession, dir: String, queryId: Long): Array[Double] =
-    Tables.embeddings(spark, dir).where(col("vec_id") === queryId)
-      .select(col("embedding")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"query vector $queryId not found in $dir/embeddings.parquet"))
-      .getSeq[Float](0).map(_.toDouble).toArray
 
   /** Build-once IVF+PQ composite index — the Spark analog of FAISS
     * IndexIVFPQ, the index family's billion-scale workhorse: the PQ
@@ -374,7 +366,7 @@ object Quantized {
     */
   def ivfPqTopK(spark: SparkSession, dir: String, queryId: Long, nCells: Int,
                 nprobe: Int, k: Int, m: Int = 8, kCents: Int = 16): DataFrame =
-    ivfPqTopKCore(spark, dir, queryVec(spark, dir, queryId), Some(queryId),
+    ivfPqTopKCore(spark, dir, memberVector(spark, dir, queryId).map(_.toDouble), Some(queryId),
       nCells, nprobe, k, m, kCents)
 
   /** [[ivfPqTopK]] for a CALLER-SUPPLIED query vector (non-member
@@ -394,12 +386,11 @@ object Quantized {
     val probed = Ivf.rankCellsArr(Ivf.centroidRows(spark, dir, nCells),
       qv.map(_.toFloat)).take(nprobe)
     val adc = adcColumn(codebooks, qv)
-    idx.where(col("cell").isin(probed: _*))
+    TopK.first(idx.where(col("cell").isin(probed: _*))
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
-        round(adc, 5).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k)
+        round(adc, 5).as("adc_dist")),
+      k, col("adc_dist"), col("vec_id"))
   }
 
   /** Build-once RESIDUAL IVF+PQ index — FAISS IndexIVFPQ's DEFAULT
@@ -497,8 +488,8 @@ object Quantized {
     */
   def ivfPqResidualTopK(spark: SparkSession, dir: String, queryId: Long, nCells: Int,
                         nprobe: Int, k: Int, m: Int = 8, kCents: Int = 16): DataFrame =
-    ivfPqResidualTopKCore(spark, dir, queryVec(spark, dir, queryId), Some(queryId),
-      nCells, nprobe, k, m, kCents)
+    ivfPqResidualTopKCore(spark, dir, memberVector(spark, dir, queryId).map(_.toDouble),
+      Some(queryId), nCells, nprobe, k, m, kCents)
 
   /** [[ivfPqResidualTopK]] for a CALLER-SUPPLIED query vector
     * (non-member serving): per-probed-cell residual LUTs, no
@@ -526,12 +517,11 @@ object Quantized {
       when(col("cell") === probed.head, adcColumn(books, qResidual(probed.head)))) {
       (acc, c) => acc.when(col("cell") === c, adcColumn(books, qResidual(c)))
     }
-    idx.where(col("cell").isin(probed: _*))
+    TopK.first(idx.where(col("cell").isin(probed: _*))
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
-        round(dist, 5).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(k)
+        round(dist, 5).as("adc_dist")),
+      k, col("adc_dist"), col("vec_id"))
   }
 
   /** Two-stage retrieve-then-rerank — FAISS's IndexRefineFlat pattern,
@@ -554,12 +544,11 @@ object Quantized {
     val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
     val q = e.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.where(col("vec_id").isin(shortlist: _*))
+    TopK.first(e.where(col("vec_id").isin(shortlist: _*))
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
+      k, TopK.byScore("vec_id"): _*)
   }
 
   /** [[ivfPqRerankTopK]] for a CALLER-SUPPLIED query vector
@@ -572,14 +561,8 @@ object Quantized {
                          m: Int = 8, kCents: Int = 16): DataFrame = {
     val shortlist = ivfPqTopKVec(spark, dir, qv, nCells, nprobe, c, m, kCents)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    val q = typedlit(qv)
-    Tables.embeddings(spark, dir)
-      .where(col("vec_id").isin(shortlist: _*))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (l2norm(col("embedding")) * l2norm(q)), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), typedlit(qv),
+      col("vec_id").isin(shortlist: _*)), k, TopK.byScore("vec_id"): _*)
   }
 
   /** Rerank-depth sweep — prices the [[ivfPqRerankTopK]] shortlist
@@ -612,7 +595,7 @@ object Quantized {
     val scored = e.where(col("vec_id").isin(short: _*))
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val gt = VectorSearch.topK(spark, dir, queryId, k)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
@@ -770,7 +753,6 @@ object Quantized {
   def pcaInvariants(spark: SparkSession, dir: String, outDim: Int = 8): DataFrame = {
     import spark.implicits._
     val (comps, meanProj) = pcaModel(spark, dir, outDim)
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     val dots = for (i <- comps.indices; j <- comps.indices) yield
       (i, j, comps(i).indices.foldLeft(0.0)((s, t) =>
         s + comps(i)(t).toDouble * comps(j)(t).toDouble))
@@ -843,8 +825,7 @@ object Quantized {
       val r = ed.agg(
         sum(aggregate(col("emb"), lit(0.0), (a, x) => a + abs(x))).as("sa"),
         count(lit(1)).as("n")).head
-      BigDecimal(r.getDouble(0) / (r.getLong(1) * dim))
-        .setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
+      r5(r.getDouble(0) / (r.getLong(1) * dim))
     }
     val withCols = ed
       .withColumn("codes", transform(col("emb"), x =>
@@ -920,21 +901,18 @@ object Quantized {
     val e = Tables.embeddings(spark, dir)
     val sigs = ensureBinaryIndex(spark, dir)
     val qs = sigs.where(col("vec_id") === queryId).select(col("sig").as("qsig"))
-    val short = sigs.where(col("vec_id") =!= queryId)
+    val short = TopK.first(sigs.where(col("vec_id") =!= queryId)
       .crossJoin(broadcast(qs))
       .select(col("vec_id"),
-        bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("long").as("hamming"))
-      .orderBy(col("hamming"), col("vec_id"))
-      .limit(c)
+        bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("long").as("hamming")),
+      c, col("hamming"), col("vec_id"))
     val qe = e.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"), l2norm(col("embedding")).as("qn"))
-    e.join(broadcast(short), Seq("vec_id"))
+    TopK.first(e.join(broadcast(short), Seq("vec_id"))
       .crossJoin(broadcast(qe))
       .select(col("vec_id"), col("hamming"),
-        round(dotd(col("embedding"), col("qv")) / (l2norm(col("embedding")) * col("qn")), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), col("qv"), l2norm(col("embedding")), col("qn")).as("score")),
+      k, TopK.byScore("vec_id"): _*)
   }
 
   /** [[binaryTopK]] for a CALLER-SUPPLIED query vector (non-member
@@ -948,17 +926,14 @@ object Quantized {
     val qsig = qv.take(64).zipWithIndex.foldLeft(0L) { case (acc, (x, i)) =>
       if (x > 0f) acc | (1L << i) else acc
     }
-    val short = sigs
+    val short = TopK.first(sigs
       .select(col("vec_id"),
-        bit_count(col("sig").bitwiseXOR(lit(qsig))).cast("long").as("hamming"))
-      .orderBy(col("hamming"), col("vec_id"))
-      .limit(c)
+        bit_count(col("sig").bitwiseXOR(lit(qsig))).cast("long").as("hamming")),
+      c, col("hamming"), col("vec_id"))
     val q = typedlit(qv)
-    Tables.embeddings(spark, dir).join(broadcast(short), Seq("vec_id"))
+    TopK.first(Tables.embeddings(spark, dir).join(broadcast(short), Seq("vec_id"))
       .select(col("vec_id"), col("hamming"),
-        round(dotd(col("embedding"), q) / (l2norm(col("embedding")) * l2norm(q)), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score")),
+      k, TopK.byScore("vec_id"): _*)
   }
 }

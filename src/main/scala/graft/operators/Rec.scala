@@ -249,8 +249,8 @@ object Rec {
     prof
       .crossJoin(broadcast(items))
       .select(col("user_id"), col("item_id"),
-        round(dotd(col("embedding"), col("p")) /
-          (l2norm(col("embedding")) * l2norm(col("p"))), 5).as("score"))
+        cosine5(col("embedding"), col("p"), l2norm(col("embedding")), l2norm(col("p")))
+          .as("score"))
       .join(train, Seq("user_id", "item_id"), "left_anti")
   }
 
@@ -295,8 +295,8 @@ object Rec {
       .join(prof, Seq("user_id"))
       .join(items, Seq("item_id"))
       .select(col("user_id"), col("item_id"),
-        round(dotd(col("embedding"), col("p")) /
-          (l2norm(col("embedding")) * l2norm(col("p"))), 5).as("score"))
+        cosine5(col("embedding"), col("p"), l2norm(col("embedding")), l2norm(col("p")))
+          .as("score"))
       .join(train, Seq("user_id", "item_id"), "left_anti")
   }
 

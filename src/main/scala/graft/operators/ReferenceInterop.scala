@@ -91,14 +91,8 @@ object ReferenceInterop {
       (s, i)
     }.sortBy { case (s, i) => (-s, i) }.take(nprobe).map(_._2).toSeq
     val lists = FaissSource.readIvfLists(spark, ivfPath, Some(probed))
-    val q = typedlit(queryVec)
-    lists
-      .where(excludeId.map(col("vec_id") =!= _).getOrElse(lit(true)))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (l2norm(col("embedding")) * l2norm(q)), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(VectorSearch.scoredByVec(lists, typedlit(queryVec),
+      excludeId.map(col("vec_id") =!= _).getOrElse(lit(true))), k, TopK.byScore("vec_id"): _*)
   }
 
   /** One row of a reference `.npy` matrix as a driver-side query
@@ -131,8 +125,7 @@ object ReferenceInterop {
         round(dotd(col("embedding"), typedlit(qv)), 5).as("score"))
       .join(broadcast(meta), Seq("doc_id"))
       .select(col("doc_id"), col("id"), col("brand"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(TopK.first(_, k, TopK.byScore("doc_id"): _*))
   }
 
   /** Tab-3 Compare (app.py:326-360): the pairwise similarity matrix
@@ -176,24 +169,20 @@ object ReferenceInterop {
     import graft.functions.VectorFunctions._
     val qv = npyRow(spark, ReviewsNpy, qIdx)
     val q = typedlit(qv)
-    val flat = FaissSource.readFlat(spark, ReviewsFlatIndex)
+    val flat = TopK.first(FaissSource.readFlat(spark, ReviewsFlatIndex)
       .where(col("vec_id") =!= qIdx)
       .select(lit("flat").as("method"), col("vec_id"),
-        round(dotd(col("embedding"), q), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        round(dotd(col("embedding"), q), 5).as("score")), k, TopK.byScore("vec_id"): _*)
     val h = FaissSource.readIvfHeader(spark, ReviewsIvfIndex)
     val probed = h.centroids.zipWithIndex.map { case (c, i) =>
       var s = 0.0
       var j = 0; while (j < c.length) { s += c(j).toDouble * qv(j); j += 1 }
       (s, i)
     }.sortBy { case (s, i) => (-s, i) }.take(nprobe).map(_._2).toSeq
-    val ivf = FaissSource.readIvfLists(spark, ReviewsIvfIndex, Some(probed))
+    val ivf = TopK.first(FaissSource.readIvfLists(spark, ReviewsIvfIndex, Some(probed))
       .where(col("vec_id") =!= qIdx)
       .select(lit("ivf").as("method"), col("vec_id"),
-        round(dotd(col("embedding"), q), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        round(dotd(col("embedding"), q), 5).as("score")), k, TopK.byScore("vec_id"): _*)
     flat.unionAll(ivf).orderBy(col("method"), col("score").desc, col("vec_id"))
   }
 

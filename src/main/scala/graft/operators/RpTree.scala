@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
@@ -62,12 +61,10 @@ object RpTree {
       emb.select(col("vec_id")).crossJoin(broadcast(trees))
         .select(col("t"), col("vec_id"), lit(0L).as("node")))
     val planes = (0 until depth).map { _ =>
-      val wab = Window.partitionBy(col("t"), col("node")).orderBy(
-        md5(concat(lit("annoy:"), col("t").cast("string"), lit(":"),
-          col("node").cast("string"), lit(":"), col("vec_id").cast("string"))),
-        col("vec_id"))
-      val ab = m.withColumn("rk", row_number().over(wab))
-        .where(col("rk") <= 2)
+      val ab = TopK.perKey(m, Seq(col("t"), col("node")), 2, "rk",
+          md5(concat(lit("annoy:"), col("t").cast("string"), lit(":"),
+            col("node").cast("string"), lit(":"), col("vec_id").cast("string"))),
+          col("vec_id"))
         .groupBy(col("t"), col("node"))
         .agg(max(when(col("rk") === 1, col("vec_id"))).as("aid"),
           coalesce(max(when(col("rk") === 2, col("vec_id"))),
@@ -130,37 +127,20 @@ object RpTree {
       graft.sources.IndexStore.open(spark, s"$path/planes"))
   }
 
-  /** The VecDot fold replicated on the driver — the identical
-    * left-to-right `s += x·y` double sequence, so a plane projection
-    * computed here is bit-equal to the in-plan
-    * [[graft.functions.VectorFunctions.dotd]] the build used.
-    */
-  private def dotLocal(a: Array[Double], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i) * b(i).toDouble; i += 1 }
-    s
-  }
-
   /** Annoy-style top-k for a corpus query vector: the query routes
     * down every tree on the DRIVER over the collected plane tables
     * (≤ nTrees·(2^depth − 1) rows — bounded driver state, the
-    * [[Ivf]] centroid precedent; [[dotLocal]] reproduces the in-plan
-    * fold bit-for-bit), so the probe is a LITERAL (tree, leaf) list
-    * the leaf scan filters on — partition-prunable at scale, and no
-    * per-query routing joins on the cluster. Candidates are the
-    * union of the probed leaves' members; the exact rerank runs
-    * under a q_id-broadcast WindowGroupLimit (the [[Ivf.ivfTopK]]
-    * convention).
+    * [[Ivf]] centroid precedent; [[graft.functions.VectorFunctions.dotLocal]]
+    * reproduces the in-plan fold bit-for-bit), so the probe is a
+    * LITERAL (tree, leaf) list the leaf scan filters on —
+    * partition-prunable at scale, and no per-query routing joins on
+    * the cluster. Candidates are the union of the probed leaves'
+    * members, exactly reranked by [[TopK.ranked]].
     */
   def rpTreeTopK(spark: SparkSession, dir: String, queryId: Long,
-                 nTrees: Int = 4, depth: Int = 3, k: Int = 10): DataFrame = {
-    val qv = Tables.embeddings(spark, dir).where(col("vec_id") === queryId)
-      .select(col("embedding")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"query vector $queryId not found in $dir/embeddings.parquet"))
-      .getSeq[Float](0).toArray
-    rpTreeTopKCore(spark, dir, qv, Some(queryId), nTrees, depth, k)
-  }
+                 nTrees: Int = 4, depth: Int = 3, k: Int = 10): DataFrame =
+    rpTreeTopKCore(spark, dir, memberVector(spark, dir, queryId), Some(queryId),
+      nTrees, depth, k)
 
   /** [[rpTreeTopK]] for a CALLER-SUPPLIED query vector (non-member
     * serving): same driver routing down every tree, no self-exclusion.
@@ -195,11 +175,12 @@ object RpTree {
           }.toMap
         }
       }
+    val qd = qv.map(_.toDouble)
     val qLeaves: Seq[(Long, Long)] = (0 until nTrees).map { t =>
       var node = 0L
       planeMaps.foreach { pm =>
         val (plane, thr) = pm((t.toLong, node))
-        node = node * 2 + (if (dotLocal(plane, qv) >= thr) 1L else 0L)
+        node = node * 2 + (if (dotLocal(plane, qd) >= thr) 1L else 0L)
       }
       (t.toLong, node)
     }
@@ -208,16 +189,10 @@ object RpTree {
     val cand = leaves.where(probe)
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id")).distinct()
-    // shuffle-free TakeOrdered + single-partition rank (the
-    // [[Ivf.ivfTopK]] convention): no exchange, no AQE stages
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    cand.join(emb, Seq("vec_id"))
-      .select(col("vec_id").as("n_id"), cosine5(col("embedding"), q).as("score"))
-      .orderBy(col("score").desc, col("n_id"))
-      .limit(k)
-      .withColumn("q_id", constKey(exclude.getOrElse(-1L), col("n_id")))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .select(col("n_id"), col("score"), col("rk"))
+    TopK.ranked(cand.join(emb, Seq("vec_id"))
+      .select(col("vec_id").as("n_id"),
+        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score")),
+      k, "rk", TopK.byScore("n_id"): _*)
       .orderBy(col("rk"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions.r5
 
 /** Text-analysis operators for corpus curation at scale: language ID,
   * quality scoring, token statistics, content fingerprinting. All are
@@ -83,12 +84,10 @@ object TextAnalysis {
     * rounded sign (−0.0 vs +0.0) is an engine coin flip.
     */
   def vocabZipf(spark: SparkSession, dir: String, topN: Int = 100): DataFrame = {
-    val top = Tables.documents(spark, dir)
+    val xy = TopK.ranked(Tables.documents(spark, dir)
       .select(explode(TextRetrieval.sklearnTokens(col("text"))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("tf"))
-      .orderBy(col("tf").desc, col("term")).limit(topN)
-    val w = Window.orderBy(col("tf").desc, col("term"))
-    val xy = top.withColumn("rank", row_number().over(w))
+      .groupBy(col("term")).agg(count(lit(1)).as("tf")),
+      topN, "rank", col("tf").desc, col("term"))
       .select(log(col("rank")).as("x"), log(col("tf")).as("y"))
     val m = xy.agg(avg(col("x")).as("xb"), avg(col("y")).as("yb"))
     xy.crossJoin(broadcast(m))
@@ -853,7 +852,6 @@ object TextAnalysis {
     val ra = a.zipWithIndex.toMap
     val rb = b.zipWithIndex.toMap
     val inter = a.toSet & b.toSet
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq((k.toLong, inter.size.toLong,
       r5(inter.size.toDouble / (a.size + b.size - inter.size)),
       if (inter.isEmpty) 0.0
@@ -1315,11 +1313,8 @@ object TextAnalysis {
     val tok = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
     val total = tok.agg(count(lit(1)).as("total_tokens"))
-    val top = tok.groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w"))
-      .limit(maxK)
-      .withColumn("rk", row_number().over(
-        Window.orderBy(col("c").desc, col("w"))))
+    val top = TopK.ranked(tok.groupBy(col("w")).agg(count(lit(1)).as("c")),
+      maxK, "rk", col("c").desc, col("w"))
     top.select(explode(typedlit(cuts.map(_.toLong))).as("vocab_size"),
         col("rk"), col("c"))
       .where(col("rk") <= col("vocab_size"))

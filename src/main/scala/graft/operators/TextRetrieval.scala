@@ -641,13 +641,19 @@ object TextRetrieval {
       .crossJoin(broadcast(qn))
       .groupBy(col("doc_id"))
       .agg(sum(col("w") / col("nrm") * col("qw") / col("qn")).as("ts"))
-    val qvNorm = math.sqrt(qv.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
     candidates(spark, dir, metaFilter)
-      .select(col("vec_id").as("doc_id"),
-        (dotd(col("embedding"), typedlit(qv)) /
-          (l2norm(col("embedding")) * lit(qvNorm))).as("vs"))
+      .select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs"))
       .join(ts, Seq("doc_id"), "left")
       .withColumn("ts", coalesce(col("ts"), lit(0.0)))
+  }
+
+  /** The hybrid vector leg: unrounded cosine of `embedding` against
+    * the caller vector, its norm folded once on the driver.
+    */
+  private def vectorLeg(qv: Array[Float]): Column = {
+    val qd = qv.map(_.toDouble)
+    cosine(col("embedding"), typedlit(qv), l2norm(col("embedding")),
+      lit(math.sqrt(dotLocal(qd, qd))))
   }
 
   /** Raw-text hybrid front door: the reference's exact interactive
@@ -707,11 +713,8 @@ object TextRetrieval {
                                           queryTerms: Seq[String], metaFilter: Option[Column],
                                           k1: Double, b: Double): DataFrame = {
     val ts = bm25Scores(spark, dir, queryTerms, k1, b)
-    val qvNorm = math.sqrt(qv.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
     candidates(spark, dir, metaFilter)
-      .select(col("vec_id").as("doc_id"),
-        (dotd(col("embedding"), typedlit(qv)) /
-          (l2norm(col("embedding")) * lit(qvNorm))).as("vs"))
+      .select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs"))
       .join(ts, Seq("doc_id"), "left")
       .withColumn("ts", coalesce(col("ts"), lit(0.0)))
   }
@@ -737,21 +740,12 @@ object TextRetrieval {
   def rrfTopK(spark: SparkSession, dir: String, qv: Array[Float],
               queryTerms: Seq[String], k: Int, n: Int = 100,
               rrfK: Int = 60): DataFrame = {
-    val qvNorm = math.sqrt(qv.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble))
-    val vecTop = Tables.embeddings(spark, dir)
-      .select(col("vec_id").as("doc_id"),
-        (dotd(col("embedding"), typedlit(qv)) /
-          (l2norm(col("embedding")) * lit(qvNorm))).as("vs"))
-      .orderBy(col("vs").desc, col("doc_id")).limit(n)
-    val bmTop = bm25Scores(spark, dir, queryTerms, k1 = 1.2, b = 0.75)
-      .orderBy(col("ts").desc, col("doc_id")).limit(n)
-    // rank windows run AFTER the limit — an n-row single-partition
-    // sort, not a corpus-wide global window
-    val rv = vecTop.withColumn("rv",
-      row_number().over(Window.orderBy(col("vs").desc, col("doc_id"))).cast("long"))
+    val rv = TopK.ranked(Tables.embeddings(spark, dir)
+      .select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs")),
+      n, "rv", TopK.byScore("doc_id", "vs"): _*)
       .select("doc_id", "rv")
-    val rb = bmTop.withColumn("rb",
-      row_number().over(Window.orderBy(col("ts").desc, col("doc_id"))).cast("long"))
+    val rb = TopK.ranked(bm25Scores(spark, dir, queryTerms, k1 = 1.2, b = 0.75),
+      n, "rb", TopK.byScore("doc_id", "ts"): _*)
       .select("doc_id", "rb")
     rv.join(rb, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
@@ -786,7 +780,7 @@ object TextRetrieval {
     candidates(spark, dir, metaFilter)
       .where(col("vec_id") =!= queryDoc).crossJoin(broadcast(qe))
       .select(col("vec_id").as("doc_id"),
-        (dotd(col("embedding"), col("qemb")) / (l2norm(col("embedding")) * col("qn"))).as("vs"))
+        cosine(col("embedding"), col("qemb"), l2norm(col("embedding")), col("qn")).as("vs"))
       .join(tscore, Seq("doc_id"), "left")
       .withColumn("ts", coalesce(col("ts"), lit(0.0)))
   }
@@ -944,8 +938,8 @@ object TextRetrieval {
       .join(lex, "term")
       .crossJoin(broadcast(qv))
       .groupBy(col("doc_id"), col("tfidf_score"), col("q_term"))
-      .agg(max(dotd(col("vector"), col("q_vec")) /
-        (l2norm(col("vector")) * l2norm(col("q_vec")))).as("ms"))
+      .agg(max(cosine(col("vector"), col("q_vec"),
+        l2norm(col("vector")), l2norm(col("q_vec")))).as("ms"))
       .groupBy(col("doc_id"), col("tfidf_score"))
       .agg(round(sum(col("ms")), 5).as("maxsim_score"))
       .orderBy(col("maxsim_score").desc, col("doc_id"))
@@ -977,7 +971,6 @@ object TextRetrieval {
       "bm25" -> ranked(bm25TopK(spark, dir, queryTerms, k)),
       "rrf" -> ranked(rrfTopK(spark, dir, qv, queryTerms, k)),
       "tfidf" -> ranked(tfidfTopK(spark, dir, queryTerms, k)))
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     val rows = for {
       i <- lists.indices
       j <- lists.indices if i < j
@@ -1024,7 +1017,6 @@ object TextRetrieval {
         .orderBy(col("s").desc, col("doc_id")).limit(k)
         .collect().map(_.getLong(0)).toSeq
     val default = topIds(1.2, 0.75)
-    def r5(x: Double) = BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
     grid.map { case (k1, b) =>
       val ids = if (k1 == 1.2 && b == 0.75) default else topIds(k1, b)
       val inter = ids.toSet & default.toSet

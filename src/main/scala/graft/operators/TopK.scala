@@ -1,26 +1,89 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
 
-/** Bounded per-key top-k as a typed Aggregator — the alternative to a
-  * ranking window for the kNN join (SURVEY §5).
+/** The engine's one rank core: every vector score → top-k → rank goes
+  * through [[first]], [[ranked]], [[perKey]] or the bounded-heap
+  * aggregators below.
   *
-  * A window plan must sort every partition by (key, score) before the
-  * rank filter (Spark 4's WindowGroupLimit bounds what is shuffled,
-  * but the per-partition sort remains). The Aggregator keeps a bounded
-  * buffer of the k best pairs per key instead: partial aggregation
-  * truncates to k on EVERY map-side partition, so at most
-  * k·numPartitions rows per key cross the wire, and nothing is ever
-  * globally sorted — only each final k-element buffer. At 1000
-  * executors that turns the kNN ranking from sort-bound into a pure
-  * streaming fold.
+  * Rank rules, stated once:
+  *  - Total order. Every cut orders by the caller's `order` columns,
+  *    which end in a unique id: (score DESC, id ASC) for similarity,
+  *    (distance ASC, id ASC) for distances. Ties therefore break
+  *    toward the lower id on every engine, and the DuckDB oracles
+  *    replay the same ORDER BY.
+  *  - [[first]] is ORDER BY … LIMIT k, which Spark plans as
+  *    TakeOrderedAndProject: a bounded heap per input partition,
+  *    merged on the driver. No exchange, no full sort of the corpus.
+  *  - [[ranked]] adds the rank column 1..min(k, n) over that k-row
+  *    result. The window runs after the cut, so it sorts at most k
+  *    rows. It is partitioned by a private constant key that Catalyst
+  *    cannot fold (an unpartitioned window funnels its input into one
+  *    task, and PlanSpec gates every such window by name); the cut's
+  *    single output partition already satisfies the window's
+  *    clustering, so the rank adds no exchange.
+  *  - [[perKey]] is the per-key cut (`row_number` over the keys,
+  *    `rk <= k`), which Spark plans as WindowGroupLimit: each map-side
+  *    partition keeps at most k rows per key before the shuffle.
+  *  - Scores are [[graft.functions.VectorFunctions.cosine5]]: a zero
+  *    norm on either side scores 0.0, never an ANSI DIVIDE_BY_ZERO.
+  *    A zero vector then ties with every other 0.0 and falls to id
+  *    order.
+  *  - k larger than the input returns every row, ranked; k = 0
+  *    returns none. Nothing is padded.
+  *
+  * The aggregators are the per-key alternative to a ranking window
+  * for the kNN join (SURVEY §5). A window plan must sort every
+  * partition by (key, score) before the rank filter; the Aggregator
+  * keeps a bounded buffer of the k best pairs per key instead, so
+  * partial aggregation truncates to k on EVERY map-side partition, at
+  * most k·numPartitions rows per key cross the wire, and nothing is
+  * ever globally sorted. At 1000 executors that turns the kNN ranking
+  * from sort-bound into a pure streaming fold.
   */
 object TopK {
+
+  /** The similarity total order: `score` DESC, then `id` ASC. */
+  def byScore(id: String, score: String = "score"): Seq[Column] =
+    Seq(col(score).desc, col(id))
+
+  /** The first k rows of `df` under `order` (see the rank rules). */
+  def first(df: DataFrame, k: Int, order: Column*): DataFrame =
+    df.orderBy(order: _*).limit(k)
+
+  /** [[first]] plus a long rank column `rk` numbering the kept rows
+    * 1..min(k, n) in `order`.
+    */
+  def ranked(df: DataFrame, k: Int, rk: String, order: Column*): DataFrame = {
+    val cut = first(df, k, order: _*)
+    cut.withColumn(rk,
+      row_number().over(Window.partitionBy(constKey(cut)).orderBy(order: _*)).cast("long"))
+  }
+
+  /** Per-key top-k: a long rank column `rk` (1.. within each `keys`
+    * group, in `order`) and only the rows with rk <= k.
+    */
+  def perKey(df: DataFrame, keys: Seq[Column], k: Int, rk: String,
+             order: Column*): DataFrame =
+    df.withColumn(rk,
+      row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)).cast("long"))
+      .where(col(rk) <= k)
+
+  /** A constant 0 that Catalyst cannot constant-fold: pmod(h, 1) is 0
+    * for every h, but the hash reads the row. A bare `lit(0)` folds out
+    * of the window spec and leaves a partition-less window; the
+    * previous shape, a 1-row `crossJoin(broadcast(...))` key, paid a
+    * broadcast job plus a BroadcastNestedLoopJoin per call. Hashing
+    * every column keeps the key non-foldable even when some columns
+    * are literals.
+    */
+  private def constKey(df: DataFrame): Column =
+    pmod(hash(df.columns.map(c => col(s"`$c`")): _*), lit(1))
 
   case class ScoredPair(q_id: Long, n_id: Long, score: Double)
 
@@ -81,7 +144,7 @@ object TopK {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
       .as[ScoredPair]
     scored.groupByKey(_.q_id)
       .agg(new TopKAgg(k).toColumn.name("top"))

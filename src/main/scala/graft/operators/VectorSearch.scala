@@ -1,18 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
+import graft.operators.TopK.byScore
 
 /** Exact (flat) vector search operators — the reference's core surface.
   *
   * Design for scale: the query side is always tiny (one vector or a
   * sampled batch) and is `broadcast()`; the corpus is scanned once with
-  * no shuffle. Global top-k goes through `ORDER BY ... LIMIT k`, which
-  * Spark plans as TakeOrderedAndProject (per-partition bounded heaps
-  * merged at the driver — no full sort, no shuffle of the corpus).
+  * no shuffle. Every cut and rank goes through [[TopK]].
   */
 object VectorSearch {
 
@@ -22,20 +20,34 @@ object VectorSearch {
     * is looked up by id (the embedding-model stub — see SURVEY.md §3).
     */
   def topK(spark: SparkSession, dir: String, queryId: Long, k: Int,
-           filter: Column = lit(true)): DataFrame = {
-    // query norm computed once on the broadcast side, corpus norm once
-    // per row — never per pair
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
+           filter: Column = lit(true)): DataFrame =
+    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId, _.where(filter)),
+      k, byScore("vec_id"): _*)
+
+  /** (vec_id, score) of every candidate against the member `queryId`.
+    * The query row comes from the UNFILTERED frame; `candidates` narrows
+    * only the scored side, which never includes the query itself. The
+    * query norm is computed once on the broadcast side and the corpus
+    * norm once per row, never per pair.
+    */
+  private[operators] def scoredById(frame: DataFrame, queryId: Long,
+                                    candidates: DataFrame => DataFrame): DataFrame = {
+    val e = frame.withColumn("nrm", l2norm(col("embedding")))
     val q = e.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.where(col("vec_id") =!= queryId)
-      .where(filter)
+    candidates(e.where(col("vec_id") =!= queryId))
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
   }
+
+  /** (vec_id, score) of every row of `frame` passing `filter` against a
+    * query vector literal `q`; nothing is excluded.
+    */
+  private[operators] def scoredByVec(frame: DataFrame, q: Column, filter: Column): DataFrame =
+    frame.where(filter)
+      .select(col("vec_id"),
+        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score"))
 
   /** [[topK]] over an EXTERNAL (vec_id, embedding) frame — the door
     * the reference-artifact sources walk through
@@ -44,17 +56,8 @@ object VectorSearch {
     * corpus-agnostic, so the engine answers the reference's OWN
     * matrices (app.py:68-80) and not just the parquet twin.
     */
-  def topKOf(frame: DataFrame, queryId: Long, k: Int): DataFrame = {
-    val e = frame.withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+  def topKOf(frame: DataFrame, queryId: Long, k: Int): DataFrame =
+    TopK.first(scoredById(frame, queryId, identity), k, byScore("vec_id"): _*)
 
   /** [[topKVec]] over an EXTERNAL frame: external query vector (a plan
     * literal, no self-exclusion) against an external (vec_id,
@@ -62,15 +65,8 @@ object VectorSearch {
     * matrices composes [[graft.functions.CorpusLexicalEncoder]] with
     * this.
     */
-  def topKVecOf(frame: DataFrame, qv: Array[Float], k: Int): DataFrame = {
-    val q = typedlit(qv)
-    frame
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (l2norm(col("embedding")) * l2norm(q)), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+  def topKVecOf(frame: DataFrame, qv: Array[Float], k: Int): DataFrame =
+    TopK.first(scoredByVec(frame, typedlit(qv), lit(true)), k, byScore("vec_id"): _*)
 
   /** Two-stage retrieval (reference app.py:156-188): metadata filter
     * builds the candidate set, vector search runs inside it. The filter
@@ -88,15 +84,9 @@ object VectorSearch {
     * corpus row.
     */
   def topKVec(spark: SparkSession, dir: String, qv: Array[Float], k: Int,
-              filter: Column = lit(true)): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = typedlit(qv)
-    e.where(filter)
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
-  }
+              filter: Column = lit(true)): DataFrame =
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(qv), filter),
+      k, byScore("vec_id"): _*)
 
   /** The raw-text front door over [[topKVec]] — the reference's full
     * interactive path (app.py:169-188: `model.encode(query)` then the
@@ -118,13 +108,12 @@ object VectorSearch {
   def topKL2(spark: SparkSession, dir: String, queryId: Long, k: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val q = e.where(col("vec_id") === queryId).select(col("embedding").as("qv"))
-    e.where(col("vec_id") =!= queryId)
+    TopK.first(e.where(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         round(sqrt(dotd(col("embedding"), col("embedding")) + dotd(col("qv"), col("qv"))
-          - lit(2) * dotd(col("embedding"), col("qv"))), 5).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+          - lit(2) * dotd(col("embedding"), col("qv"))), 5).as("dist")),
+      k, col("dist"), col("vec_id"))
   }
 
   /** Retrieval-quality eval the reference tabulates as Precision@K
@@ -134,10 +123,9 @@ object VectorSearch {
     */
   /** The shared top-k block behind BOTH label evals: sampled query
     * batch (vec_id % queryMod == 0), broadcast to one corpus scan,
-    * round-5 cosine, per-query row_number cut at k with the
-    * (score DESC, n_id) tie-break. [[knnLabelPrecision]] and
-    * [[knnClassify]] MUST rank from this one definition — their
-    * oracles assume the identical top-k.
+    * round-5 cosine, per-query [[TopK.perKey]] cut at k.
+    * [[knnLabelPrecision]] and [[knnClassify]] MUST rank from this one
+    * definition — their oracles assume the identical top-k.
     */
   private def knnTopKByLabel(spark: SparkSession, dir: String, queryMod: Int,
                              k: Int, maxQueries: Int = Int.MaxValue): DataFrame = {
@@ -151,10 +139,17 @@ object VectorSearch {
             else q0.orderBy(col("q_id")).limit(maxQueries)
     val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("q_label"), col("label").as("n_label"), col("vec_id").as("n_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+    TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
   }
+
+  /** Each query's plurality neighbor label (ties toward the smaller
+    * label) with its vote count, over a [[knnTopKByLabel]] frame.
+    */
+  private def plurality(kn: DataFrame): DataFrame =
+    TopK.perKey(kn.groupBy(col("q_id"), col("q_label"), col("n_label"))
+      .agg(count(lit(1)).as("n_votes")),
+      Seq(col("q_id")), 1, "vr", col("n_votes").desc, col("n_label"))
 
   def knnLabelPrecision(spark: SparkSession, dir: String, queryMod: Int, k: Int): DataFrame = {
     knnTopKByLabel(spark, dir, queryMod, k)
@@ -221,11 +216,7 @@ object VectorSearch {
     */
   def knnClassify(spark: SparkSession, dir: String, queryMod: Int, k: Int,
                   maxQueries: Int = Int.MaxValue): DataFrame = {
-    val votes = knnTopKByLabel(spark, dir, queryMod, k, maxQueries)
-      .groupBy(col("q_id"), col("q_label"), col("n_label"))
-      .agg(count(lit(1)).as("n_votes"))
-    val vw = Window.partitionBy(col("q_id")).orderBy(col("n_votes").desc, col("n_label"))
-    votes.withColumn("vr", row_number().over(vw)).where(col("vr") === 1)
+    plurality(knnTopKByLabel(spark, dir, queryMod, k, maxQueries))
       .select(col("q_id"), col("q_label").cast("long").as("q_label"),
         col("n_label").cast("long").as("pred_label"), col("n_votes"),
         (col("q_label") === col("n_label")).as("correct"))
@@ -254,7 +245,7 @@ object VectorSearch {
       knnTopKByLabel(spark, dir, queryMod, k, maxQueries)
         .select(col("q_id"), col("n_id")))
     val deg = kn.groupBy(col("n_id")).agg(count(lit(1)).as("d"))
-    val hub = deg.orderBy(col("d").desc, col("n_id")).limit(1)
+    val hub = TopK.first(deg, 1, col("d").desc, col("n_id"))
       .select(col("n_id").as("hub_vec_id"), col("d").as("max_in_degree"))
     val qq = kn.join(kn.select(col("q_id").as("n_id")).distinct(), Seq("n_id"))
     val mutual = qq.as("a").join(qq.as("b"),
@@ -291,20 +282,16 @@ object VectorSearch {
                          k: Int = 10, maxQueries: Int = 128,
                          topN: Int = 25): DataFrame = {
     val kn = knnTopKByLabel(spark, dir, queryMod, k, maxQueries)
-    val votes = kn.groupBy(col("q_id"), col("q_label"), col("n_label"))
-      .agg(count(lit(1)).as("n_votes"))
-    val vw = Window.partitionBy(col("q_id")).orderBy(col("n_votes").desc, col("n_label"))
-    val top = votes.withColumn("vr", row_number().over(vw)).where(col("vr") === 1)
+    val top = plurality(kn)
     val agree = kn.groupBy(col("q_id"))
       .agg(count(when(col("n_label") === col("q_label"), 1)).as("n_agree"))
-    top.join(agree, "q_id")
+    TopK.first(top.join(agree, "q_id")
       .where(col("n_label") =!= col("q_label"))
       .select(col("q_id").as("vec_id"), col("q_label").cast("long").as("label"),
         col("n_label").cast("long").as("suggested_label"), col("n_votes"),
         col("n_agree"),
-        round((lit(k) - col("n_agree")) / lit(k.toDouble), 5).as("disagreement"))
-      .orderBy(col("disagreement").desc, col("n_votes").desc, col("vec_id"))
-      .limit(topN)
+        round((lit(k) - col("n_agree")) / lit(k.toDouble), 5).as("disagreement")),
+      topN, col("disagreement").desc, col("n_votes").desc, col("vec_id"))
   }
 
   /** Confusion matrix of the kNN classifier ([[knnClassify]] at a
@@ -412,16 +399,8 @@ object VectorSearch {
     val d = Tables.documents(spark, dir)
       .where(col("lang") === lang && col("n_chars") >= minChars)
       .select(col("doc_id"))
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.join(d, col("vec_id") === col("doc_id"))
-      .where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId,
+      _.join(d, col("vec_id") === col("doc_id"))), k, byScore("vec_id"): _*)
   }
 
   /** Two-stage retrieval with an ARRAY-membership metadata filter —
@@ -437,16 +416,8 @@ object VectorSearch {
     val d = Analytics.docTags(spark, dir)
       .where(array_contains(col("tags"), tag))
       .select(col("doc_id"))
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.join(d, col("vec_id") === col("doc_id"))
-      .where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId,
+      _.join(d, col("vec_id") === col("doc_id"))), k, byScore("vec_id"): _*)
   }
 
   /** Pairwise cosine similarity matrix for a small id set
@@ -460,7 +431,7 @@ object VectorSearch {
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("bv"), col("nrm").as("bn"))
     a.crossJoin(broadcast(b))
       .select(col("a_id"), col("b_id"),
-        round(dotd(col("av"), col("bv")) / (col("an") * col("bn")), 5).as("score"))
+        cosine5(col("av"), col("bv"), col("an"), col("bn")).as("score"))
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -510,10 +481,8 @@ object VectorSearch {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .where(col("rk") <= k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+    TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -555,13 +524,10 @@ object VectorSearch {
       BigDecimal(r.getDouble(1)).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble)
     // left-to-right fold — the same association order the oracle's
     // list_dot_product uses, so both engines derive one norm
-    val pn = math.sqrt(pv.foldLeft(0.0)((s, x) => s + x * x))
-    e.join(seen, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), typedlit(pv)) /
-          (l2norm(col("embedding")) * lit(pn)), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    val pn = math.sqrt(dotLocal(pv, pv))
+    TopK.first(e.join(seen, Seq("vec_id"), "left_anti")
+      .select(col("vec_id"), cosine5(col("embedding"), typedlit(pv),
+        l2norm(col("embedding")), lit(pn)).as("score")), k, byScore("vec_id"): _*)
   }
 
   /** Hard-negative mining — the contrastive-training data op (batch
@@ -581,10 +547,8 @@ object VectorSearch {
     val scored = e.join(broadcast(q), col("label") =!= col("q_label"))
       .select(col("q_id"), col("q_label").cast("long").as("q_label"),
         col("vec_id").as("neg_id"), col("label").cast("long").as("neg_label"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("neg_id"))
-    scored.withColumn("rk", row_number().over(w).cast("long"))
-      .where(col("rk") <= k)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+    TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("neg_id"): _*)
       .orderBy(col("q_id"), col("rk"))
   }
 
@@ -614,13 +578,9 @@ object VectorSearch {
     def leg(cond: Column, asc: Boolean, idName: String, scName: String) = {
       val scored = e.join(broadcast(q), cond && col("vec_id") =!= col("a_id"))
         .select(col("a_id"), col("a_label"), col("vec_id").as(idName),
-          round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5)
-            .as(scName))
-      val ord = if (asc) Window.partitionBy(col("a_id"))
-        .orderBy(col(scName).asc, col(idName))
-      else Window.partitionBy(col("a_id"))
-        .orderBy(col(scName).desc, col(idName))
-      scored.withColumn("rk", row_number().over(ord)).where(col("rk") === 1)
+          cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as(scName))
+      TopK.perKey(scored, Seq(col("a_id")), 1, "rk",
+        if (asc) col(scName).asc else col(scName).desc, col(idName))
         .drop("rk")
     }
     val pos = leg(col("label") === col("a_label"), asc = true, "pos_id", "pos_score")
@@ -685,15 +645,12 @@ object VectorSearch {
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("label"), transform(col("pm"), x => x.getField("m")).as("centroid"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("dist_sq").desc, col("vec_id"))
-    emb.join(broadcast(cent), Seq("label"))
+    TopK.perKey(emb.join(broadcast(cent), Seq("label"))
       .withColumn("dist_sq", round(
         dotd(col("embedding"), col("embedding"))
           - lit(2.0) * dotd(col("embedding"), col("centroid"))
-          + dotd(col("centroid"), col("centroid")), 5))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .where(col("rk") <= topN)
+          + dotd(col("centroid"), col("centroid")), 5)),
+      Seq(col("label")), topN, "rk", col("dist_sq").desc, col("vec_id"))
       .select(col("label"), col("vec_id"), col("dist_sq"), col("rk"))
       .orderBy(col("label"), col("rk"))
   }
@@ -723,23 +680,18 @@ object VectorSearch {
     val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
     val q = e.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    val cands = e.where(col("vec_id") =!= queryId)
+    val cands = TopK.first(e.where(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("relevance"),
-        col("embedding"), col("nrm"))
-      .orderBy(col("relevance").desc, col("vec_id"))
-      .limit(fetchK)
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("relevance"),
+        col("embedding"), col("nrm")), fetchK, byScore("vec_id", "relevance"): _*)
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1),
-        r.getSeq[Float](2).toArray, r.getDouble(3)))
-    def cos(a: (Long, Double, Array[Float], Double),
-            b: (Long, Double, Array[Float], Double)): Double = {
-      var s = 0.0; var i = 0
-      while (i < a._3.length) { s += a._3(i).toDouble * b._3(i).toDouble; i += 1 }
-      s / (a._4 * b._4)
-    }
-    val selected = scala.collection.mutable.ArrayBuffer.empty[((Long, Double, Array[Float], Double), Double)]
+        r.getSeq[Float](2).map(_.toDouble).toArray, r.getDouble(3)))
+    def cos(a: (Long, Double, Array[Double], Double),
+            b: (Long, Double, Array[Double], Double)): Double =
+      cosineLocal(dotLocal(a._3, b._3), a._4, b._4)
+    val selected = scala.collection.mutable.ArrayBuffer.empty[((Long, Double, Array[Double], Double), Double)]
     val remaining = scala.collection.mutable.ArrayBuffer(cands.indices: _*)
     while (selected.size < math.min(k, cands.length)) {
       val best = remaining.maxBy { ri =>
@@ -754,13 +706,8 @@ object VectorSearch {
       selected += ((c, lambda * c._2 - (1 - lambda) * maxSim))
       remaining -= best
     }
-    selected.zipWithIndex.map { case ((c, s), i) =>
-      // HALF_UP to 5 decimals — the same convention as SQL round()
-      // (Spark and DuckDB), so the driver-side greedy replay is
-      // oracle-comparable; rint's half-even would diverge on .000005
-      (i + 1L, c._1, c._2,
-        BigDecimal(s).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }.toSeq.toDF("rank", "vec_id", "relevance", "mmr_score")
+    selected.zipWithIndex.map { case ((c, s), i) => (i + 1L, c._1, c._2, r5(s)) }.toSeq
+      .toDF("rank", "vec_id", "relevance", "mmr_score")
   }
 
   /** Label-separation margins (silhouette-lite): per label, the mean
@@ -786,9 +733,8 @@ object VectorSearch {
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("cl"), transform(col("pm"), x => x.getField("m")).as("centroid"))
     val scored = emb.crossJoin(broadcast(cent))
-      .withColumn("cos", round(
-        dotd(col("embedding"), col("centroid")) /
-          (l2norm(col("embedding")) * l2norm(col("centroid"))), 5))
+      .withColumn("cos", cosine5(col("embedding"), col("centroid"),
+        l2norm(col("embedding")), l2norm(col("centroid"))))
       .groupBy(col("vec_id"), col("label"))
       .agg(max(when(col("cl") === col("label"), col("cos"))).as("own"),
         max(when(col("cl") =!= col("label"), col("cos"))).as("other"))
@@ -861,12 +807,8 @@ object VectorSearch {
     val q2: Array[Double] = Array.tabulate(qv.length) { i =>
       fbK.toDouble * qv(i) + fbVecs.iterator.map(_(i).toDouble).sum
     }
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = typedlit(q2)
-    e.select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(q2), lit(true)),
+      k, byScore("vec_id"): _*)
   }
 
   /** Whitened-cosine retrieval (Su et al. 2021, "Whitening Sentence
@@ -901,12 +843,11 @@ object VectorSearch {
       .withColumn("nrm", l2norm(col("wx")))
     val q = w.where(col("vec_id") === queryId)
       .select(col("wx").as("qv"), col("nrm").as("qn"))
-    w.where(col("vec_id") =!= queryId)
+    TopK.first(w.where(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dotd(col("wx"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("wx"), col("qv"), col("nrm"), col("qn")).as("score")),
+      k, byScore("vec_id"): _*)
   }
 
   /** Embedding anisotropy report (Ethayarajh 2019's diagnosis:
@@ -957,13 +898,8 @@ object VectorSearch {
     val qv: Array[Double] = Array.tabulate(vecs(a).length) { i =>
       vecs(a)(i).toDouble - vecs(b)(i).toDouble + vecs(c)(i).toDouble
     }
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = typedlit(qv)
-    e.where(!col("vec_id").isin(a, b, c))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), q) / (col("nrm") * l2norm(q)), 5).as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(qv),
+      !col("vec_id").isin(a, b, c)), k, byScore("vec_id"): _*)
   }
 
   /** Range search — FAISS `range_search`'s shape (every neighbor whose
@@ -979,17 +915,10 @@ object VectorSearch {
     * the RESULT size, never the corpus).
     */
   def rangeSearch(spark: SparkSession, dir: String, queryId: Long,
-                  minScore: Double): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    e.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
+                  minScore: Double): DataFrame =
+    scoredById(Tables.embeddings(spark, dir), queryId, identity)
       .where(col("score") >= minScore)
-      .orderBy(col("score").desc, col("vec_id"))
-  }
+      .orderBy(byScore("vec_id"): _*)
 
   /** Matryoshka (truncated-dimension) search — the MRL serving trick
     * (Kusupati et al. 2022): embeddings trained front-loaded let a
@@ -1011,19 +940,16 @@ object VectorSearch {
       .select(pre.as("qp"), col("embedding").as("qv"))
       .withColumn("qpn", l2norm(col("qp")))
       .withColumn("qn", l2norm(col("qv")))
-    val short = e.where(col("vec_id") =!= queryId)
+    val short = TopK.first(e.where(col("vec_id") =!= queryId)
       .crossJoin(broadcast(qp.select(col("qp"), col("qpn"))))
       .select(col("vec_id"),
-        round(dotd(pre, col("qp")) / (l2norm(pre) * col("qpn")), 5).as("pre_score"))
-      .orderBy(col("pre_score").desc, col("vec_id"))
-      .limit(c)
-    e.join(broadcast(short), Seq("vec_id"))
+        cosine5(pre, col("qp"), l2norm(pre), col("qpn")).as("pre_score")),
+      c, byScore("vec_id", "pre_score"): _*)
+    TopK.first(e.join(broadcast(short), Seq("vec_id"))
       .crossJoin(broadcast(qp.select(col("qv"), col("qn"))))
       .select(col("vec_id"), col("pre_score"),
-        round(dotd(col("embedding"), col("qv")) / (l2norm(col("embedding")) * col("qn")), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), col("qv"), l2norm(col("embedding")), col("qn")).as("score")),
+      k, byScore("vec_id"): _*)
   }
 
   /** [[matryoshkaTopK]] for a CALLER-SUPPLIED query vector (non-member
@@ -1036,17 +962,13 @@ object VectorSearch {
     val pre = slice(col("embedding"), 1, prefixDims)
     val qp = typedlit(qv.take(prefixDims))
     val q = typedlit(qv)
-    val short = e
-      .select(col("vec_id"),
-        round(dotd(pre, qp) / (l2norm(pre) * l2norm(qp)), 5).as("pre_score"))
-      .orderBy(col("pre_score").desc, col("vec_id"))
-      .limit(c)
-    e.join(broadcast(short), Seq("vec_id"))
+    val short = TopK.first(e
+      .select(col("vec_id"), cosine5(pre, qp, l2norm(pre), l2norm(qp)).as("pre_score")),
+      c, byScore("vec_id", "pre_score"): _*)
+    TopK.first(e.join(broadcast(short), Seq("vec_id"))
       .select(col("vec_id"), col("pre_score"),
-        round(dotd(col("embedding"), q) / (l2norm(col("embedding")) * l2norm(q)), 5)
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(k)
+        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score")),
+      k, byScore("vec_id"): _*)
   }
 
   /** Matryoshka truncation curve — the sizing read behind
@@ -1075,14 +997,11 @@ object VectorSearch {
     val q = e.where(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       .orderBy(col("q_id")).limit(maxQueries)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
     val gt = graft.sources.ScratchCache.materialize(
-      e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          round(dotd(col("embedding"), col("qv")) /
-            (l2norm(col("embedding")) * l2norm(col("qv"))), 5).as("score"))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .where(col("rk") <= k)
+      TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"), cosine5(col("embedding"), col("qv"),
+          l2norm(col("embedding")), l2norm(col("qv"))).as("score")),
+        Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
         .select(col("q_id"), col("n_id"), col("rk")))
     val nq = q.count().toDouble
     import spark.implicits._
@@ -1100,17 +1019,14 @@ object VectorSearch {
     // left_semi count and gt1-join sum because (q_id, n_id) pairs are
     // unique within a width.
     val dimsCol = explode(array(dims.map(d => lit(d)): _*)).as("prefix_dim")
-    val wd = Window.partitionBy(col("prefix_dim"), col("q_id"))
-      .orderBy(col("score").desc, col("n_id"))
     def cut(c: Column) = slice(c, lit(1), col("prefix_dim"))
-    val pre = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val pre = TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), col("embedding"), col("qv"),
         dimsCol)
       .select(col("prefix_dim"), col("q_id"), col("n_id"),
-        round(dotd(cut(col("embedding")), cut(col("qv"))) /
-          (l2norm(cut(col("embedding"))) * l2norm(cut(col("qv")))), 5).as("score"))
-      .withColumn("rk", row_number().over(wd).cast("long"))
-      .where(col("rk") <= k)
+        cosine5(cut(col("embedding")), cut(col("qv")),
+          l2norm(cut(col("embedding"))), l2norm(cut(col("qv")))).as("score")),
+      Seq(col("prefix_dim"), col("q_id")), k, "rk", byScore("n_id"): _*)
     val agg = pre
       .join(gt.select(col("q_id"), col("n_id"), col("rk").as("gt_rk")),
         Seq("q_id", "n_id"), "left_outer")
@@ -1121,8 +1037,6 @@ object VectorSearch {
         ((r.getLong(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))).toMap
     dims.map { d =>
       val (hits, rr) = agg.getOrElse(d, (0L, 0.0))
-      def r5(x: Double) =
-        BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
       (d.toLong, r5(hits / (nq * k)), r5(rr / nq), nq.toLong)
     }.toDF("prefix_dim", "recall_at_k", "mrr", "n_queries")
       .orderBy(col("prefix_dim"))

@@ -60,7 +60,7 @@ object VectorServing {
     q.join(index.select(col("vec_id"), col("embedding"), col("nrm"),
         col("bucket").cast("long").as("bucket")), "bucket")
       .select(col("q_id"), col("vec_id").as("n_id"),
-        round(dotd(col("embedding"), col("qv")) / (col("nrm") * col("qn")), 5).as("score"))
+        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
       .as[TopK.ScoredPair]
       .groupByKey(_.q_id)
       .agg(new TopK.TopKAgg(k).toColumn.name("top"))

@@ -765,23 +765,17 @@ class PlanSpec extends AnyFunSuite {
     // so it is allowed only where the windowed frame is provably
     // bounded — a histogram or rollup whose row count is independent
     // of corpus size (degree histograms, |weeks|/|days|/|types|
-    // calendars, top-K cuts). Every allowlisted query names its
-    // bounded frame; adding a query here requires the same argument.
+    // calendars). A rank over a top-K cut goes through TopK.ranked,
+    // whose window is partitioned, so it needs no entry. Every
+    // allowlisted query names its bounded frame; adding a query here
+    // requires the same argument.
     val boundedFrameFolds = Set(
       "engagement_gini",      // (event-count, multiplicity) histogram
       "ui_matrix_stats",      // (item-degree, multiplicity) histogram
       "rec_coverage",         // (slot-count, multiplicity) histogram
       "events_survival",      // per-day gap/censor histogram (|days| rows)
       "events_daily_active",  // cumulative over the |days|-row calendar
-      "vocab_zipf",           // rank over the top-100 TakeOrdered cut
-      "vocab_coverage_curve", // rank over the top-8k TakeOrdered cut
-      "vocab_heaps",          // two 16-row shard folds
-      "hybrid_rrf",           // rank over each leg's top-100 list
-      // rank over the k-row TakeOrdered cut when the planner routes
-      // prefilter (the candidate scan itself is a bounded heap; only
-      // its ≤k-row result is windowed — the vocab_zipf argument)
-      "vs_planned_filtered_rare",
-      "vs_planned_filtered_loose")
+      "vocab_heaps")          // two 16-row shard folds
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val bad = fn(spark, TestSpark.sf).queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window

@@ -31,6 +31,40 @@ class VectorSearchSpec extends AnyFunSuite {
     for (a <- 0L to 3L; b <- 0L to 3L) assert(m((a, b)) == m((b, a)))
   }
 
+  test("a zero-norm vector scores 0.0 on the cosine paths instead of failing") {
+    // ANSI mode turns nrm·qn = 0 into DIVIDE_BY_ZERO; the rank core
+    // scores a zero denominator 0.0 (a zero vector's inner product)
+    val dir = java.nio.file.Files.createTempDirectory("graft-zero-norm").toString
+    val e = Tables.embeddings(spark, TestSpark.sf)
+    val dim = e.select(size(col("embedding"))).head.getInt(0)
+    val zeroId = e.agg(max(col("vec_id"))).head.getLong(0) + 1
+    e.unionByName(e.where(col("vec_id") === 0)
+        .withColumn("vec_id", lit(zeroId))
+        .withColumn("embedding", array_repeat(lit(0.0f), dim)))
+      .write.parquet(s"$dir/embeddings.parquet")
+    val n = Tables.embeddings(spark, dir).count().toInt
+    def zeroScore(rows: Array[org.apache.spark.sql.Row], id: Int, score: Int): Double =
+      rows.find(_.getLong(id) == zeroId).map(_.getDouble(score))
+        .getOrElse(fail(s"zero vector $zeroId missing"))
+
+    val byId = VectorSearch.topK(spark, dir, queryId = 0, k = n - 1).collect()
+    assert(byId.length == n - 1 && zeroScore(byId, 0, 1) == 0.0)
+    val qv = e.where(col("vec_id") === 0).head.getAs[Seq[Float]]("embedding").toArray
+    val byVec = VectorSearch.topKVec(spark, dir, qv, k = n).collect()
+    assert(byVec.length == n && zeroScore(byVec, 0, 1) == 0.0)
+    val knn = VectorSearch.knnJoin(spark, dir, queryMod = 1000, k = n - 1).collect()
+    val perQ = knn.groupBy(_.getLong(0))
+    assert(perQ.nonEmpty && perQ.values.forall(_.length == n - 1))
+    perQ.values.foreach(rows => assert(zeroScore(rows, 1, 2) == 0.0))
+
+    val k = 5
+    val zeroQuery = VectorSearch.topKVec(spark, dir, Array.fill(dim)(0.0f), k).collect()
+    assert(zeroQuery.map(_.getDouble(1)).toSeq == Seq.fill(k)(0.0))
+    assert(zeroQuery.map(_.getLong(0)).toSeq ==
+      Tables.embeddings(spark, dir).select(col("vec_id")).collect()
+        .map(_.getLong(0)).sorted.take(k).toSeq)
+  }
+
   test("knnJoin returns exactly k neighbors per query") {
     val res = VectorSearch.knnJoin(spark, TestSpark.sf, queryMod = 100, k = 5)
     val perQ = res.groupBy("q_id").count().collect()
