@@ -8,7 +8,9 @@ set -u
 N="${1:?n_runs}"
 OUT="${2:?out file}"
 SF_DIR="${3:-/root/testdata/sf0.1}"
-cd /root/repo
+cd "$(dirname "$0")/.."
+# heap cap: SPARK_DRIVER_MEM, else half the host's RAM clamped to 2-8 GB
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -17,8 +19,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
 done
 for i in $(seq 1 "$N"); do
   echo "=== run $i/$N $(date +%H:%M:%S) ===" >&2
-  SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="$SF_DIR" \
-  java $ADD_OPENS -Xmx48g \
+  SPARK_GRAFT_SF_DIR="$SF_DIR" \
+  java $ADD_OPENS -Xmx"$MEM" \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench \
     >/dev/null 2>&1

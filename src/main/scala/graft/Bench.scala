@@ -1,47 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // optional subset filter (comma-separated names) for targeted
     // scale points — e.g. the sf10 hot-family run, where timing the
     // full 268-query surface would spend hours re-measuring queries
     // whose growth the sf1 points already pin. Unset = full surface
     // (the driver's per-round contract).
-    val queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      sys.env.get("SPARK_GRAFT_QUERIES") match {
-        case Some(names) =>
-          val want = names.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val missing = want -- SparkEntry.queries.keySet
-          require(missing.isEmpty, s"unknown queries in SPARK_GRAFT_QUERIES: ${missing.mkString(",")}")
-          SparkEntry.queries.filter { case (k, _) => want(k) }
-        case None => SparkEntry.queries
-      }
-    // untimed warm-up pass: JIT-compile the generated code paths and
-    // fault in the OS page cache so the timed pass measures the
-    // engine, not first-run JVM noise
-    queries.foreach { case (_, fn) =>
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-    }
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+    val spark = GraftSession()
+    // warm-up pass, timings discarded: JIT-compile the generated code
+    // paths and fault in the OS page cache so the timed pass measures
+    // the engine, not first-run JVM noise
+    queries.foreach { case (_, fn) => rep(spark, sfDir, fn) }
     // a throwing query must surface as an error, never as a (fast,
     // bogus) timing — a regression would otherwise look like a speedup
     val results = queries.map { case (name, fn) =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val err = try { fn(spark, sfDir).count(); None } catch {
-        case t: Throwable => Some(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}")
-      }
-      (name, (System.nanoTime() - t0) / 1e9, err)
+      val (t, err) = rep(spark, sfDir, fn)
+      (name, t, err)
     }
     // bench hygiene: this host is a shared VM whose identical-run totals
     // vary several-fold (documented in BASELINE.md), so any single raw
@@ -69,17 +47,15 @@ object Bench {
         finally src.close()
       }
     }
+    val fns = queries.toMap
     val retimed = results.collect {
       case (name, t, None) if budgets.get(name).exists(t > _) =>
         // a transient flake (FS hiccup, OOM) in a retime rep must not
         // abort main() after the full timed pass — fall back to the
         // raw timing for that rep
         val extra = (1 to 2).flatMap { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          try { queries(name)(spark, sfDir).count()
-                Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => None }
+          val (t, err) = rep(spark, sfDir, fns(name))
+          if (err.isEmpty) Some(t) else None
         }
         name -> (t +: extra).min
     }
@@ -144,6 +120,19 @@ object Bench {
                                nErr, retimed, budgets, errKept.toString)
     println(line)
     System.out.flush()
+  }
+
+  /** One timed rep, shared by every pass here and by graft.Profile:
+    * clear the cache, then time `fn(spark, sfDir).count()`. Returns the
+    * seconds and, if the query threw, its error. */
+  def rep(spark: SparkSession, sfDir: String,
+          fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    val err = try { fn(spark, sfDir).count(); None } catch {
+      case t: Throwable => Some(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}")
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
   }
 
   /** The single stdout line the driver's 2000-char tail capture parses.

@@ -15,6 +15,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TextRetrieval.hybridTopK(spark, "/root/testdata/sf0.001", queryDoc = 0, alpha = 0.7, k = 10)
 
+  /** The named queries in the given order, or every query when no name
+    * is given. Throws IllegalArgumentException naming every unknown
+    * name, so an entrypoint fails before it builds a session. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- vector search (reference core) ---

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -14,25 +13,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter for fast
-    // local iteration (the driver passes exactly two args → full run)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // fail fast on a typo'd name — a silent no-op run would leave
-    // stale outputs that compare green against nothing
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — read as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local iteration (two args → full run);
+    // a typo'd name fails here — a silent no-op run would leave stale
+    // outputs that compare green against nothing
+    val queries = SparkEntry.select(if (args.length > 2) args(2).split(",").toSeq else Nil)
+    val names = queries.map(_._1).toSet
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -48,7 +34,7 @@ object Verify {
     } + "\""
     // oracle SQL FIRST: a partial run's dumps are checkable without it
     val json = SparkEntry.oracleSql
-      .filter(kv => only.forall(_.contains(kv._1)))
+      .filter(kv => names(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val statusPath = Paths.get(s"$outDir/verify_status.jsonl")
@@ -59,7 +45,7 @@ object Verify {
       Files.writeString(statusPath, line,
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
-    SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       spark.catalog.clearCache()
       System.err.println(s"[verify] running $name")
       val t0 = System.nanoTime()

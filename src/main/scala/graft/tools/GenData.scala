@@ -63,21 +63,9 @@ object GenData {
       extra.find(_.startsWith("tables=")).map(_.stripPrefix("tables=").split(",").toSet)
     require(copies >= 1 && copies <= 128, s"copies must be in [1, 128]: $copies")
     require(Set("uniform", "zipf").contains(mode), s"unknown mode $mode")
-    val spark = SparkSession.builder()
-      .appName("graft-gendata")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     try generate(spark, src, dst, copies, mode == "zipf", tables) finally spark.stop()
   }
-
-  def generate(spark: SparkSession, src: String, dst: String, copies: Int): Unit =
-    generate(spark, src, dst, copies, skew = false, None)
-
-  def generate(spark: SparkSession, src: String, dst: String, copies: Int,
-               skew: Boolean): Unit =
-    generate(spark, src, dst, copies, skew, None)
 
   def generate(spark: SparkSession, src: String, dst: String, copies: Int,
                skew: Boolean, tables: Option[Set[String]]): Unit = {
