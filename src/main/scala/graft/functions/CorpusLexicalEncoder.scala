@@ -76,10 +76,9 @@ object CorpusLexicalEncoder {
   /** The lexicon, built on first use and opened from parquet after. */
   def ensureLexicon(spark: SparkSession, dir: String): DataFrame = {
     val path = lexiconPath(spark, dir)
-    if (!IndexStore.isComplete(spark, path))
-      IndexStore.publish(spark, path) { staging =>
-        buildLexicon(spark, dir).write.parquet(staging)
-      }
+    IndexStore.publish(spark, path) { staging =>
+      buildLexicon(spark, dir).write.parquet(staging)
+    }
     IndexStore.open(spark, path)
   }
 
@@ -102,16 +101,15 @@ object CorpusLexicalEncoder {
                              npyPath: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = referenceLexiconPath(spark, npyPath)
-    if (!IndexStore.isComplete(spark, path))
-      IndexStore.publish(spark, path) { staging =>
-        val schema = StructType(Seq("id", "asins", "brand", "categories",
-          "reviews.title", "reviews.text", "reviews.rating", "combined_text")
-          .map(f => StructField(f, StringType)))
-        val docs = graft.sources.Sources.readCsvRowIndexed(spark, csvPath, schema)
-          .select(col("row_id").as("doc_id"), col("combined_text").as("text"))
-        buildLexiconOf(docs, graft.sources.NpySource.readNpy(spark, npyPath))
-          .write.parquet(staging)
-      }
+    IndexStore.publish(spark, path) { staging =>
+      val schema = StructType(Seq("id", "asins", "brand", "categories",
+        "reviews.title", "reviews.text", "reviews.rating", "combined_text")
+        .map(f => StructField(f, StringType)))
+      val docs = graft.sources.Sources.readCsvRowIndexed(spark, csvPath, schema)
+        .select(col("row_id").as("doc_id"), col("combined_text").as("text"))
+      buildLexiconOf(docs, graft.sources.NpySource.readNpy(spark, npyPath))
+        .write.parquet(staging)
+    }
     IndexStore.open(spark, path)
   }
 

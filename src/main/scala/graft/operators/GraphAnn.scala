@@ -471,9 +471,9 @@ object GraphAnn {
       ensureGraph(spark, dir, g).select(col("src"), col("dst")))
     val e = graft.sources.ScratchCache.materialize(
       vectors(spark, dir, g)
-        .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm")))
-    val qs = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
+        .select(col("vec_id"), col("label"), col("embedding"),
+          l2norm(col("embedding")).as("nrm")))
+    val qs = VectorSearch.querySample(e, queryMod)
     def scored(nodes: DataFrame): DataFrame = nodes
       .join(e.select(col("vec_id").as("v"), col("embedding"), col("nrm")), "v")
       .join(broadcast(qs), "q_id")

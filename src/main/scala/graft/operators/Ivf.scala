@@ -172,8 +172,14 @@ object Ivf {
   def removeFromIndex(spark: SparkSession, dir: String, nCells: Int, ids: Seq[Long]): Unit =
     IndexStore.addTombstones(spark, indexPath(spark, dir, nCells), ids)
 
-  def ensureIndex(spark: SparkSession, dir: String, nCells: Int): (DataFrame, DataFrame) = {
-    val path = indexPath(spark, dir, nCells)
+  def ensureIndex(spark: SparkSession, dir: String, nCells: Int): (DataFrame, DataFrame) =
+    ensureIndexAt(spark, dir, nCells, indexPath(spark, dir, nCells))
+
+  /** [[ensureIndex]] at its already-resolved [[indexPath]], so a caller
+    * that needs the path too lists and hashes the corpus once.
+    */
+  private def ensureIndexAt(spark: SparkSession, dir: String, nCells: Int,
+                            path: String): (DataFrame, DataFrame) = {
     // staged under a hidden .tmp-* sibling, committed by one atomic rename — racing
     // sessions can't interleave a reader with a half-written index
     IndexStore.publish(spark, path) { tmp =>
@@ -368,8 +374,9 @@ object Ivf {
   private def probe(spark: SparkSession, dir: String, qv: Array[Float],
                     exclude: Option[Long], filter: Column, nCells: Int, nprobe: Int,
                     k: Int): DataFrame = {
-    val (cells, _) = ensureIndex(spark, dir, nCells)
-    val probedCells = rankCellsArr(centroidRows(spark, dir, nCells), qv).take(nprobe)
+    val path = indexPath(spark, dir, nCells)
+    val (cells, _) = ensureIndexAt(spark, dir, nCells, path)
+    val probedCells = rankCellsArr(centroidRows(spark, dir, nCells, path), qv).take(nprobe)
     val q = typedlit(qv)
     TopK.ranked(cells.where(col("cell").isin(probedCells: _*))
       .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)) && filter)
@@ -400,22 +407,21 @@ object Ivf {
   }
 
   /** The collected centroid table for (dir, nCells), memoized per
-    * fingerprinted index path ([[graft.sources.DriverMemo]]; nCells
-    * rows × dim doubles). Single-query probe planning ran one
+    * fingerprinted index path — `path`, the caller's resolved
+    * [[indexPath]] ([[graft.sources.DriverMemo]]; nCells rows × dim
+    * doubles). Single-query probe planning ran one
     * centroid-collect JOB per call (measured 30-80 ms at sf0.1, one
     * per family call in the 13-family eval); the table is immutable
     * per artifact path, so the second call should not re-run it.
     * [[rebalanceIndex]] rewrites centroids in place and drops this
     * entry with [[IndexStore.invalidate]].
     */
-  private[operators] def centroidRows(spark: SparkSession, dir: String,
-                                      nCells: Int): Array[(Int, Array[Double])] = {
-    val path = indexPath(spark, dir, nCells)
+  private[operators] def centroidRows(spark: SparkSession, dir: String, nCells: Int,
+                                      path: String): Array[(Int, Array[Double])] =
     graft.sources.DriverMemo.memo(spark, s"$path/centroids#rows") {
-      val (_, centroids) = ensureIndex(spark, dir, nCells)
+      val (_, centroids) = ensureIndexAt(spark, dir, nCells, path)
       centroids.collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
     }
-  }
 
   /** ANN trade-off evaluation — the reference's headline table
     * (ann_tradeoff_table.csv: nprobe, Precision@K, MRR,
@@ -459,8 +465,8 @@ object Ivf {
     // would mean 10× queries × (up to 10×) per-call cost, timing the
     // sample size instead of the index family (measured at the sf1
     // scale point — BASELINE.md)
-    val qIds = Tables.embeddings(spark, dir).where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id")).collect().map(_.getLong(0)).sorted.take(maxQueries).toSeq
+    val qIds = VectorSearch.querySample(Tables.embeddings(spark, dir), queryMod, maxQueries)
+      .select(col("q_id")).collect().map(_.getLong(0)).toSeq
     // non-member mode: query vectors collected once (bounded:
     // maxQueries × dim floats), searches run against the carve-out
     val qVecs: Map[Long, Array[Float]] =
@@ -471,13 +477,12 @@ object Ivf {
     val searchDir = if (memberQueries) dir else heldOutDir(spark, dir, qIds)
     // GT through the recall seam (exact by default; the graph source
     // is what lets this table be measured at the 1 M-vector scale
-    // point — BASELINE.md records the swap's fidelity); bounded to the
-    // sampled qIds before the driver collect. Non-member GT is the
-    // exact flat scan of each held-out vector against the carve-out.
+    // point — BASELINE.md records the swap's fidelity), over the same
+    // bounded batch. Non-member GT is the exact flat scan of each
+    // held-out vector against the carve-out.
     val gt: Map[Long, Map[Long, Long]] =
       if (memberQueries)
-        VectorSearch.recallGroundTruth(spark, dir, queryMod, k)
-          .where(col("q_id").isin(qIds: _*))
+        VectorSearch.recallGroundTruth(spark, dir, queryMod, k, maxQueries)
           .select(col("q_id"), col("n_id"), col("rk")).collect()
           .groupBy(_.getLong(0))
           .map { case (q, rs) => q -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
@@ -756,11 +761,9 @@ object Ivf {
   def recallEval(spark: SparkSession, dir: String, nCells: Int, queryMod: Int,
                  k: Int, nprobes: Seq[Int]): DataFrame = {
     val (assigned, centroids) = ensureIndex(spark, dir, nCells)
-    val queries = assigned.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+    val queries = VectorSearch.querySample(assigned, queryMod)
     val npMax = nprobes.max
     val probed0 = TopK.perKey(queries
-      .withColumn("qn", l2norm(col("qv")))
       .crossJoin(broadcast(centroids))
       .withColumn("cdist",
         cosine(col("qv"), col("centroid"), col("qn"), l2norm(col("centroid")))),
@@ -785,21 +788,13 @@ object Ivf {
     val ranked = graft.sources.ScratchCache.materialize(ranked0)
     val gt = graft.sources.ScratchCache.materialize(
       VectorSearch.recallGroundTruth(spark, dir, queryMod, k)
-        .select(col("q_id"), col("n_id"), col("rk").as("grk")))
+        .select(col("q_id"), col("n_id"), col("rk")))
     val nq = queries.count().toDouble
-    val hitsByNp = ranked
-      .join(gt.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
-      .groupBy(col("nprobe")).agg(count(lit(1)).as("hits"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val rrByNp = gt.where(col("grk") === 1).select(col("q_id"), col("n_id"))
-      .join(ranked, Seq("q_id", "n_id"))
-      .groupBy(col("nprobe")).agg(sum(lit(1.0) / col("rk")).as("rr"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val rows = nprobes.map { np =>
-      (np, r5(hitsByNp.getOrElse(np, 0L) / (nq * k)),
-        r5(rrByNp.getOrElse(np, 0.0) / nq), nq.toLong)
-    }
-    rows.toDF("nprobe", "Precision@K", "MRR", "QueriesUsed")
+    val fold = VectorSearch.recallFold(ranked, gt, "nprobe", nq, k)
+    nprobes.map { np =>
+      val (precision, mrr) = fold.getOrElse(np, (0.0, 0.0))
+      (np, precision, mrr, nq.toLong)
+    }.toDF("nprobe", "Precision@K", "MRR", "QueriesUsed")
       .orderBy(col("nprobe"))
   }
 

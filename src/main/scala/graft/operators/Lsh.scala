@@ -257,8 +257,9 @@ object Lsh {
   /** LSH bucket-width tuning curve — the [[Ivf.recallEval]] /
     * [[VectorSearch.matryoshkaEval]] sibling for this family: for
     * each bucket width, Recall@K and MRR of the hamming≤1 multiprobe
-    * search ([[lshTopK]]'s probe set) against the exact top-k, over
-    * the shared bounded query batch. More bits = smaller buckets =
+    * search ([[lshTopK]]'s probe set) against
+    * [[VectorSearch.recallGroundTruth]], over the shared bounded
+    * [[VectorSearch.querySample]] batch. More bits = smaller buckets =
     * cheaper probes and lower recall; this table prices that trade
     * per corpus, which is the number a tuning decision actually
     * needs. Unlike the single-query serve path the whole batch runs
@@ -268,8 +269,9 @@ object Lsh {
     *
     * Scale shape: per width, one broadcast-batch bucket assignment,
     * one bucket-keyed equi-join (candidates bounded by probe-bucket
-    * occupancy), a per-query WindowGroupLimit rerank, and two k-row
-    * joins against the shared ground truth; output is |widths| rows.
+    * occupancy) and a per-query WindowGroupLimit rerank; one
+    * [[VectorSearch.recallFold]] over the union of all widths against
+    * the shared ground truth; output is |widths| rows.
     */
   def lshBitsEval(spark: SparkSession, dir: String,
                   bitsSeq: Seq[Int] = Seq(4, 6, 8, 10),
@@ -278,33 +280,15 @@ object Lsh {
     import spark.implicits._
     import graft.sources.ScratchCache
     val dim = embeddingDim(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val q = ScratchCache.materialize(e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-      .orderBy(col("q_id")).limit(maxQueries))
-    // GT seam: the default exact pass stays INLINE (bounded to the
-    // maxQueries batch — cheaper than the full mod-sampled knnJoin);
-    // spark.graft.recall.gt=graph swaps in the NSW batch descent
-    // semi-joined down to the same batch (the sf50 path — see
-    // VectorSearch.recallGroundTruth)
+    val q = ScratchCache.materialize(
+      VectorSearch.querySample(Tables.embeddings(spark, dir), queryMod, maxQueries))
     val gt = ScratchCache.materialize(
-      spark.conf.getOption("spark.graft.recall.gt").getOrElse("exact") match {
-        case "graph" =>
-          // GT-grade walk params (see VectorSearch.recallGroundTruth)
-          GraphAnn.graphKnnJoin(spark, dir, queryMod, k, g = 8, hops = 8,
-              beam = 24, entrySelf = true)
-            .join(broadcast(q.select(col("q_id"))), Seq("q_id"), "left_semi")
-            .select(col("q_id"), col("n_id"), col("rk"))
-        case _ =>
-          TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-            .select(col("q_id"), col("vec_id").as("n_id"),
-              cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
-            Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
-            .select(col("q_id"), col("n_id"), col("rk"))
-      })
+      VectorSearch.recallGroundTruth(spark, dir, queryMod, k, maxQueries)
+        .select(col("q_id"), col("n_id"), col("rk")))
     val nq = q.count().toDouble
-    bitsSeq.map { bits =>
+    // every width's rerank rides one union, so recall + MRR fold in
+    // ONE action for the whole sweep
+    val top = bitsSeq.map { bits =>
       val idx = ensureIndex(spark, dir, bits)
       val qb = assignBucketsOf(
         q.select(col("q_id").as("vec_id"), col("qv").as("embedding")), bits, dim)
@@ -314,24 +298,18 @@ object Lsh {
         .select(col("q_id"), when(col("j") < 0, col("qb"))
           .otherwise(expr("qb ^ (1 << cast(j AS int))").cast("long")).as("bucket"))
         .distinct()
-      val top = TopK.perKey(probes.join(idx, "bucket")
+      TopK.perKey(probes.join(idx, "bucket")
         .where(col("vec_id") =!= col("q_id"))
         .join(broadcast(q), "q_id")
-        .select(col("q_id"), col("vec_id").as("n_id"),
+        .select(lit(bits).as("n_bits"), col("q_id"), col("vec_id").as("n_id"),
           cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
         Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
-      // recall + MRR in ONE action per width (guide §1.2): the
-      // previous two counts each re-executed the un-cached probe join
-      // + rerank window. count(gt_rk) = the old left_semi count
-      // ((q_id, n_id) is unique in `top`: one bucket per vector), and
-      // the conditional 1/rk sum over gt_rk=1 = the old gt1-join sum.
-      val row = top.join(gt.select(col("q_id"), col("n_id"),
-          col("rk").as("gt_rk")), Seq("q_id", "n_id"), "left_outer")
-        .agg(count(col("gt_rk")).as("hits"),
-          sum(when(col("gt_rk") === 1, lit(1.0) / col("rk"))).as("rr")).head
-      val hits = row.getLong(0)
-      val rr = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-      (bits.toLong, r5(hits / (nq * k)), r5(rr / nq), nq.toLong)
+    }.reduce(_ unionByName _)
+    // (q_id, n_id) is unique per width: one bucket per vector
+    val fold = VectorSearch.recallFold(top, gt, "n_bits", nq, k)
+    bitsSeq.map { bits =>
+      val (recall, mrr) = fold.getOrElse(bits, (0.0, 0.0))
+      (bits.toLong, recall, mrr, nq.toLong)
     }.toDF("n_bits", "recall_at_k", "mrr", "n_queries")
       .orderBy(col("n_bits"))
   }

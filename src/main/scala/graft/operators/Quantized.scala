@@ -383,7 +383,8 @@ object Quantized {
     val idx = ensureIvfPqIndex(spark, dir, nCells, m, kCents)
     // memoized centroid table (Ivf.centroidRows) — probe planning
     // without the per-call centroid collect job
-    val probed = Ivf.rankCellsArr(Ivf.centroidRows(spark, dir, nCells),
+    val probed = Ivf.rankCellsArr(
+      Ivf.centroidRows(spark, dir, nCells, Ivf.indexPath(spark, dir, nCells)),
       qv.map(_.toFloat)).take(nprobe)
     val adc = adcColumn(codebooks, qv)
     TopK.first(idx.where(col("cell").isin(probed: _*))
@@ -508,7 +509,7 @@ object Quantized {
     val (idx, books) = ensureIvfPqResIndex(spark, dir, nCells, m, kCents)
     // memoized centroid table — same rows centroidArrays() collected,
     // sorted by cell id, without the per-call collect job
-    val centRows = Ivf.centroidRows(spark, dir, nCells)
+    val centRows = Ivf.centroidRows(spark, dir, nCells, Ivf.indexPath(spark, dir, nCells))
     val cents = centRows.sortBy(_._1).map(_._2)
     val probed = Ivf.rankCellsArr(centRows, qv.map(_.toFloat)).take(nprobe)
     def qResidual(c: Int): Array[Double] =

@@ -110,11 +110,11 @@ object RpTree {
     * promised: a (tree, leaf)-keyed persisted table whose nTrees
     * probes are partition-pruned reads. Doubles round-trip parquet
     * exactly, so the replayed routing/thresholds are bit-identical to
-    * the in-memory build's.
+    * the in-memory build's. `path` is the caller's resolved
+    * [[indexPath]].
     */
-  private[graft] def ensureIndex(spark: SparkSession, dir: String, nTrees: Int,
-                                 depth: Int): (DataFrame, DataFrame) = {
-    val path = indexPath(spark, dir, nTrees, depth)
+  private def ensureIndex(spark: SparkSession, dir: String, nTrees: Int, depth: Int,
+                          path: String): (DataFrame, DataFrame) = {
     graft.sources.IndexStore.publish(spark, path) { tmp =>
       val (leaves, planes) = build(spark, dir, nTrees, depth)
       leaves.repartition(1).write.mode("overwrite").parquet(s"$tmp/leaves")
@@ -153,20 +153,19 @@ object RpTree {
                              exclude: Option[Long], nTrees: Int, depth: Int,
                              k: Int): DataFrame = {
     import spark.implicits._
-    val (leaves, planesDf) = ensureIndex(spark, dir, nTrees, depth)
+    val path = indexPath(spark, dir, nTrees, depth)
+    val (leaves, planesDf) = ensureIndex(spark, dir, nTrees, depth, path)
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = typedlit(qv)
     // (t, node) -> (plane, thr) per level; ≤ nTrees·2^l rows at level l.
-    // Collected ONCE per (corpus fingerprint, nTrees, depth) via
-    // DriverMemo — the tables are a deterministic pure function of the
-    // corpus (hash-sampled anchors), bounded driver state (≤
+    // Collected ONCE per artifact path (corpus fingerprint, nTrees,
+    // depth) via DriverMemo — the tables are a deterministic pure
+    // function of the corpus (hash-sampled anchors), bounded driver state (≤
     // nTrees·(2^depth − 1) rows), and the per-call driver routing
     // re-reads them on every query; the single miss is ONE collect of
     // the persisted plane table.
     val planeMaps: Seq[Map[(Long, Long), (Array[Double], Double)]] =
-      graft.sources.DriverMemo.memo(spark,
-        "rptree_" + graft.sources.IndexStore.fingerprint(spark,
-          s"$dir/embeddings.parquet") + s"_${nTrees}_$depth#planes") {
+      graft.sources.DriverMemo.memo(spark, s"$path/planes#rows") {
         val all = planesDf.collect()
         (0 until depth).map { l =>
           all.filter(_.getInt(0) == l).map { r =>

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorFunctions._
 
 /** The engine's one rank core: every vector score → top-k → rank goes
   * through [[first]], [[ranked]], [[perKey]] or the bounded-heap
@@ -139,12 +138,10 @@ object TopK {
     */
   def knnJoinHeap(spark: SparkSession, dir: String, queryMod: Int, k: Int): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+    val e = Tables.embeddings(spark, dir)
+    val scored = VectorSearch.batchScores(e, VectorSearch.querySample(e, queryMod),
+        col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), col("score"))
       .as[ScoredPair]
     scored.groupByKey(_.q_id)
       .agg(new TopKAgg(k).toColumn.name("top"))

@@ -121,25 +121,19 @@ object VectorSearch {
     * class label matches the query's — fully oracle-checkable since
     * exact search is deterministic.
     */
-  /** The shared top-k block behind BOTH label evals: sampled query
-    * batch (vec_id % queryMod == 0), broadcast to one corpus scan,
-    * round-5 cosine, per-query [[TopK.perKey]] cut at k.
-    * [[knnLabelPrecision]] and [[knnClassify]] MUST rank from this one
-    * definition — their oracles assume the identical top-k.
+  /** The shared top-k block behind BOTH label evals: the
+    * [[querySample]] batch, [[batchScores]], per-query [[TopK.perKey]]
+    * cut at k. [[knnLabelPrecision]] and [[knnClassify]] MUST rank
+    * from this one definition — their oracles assume the identical
+    * top-k.
     */
   private def knnTopKByLabel(spark: SparkSession, dir: String, queryMod: Int,
                              k: Int, maxQueries: Int = Int.MaxValue): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q0 = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qv"), col("nrm").as("qn"))
-    // bounded sample (lowest ids, a TakeOrdered cut the oracle
-    // replays): keeps the broadcast batch O(1) in the corpus size
-    val q = if (maxQueries == Int.MaxValue) q0
-            else q0.orderBy(col("q_id")).limit(maxQueries)
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val e = Tables.embeddings(spark, dir)
+    val scored = batchScores(e, querySample(e, queryMod, maxQueries),
+        col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("q_label"), col("label").as("n_label"), col("vec_id").as("n_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+        col("score"))
     TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
   }
 
@@ -435,24 +429,45 @@ object VectorSearch {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Distributed kNN join: for each query vector (a sampled/broadcast
-    * batch) find its top-k nearest corpus vectors. Generalizes the
-    * reference's one-query-at-a-time flat search to a batch operator.
-    *
-    * Scale: queries broadcast (corpus never shuffled for the join);
-    * ranking shuffles only (q_id, n_id, score) triples — 16 bytes a
-    * row, not embeddings.
+  /** The evaluation core's sample rule — every batch kNN op and recall
+    * sweep samples here, scores with [[batchScores]], takes ground
+    * truth from [[recallGroundTruth]] and folds with [[recallFold]]:
+    * members with `vec_id % queryMod = 0`, and when bounded only the
+    * lowest `maxQueries` of those ids (a TakeOrdered cut the oracles
+    * replay; it keeps the broadcast batch O(1) in the corpus size).
+    * `frame` has vec_id, label, embedding; returns (q_id, q_label, qv, qn).
     */
-  /** Ground-truth source seam for the recall sweeps ([[Ivf.recallEval]]
-    * / [[Ivf.nprobePlanner]] / [[Lsh.lshBitsEval]]): exact brute force
-    * ([[knnJoin]], queries × corpus) by default, or — opt-in via
-    * `spark.graft.recall.gt=graph` — the NSW batch descent
-    * ([[GraphAnn.graphKnnJoin]], hop-bounded probe scans), which makes
-    * the sweeps runnable at corpus sizes where the n² exact pass is
-    * unpayable (the reason they were excluded from the sf50 scale
-    * point). The swap is MEASURED, not assumed: a spec asserts the two
-    * sources agree pair-for-pair at oracle scale, and BASELINE.md
-    * records the sweep-metric delta at sf0.1.
+  private[operators] def querySample(frame: DataFrame, queryMod: Int,
+                                     maxQueries: Int = Int.MaxValue): DataFrame = {
+    val q = frame.where(col("vec_id") % queryMod === 0)
+      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
+        col("embedding").as("qv"), l2norm(col("embedding")).as("qn"))
+    if (maxQueries == Int.MaxValue) q else q.orderBy(col("q_id")).limit(maxQueries)
+  }
+
+  /** `q` broadcast to one scan of `corpus` under the join condition
+    * `pair`, plus the round-5 cosine `score`; norms once per row, never
+    * per pair. Keeps every column of both sides.
+    */
+  private[operators] def batchScores(corpus: DataFrame, q: DataFrame, pair: Column): DataFrame =
+    corpus.withColumn("nrm", l2norm(col("embedding")))
+      .join(broadcast(q), pair)
+      .withColumn("score", cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")))
+
+  /** Exact per-query top-k, self excluded: (q_id, n_id, score, rk). */
+  private def exactKnn(corpus: DataFrame, q: DataFrame, k: Int): DataFrame =
+    TopK.perKey(batchScores(corpus, q, col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), col("score")),
+      Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
+
+  /** Ground truth (q_id, n_id, score, rk) of the [[querySample]] batch
+    * for every recall sweep; the only reader of `spark.graft.recall.gt`:
+    * `exact` (default) is brute force, `graph` the NSW batch descent
+    * ([[GraphAnn.graphKnnJoin]], hop-bounded probe scans) semi-joined
+    * down to the bounded batch. The graph source makes the sweeps
+    * runnable where the n² exact pass is unpayable (the sf50 point); a
+    * spec asserts the two agree pair-for-pair at oracle scale, and
+    * BASELINE.md records the sweep-metric delta at sf0.1.
     *
     * GT-grade walk parameters: the serving defaults (hops=6, beam=4)
     * trade recall for latency; ground truth wants the opposite, so the
@@ -461,29 +476,53 @@ object VectorSearch {
     * rank-1 neighbor at sf0.01). Cost stays |Q|·beam·(g+1) rows per
     * hop — linear, nothing scales with the corpus but the probe scans.
     */
-  def recallGroundTruth(spark: SparkSession, dir: String,
-                        queryMod: Int, k: Int): DataFrame =
+  def recallGroundTruth(spark: SparkSession, dir: String, queryMod: Int, k: Int,
+                        maxQueries: Int = Int.MaxValue): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
     spark.conf.getOption("spark.graft.recall.gt").getOrElse("exact") match {
-      case "exact" => knnJoin(spark, dir, queryMod, k)
+      case "exact" => exactKnn(e, querySample(e, queryMod, maxQueries), k)
       case "graph" =>
         // entrySelf: GT queries are corpus members — walking from the
         // query's own node explores its own component, which is what
         // survives disconnected-component corpora (see graphKnnJoin)
-        GraphAnn.graphKnnJoin(spark, dir, queryMod, k, g = 8, hops = 8,
+        val walk = GraphAnn.graphKnnJoin(spark, dir, queryMod, k, g = 8, hops = 8,
           beam = 24, entrySelf = true)
+        if (maxQueries == Int.MaxValue) walk
+        else walk.join(broadcast(querySample(e, queryMod, maxQueries).select(col("q_id"))),
+          Seq("q_id"), "left_semi")
       case other => throw new IllegalArgumentException(
         s"spark.graft.recall.gt must be exact|graph, got '$other'")
     }
+  }
 
+  /** Recall@K and MRR of `ranked` (by, q_id, n_id, rk) against `gt`
+    * per sweep key `by`, in ONE aggregate: key → (r5(hits / (nq·k)),
+    * r5(Σ 1/rk of each gt rank-1 hit / nq)). (q_id, n_id) must be
+    * unique per key; a key with no ranked row is absent.
+    */
+  private[operators] def recallFold(ranked: DataFrame, gt: DataFrame, by: String,
+                                    nq: Double, k: Int): Map[Any, (Double, Double)] =
+    ranked.join(gt.select(col("q_id"), col("n_id"), col("rk").as("gt_rk")),
+        Seq("q_id", "n_id"), "left_outer")
+      .groupBy(col(by))
+      .agg(count(col("gt_rk")).as("hits"),
+        sum(when(col("gt_rk") === 1, lit(1.0) / col("rk"))).as("rr"))
+      .collect().map { r =>
+        val rr = if (r.isNullAt(2)) 0.0 else r.getDouble(2)
+        r.get(0) -> ((r5(r.getLong(1) / (nq * k)), r5(rr / nq)))
+      }.toMap
+
+  /** Distributed kNN join: for each query vector (the [[querySample]]
+    * batch) find its top-k nearest corpus vectors. Generalizes the
+    * reference's one-query-at-a-time flat search to a batch operator.
+    *
+    * Scale: queries broadcast (corpus never shuffled for the join);
+    * ranking shuffles only (q_id, n_id, score) triples — 16 bytes a
+    * row, not embeddings.
+    */
   def knnJoin(spark: SparkSession, dir: String, queryMod: Int, k: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
-    TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
-      .orderBy(col("q_id"), col("rk"))
+    val e = Tables.embeddings(spark, dir)
+    exactKnn(e, querySample(e, queryMod), k).orderBy(col("q_id"), col("rk"))
   }
 
   /** Session-based recommendation — the app-level composition the
@@ -540,14 +579,10 @@ object VectorSearch {
     * the join condition, so same-label pairs never leave the probe.
     */
   def hardNegatives(spark: SparkSession, dir: String, queryMod: Int, k: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = e.join(broadcast(q), col("label") =!= col("q_label"))
+    val e = Tables.embeddings(spark, dir)
+    val scored = batchScores(e, querySample(e, queryMod), col("label") =!= col("q_label"))
       .select(col("q_id"), col("q_label").cast("long").as("q_label"),
-        col("vec_id").as("neg_id"), col("label").cast("long").as("neg_label"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+        col("vec_id").as("neg_id"), col("label").cast("long").as("neg_label"), col("score"))
     TopK.perKey(scored, Seq(col("q_id")), k, "rk", byScore("neg_id"): _*)
       .orderBy(col("q_id"), col("rk"))
   }
@@ -571,23 +606,20 @@ object VectorSearch {
     */
   def tripletMine(spark: SparkSession, dir: String, queryMod: Int = 100,
                   alpha: Double = 0.2): DataFrame = {
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("a_id"), col("label").as("a_label"),
-        col("embedding").as("qv"), col("nrm").as("qn"))
+    val e = Tables.embeddings(spark, dir)
+    val q = querySample(e, queryMod)
     def leg(cond: Column, asc: Boolean, idName: String, scName: String) = {
-      val scored = e.join(broadcast(q), cond && col("vec_id") =!= col("a_id"))
-        .select(col("a_id"), col("a_label"), col("vec_id").as(idName),
-          cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as(scName))
-      TopK.perKey(scored, Seq(col("a_id")), 1, "rk",
+      val scored = batchScores(e, q, cond && col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("q_label"), col("vec_id").as(idName), col("score").as(scName))
+      TopK.perKey(scored, Seq(col("q_id")), 1, "rk",
         if (asc) col(scName).asc else col(scName).desc, col(idName))
         .drop("rk")
     }
-    val pos = leg(col("label") === col("a_label"), asc = true, "pos_id", "pos_score")
-    val neg = leg(col("label") =!= col("a_label"), asc = false, "neg_id", "neg_score")
-      .drop("a_label")
-    pos.join(neg, "a_id")
-      .select(col("a_id"), col("a_label").cast("long").as("a_label"),
+    val pos = leg(col("label") === col("q_label"), asc = true, "pos_id", "pos_score")
+    val neg = leg(col("label") =!= col("q_label"), asc = false, "neg_id", "neg_score")
+      .drop("q_label")
+    pos.join(neg, "q_id")
+      .select(col("q_id").as("a_id"), col("q_label").cast("long").as("a_label"),
         col("pos_id"), col("pos_score"), col("neg_id"), col("neg_score"),
         round(col("pos_score") - col("neg_score"), 5).as("margin"))
       .withColumn("semi_hard",
@@ -975,8 +1007,9 @@ object VectorSearch {
     * [[matryoshkaTopK]]'s single prefix choice (Kusupati et al. 2022
     * §4's accuracy-vs-dims table, over this corpus): for each prefix
     * width, Recall@K and MRR of the prefix-cosine top-k against the
-    * full-dim exact top-k, over the same mod-sampled query batch the
-    * other retrieval evals use. The knee of this curve IS the serving
+    * full-dim [[recallGroundTruth]] (exact unless
+    * `spark.graft.recall.gt=graph`), over the same [[querySample]]
+    * batch the other retrieval evals use. The knee of this curve IS the serving
     * decision: everything right of it is paying full-dim scan cost
     * for recall the prefix already had.
     *
@@ -990,34 +1023,18 @@ object VectorSearch {
                      queryMod: Int = 100, k: Int = 10,
                      maxQueries: Int = 64): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    // bounded sample (lowest maxQueries mod-selected ids): an
-    // unbounded mod-sample grows with the corpus and turns the
-    // broadcast batch × scan into O(corpus²/mod) — the familyEval
-    // lesson (BASELINE.md sf1 series)
-    val q = e.where(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      .orderBy(col("q_id")).limit(maxQueries)
+    val q = querySample(e, queryMod, maxQueries)
     val gt = graft.sources.ScratchCache.materialize(
-      TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"), cosine5(col("embedding"), col("qv"),
-          l2norm(col("embedding")), l2norm(col("qv"))).as("score")),
-        Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
+      recallGroundTruth(spark, dir, queryMod, k, maxQueries)
         .select(col("q_id"), col("n_id"), col("rk")))
     val nq = q.count().toDouble
     import spark.implicits._
     // ONE sweep pass for EVERY prefix width (guide §1.2/§2.4): the
     // widths ride as an exploded literal column, the prefix cosine
     // slices by that column, ONE (prefix_dim, q_id)-partitioned window
-    // ranks all curves in a single shuffle, and recall + MRR fold into
-    // one aggregate over one left join against the shared ground
-    // truth. The previous shape ran TWO uncached actions per width —
-    // 2·|dims| broadcast-batch corpus scans (each re-executing its
-    // join + window) where this runs one GT pass + one sweep pass.
-    // Per-width rankings are unchanged: the window partitions by
-    // (prefix_dim, q_id), so each width ranks exactly as its own pass
-    // did, and count(gt_rk)/sum(1/rk when gt_rk=1) equal the old
-    // left_semi count and gt1-join sum because (q_id, n_id) pairs are
-    // unique within a width.
+    // ranks all curves in a single shuffle, and [[recallFold]] folds
+    // recall + MRR in one aggregate. Per-width rankings equal separate
+    // per-width passes: the window partitions by (prefix_dim, q_id).
     val dimsCol = explode(array(dims.map(d => lit(d)): _*)).as("prefix_dim")
     def cut(c: Column) = slice(c, lit(1), col("prefix_dim"))
     val pre = TopK.perKey(e.join(broadcast(q), col("vec_id") =!= col("q_id"))
@@ -1027,17 +1044,10 @@ object VectorSearch {
         cosine5(cut(col("embedding")), cut(col("qv")),
           l2norm(cut(col("embedding"))), l2norm(cut(col("qv")))).as("score")),
       Seq(col("prefix_dim"), col("q_id")), k, "rk", byScore("n_id"): _*)
-    val agg = pre
-      .join(gt.select(col("q_id"), col("n_id"), col("rk").as("gt_rk")),
-        Seq("q_id", "n_id"), "left_outer")
-      .groupBy(col("prefix_dim"))
-      .agg(count(col("gt_rk")).as("hits"),
-        sum(when(col("gt_rk") === 1, lit(1.0) / col("rk"))).as("rr"))
-      .collect().map(r => r.getInt(0) ->
-        ((r.getLong(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))).toMap
+    val fold = recallFold(pre, gt, "prefix_dim", nq, k)
     dims.map { d =>
-      val (hits, rr) = agg.getOrElse(d, (0L, 0.0))
-      (d.toLong, r5(hits / (nq * k)), r5(rr / nq), nq.toLong)
+      val (recall, mrr) = fold.getOrElse(d, (0.0, 0.0))
+      (d.toLong, recall, mrr, nq.toLong)
     }.toDF("prefix_dim", "recall_at_k", "mrr", "n_queries")
       .orderBy(col("prefix_dim"))
   }

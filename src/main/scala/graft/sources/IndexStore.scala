@@ -80,16 +80,6 @@ object IndexStore extends org.apache.spark.internal.Logging {
     */
   private val CompleteMarker = "_GRAFT_COMPLETE"
 
-  /** A path is a complete artifact iff its completeness marker exists.
-    * Bare directory existence is NOT enough: a partial artifact left
-    * by an interrupted external copy, or by a non-atomic rename on an
-    * object store (S3A rename is an O(data) copy+delete, not a
-    * metadata op), must read as absent so it gets repaired instead of
-    * served forever.
-    */
-  def isComplete(spark: SparkSession, path: String): Boolean =
-    exists(spark, s"$path/$CompleteMarker")
-
   /** Atomic build-once publication: `build` writes the whole artifact
     * (every sub-table) under a private DOT-PREFIXED staging dir
     * (`.tmp-<name>-<uuid>`, sibling of `path`), the completeness

@@ -21,7 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `list_dot_product(a::DOUBLE[], b::DOUBLE[])` — including on length
   * mismatch, where zip_with's null padding nulls the aggregate: VecDot
   * returns null there too, so dimension bugs surface instead of
-  * yielding a truncated dot product.
+  * yielding a truncated dot product. A null ELEMENT nulls the
+  * aggregate the same way, so VecDot returns null for it rather than
+  * reading it as 0.0; the per-element check is only emitted for array
+  * types that can hold nulls (`containsNull`).
   *
   * This file lives under org.apache.spark.sql only to reach the
   * `private[sql]` Column↔Expression bridge (ExpressionUtils); it uses
@@ -30,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
-  // null on input null AND on length mismatch (matches the HOF
+  // null on input null, on a null element AND on length mismatch (matches the HOF
   // semantics: zip_with pads the shorter array with nulls, so the
   // aggregate sum goes null — a dimension bug surfaces, never a
   // silently truncated dot product)
@@ -42,6 +45,9 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     case t => throw new IllegalArgumentException(s"vec_dot expects array<float|double>, got $t")
   }
 
+  private def mayHoldNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -49,9 +55,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     if (y.numElements() != n) return null
     val lf = elemIsFloat(left)
     val rf = elemIsFloat(right)
+    val ln = mayHoldNull(left)
+    val rn = mayHoldNull(right)
     var s = 0.0
     var i = 0
     while (i < n) {
+      if ((ln && x.isNullAt(i)) || (rn && y.isNullAt(i))) return null
       val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
       val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
       s += xv * yv
@@ -71,6 +80,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
       val i = ctx.freshName("vdI")
       val lGet = if (elemIsFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
       val rGet = if (elemIsFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
+      val nulls = Seq(a -> left, b -> right).collect {
+        case (v, e) if mayHoldNull(e) => s"$v.isNullAt($i)"
+      }
+      val nullCheck =
+        if (nulls.isEmpty) ""
+        else s"if (${nulls.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = $a.numElements();
          |if ($b.numElements() != $n) {
@@ -78,6 +93,7 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
          |} else {
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    $nullCheck
          |    $s += ($lGet) * ($rGet);
          |  }
          |  ${ev.value} = $s;

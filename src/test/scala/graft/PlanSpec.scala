@@ -776,15 +776,21 @@ class PlanSpec extends AnyFunSuite {
       "events_survival",      // per-day gap/censor histogram (|days| rows)
       "events_daily_active",  // cumulative over the |days|-row calendar
       "vocab_heaps")          // two 16-row shard folds
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val bad = fn(spark, TestSpark.sf).queryExecution.optimizedPlan.collect {
+    // every query is linted: one whose construction or planning throws
+    // is listed (and fails the test) instead of hiding the queries
+    // after it
+    val linted = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> scala.util.Try(fn(spark, TestSpark.sf).queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.partitionSpec.isEmpty => w
-      }
-      if (bad.nonEmpty) Seq(name) else Nil
+      }.nonEmpty)
     }
-    val undocumented = offenders.toSet -- boundedFrameFolds
-    assert(undocumented.isEmpty,
-      s"unpartitioned windows outside the bounded-frame allowlist: ${undocumented.toSeq.sorted.mkString(", ")}")
+    val unplanned = linted.collect { case (name, scala.util.Failure(e)) =>
+      s"$name (${String.valueOf(e).takeWhile(_ != '\n')})" }
+    val undocumented = linted.collect { case (name, scala.util.Success(true)) => name }
+      .filterNot(boundedFrameFolds)
+    assert(undocumented.isEmpty && unplanned.isEmpty,
+      s"unpartitioned windows outside the bounded-frame allowlist: ${undocumented.mkString(", ")}" +
+        s"; queries that could not be planned: ${unplanned.mkString("; ")}")
   }
 }

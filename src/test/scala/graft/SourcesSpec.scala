@@ -587,8 +587,8 @@ class SourcesSpec extends AnyFunSuite {
       assert(lex.nonEmpty)
       val dim = lex.head.getSeq[Float](2).length
       assert(lex.forall(_.getSeq[Float](2).length == dim))
-      assert(graft.sources.IndexStore.isComplete(spark,
-        CorpusLexicalEncoder.lexiconPath(spark, TestSpark.sf)))
+      assert(graft.sources.IndexStore.exists(spark,
+        CorpusLexicalEncoder.lexiconPath(spark, TestSpark.sf) + "/_GRAFT_COMPLETE"))
 
       // semantic grounding on a purpose-built corpus: a term occurring
       // in exactly ONE document encodes to that document's embedding

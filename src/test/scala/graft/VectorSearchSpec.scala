@@ -65,6 +65,33 @@ class VectorSearchSpec extends AnyFunSuite {
         .map(_.getLong(0)).sorted.take(k).toSeq)
   }
 
+  test("vec_dot returns null for a null array element on the interpreted and codegen paths") {
+    import graft.functions.VectorFunctions.dotd
+    // non-foldable: the null-element row depends on id, so the kernel
+    // runs per row instead of folding at plan time
+    val df = spark.range(2).select(
+      when(col("id") === 0, array(lit(1.0f), lit(null).cast("float"), lit(2.0f)))
+        .otherwise(array(lit(1.0f), lit(2.0f), lit(3.0f))).as("a"),
+      array(lit(1.0f), lit(1.0f), lit(1.0f)).as("b"))
+    val hof = aggregate(zip_with(col("a"), col("b"),
+      (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
+    def run(): Set[Seq[Any]] =
+      df.select(dotd(col("a"), col("b")), dotd(col("b"), col("a")), hof)
+        .collect().map(_.toSeq).toSet
+    val codegen = run()
+    val interpreted = try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      run()
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    Seq(codegen, interpreted).foreach { got =>
+      assert(got == Set(Seq(null, null, null), Seq(6.0, 6.0, 6.0)), got)
+    }
+  }
+
   test("knnJoin returns exactly k neighbors per query") {
     val res = VectorSearch.knnJoin(spark, TestSpark.sf, queryMod = 100, k = 5)
     val perQ = res.groupBy("q_id").count().collect()
