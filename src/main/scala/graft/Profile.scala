@@ -1,8 +1,10 @@
 package graft
 
 import scala.collection.mutable
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.graft.GraftBus
 
 /** The measurement runner:
@@ -11,9 +13,12 @@ import org.apache.spark.sql.graft.GraftBus
   *  - timing (default): `--reps` reps (default 3) of each query, each
   *    timed exactly as a graft.Bench rep (`Bench.rep`), so rep 1 is the
   *    cold rep and later reps the warm cost. Per rep it prints the wall
-  *    seconds, the number of Spark jobs the rep ran and each job's ms
-  *    and task count (the 12 longest), which separates driver-loop
-  *    overhead (many tiny jobs) from stage compute.
+  *    seconds, the number of Spark jobs the rep ran, the generated
+  *    classes it compiled and their compile ms, and each job's ms and
+  *    task count (the 12 longest), which separates driver-loop
+  *    overhead (many tiny jobs) and codegen (a warm rep that still
+  *    compiles folds a per-call value into its code) from stage
+  *    compute.
   *  - `--explain`: the formatted physical plan of each query.
   *  - `--show`: each query's result rows.
   *
@@ -23,9 +28,11 @@ import org.apache.spark.sql.graft.GraftBus
   */
 object Profile {
 
-  /** One timing rep: wall seconds, the query's error if it threw, and
-    * (job id, ms, tasks) for each Spark job the rep ran, by job id. */
-  case class Rep(wall: Double, err: Option[String], jobs: Seq[(Int, Long, Int)])
+  /** One timing rep: wall seconds, the query's error if it threw,
+    * (job id, ms, tasks) for each Spark job the rep ran, by job id, and
+    * the generated classes it compiled with their compile ms. */
+  case class Rep(wall: Double, err: Option[String], jobs: Seq[(Int, Long, Int)],
+                 compiles: Long, compileMs: Double)
 
   private val usage =
     "usage: graft.Profile <sfDir> [--reps N] [--explain | --show] [--conf k=v]... <query...>"
@@ -59,6 +66,7 @@ object Profile {
           profile(spark, sfDir, fn, reps).zipWithIndex.foreach { case (r, i) =>
             val jobSum = r.jobs.map(_._2).sum / 1e3
             println(f"== $n rep${i + 1} wall=${r.wall}%.2fs jobs=${r.jobs.size} " +
+              f"compiles=${r.compiles} compileMs=${r.compileMs}%.1f " +
               f"jobTimeSum=$jobSum%.2fs gap=${r.wall - jobSum}%.2fs" + r.err.fold("")(e => s" ERROR $e"))
             r.jobs.sortBy(-_._2).take(12).foreach { case (id, ms, tasks) =>
               println(f"   job$id%-5d ${ms}ms tasks=$tasks")
@@ -83,10 +91,12 @@ object Profile {
     val jobs = new JobLog
     val sc = spark.sparkContext
     sc.addSparkListener(jobs)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     try (1 to reps).map { _ =>
+      val (c0, ns0) = (compiles.getCount, CodeGenerator.compileTime)
       val (wall, err) = Bench.rep(spark, sfDir, fn)
       GraftBus.drain(sc)
-      Rep(wall, err, jobs.take())
+      Rep(wall, err, jobs.take(), compiles.getCount - c0, (CodeGenerator.compileTime - ns0) / 1e6)
     } finally sc.removeSparkListener(jobs)
   }
 

@@ -30,6 +30,20 @@ object VectorFunctions {
 
   def l2norm(a: Column): Column = sqrt(dotd(a, a))
 
+  /** A per-request primitive (a query norm, an excluded id) the plan
+    * reads at run time: unlike `lit`, it is never folded into the
+    * generated source, so a new value reuses the compiled classes of
+    * the previous request (org.apache.spark.sql.graft.Param). Never
+    * for a value a scan predicate must push down.
+    */
+  def param(v: Any): Column = org.apache.spark.sql.graft.VecExpressions.param(v)
+
+  /** The driver norm of a query vector as a [[param]] — bit-equal to
+    * `l2norm(typedlit(qd))`, which Catalyst would fold into the
+    * generated source.
+    */
+  def normParam(qd: Array[Double]): Column = param(math.sqrt(dotLocal(qd, qd)))
+
   /** a·b / (an·bn) with caller-supplied norms, so each call site keeps
     * its norm source (a persisted `nrm` column, a broadcast query norm,
     * a driver literal or an inline [[l2norm]]) and its scores stay

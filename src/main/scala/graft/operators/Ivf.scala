@@ -168,6 +168,10 @@ object Ivf {
   def indexPath(spark: SparkSession, dir: String, nCells: Int): String =
     IndexStore.indexPath(spark, "ivf_v5", s"$dir/embeddings.parquet", nCells.toString)
 
+  /** [[indexPath]] for a caller that already fingerprinted the corpus. */
+  private[operators] def indexPathOf(spark: SparkSession, fp: String, nCells: Int): String =
+    IndexStore.pathOf(spark, "ivf_v5", fp, nCells.toString)
+
   /** FAISS remove_ids() for the IVF index: tombstone, don't rewrite. */
   def removeFromIndex(spark: SparkSession, dir: String, nCells: Int, ids: Seq[Long]): Unit =
     IndexStore.addTombstones(spark, indexPath(spark, dir, nCells), ids)
@@ -367,9 +371,10 @@ object Ivf {
   /** The single-query probe behind [[ivfTopK]], [[ivfTopKVec]] and
     * [[plannedFilteredTopK]]'s postfilter route: the nprobe cells are
     * ranked on the driver and pushed into the index scan as literal
-    * ids, the probed rows that pass `filter` (minus `exclude`, the
-    * member query's own id) are scored, and [[TopK.ranked]] cuts and
-    * ranks them — (n_id, cell, score, rk), zero exchanges.
+    * ids (partition pruning), the probed rows that pass `filter`
+    * (minus `exclude`, the member query's own id, a [[param]]) are
+    * scored against a driver [[normParam]], and [[TopK.ranked]] cuts
+    * and ranks them — (n_id, cell, score, rk), zero exchanges.
     */
   private def probe(spark: SparkSession, dir: String, qv: Array[Float],
                     exclude: Option[Long], filter: Column, nCells: Int, nprobe: Int,
@@ -377,12 +382,12 @@ object Ivf {
     val path = indexPath(spark, dir, nCells)
     val (cells, _) = ensureIndexAt(spark, dir, nCells, path)
     val probedCells = rankCellsArr(centroidRows(spark, dir, nCells, path), qv).take(nprobe)
-    val q = typedlit(qv)
+    val qd = qv.map(_.toDouble)
     TopK.ranked(cells.where(col("cell").isin(probedCells: _*))
-      .where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)) && filter)
+      .where(exclude.map(col("vec_id") =!= param(_)).getOrElse(lit(true)) && filter)
       .select(col("vec_id").as("n_id"),
         col("cell").cast("long").as("cell"),
-        cosine5(col("embedding"), q, col("nrm"), l2norm(q)).as("score")),
+        cosine5(col("embedding"), typedlit(qd), col("nrm"), normParam(qd)).as("score")),
       k, "rk", byScore("n_id"): _*)
   }
 

@@ -238,10 +238,21 @@ object Quantized {
     * complete artifact.
     */
   def ensurePqIndex(spark: SparkSession, dir: String, m: Int, kCents: Int)
+      : (DataFrame, Array[Array[Array[Double]]]) =
+    ensurePqIndexAt(spark, dir, m, kCents, corpusFingerprint(spark, dir))
+
+  /** The corpus fingerprint every artifact path below derives from —
+    * resolved once per request and passed down, so one IVFPQ request
+    * lists and hashes `embeddings.parquet` once.
+    */
+  private def corpusFingerprint(spark: SparkSession, dir: String): String =
+    IndexStore.fingerprint(spark, s"$dir/embeddings.parquet")
+
+  /** [[ensurePqIndex]] over the resolved corpus fingerprint `fp`. */
+  private def ensurePqIndexAt(spark: SparkSession, dir: String, m: Int, kCents: Int, fp: String)
       : (DataFrame, Array[Array[Array[Double]]]) = {
     import spark.implicits._
-    val path = IndexStore.indexPath(spark, "pq_v2",
-      s"$dir/embeddings.parquet", s"${m}_$kCents")
+    val path = IndexStore.pathOf(spark, "pq_v2", fp, s"${m}_$kCents")
     // staged under a hidden .tmp-* sibling, committed by one atomic rename — racing
     // sessions can't interleave a reader with a half-written artifact
     IndexStore.publish(spark, path) { tmp =>
@@ -336,12 +347,16 @@ object Quantized {
     * maintenance ([[Ivf.appendToIndex]]) forces a re-encode.
     */
   def ensureIvfPqIndex(spark: SparkSession, dir: String, nCells: Int,
-                       m: Int, kCents: Int): DataFrame = {
-    val path = IndexStore.indexPath(spark, "ivfpq_v3",
-      s"$dir/embeddings.parquet", s"${nCells}_${m}_$kCents")
+                       m: Int, kCents: Int): DataFrame =
+    ensureIvfPqIndexAt(spark, dir, nCells, m, kCents, corpusFingerprint(spark, dir))
+
+  /** [[ensureIvfPqIndex]] over the resolved corpus fingerprint `fp`. */
+  private def ensureIvfPqIndexAt(spark: SparkSession, dir: String, nCells: Int,
+                                 m: Int, kCents: Int, fp: String): DataFrame = {
+    val path = IndexStore.pathOf(spark, "ivfpq_v3", fp, s"${nCells}_${m}_$kCents")
     IndexStore.publish(spark, path) { tmp =>
       val (assigned, _) = Ivf.ensureIndex(spark, dir, nCells)
-      val (codes, _) = ensurePqIndex(spark, dir, m, kCents)
+      val (codes, _) = ensurePqIndexAt(spark, dir, m, kCents, fp)
       // one build-time shuffle marries the two persisted artifacts;
       // queries never pay it again. epoch=base keeps the layout
       // maintenance-compatible (IndexStore.compact commits sibling
@@ -379,12 +394,13 @@ object Quantized {
   private def ivfPqTopKCore(spark: SparkSession, dir: String, qv: Array[Double],
                             exclude: Option[Long], nCells: Int, nprobe: Int,
                             k: Int, m: Int, kCents: Int): DataFrame = {
-    val (_, codebooks) = ensurePqIndex(spark, dir, m, kCents)
-    val idx = ensureIvfPqIndex(spark, dir, nCells, m, kCents)
+    val fp = corpusFingerprint(spark, dir)
+    val (_, codebooks) = ensurePqIndexAt(spark, dir, m, kCents, fp)
+    val idx = ensureIvfPqIndexAt(spark, dir, nCells, m, kCents, fp)
     // memoized centroid table (Ivf.centroidRows) — probe planning
     // without the per-call centroid collect job
     val probed = Ivf.rankCellsArr(
-      Ivf.centroidRows(spark, dir, nCells, Ivf.indexPath(spark, dir, nCells)),
+      Ivf.centroidRows(spark, dir, nCells, Ivf.indexPathOf(spark, fp, nCells)),
       qv.map(_.toFloat)).take(nprobe)
     val adc = adcColumn(codebooks, qv)
     TopK.first(idx.where(col("cell").isin(probed: _*))
@@ -416,10 +432,15 @@ object Quantized {
     */
   def ensureIvfPqResIndex(spark: SparkSession, dir: String, nCells: Int,
                           m: Int, kCents: Int, sampleRows: Int = 2048)
+      : (DataFrame, Array[Array[Array[Double]]]) =
+    ensureIvfPqResIndexAt(spark, dir, nCells, m, kCents, corpusFingerprint(spark, dir), sampleRows)
+
+  /** [[ensureIvfPqResIndex]] over the resolved corpus fingerprint `fp`. */
+  private def ensureIvfPqResIndexAt(spark: SparkSession, dir: String, nCells: Int,
+                                    m: Int, kCents: Int, fp: String, sampleRows: Int = 2048)
       : (DataFrame, Array[Array[Array[Double]]]) = {
     import spark.implicits._
-    val path = IndexStore.indexPath(spark, "ivfpqr_v3",
-      s"$dir/embeddings.parquet", s"${nCells}_${m}_$kCents")
+    val path = IndexStore.pathOf(spark, "ivfpqr_v3", fp, s"${nCells}_${m}_$kCents")
     IndexStore.publish(spark, path) { tmp =>
       val (assigned, centroids) = Ivf.ensureIndex(spark, dir, nCells)
       val cents = centroidArrays(centroids)
@@ -506,10 +527,11 @@ object Quantized {
                                     qv: Array[Double], exclude: Option[Long],
                                     nCells: Int, nprobe: Int, k: Int,
                                     m: Int, kCents: Int): DataFrame = {
-    val (idx, books) = ensureIvfPqResIndex(spark, dir, nCells, m, kCents)
+    val fp = corpusFingerprint(spark, dir)
+    val (idx, books) = ensureIvfPqResIndexAt(spark, dir, nCells, m, kCents, fp)
     // memoized centroid table — same rows centroidArrays() collected,
     // sorted by cell id, without the per-call collect job
-    val centRows = Ivf.centroidRows(spark, dir, nCells, Ivf.indexPath(spark, dir, nCells))
+    val centRows = Ivf.centroidRows(spark, dir, nCells, Ivf.indexPathOf(spark, fp, nCells))
     val cents = centRows.sortBy(_._1).map(_._2)
     val probed = Ivf.rankCellsArr(centRows, qv.map(_.toFloat)).take(nprobe)
     def qResidual(c: Int): Array[Double] =
@@ -562,7 +584,7 @@ object Quantized {
                          m: Int = 8, kCents: Int = 16): DataFrame = {
     val shortlist = ivfPqTopKVec(spark, dir, qv, nCells, nprobe, c, m, kCents)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    TopK.first(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), typedlit(qv),
+    TopK.first(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), qv.map(_.toDouble),
       col("vec_id").isin(shortlist: _*)), k, TopK.byScore("vec_id"): _*)
   }
 

@@ -91,7 +91,7 @@ object ReferenceInterop {
       (s, i)
     }.sortBy { case (s, i) => (-s, i) }.take(nprobe).map(_._2).toSeq
     val lists = FaissSource.readIvfLists(spark, ivfPath, Some(probed))
-    TopK.first(VectorSearch.scoredByVec(lists, typedlit(queryVec),
+    TopK.first(VectorSearch.scoredByVec(lists, queryVec.map(_.toDouble),
       excludeId.map(col("vec_id") =!= _).getOrElse(lit(true))), k, TopK.byScore("vec_id"): _*)
   }
 

@@ -17,9 +17,9 @@ import graft.sources.IndexStore
   *
   * Scale: documents are kept as sparse (doc_id, term, weight) triples —
   * never a dense vocab-width vector — so memory is O(tokens), the
-  * df/idf pass is one shuffle keyed by term, and query scoring joins
-  * only the query's terms (a broadcast of |q| rows) against the
-  * triples.
+  * df/idf pass is one shuffle keyed by term, and query scoring reads
+  * only the query terms' triples, weighted from a driver map of |q|
+  * idf values.
   *
   * The fitted model is a BUILD-ONCE artifact (the reference ships it
   * as tfidf_vectorizer.joblib + tfidf_matrix.joblib and only loads it
@@ -43,12 +43,12 @@ object TeamDraft {
 
 object TextRetrieval {
 
-  /** Sparse TF-IDF model over persisted parquet: weights (doc_id,
-    * term, w), per-doc L2 norms (doc_id, nrm), document frequencies
-    * (term, df), corpus size (n, 1 row), raw term counts (doc_id,
-    * term, tf).
+  /** Sparse TF-IDF model over persisted parquet under the
+    * fingerprinted artifact `path`: weights (doc_id, term, w), per-doc
+    * L2 norms (doc_id, nrm), document frequencies (term, df), corpus
+    * size (n, 1 row), raw term counts (doc_id, term, tf).
     */
-  case class TfidfModel(w: DataFrame, norms: DataFrame, dfT: DataFrame,
+  case class TfidfModel(path: String, w: DataFrame, norms: DataFrame, dfT: DataFrame,
                         n: DataFrame, tf: DataFrame)
 
   /** sklearn-vectorizer tokenization (the reference's
@@ -114,7 +114,7 @@ object TextRetrieval {
         .groupBy("doc_id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
         .write.mode("overwrite").parquet(s"$tmp/norms")
     }
-    TfidfModel(
+    TfidfModel(base,
       IndexStore.open(spark, s"$base/w"),
       IndexStore.open(spark, s"$base/norms"),
       IndexStore.open(spark, s"$base/df"),
@@ -181,35 +181,65 @@ object TextRetrieval {
       .orderBy(col("term"))
   }
 
+  /** A vocabulary term's query-side statistics: sklearn's smooth idf
+    * ln((1+N)/(1+df)) + 1 (the TF-IDF query weight) and Okapi BM25's
+    * ln((N − df + 0.5)/(df + 0.5) + 1).
+    */
+  private case class TermIdf(idf: Double, bm25: Double)
+
+  /** Every vocabulary term's [[TermIdf]], computed by Spark over the
+    * persisted df and n tables (so each value is bit-equal to the
+    * in-plan expression a per-query join would evaluate) and collected
+    * once per fingerprinted model path ([[graft.sources.DriverMemo]]).
+    * Query-side weighting is then a driver lookup: no join and no job
+    * per request. Driver memory is O(vocabulary).
+    */
+  private def termIdf(spark: SparkSession, m: TfidfModel): Map[String, TermIdf] =
+    graft.sources.DriverMemo.memo(spark, s"${m.path}#idf") {
+      m.dfT.crossJoin(broadcast(m.n))
+        .select(col("term"),
+          (log((col("n") + 1) / (col("df") + 1)) + 1).as("idf"),
+          log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1).as("bm25"))
+        .collect().iterator
+        .map(r => r.getString(0) -> TermIdf(r.getDouble(1), r.getDouble(2))).toMap
+    }
+
   /** Query-side TF-IDF weights for a free-text term list: tf=1 per
-    * distinct term → weight = idf(term), exactly sklearn's transform
-    * of a short query. Returns (term, qw) plus the query L2 norm
-    * (1-row frame) — both tiny, both broadcast by callers.
+    * distinct in-vocabulary term → weight = idf(term), exactly
+    * sklearn's transform of a short query, in term order; plus the
+    * query L2 norm, folded on the driver in that order.
     */
   private def queryWeights(spark: SparkSession, m: TfidfModel,
-                           queryTerms: Seq[String]): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val q = queryTerms.distinct.toDF("term")
-    val qw = q.join(m.dfT, Seq("term"), "inner").crossJoin(broadcast(m.n))
-      .withColumn("qw", log((col("n") + 1) / (col("df") + 1)) + 1)
-      .select("term", "qw")
-    (qw, qw.agg(sqrt(sum(col("qw") * col("qw"))).as("qn")))
+                           queryTerms: Seq[String]): (Map[String, Double], Double) = {
+    val idf = termIdf(spark, m)
+    val qw = queryTerms.distinct.sorted.flatMap(t => idf.get(t).map(s => t -> s.idf))
+    (qw.toMap, math.sqrt(qw.foldLeft(0.0) { case (acc, (_, w)) => acc + w * w }))
+  }
+
+  /** (doc_id, ts): the unrounded TF-IDF cosine of every document that
+    * shares a term with the query. The scan reads only the query
+    * terms' `w` rows (a literal IN list parquet pushes down); the
+    * weights ride a map literal and the query norm a [[param]], so the
+    * generated code is the same for every query of the same length.
+    */
+  private def tfidfScores(spark: SparkSession, m: TfidfModel,
+                          queryTerms: Seq[String]): DataFrame = {
+    val (qw, qn) = queryWeights(spark, m, queryTerms)
+    m.w.where(col("term").isin(qw.keys.toSeq.sorted: _*))
+      .join(m.norms, "doc_id")
+      .groupBy(col("doc_id"))
+      .agg(sum(col("w") / col("nrm") * element_at(typedlit(qw), col("term")) / param(qn))
+        .as("ts"))
   }
 
   /** Keyword search: score = cosine(tfidf(query), tfidf(doc)), top-k.
     * Reference app.py:202-204 (tfidf_vec.transform + cosine_similarity).
     */
-  def tfidfTopK(spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int): DataFrame = {
-    val m = ensureModel(spark, dir)
-    val (qw, qn) = queryWeights(spark, m, queryTerms)
-    m.w.join(broadcast(qw), "term")
-      .join(m.norms, "doc_id")
-      .crossJoin(broadcast(qn))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("w") / col("nrm") * col("qw") / col("qn")), 5).as("score"))
+  def tfidfTopK(spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int): DataFrame =
+    tfidfScores(spark, ensureModel(spark, dir), queryTerms)
+      .select(col("doc_id"), round(col("ts"), 5).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
 
   /** Raw-text front door (reference app.py:173
     * `search_products_vector(query: str)` — the search functions take
@@ -248,9 +278,9 @@ object TextRetrieval {
     * saturates term frequency (k1) and penalizes long documents (b) —
     * the two behaviors that make it the stronger default ranker.
     *
-    * Scale shape is identical to [[tfidfTopK]]: the persisted sparse
-    * tf triples are joined against a BROADCAST of |q| idf rows, the
-    * per-doc sum partial-aggregates map-side, and the top-k is a
+    * Scale shape is identical to [[tfidfTopK]]: only the query terms'
+    * persisted tf triples are read, weighted from a map of |q| idf
+    * values, the per-doc sum partial-aggregates map-side, and the top-k is a
     * TakeOrderedAndProject — one shuffle keyed by doc_id, no dense
     * vectors anywhere.
     */
@@ -268,19 +298,25 @@ object TextRetrieval {
     * SURVEY §4.
     */
   private def bm25Scores(spark: SparkSession, dir: String, queryTerms: Seq[String],
-                         k1: Double, b: Double): DataFrame = {
-    val m = ensureModel(spark, dir)
+                         k1: Double, b: Double): DataFrame =
+    bm25Sums(spark, dir, ensureModel(spark, dir), queryTerms.distinct.map(_ -> 1.0), k1, b)
+
+  /** Σ over the weighted query terms of qw·idf(t)·tf·(k1+1) /
+    * (tf + k1·(1 − b + b·dl/avgdl)) per document (doc_id, ts). Each
+    * in-vocabulary term's factor qw·idf(t) is folded on the driver
+    * from the [[termIdf]] memo (qw = 1.0 leaves idf(t) bit-equal) and
+    * rides a map literal; the scan reads only those terms' `tf` rows.
+    */
+  private def bm25Sums(spark: SparkSession, dir: String, m: TfidfModel,
+                       qw: Seq[(String, Double)], k1: Double, b: Double): DataFrame = {
+    val idf = termIdf(spark, m)
+    val f = qw.flatMap { case (t, w) => idf.get(t).map(s => t -> w * s.bm25) }.toMap
     val (dl, avgdl) = ensureBm25(spark, dir, m)
-    import spark.implicits._
-    val q = queryTerms.distinct.toDF("term")
-    val qidf = q.join(m.dfT, Seq("term"), "inner").crossJoin(broadcast(m.n))
-      .withColumn("qidf", log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1))
-      .select("term", "qidf")
-    m.tf.join(broadcast(qidf), "term")
+    m.tf.where(col("term").isin(f.keys.toSeq.sorted: _*))
       .join(dl, "doc_id")
       .crossJoin(broadcast(avgdl))
       .groupBy(col("doc_id"))
-      .agg(sum(col("qidf") * col("tf") * (lit(k1) + lit(1.0)) /
+      .agg(sum(element_at(typedlit(f), col("term")) * col("tf") * (lit(k1) + lit(1.0)) /
         (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
         .as("ts"))
   }
@@ -472,20 +508,8 @@ object TextRetrieval {
       .orderBy(col("sw").desc, col("term"))
       .limit(expandK)
       .select(col("term")).collect().map(_.getString(0)).toSeq
-    val (dl, avgdl) = ensureBm25(spark, dir, m)
-    import spark.implicits._
-    val q = (queryTerms.distinct.map(t => (t, 1.0)) ++ expanded.map(t => (t, 0.5)))
-      .toDF("term", "qw")
-    val qidf = q.join(m.dfT, Seq("term"), "inner").crossJoin(broadcast(m.n))
-      .withColumn("qidf", log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1))
-      .select(col("term"), col("qw"), col("qidf"))
-    m.tf.join(broadcast(qidf), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(avgdl))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("qw") * col("qidf") * col("tf") * (lit(k1) + lit(1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
-        .as("ts"))
+    bm25Sums(spark, dir, m,
+      queryTerms.distinct.map(t => (t, 1.0)) ++ expanded.map(t => (t, 0.5)), k1, b)
       .select(col("doc_id"), round(col("ts"), 5).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -575,29 +599,29 @@ object TextRetrieval {
     }
   }
 
-  /** The reference's hybrid blend over a candidate frame that already
-    * carries `doc_id`, `vs` (vector cosine) and `ts` (tfidf cosine):
-    * min-max-normalize ts OVER THE CANDIDATE SET (app.py:205-212 —
-    * filters apply before normalization, so the blend is
-    * filter-relative exactly like `search_products_hybrid` running
-    * inside `candidate_indices()`), then
-    * alpha·vs + (1-alpha)·minmax(ts), including the max>min guard and
-    * the 1e-12 denominator epsilon.
+  /** The reference's hybrid blend of the candidates' vector leg `vs`
+    * (doc_id, vs) and the sparse keyword leg `ts` (doc_id, ts; a
+    * candidate without a posting reads 0): min-max-normalize ts OVER
+    * THE CANDIDATE SET (app.py:205-212 — filters apply before
+    * normalization, so the blend is filter-relative exactly like
+    * `search_products_hybrid` running inside `candidate_indices()`),
+    * then alpha·vs + (1-alpha)·minmax(ts), including the max>min guard
+    * and the 1e-12 denominator epsilon.
+    *
+    * One action: the min/max aggregate joins the candidate ids (the
+    * `embedding` column pruned away) to the same broadcast of `ts` as
+    * the scoring side, so the sparse leg's exchange is reused and the
+    * leg executes once; the scoring side reads `embedding` in the
+    * plan's only embedding scan and ends in TakeOrderedAndProject.
     */
-  private def blend(cand0: DataFrame, alpha: Double, k: Int,
+  private def blend(vs: DataFrame, ts: DataFrame, alpha: Double, k: Int,
                     tsName: String = "tfidf_score"): DataFrame = {
-    // the blend needs TWO passes over the candidates (global min/max,
-    // then scoring) — ScratchCache persists the corpus-scan +
-    // TF-IDF-join subtree ONCE and both passes read the stored rows
-    // (narrow (doc_id, vs, ts) triples). Without it neither exchange
-    // reuse nor anything else stops Spark executing the whole subtree
-    // twice per query (r3 plan audit: 24 parquet scans in hybrid_topk).
-    // Persisted (recomputable lineage — survives executor churn where
-    // localCheckpoint blocks would not) under a bounded LRU so a
-    // serving session can't leak one cache entry per query.
-    val cand = graft.sources.ScratchCache.materialize(cand0)
-    val stats = cand.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-    cand.crossJoin(broadcast(stats))
+    val leg = broadcast(ts)
+    def posted(c: DataFrame): DataFrame = c.join(leg, Seq("doc_id"), "left")
+      .withColumn("ts", coalesce(col("ts"), lit(0.0)))
+    val stats = posted(vs.select(col("doc_id")))
+      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
+    posted(vs).crossJoin(broadcast(stats))
       .withColumn("tn", when(col("mx") > col("mn"),
         (col("ts") - col("mn")) / (col("mx") - col("mn") + lit(1e-12))).otherwise(col("ts")))
       .select(
@@ -617,44 +641,27 @@ object TextRetrieval {
     * `candidate_indices()` — the blend and its min-max run inside the
     * filtered candidate set.
     *
-    * The query norm is folded on the DRIVER (plain Scala, same
-    * left-to-right double accumulation as VecDot), so scoring costs
-    * two VecDots per corpus row (dot + corpus norm), not four.
+    * Both query norms are folded on the DRIVER and enter the plan as
+    * params: the vector norm (same left-to-right double accumulation
+    * as VecDot), so scoring costs two VecDots per corpus row (dot +
+    * corpus norm), not four; and the TF-IDF norm ([[queryWeights]]).
     */
   def hybridTopKFree(spark: SparkSession, dir: String, qv: Array[Float],
                      queryTerms: Seq[String], alpha: Double, k: Int,
                      metaFilter: Option[Column] = None): DataFrame =
-    blend(hybridCandidatesFree(spark, dir, qv, queryTerms, metaFilter), alpha, k)
+    blend(vectorCandidates(spark, dir, qv, metaFilter),
+      tfidfScores(spark, ensureModel(spark, dir), queryTerms), alpha, k)
 
-  /** The free-text hybrid's candidate subtree — (doc_id, vs, ts) for
-    * every candidate. Package-visible so plan tests can assert on the
-    * EXACT plan [[blend]]'s checkpoint job executes (the checkpoint
-    * hides it from the returned frame's plan).
-    */
-  private[graft] def hybridCandidatesFree(spark: SparkSession, dir: String, qv: Array[Float],
-                                          queryTerms: Seq[String],
-                                          metaFilter: Option[Column]): DataFrame = {
-    val m = ensureModel(spark, dir)
-    val (qw, qn) = queryWeights(spark, m, queryTerms)
-    val ts = m.w.join(broadcast(qw), "term")
-      .join(m.norms, "doc_id")
-      .crossJoin(broadcast(qn))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("w") / col("nrm") * col("qw") / col("qn")).as("ts"))
-    candidates(spark, dir, metaFilter)
-      .select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs"))
-      .join(ts, Seq("doc_id"), "left")
-      .withColumn("ts", coalesce(col("ts"), lit(0.0)))
-  }
+  /** (doc_id, vs) of every candidate against a caller vector. */
+  private def vectorCandidates(spark: SparkSession, dir: String, qv: Array[Float],
+                               metaFilter: Option[Column]): DataFrame =
+    candidates(spark, dir, metaFilter).select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs"))
 
   /** The hybrid vector leg: unrounded cosine of `embedding` against
     * the caller vector, its norm folded once on the driver.
     */
-  private def vectorLeg(qv: Array[Float]): Column = {
-    val qd = qv.map(_.toDouble)
-    cosine(col("embedding"), typedlit(qv), l2norm(col("embedding")),
-      lit(math.sqrt(dotLocal(qd, qd))))
-  }
+  private def vectorLeg(qv: Array[Float]): Column =
+    cosine(col("embedding"), typedlit(qv), l2norm(col("embedding")), normParam(qv.map(_.toDouble)))
 
   /** Raw-text hybrid front door: the reference's exact interactive
     * shape (app.py:190-219 — the user types `query: str`; the model
@@ -676,8 +683,22 @@ object TextRetrieval {
     * corpus-side projection runs two VecDots per row.
     */
   def hybridTopK(spark: SparkSession, dir: String, queryDoc: Long, alpha: Double, k: Int,
-                 metaFilter: Option[Column] = None): DataFrame =
-    blend(hybridCandidates(spark, dir, queryDoc, metaFilter), alpha, k)
+                 metaFilter: Option[Column] = None): DataFrame = {
+    val m = ensureModel(spark, dir)
+    val wn = m.w.join(m.norms, "doc_id")
+      .select(col("doc_id"), col("term"), (col("w") / col("nrm")).as("wn"))
+    val qw = wn.where(col("doc_id") === queryDoc).select(col("term"), col("wn").as("qwn"))
+    val ts = wn.where(col("doc_id") =!= queryDoc)
+      .join(broadcast(qw), "term")
+      .groupBy("doc_id").agg(sum(col("wn") * col("qwn")).as("ts"))
+    val qe = Tables.embeddings(spark, dir).where(col("vec_id") === queryDoc)
+      .select(col("embedding").as("qemb"), l2norm(col("embedding")).as("qn"))
+    val vs = candidates(spark, dir, metaFilter)
+      .where(col("vec_id") =!= queryDoc).crossJoin(broadcast(qe))
+      .select(col("vec_id").as("doc_id"),
+        cosine(col("embedding"), col("qemb"), l2norm(col("embedding")), col("qn")).as("vs"))
+    blend(vs, ts, alpha, k)
+  }
 
   /** BM25-keyword-leg hybrid — the reference's blend contract
     * (app.py:190-219: α·vec + (1−α)·minmax(keyword), min-max over the
@@ -689,15 +710,13 @@ object TextRetrieval {
     * search: the blend AND its min-max run inside the filtered set.
     * Output: (doc_id, hybrid_score, vector_score, bm25_score).
     *
-    * Same single-scan shape as [[hybridTopKFree]]: the (doc_id, vs,
-    * ts) candidate subtree persists once through ScratchCache and both
-    * blend passes read it.
+    * Same one-action shape as [[hybridTopKFree]] ([[blend]]).
     */
   def bm25HybridTopK(spark: SparkSession, dir: String, qv: Array[Float],
                      queryTerms: Seq[String], alpha: Double, k: Int,
                      metaFilter: Option[Column] = None,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    blend(bm25HybridCandidates(spark, dir, qv, queryTerms, metaFilter, k1, b),
+    blend(vectorCandidates(spark, dir, qv, metaFilter), bm25Scores(spark, dir, queryTerms, k1, b),
       alpha, k, tsName = "bm25_score")
 
   /** Raw-text BM25-hybrid front door — same tokenizer contract as the
@@ -706,18 +725,6 @@ object TextRetrieval {
                      query: String, alpha: Double, k: Int,
                      metaFilter: Option[Column]): DataFrame =
     bm25HybridTopK(spark, dir, qv, sklearnTokenize(query), alpha, k, metaFilter)
-
-  /** The BM25 hybrid's candidate subtree (doc_id, vs, ts) —
-    * package-visible for plan assertions like its TF-IDF twin. */
-  private[graft] def bm25HybridCandidates(spark: SparkSession, dir: String, qv: Array[Float],
-                                          queryTerms: Seq[String], metaFilter: Option[Column],
-                                          k1: Double, b: Double): DataFrame = {
-    val ts = bm25Scores(spark, dir, queryTerms, k1, b)
-    candidates(spark, dir, metaFilter)
-      .select(col("vec_id").as("doc_id"), vectorLeg(qv).as("vs"))
-      .join(ts, Seq("doc_id"), "left")
-      .withColumn("ts", coalesce(col("ts"), lit(0.0)))
-  }
 
   /** Reciprocal-rank fusion of the vector and BM25 legs (Cormack,
     * Clarke & Buettcher 2009) — the OTHER standard hybrid next to the
@@ -762,28 +769,6 @@ object TextRetrieval {
   def rrfTopK(spark: SparkSession, dir: String, qv: Array[Float],
               query: String, k: Int): DataFrame =
     rrfTopK(spark, dir, qv, sklearnTokenize(query), k)
-
-  /** The more-like-this hybrid's candidate subtree — see
-    * [[hybridCandidatesFree]] for why it is package-visible.
-    */
-  private[graft] def hybridCandidates(spark: SparkSession, dir: String, queryDoc: Long,
-                                      metaFilter: Option[Column]): DataFrame = {
-    val m = ensureModel(spark, dir)
-    val wn = m.w.join(m.norms, "doc_id")
-      .select(col("doc_id"), col("term"), (col("w") / col("nrm")).as("wn"))
-    val qv = wn.where(col("doc_id") === queryDoc).select(col("term"), col("wn").as("qwn"))
-    val tscore = wn.where(col("doc_id") =!= queryDoc)
-      .join(broadcast(qv), "term")
-      .groupBy("doc_id").agg(sum(col("wn") * col("qwn")).as("ts"))
-    val qe = Tables.embeddings(spark, dir).where(col("vec_id") === queryDoc)
-      .select(col("embedding").as("qemb"), l2norm(col("embedding")).as("qn"))
-    candidates(spark, dir, metaFilter)
-      .where(col("vec_id") =!= queryDoc).crossJoin(broadcast(qe))
-      .select(col("vec_id").as("doc_id"),
-        cosine(col("embedding"), col("qemb"), l2norm(col("embedding")), col("qn")).as("vs"))
-      .join(tscore, Seq("doc_id"), "left")
-      .withColumn("ts", coalesce(col("ts"), lit(0.0)))
-  }
 
   /** Passage-level retrieval with max-pool document scoring — the RAG
     * pattern where the retrieval unit is a chunk but the deliverable

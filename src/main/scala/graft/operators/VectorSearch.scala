@@ -28,26 +28,32 @@ object VectorSearch {
     * The query row comes from the UNFILTERED frame; `candidates` narrows
     * only the scored side, which never includes the query itself. The
     * query norm is computed once on the broadcast side and the corpus
-    * norm once per row, never per pair.
+    * norm once per row, never per pair. The lookup `vec_id = q` stays a
+    * literal (parquet pushes it down); the exclusion is a [[param]], so
+    * the corpus-side code compiles once.
     */
   private[operators] def scoredById(frame: DataFrame, queryId: Long,
                                     candidates: DataFrame => DataFrame): DataFrame = {
     val e = frame.withColumn("nrm", l2norm(col("embedding")))
     val q = e.where(col("vec_id") === queryId)
       .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    candidates(e.where(col("vec_id") =!= queryId))
+    candidates(e.where(col("vec_id") =!= param(queryId)))
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
   }
 
   /** (vec_id, score) of every row of `frame` passing `filter` against a
-    * query vector literal `q`; nothing is excluded.
+    * query vector `qd` (an array literal, passed to generated code by
+    * reference) whose norm is a driver [[normParam]]; nothing is
+    * excluded.
     */
-  private[operators] def scoredByVec(frame: DataFrame, q: Column, filter: Column): DataFrame =
+  private[operators] def scoredByVec(frame: DataFrame, qd: Array[Double],
+                                     filter: Column): DataFrame =
     frame.where(filter)
       .select(col("vec_id"),
-        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score"))
+        cosine5(col("embedding"), typedlit(qd), l2norm(col("embedding")), normParam(qd))
+          .as("score"))
 
   /** [[topK]] over an EXTERNAL (vec_id, embedding) frame — the door
     * the reference-artifact sources walk through
@@ -66,7 +72,7 @@ object VectorSearch {
     * this.
     */
   def topKVecOf(frame: DataFrame, qv: Array[Float], k: Int): DataFrame =
-    TopK.first(scoredByVec(frame, typedlit(qv), lit(true)), k, byScore("vec_id"): _*)
+    TopK.first(scoredByVec(frame, qv.map(_.toDouble), lit(true)), k, byScore("vec_id"): _*)
 
   /** Two-stage retrieval (reference app.py:156-188): metadata filter
     * builds the candidate set, vector search runs inside it. The filter
@@ -85,7 +91,7 @@ object VectorSearch {
     */
   def topKVec(spark: SparkSession, dir: String, qv: Array[Float], k: Int,
               filter: Column = lit(true)): DataFrame =
-    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(qv), filter),
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), qv.map(_.toDouble), filter),
       k, byScore("vec_id"): _*)
 
   /** The raw-text front door over [[topKVec]] — the reference's full
@@ -415,7 +421,10 @@ object VectorSearch {
   }
 
   /** Pairwise cosine similarity matrix for a small id set
-    * (reference app.py:348-356, product comparison tab).
+    * (reference app.py:348-356, product comparison tab). The matrix
+    * has at most (distinct ids)² rows, so ordering it is a [[TopK.first]]
+    * cut at that bound — TakeOrderedAndProject, not a range-partitioned
+    * global sort.
     */
   def simMatrix(spark: SparkSession, dir: String, ids: Seq[Long]): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -423,10 +432,11 @@ object VectorSearch {
       .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("av"), col("nrm").as("an"))
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("bv"), col("nrm").as("bn"))
-    a.crossJoin(broadcast(b))
+    val n = ids.distinct.size
+    TopK.first(a.crossJoin(broadcast(b))
       .select(col("a_id"), col("b_id"),
-        cosine5(col("av"), col("bv"), col("an"), col("bn")).as("score"))
-      .orderBy(col("a_id"), col("b_id"))
+        cosine5(col("av"), col("bv"), col("an"), col("bn")).as("score")),
+      n * n, col("a_id"), col("b_id"))
   }
 
   /** The evaluation core's sample rule — every batch kNN op and recall
@@ -839,7 +849,7 @@ object VectorSearch {
     val q2: Array[Double] = Array.tabulate(qv.length) { i =>
       fbK.toDouble * qv(i) + fbVecs.iterator.map(_(i).toDouble).sum
     }
-    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(q2), lit(true)),
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), q2, lit(true)),
       k, byScore("vec_id"): _*)
   }
 
@@ -930,7 +940,7 @@ object VectorSearch {
     val qv: Array[Double] = Array.tabulate(vecs(a).length) { i =>
       vecs(a)(i).toDouble - vecs(b)(i).toDouble + vecs(c)(i).toDouble
     }
-    TopK.first(scoredByVec(Tables.embeddings(spark, dir), typedlit(qv),
+    TopK.first(scoredByVec(Tables.embeddings(spark, dir), qv,
       !col("vec_id").isin(a, b, c)), k, byScore("vec_id"): _*)
   }
 

@@ -9,7 +9,8 @@ import org.apache.spark.storage.StorageLevel
   * interactions). Every driver-side reuse goes through here: resolved
   * and warmed table handles ([[graft.Tables]]), opened index artifacts
   * and their tombstone probes ([[IndexStore]]), collected probe
-  * metadata (IVF centroids, RP-tree planes, PQ codebooks), persisted
+  * metadata (IVF centroids, RP-tree planes, PQ codebooks, the TF-IDF
+  * query-side idf table), persisted
   * dedup intermediates, decoded joblib models, induced vocabularies
   * and the query-path scratch frames of [[ScratchCache]]. Entries are
   * in-process serving state, rebuilt from the parquet artifacts in
@@ -40,7 +41,7 @@ import org.apache.spark.storage.StorageLevel
   *     on every pass. A plain lookup accepts a pinned entry; a pinned
   *     lookup replaces a plain one.
   *   - ONE BOUND. Only [[ScratchCache]]'s plan-keyed frames grow with
-  *     traffic (one per distinct hybrid query), so only they count
+  *     traffic (one per distinct query plan), so only they count
   *     against `spark.graft.scratch.cache.size` (default 64), evicted
   *     least-recently-used and unpersisted. Every other entry is one
   *     per logical key, so a burst of scratch frames can never evict

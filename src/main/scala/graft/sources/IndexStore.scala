@@ -72,7 +72,14 @@ object IndexStore extends org.apache.spark.internal.Logging {
 
   /** Canonical artifact path: root/kind_fingerprint_params. */
   def indexPath(spark: SparkSession, kind: String, table: String, params: String): String =
-    s"${root(spark)}/${kind}_${fingerprint(spark, table)}_$params"
+    pathOf(spark, kind, fingerprint(spark, table), params)
+
+  /** [[indexPath]] over an already computed [[fingerprint]] `fp`, so a
+    * caller resolving several artifacts of one table lists and hashes
+    * it once.
+    */
+  def pathOf(spark: SparkSession, kind: String, fp: String, params: String): String =
+    s"${root(spark)}/${kind}_${fp}_$params"
 
   /** In-artifact completeness marker, written into the STAGING dir as
     * the last build step so it rides the rename. `_`-prefixed →

@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 
 /** Persisted intermediate frames for query-path materialization
-  * barriers (the hybrid blend's candidate triples, the IVF batch probe
-  * plan — subtrees that two downstream passes must read without
-  * executing twice), stored as scratch entries of [[DriverMemo]].
+  * barriers (the IVF batch probe plan, iterative graph state —
+  * subtrees that two downstream passes must read without executing
+  * twice), stored as scratch entries of [[DriverMemo]].
   *
   * Why not `localCheckpoint()`: its blocks are stored NON-reliably on
   * the executors that computed them — under executor loss,
@@ -34,10 +34,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Keys are the frame's CANONICALIZED logical plan (structural
   * equality — auto-generated attribute ids normalized away), so a
-  * repeated interactive query (same filter, same query vector) reuses
-  * the still-warm scratch instead of re-scanning — the serving-path
-  * win the reference gets from Streamlit's st.cache_resource
-  * (reference app.py:63-102).
+  * repeated query reuses the still-warm scratch instead of
+  * re-scanning — the win the reference gets from Streamlit's
+  * st.cache_resource (reference app.py:63-102).
   */
 object ScratchCache {
 

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -109,4 +109,10 @@ object VecExpressions {
   /** Column-level dot product (see VecDot). */
   def vec_dot(a: Column, b: Column): Column =
     ExpressionUtils.column(VecDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** Column-level per-request value (see Param), typed as `lit(v)` would be. */
+  def param(v: Any): Column = {
+    val l = Literal(v)
+    ExpressionUtils.column(Param(l.value, l.dataType))
+  }
 }

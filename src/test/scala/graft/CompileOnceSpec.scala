@@ -1,0 +1,57 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.CorpusLexicalEncoder
+import graft.operators.{Ivf, TextRetrieval, VectorSearch}
+
+/** Serving compiles once per query shape: after warm-up, a request
+  * with fresh values (query vector, query text, probed cells) runs on
+  * the generated classes of earlier requests of its shape. A
+  * per-request primitive folded into the generated source would make
+  * every request compile anew.
+  */
+class CompileOnceSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val sf = TestSpark.sf
+
+  /** Generated classes compiled while collecting `df`. */
+  private def compiles(df: => DataFrame): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    df.collect()
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  test("a warm serving request with fresh values compiles no generated class") {
+    spark.conf.set("spark.graft.encoder.class", "graft.functions.CorpusLexicalQueryEncoder")
+    spark.conf.set(CorpusLexicalEncoder.DirKey, sf)
+    try {
+      val vecs = Tables.embeddings(spark, sf).where(col("vec_id") < 4).orderBy("vec_id")
+        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+      // four texts of three distinct in-vocabulary terms each: the same
+      // shape, different values
+      val vocab = TextRetrieval.ensureModel(spark, sf).dfT
+        .orderBy(col("df").desc, col("term")).select("term").limit(12)
+        .collect().map(_.getString(0))
+      val texts = vocab.grouped(3).map(_.mkString(" ")).toIndexedSeq
+      val calls: Seq[(String, Int => DataFrame)] = Seq(
+        "topKVec" -> (i => VectorSearch.topKVec(spark, sf, vecs(i), 10)),
+        "topKText" -> (i => VectorSearch.topKText(spark, sf, texts(i), 10)),
+        "hybridTopKFree" -> (i =>
+          TextRetrieval.hybridTopKFree(spark, sf, vecs(i), texts(i), 0.7, 10, None)),
+        "ivfTopKVec" -> (i => Ivf.ivfTopKVec(spark, sf, vecs(i), 16, 4, 10)))
+      val fresh = calls.map { case (name, call) =>
+        call(0).collect()
+        call(1).collect()
+        name -> (2 until 4).map(i => compiles(call(i)))
+      }
+      assert(fresh.forall(_._2.forall(_ == 0)),
+        s"classes compiled by warm requests with fresh values: $fresh")
+    } finally {
+      spark.conf.unset("spark.graft.encoder.class")
+      spark.conf.unset(CorpusLexicalEncoder.DirKey)
+    }
+  }
+}

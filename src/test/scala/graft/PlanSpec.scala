@@ -334,41 +334,71 @@ class PlanSpec extends AnyFunSuite {
     })
   }
 
-  test("hybrid blend materializes the candidate subtree once (no double corpus scan)") {
-    val df = graft.operators.TextRetrieval.hybridTopK(spark, TestSpark.sf,
-      queryDoc = 0, alpha = 0.7, k = 10)
+  /** The executed file scans of a collected frame, and the exchanges
+    * its plan reused (each a [[org.apache.spark.sql.execution.exchange.ReusedExchangeExec]]'s
+    * original).
+    */
+  private def scansAndReuse(df: org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.execution.SparkPlan],
+         Seq[org.apache.spark.sql.execution.FileSourceScanExec],
+         Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     df.collect()
     val nodes = allExecNodes(df.queryExecution.executedPlan)
-    // both blend passes (min/max stats + scoring) read the PERSISTED
-    // candidate rows: the executed tree's leaves are in-memory scans of
-    // the one scratch relation — the corpus parquet scans live only
-    // inside the cached relation's build (executed once, on first
-    // read), never as executed-plan leaves of the query itself
-    val fileScans = nodes.filter(
-      _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
-    assert(fileScans.isEmpty,
-      "blend must not re-execute the candidate subtree:\n" + fileScans.mkString("\n"))
-    val memScans = nodes.filter(_.getClass.getSimpleName.startsWith("InMemoryTableScan"))
-    assert(memScans.nonEmpty,
-      "candidates must come from the scratch cache:\n" +
-        df.queryExecution.executedPlan.toString.take(800))
+    (nodes, nodes.collect { case s: FileSourceScanExec => s },
+      nodes.collect { case r: ReusedExchangeExec => r.child })
+  }
+
+  /** The one-action blend: no scratch cache and no file scan executed
+    * twice; the keyword leg's model table `leg` is read by ONE executed
+    * scan, under an exchange the plan reuses (the min/max side and the
+    * scoring side share it); and `embedding` is read by one scan only
+    * (the min/max side reads the candidate ids alone).
+    */
+  private def assertOneActionBlend(df: org.apache.spark.sql.DataFrame, leg: String): Unit = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val (nodes, scans, reused) = scansAndReuse(df)
+    val shown = df.queryExecution.executedPlan.toString.take(4000)
+    assert(!nodes.exists(_.getClass.getSimpleName.startsWith("InMemoryTableScan")),
+      "the blend must not go through a scratch cache:\n" + shown)
+    assert(scans.map(_.canonicalized).distinct.size == scans.size,
+      "a file scan executes twice:\n" + scans.mkString("\n"))
+    def readsLeg(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      allExecNodes(p).exists {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == leg)
+        case _ => false
+      }
+    assert(scans.count(readsLeg) == 1, s"`$leg` must be read by one executed scan:\n" + shown)
+    assert(reused.exists(readsLeg), s"the `$leg` leg's exchange must be reused:\n" + shown)
+    assert(scans.count(_.requiredSchema.fieldNames.contains("embedding")) == 1,
+      "`embedding` must be read by one scan only:\n" + scans.mkString("\n"))
+  }
+
+  test("hybrid blend materializes the candidate subtree once (no double corpus scan)") {
+    // the serving path (free-text query) blends in one action
+    assertOneActionBlend(graft.operators.TextRetrieval.hybridTopKFree(spark, TestSpark.sf,
+      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), alpha = 0.7, k = 10), "w")
+    // more-like-this also reads the query document's own `w` rows and
+    // embedding (two lookup scans), but still executes no scan twice
+    // and no scratch cache
+    val (nodes, scans, reused) = scansAndReuse(graft.operators.TextRetrieval.hybridTopK(
+      spark, TestSpark.sf, queryDoc = 0, alpha = 0.7, k = 10))
+    assert(!nodes.exists(_.getClass.getSimpleName.startsWith("InMemoryTableScan")))
+    assert(scans.map(_.canonicalized).distinct.size == scans.size,
+      "a file scan executes twice:\n" + scans.mkString("\n"))
+    assert(reused.nonEmpty, "the keyword leg's exchange must be reused")
   }
 
   test("bm25 hybrid blend shares the single-scan shape and pushes candidate filters") {
     import org.apache.spark.sql.functions.col
-    val df = graft.operators.TextRetrieval.bm25HybridTopK(spark, TestSpark.sf,
-      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), alpha = 0.7, k = 10)
-    df.collect()
-    val nodes = allExecNodes(df.queryExecution.executedPlan)
-    assert(nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]) == 0,
-      "bm25 blend must read its candidates from the scratch cache")
+    assertOneActionBlend(graft.operators.TextRetrieval.bm25HybridTopK(spark, TestSpark.sf,
+      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), alpha = 0.7, k = 10), "tf")
     // the filtered variant pushes the metadata predicates into the
-    // documents scan (assert on the candidate subtree — the plan the
-    // scratch materialization executes)
-    val cand = graft.operators.TextRetrieval.bm25HybridCandidates(spark, TestSpark.sf,
-      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"),
-      Some(col("lang") === "en" && col("n_chars") >= 200L), 1.2, 0.75)
-    val p = plan(cand)
+    // documents scan
+    val p = plan(graft.operators.TextRetrieval.bm25HybridTopK(spark, TestSpark.sf,
+      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), 0.7, 10,
+      Some(col("lang") === "en" && col("n_chars") >= 200L)))
     assert(p.contains("EqualTo(lang,en)"), p.take(1200))
     assert(p.contains("GreaterThanOrEqual(n_chars,200)"), p.take(1200))
   }
@@ -410,11 +440,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("filtered hybrid search pushes the metadata filters into the documents scan") {
     import org.apache.spark.sql.functions.col
-    // assert on the candidate subtree — the exact plan blend()'s
-    // checkpoint job executes (the checkpoint hides it from the
-    // returned frame's plan)
-    val df = graft.operators.TextRetrieval.hybridCandidates(spark, TestSpark.sf,
-      queryDoc = 0,
+    val df = graft.operators.TextRetrieval.hybridTopK(spark, TestSpark.sf,
+      queryDoc = 0, alpha = 0.7, k = 10,
       metaFilter = Some(col("lang") === "en" && col("n_chars") >= 200L))
     val p = plan(df)
     assert(p.contains("EqualTo(lang,en)"), p.take(1200))
@@ -450,6 +477,9 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"), p.take(800))
     assert(p.contains("BroadcastHashJoin"), p.take(800))
+    // the query idf rows ride a map literal from the per-model idf memo,
+    // and the postings scan reads only the query terms' rows
+    assert(p.contains("In(term, [join,spark,vector])"), p.take(1500))
     // scoring reads the persisted sparse model, never re-tokenizes
     assert(!p.contains("documents.parquet"),
       "per-query bm25 must not rescan/re-tokenize the corpus:\n" + p.take(1500))
