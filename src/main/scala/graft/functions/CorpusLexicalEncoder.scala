@@ -83,8 +83,10 @@ object CorpusLexicalEncoder {
   }
 
   /** Build-once artifact path of the reference-corpus lexicon. */
-  def referenceLexiconPath(spark: SparkSession, npyPath: String): String =
+  def referenceLexiconPath(spark: SparkSession, npyPath: String): String = {
+    graft.sources.Sources.requireArtifact(spark, npyPath)
     IndexStore.indexPath(spark, "lexenc-ref", npyPath, "v1")
+  }
 
   /** The REFERENCE-corpus lexicon: reviews.csv's combined_text rows
     * (file-order ids — [[graft.sources.Sources.readCsvRowIndexed]])

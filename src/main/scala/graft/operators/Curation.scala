@@ -142,18 +142,14 @@ object Curation {
     * frequency is the point). One explode + one count aggregation with
     * map-side combine; the top-N goes through TakeOrderedAndProject.
     */
-  def bigramFreq(spark: SparkSession, dir: String, topN: Int = 50): DataFrame = {
-    val toks = split(col("text"), " ")
+  def bigramFreq(spark: SparkSession, dir: String, topN: Int = 50): DataFrame =
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-      .select(explode(when(size(toks) >= 2,
-        transform(sequence(lit(0), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i + 1, lit(2)))))
-        .otherwise(array().cast("array<string>"))).as("bigram"))
+      .select(split(col("text"), " ").as("toks"))
+      .select(explode(TextAnalysis.ngrams(col("toks"), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
       .limit(topN)
-  }
 
   /** Stratified sampling: the first `perStratum` documents per language
     * in md5-of-id order — a deterministic "random" draw per stratum, so

@@ -165,23 +165,19 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Distinct n-token shingles per document (word n-grams).
-    * Documents shorter than n tokens yield no shingles (matches the
-    * oracle's `range(len-n+1)` semantics on empty ranges).
+  /** Distinct n-token shingles per document (word n-grams): the text
+    * splits once per row and [[TextAnalysis.ngrams]] builds the
+    * windows. Documents shorter than n tokens yield no shingles
+    * (matches the oracle's `range(len-n+1)` semantics on empty ranges).
     */
-  def shingles(docs: DataFrame, n: Int = 5): DataFrame = {
-    val toks = split(col("text"), " ")
+  def shingles(docs: DataFrame, n: Int = 5): DataFrame =
     // documents arrive as one small parquet split; spread rows so the
     // shingle explode + downstream hashing use every core (results are
     // set-semantic — partitioning cannot change them)
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-      explode(when(size(toks) >= n,
-        transform(sequence(lit(0), size(toks) - lit(n)),
-          i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-        .otherwise(array().cast("array<string>"))).as("shingle"))
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), explode(TextAnalysis.ngrams(col("toks"), n)).as("shingle"))
       .distinct()
-  }
 
   /** Near-dup pairs by exact n-gram Jaccard, blocked on shared
     * shingles: a pair is only scored if the docs share ≥1 shingle, so
@@ -1094,7 +1090,11 @@ object Dedup {
     *
     * Bit positions are the four 16-bit chunks of [[md5Long64]] (the
     * DuckDB `md5_number_upper` value), so bitmap build, membership
-    * test, and verdict replay end-to-end in SQL.
+    * test, and verdict replay end-to-end in SQL. The digest is
+    * projected once per shingle before either explode: a generator
+    * gets no subexpression elimination, so `k` chunk expressions over
+    * an inline [[md5Long64]] would digest each shingle once per chunk
+    * and per byte.
     */
   def bloomDecontaminate(spark: SparkSession, dir: String, n: Int = 5,
                          evalThresholdHex: String = "0ccc", minShared: Long = 3L,
@@ -1102,9 +1102,9 @@ object Dedup {
     require(kHash >= 1 && kHash <= 4, s"kHash draws 16-bit chunks of one 64-bit digest: $kHash")
     val bucket = substring(md5(col("doc_id").cast("string")), 1, 4)
     val sh = cappedShingles(spark, dir, n, maxDf)
-    val h = md5Long64(col("shingle"))
+      .select(col("doc_id"), col("shingle"), md5Long64(col("shingle")).as("h"))
     val posCols = (0 until kHash).map(j =>
-      shiftright(h, 16 * j).bitwiseAND(lit(65535L)))
+      shiftright(col("h"), 16 * j).bitwiseAND(lit(65535L)))
     val words = sh.where(bucket < lit(evalThresholdHex))
       .select(explode(array(posCols: _*)).as("pos"))
       .select(expr("pos div 64").as("word_idx"),

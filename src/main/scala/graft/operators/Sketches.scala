@@ -52,15 +52,18 @@ object Sketches {
     val toks = graft.sources.ScratchCache.materialize(
       Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("tok")))
-    def bucket(row: Int, tok: Column): Column =
-      shiftright(Dedup.md5Long64(tok), bits * row).bitwiseAND(lit((w - 1).toLong))
+    // one digest per token, projected before each explode: a
+    // generator gets no subexpression elimination, so the d row
+    // chunks of an inline digest would each recompute it
+    def hashed(df: DataFrame): DataFrame =
+      df.withColumn("h", Dedup.md5Long64(col("tok")))
+    def cellKeys: Column = explode(array((0 until d).map(r =>
+      struct(lit(r).as("r"),
+        shiftright(col("h"), bits * r).bitwiseAND(lit((w - 1).toLong)).as("b"))): _*)).as("rb")
     // one constant-size agg: d bit-field chunks per occurrence, <= d*w
-    // keys out; the d structs share the single codegen'd digest
-    val cells = toks
-      .select(Dedup.md5Long64(col("tok")).as("h"))
-      .select(explode(array((0 until d).map(r =>
-        struct(lit(r).as("r"),
-          shiftright(col("h"), bits * r).bitwiseAND(lit((w - 1).toLong)).as("b"))): _*)).as("rb"))
+    // keys out
+    val cells = hashed(toks)
+      .select(cellKeys)
       .groupBy(col("rb.r").as("r"), col("rb.b").as("b"))
       .agg(count(lit(1)).as("cnt"))
     val exact = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact"))
@@ -72,9 +75,8 @@ object Sketches {
     // occurrences guarantee the cell exists), and est = min over the d
     // matched counters — identical to least(c0..cd-1) on the old wide
     // row.
-    exact
-      .select(col("tok"), col("exact"), explode(array((0 until d).map(r =>
-        struct(lit(r).as("r"), bucket(r, col("tok")).as("b"))): _*)).as("rb"))
+    hashed(exact)
+      .select(col("tok"), col("exact"), cellKeys)
       .select(col("tok"), col("exact"), col("rb.r").as("r"), col("rb.b").as("b"))
       .join(broadcast(cells), Seq("r", "b"))
       .groupBy(col("tok"), col("exact"))

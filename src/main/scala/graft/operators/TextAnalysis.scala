@@ -528,34 +528,45 @@ object TextAnalysis {
       .orderBy(col("rule"))
   }
 
+  /** Word n-grams of a token column: the one n-gram builder
+    * (org.apache.spark.sql.graft.NGrams, codegen'd). Split the text
+    * once in a projection and pass the token column here — never an
+    * inline `split(text, ' ')` (README, "Text kernels").
+    */
+  private[graft] def ngrams(toks: Column, n: Int): Column =
+    org.apache.spark.sql.graft.VecExpressions.ngrams(toks, n)
+
+  /** The largest multiplicity of any element of an array<string>
+    * without nulls (0 for an empty array): one row-local fold over the
+    * sorted array that keeps the current run and the longest run — a
+    * per-document count needs no explode, shuffle or join back.
+    */
+  private[graft] def topRun(grams: Column): Column =
+    aggregate(array_sort(grams),
+      struct(lit(null).cast("string").as("prev"), lit(0L).as("run"), lit(0L).as("top")),
+      (acc, g) => {
+        val run = when(acc("prev") === g, acc("run") + 1L).otherwise(lit(1L))
+        struct(g.as("prev"), run.as("run"), greatest(acc("top"), run).as("top"))
+      },
+      acc => acc("top"))
+
   /** Intra-document repetition signals (the Gopher/Dolma repetition
     * family): duplicate-bigram fraction and the most frequent bigram's
     * share of the document. High values flag boilerplate and generated
-    * spam that inter-document dedup can't see. The distinct/total
-    * counts are array-side narrow transforms; the top-bigram count
-    * explodes and aggregates KEYED BY (doc_id, bigram) — blocked per
-    * document, so no key ever exceeds one document's bigrams and the
-    * aggregate partial-combines map-side.
+    * spam that inter-document dedup can't see. One narrow projection:
+    * the text splits once, [[ngrams]] builds the bigrams, the
+    * distinct/total counts are array sizes and the top-bigram count is
+    * the row-local [[topRun]] — no explode, no shuffle before the
+    * final sort.
     */
-  def docRepetition(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val bigrams = when(size(toks) >= 2,
-      transform(sequence(lit(0), size(toks) - 2),
-        i => concat_ws(" ", slice(toks, i + 1, lit(2)))))
-      .otherwise(array().cast("array<string>"))
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), bigrams.as("bgs"))
+  def docRepetition(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), ngrams(col("toks"), 2).as("bgs"))
       .select(col("doc_id"),
         size(col("bgs")).cast("long").as("n_bigrams"),
         size(array_distinct(col("bgs"))).cast("long").as("n_distinct"),
-        col("bgs"))
-    val top = base.where(col("n_bigrams") > 0)
-      .select(col("doc_id"), explode(col("bgs")).as("bigram"))
-      .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(max(col("c")).as("top_bigram_n"))
-    base.drop("bgs")
-      .join(top, Seq("doc_id"), "left")
-      .withColumn("top_bigram_n", coalesce(col("top_bigram_n"), lit(0L)))
+        topRun(col("bgs")).as("top_bigram_n"))
       // exact integer ratios (SURVEY §4); 0-bigram docs are 0-dup
       .withColumn("dup_bigram_frac",
         when(col("n_bigrams") > 0, (col("n_bigrams") - col("n_distinct")) / col("n_bigrams"))
@@ -566,7 +577,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bigrams"), col("n_distinct"), col("top_bigram_n"),
         col("dup_bigram_frac"), col("top_bigram_share"))
       .orderBy(col("doc_id"))
-  }
 
   /** Document chunking — the RAG/embedding-prep splitter: fixed-size
     * character windows with overlap, so every document becomes
@@ -1279,10 +1289,7 @@ object TextAnalysis {
     val words = docs.select(explode(col("toks")).as("w"))
     val uni = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val totU = words.agg(count(lit(1)).as("u"))
-    val pairs = docs.select(explode(when(size(col("toks")) >= 2,
-        transform(sequence(lit(0), size(col("toks")) - 2),
-          i => concat_ws(" ", slice(col("toks"), i + 1, lit(2)))))
-        .otherwise(array().cast("array<string>"))).as("bigram"))
+    val pairs = docs.select(explode(ngrams(col("toks"), 2)).as("bigram"))
     val totT = pairs.agg(count(lit(1)).as("t"))
     pairs.groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
       .where(col("c12") >= minCount)
@@ -1337,11 +1344,12 @@ object TextAnalysis {
     * dropped spans — the (inputs, targets) shape a denoising trainer
     * consumes, next to [[graft.operators.Curation.packSequences]] in
     * the prep pipeline. Pure per-row array arithmetic (group
-    * slicing via transform/flatten) — zero shuffle, one narrow scan.
+    * slicing via transform/flatten over the once-split token column)
+    * — zero shuffle, one narrow scan.
     */
   def spanCorruptionPrep(spark: SparkSession, dir: String, spanLen: Int = 3,
                          period: Int = 6, sentinel: String = "<extra_id>"): DataFrame = {
-    val toks = split(col("text"), " ")
+    val toks = col("toks")
     val nGroups = ceil(size(toks) / lit(spanLen.toDouble)).cast("int")
     val masked = (g: Column) => g % period === 0
     val inputArr = flatten(transform(sequence(lit(0), nGroups - 1),
@@ -1351,6 +1359,7 @@ object TextAnalysis {
       filter(sequence(lit(0), nGroups - 1), g => masked(g)),
       g => concat(array(lit(sentinel)), slice(toks, g * spanLen + 1, lit(spanLen)))))
     Tables.documents(spark, dir)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .where(size(toks) >= spanLen)
       .select(col("doc_id"),
         concat_ws(" ", inputArr).as("input_text"),
@@ -1426,35 +1435,24 @@ object TextAnalysis {
     * for large n, because the two catch different failure modes: a
     * high TOP share at n=3 is a stuck phrase, a high DUPLICATE
     * fraction at n=5/10 is wholesale block repetition that a single
-    * hot trigram never shows). Duplicate fractions are pure per-row
-    * array arithmetic (size − size∘distinct — narrow, zero shuffle);
-    * only the top-trigram count needs a (doc, gram) aggregate, and
-    * that explode is doc-blocked exactly like [[docRepetition]]'s.
+    * hot trigram never shows). Everything is per-row array arithmetic
+    * over one split: [[ngrams]] for n = 3, 5 and 10, size − size∘distinct
+    * for the duplicate fractions and the row-local [[topRun]] for the
+    * top-trigram count — narrow, zero shuffle before the final sort.
     * Ratios are exact-integer divisions (SURVEY §4).
     */
   def ngramCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    def grams(n: Int): Column = when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
     def dupFrac(c: Column): Column =
       when(size(c) > 0,
         (size(c) - size(array_distinct(c))).cast("long") / size(c).cast("long"))
         .otherwise(lit(0.0))
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id"), grams(3).as("g3"),
-        dupFrac(grams(5)).as("dup_5gram_frac"),
-        dupFrac(grams(10)).as("dup_10gram_frac"))
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), ngrams(col("toks"), 3).as("g3"),
+        ngrams(col("toks"), 5).as("g5"), ngrams(col("toks"), 10).as("g10"))
       .select(col("doc_id"), size(col("g3")).cast("long").as("n_3grams"),
-        col("g3"), col("dup_5gram_frac"), col("dup_10gram_frac"))
-    val top = base.where(col("n_3grams") > 0)
-      .select(col("doc_id"), explode(col("g3")).as("g"))
-      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id")).agg(max(col("c")).as("top_3gram_n"))
-    base.drop("g3")
-      .join(top, Seq("doc_id"), "left")
-      .withColumn("top_3gram_n", coalesce(col("top_3gram_n"), lit(0L)))
+        topRun(col("g3")).as("top_3gram_n"),
+        dupFrac(col("g5")).as("dup_5gram_frac"), dupFrac(col("g10")).as("dup_10gram_frac"))
       .withColumn("top_3gram_share",
         when(col("n_3grams") > 0, col("top_3gram_n") / col("n_3grams"))
           .otherwise(lit(0.0)))

@@ -89,6 +89,7 @@ object FaissSource {
     * vector, and per list its codes then its ids.
     */
   private[graft] def readIvfHeader(spark: SparkSession, path: String): IvfHeader = {
+    Sources.requireArtifact(spark, path)
     val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(hadoopPath)
@@ -217,6 +218,7 @@ object FaissSource {
     */
   def readFlat(spark: SparkSession, path: String, batchRows: Int = 65536): DataFrame = {
     import spark.implicits._
+    Sources.requireArtifact(spark, path)
     val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val header = {

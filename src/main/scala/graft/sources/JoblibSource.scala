@@ -299,6 +299,7 @@ object JoblibSource {
                              indices: Array[Int], data: Array[Double])
 
   private def readAll(spark: SparkSession, path: String): Array[Byte] = {
+    Sources.requireArtifact(spark, path)
     val hp = new Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val len = fs.getFileStatus(hp).getLen

@@ -70,6 +70,7 @@ object NpySource {
     */
   def readNpy(spark: SparkSession, path: String, batchRows: Int = 65536): DataFrame = {
     import spark.implicits._
+    Sources.requireArtifact(spark, path)
     val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val header = {

@@ -11,11 +11,24 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** Fail, naming the file, when an artifact a reader needs is
+    * absent: `reference artifact missing: <path>` rather than the raw
+    * FileNotFoundException or PATH_NOT_FOUND the first read would
+    * raise further down. Every reader of the reference's own formats
+    * (csv, npy, faiss, joblib) checks through here first.
+    */
+  def requireArtifact(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      throw new java.io.FileNotFoundException(s"reference artifact missing: $path")
+  }
+
   /** CSV with header, explicit schema (never schema inference in
     * production — one pass saved, no type drift), quoted fields as in
     * the reference's products.csv/reviews.csv.
     */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    requireArtifact(spark, path)
     spark.read
       .option("header", "true")
       .option("quote", "\"")
@@ -23,6 +36,7 @@ object Sources {
       .option("multiLine", "true")
       .schema(schema)
       .csv(path)
+  }
 
   /** CSV with FILE-ORDER row ids — the positional-alignment door for
     * reference artifacts whose side-car matrices address rows by

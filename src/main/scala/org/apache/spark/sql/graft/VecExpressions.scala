@@ -1,11 +1,15 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd dense dot product over array<float> / array<double>
   * columns — the hot inner loop of every similarity operator.
@@ -105,10 +109,92 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     copy(left = newLeft, right = newRight)
 }
 
+/** Codegen'd word n-grams of a token array: the `size - n + 1`
+  * windows of `n` consecutive tokens, in order, each joined by one
+  * space — the one n-gram builder behind shingles, bigram counts and
+  * the repetition statistics.
+  *
+  * The built-in formulation
+  * `transform(sequence(0, size(toks) - n), i -> concat_ws(' ', slice(toks, i + 1, n)))`
+  * is CodegenFallback (interpreted per row), and Catalyst shares no
+  * subexpression into a lambda body, so an inlined `split(text, ' ')`
+  * re-tokenizes the document once per gram. This expression is one
+  * pass over the array inside whole-stage codegen. Semantics equal
+  * the built-in's guarded by `size(toks) >= n`: an empty array when
+  * the input has fewer than `n` tokens or is null, and a null
+  * element is skipped inside its window the way `concat_ws` skips it.
+  */
+case class NGrams(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, s"ngrams needs n >= 1, got $n")
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "ngrams"
+  override def sql: String = s"$prettyName(${child.sql}, $n)"
+  override def toString: String = s"$prettyName($child, $n)"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"ngrams expects array<string>, got $t")
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val toks = child.eval(input).asInstanceOf[ArrayData]
+    val m = if (toks == null) 0 else math.max(toks.numElements() - n + 1, 0)
+    val sep = UTF8String.fromString(" ")
+    val win = new Array[UTF8String](n)
+    val out = new Array[Any](m)
+    var i = 0
+    while (i < m) {
+      var j = 0
+      while (j < n) { win(j) = toks.getUTF8String(i + j); j += 1 }
+      out(i) = UTF8String.concatWs(sep, win: _*)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    // freshName: several NGrams (n = 3, 5, 10 over one token column)
+    // share one codegen scope
+    val m = ctx.freshName("ngM")
+    val out = ctx.freshName("ngOut")
+    val win = ctx.freshName("ngWin")
+    val sep = ctx.freshName("ngSep")
+    val i = ctx.freshName("ngI")
+    val j = ctx.freshName("ngJ")
+    val arr = classOf[GenericArrayData].getName
+    val str = classOf[UTF8String].getName
+    ev.copy(code = code"""
+      |${c.code}
+      |int $m = ${c.isNull} ? 0 : java.lang.Math.max(${c.value}.numElements() - $n + 1, 0);
+      |Object[] $out = new Object[$m];
+      |if ($m > 0) {
+      |  $str $sep = $str.fromString(" ");
+      |  $str[] $win = new $str[$n];
+      |  for (int $i = 0; $i < $m; $i++) {
+      |    for (int $j = 0; $j < $n; $j++) {
+      |      $win[$j] = ${c.value}.getUTF8String($i + $j);
+      |    }
+      |    $out[$i] = $str.concatWs($sep, $win);
+      |  }
+      |}
+      |ArrayData ${ev.value} = new $arr($out);
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VecExpressions {
   /** Column-level dot product (see VecDot). */
   def vec_dot(a: Column, b: Column): Column =
     ExpressionUtils.column(VecDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  /** Column-level word n-grams of a token array (see NGrams). */
+  def ngrams(toks: Column, n: Int): Column =
+    ExpressionUtils.column(NGrams(ExpressionUtils.expression(toks), n))
 
   /** Column-level per-request value (see Param), typed as `lit(v)` would be. */
   def param(v: Any): Column = {

@@ -12,6 +12,16 @@ class PlanSpec extends AnyFunSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Every registered query's optimized plan, built once for the
+    * whole-surface lints below; a query whose construction or
+    * planning throws keeps its failure.
+    */
+  private lazy val optimizedPlans
+      : Seq[(String, scala.util.Try[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> scala.util.Try(fn(spark, TestSpark.sf).queryExecution.optimizedPlan)
+    }
+
   test("global top-k plans as TakeOrderedAndProject (no full sort)") {
     val p = plan(VectorSearch.topK(spark, TestSpark.sf, 0, 10))
     assert(p.contains("TakeOrderedAndProject"), p.take(500))
@@ -809,8 +819,8 @@ class PlanSpec extends AnyFunSuite {
     // every query is linted: one whose construction or planning throws
     // is listed (and fails the test) instead of hiding the queries
     // after it
-    val linted = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> scala.util.Try(fn(spark, TestSpark.sf).queryExecution.optimizedPlan.collect {
+    val linted = optimizedPlans.map { case (name, p) =>
+      name -> p.map(_.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.partitionSpec.isEmpty => w
       }.nonEmpty)
@@ -822,5 +832,41 @@ class PlanSpec extends AnyFunSuite {
     assert(undocumented.isEmpty && unplanned.isEmpty,
       s"unpartitioned windows outside the bounded-frame allowlist: ${undocumented.mkString(", ")}" +
         s"; queries that could not be planned: ${unplanned.mkString("; ")}")
+  }
+
+  test("text kernels split once per row and hash once per exploded row") {
+    // Catalyst shares no subexpression into a lambda body, so a split
+    // inside one re-tokenizes the whole document per element; Generate
+    // does no subexpression elimination, so a digest repeated inside a
+    // generator is recomputed per copy. Queries that cannot be planned
+    // here are skipped: the window lint above already reports them.
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Md5, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val offenders = optimizedPlans.flatMap { case (name, plan) =>
+      plan.toOption.toSeq.flatMap { p =>
+        val splitInLambda = p.exists(_.expressions.exists(_.exists {
+          case l: LambdaFunction => l.function.exists(_.isInstanceOf[StringSplit])
+          case _ => false
+        }))
+        val md5s = p.collect { case g: Generate =>
+          g.generator.collect { case m: Md5 => m }.size }.foldLeft(0)(math.max)
+        Seq(s"$name: split inside a lambda body" -> splitInLambda,
+          s"$name: $md5s md5 digests in one generator" -> (md5s > 1))
+          .collect { case (msg, true) => msg }
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a query that cannot be planned fails only by naming a missing reference artifact") {
+    val named = "reference artifact missing: "
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
+    val other = optimizedPlans.collect {
+      case (name, scala.util.Failure(e))
+        if !causes(e).exists(c => String.valueOf(c.getMessage).startsWith(named)) =>
+        s"$name (${String.valueOf(e).takeWhile(_ != '\n')})"
+    }
+    assert(other.isEmpty, other.mkString("; "))
   }
 }

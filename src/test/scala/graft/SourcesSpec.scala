@@ -980,6 +980,21 @@ class SourcesSpec extends AnyFunSuite {
       assert(g.getSeq[Float](1) == o.getSeq[Float](1))
     }
   }
+
+  test("every reference-format reader names a missing artifact") {
+    import graft.sources.{FaissSource, JoblibSource, NpySource}
+    val gone = Files.createTempDirectory("graft-missing").toString + "/absent"
+    val readers: Seq[(String, () => Any)] = Seq(
+      "csv" -> (() => Sources.readCsv(spark, gone, Tables.documents(spark, TestSpark.sf).schema)),
+      "npy" -> (() => NpySource.readNpy(spark, gone)),
+      "faiss flat" -> (() => FaissSource.readFlat(spark, gone)),
+      "faiss ivf" -> (() => FaissSource.readIvfLists(spark, gone)),
+      "joblib" -> (() => JoblibSource.readTfidfVectorizer(spark, gone)))
+    readers.foreach { case (kind, read) =>
+      val e = intercept[java.io.FileNotFoundException](read())
+      assert(e.getMessage == s"reference artifact missing: $gone", kind)
+    }
+  }
 }
 
 /** Test-side ONNX ModelProto writer — just enough protobuf wire format
