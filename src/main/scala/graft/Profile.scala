@@ -23,8 +23,8 @@ import org.apache.spark.sql.graft.GraftBus
   *  - `--show`: each query's result rows.
   *
   * No query names means every query. `--conf` sets a session conf
-  * before the first query, e.g. the ground-truth source of the recall
-  * sweeps: `--conf spark.graft.recall.gt=graph --show ann_recall_eval`.
+  * before the first query, e.g. the scratch-cache cap:
+  * `--conf spark.graft.scratch.cache.size=16 ann_graph_knn_join`.
   */
 object Profile {
 

@@ -150,20 +150,6 @@ object SparkEntry {
     // FAISS IndexIVFPQ's by_residual=true default — per-probed-cell LUTs
     "ann_ivfpq_res_topk" -> ((s, d) => Quantized.ivfPqResidualTopK(s, d, queryId = 0, nCells = 16, nprobe = 4, k = 10)),
     "ann_lsh_topk" -> ((s, d) => Lsh.lshTopK(s, d, queryId = 0, nBits = 8, k = 10)),
-    // NSW-style greedy graph descent + exact rerank of the visited set
-    "ann_graph_topk" -> ((s, d) => GraphAnn.graphTopK(s, d, queryId = 0, g = 8, hops = 6, k = 10)),
-    // NON-member graph serving (the free-text shape app.py:169-188):
-    // a caller-supplied vector walks in from the global-min hub whose
-    // connectivity bridges reach every component — no self seed, no
-    // self-exclusion
-    "vs_graph_qvec" -> ((s, d) =>
-      GraphAnn.graphTopKVec(s, d, demoQueryVec, g = 8, hops = 6, beam = 4, k = 10)),
-    // true-HNSW topology: promoted-layer descent hands the base walk
-    // its entry; one rerank over both visited sets
-    "ann_hnsw_topk" -> ((s, d) => GraphAnn.hnswTopK(s, d, queryId = 0, g = 8, k = 10)),
-    // Annoy-style RP-tree forest: two-anchor hyperplane splits, union
-    // of the query's leaves across trees, exact rerank
-    "ann_rptree_topk" -> ((s, d) => RpTree.rpTreeTopK(s, d, queryId = 0, nTrees = 4, depth = 3, k = 10)),
     // BATCH graph walk: every mod-sampled query descends the persisted
     // NSW graph set-at-a-time (per-hop keyed join + per-q beam window)
     // — the graph-family nightly kNN job next to the brute-force
@@ -177,7 +163,7 @@ object SparkEntry {
     // queryMod 500: the per-family loop times interactive single-query
     // latency, so the sample stays small (4 queries at sf0.1)
     "ann_family_eval" -> ((s, d) => Ivf.familyEval(s, d, queryMod = 500, k = 10)),
-    // the HONEST serving table: the same 13 families with the sampled
+    // the HONEST serving table: the same 9 families with the sampled
     // query vectors held OUT of every index build and searched through
     // the caller-vector entry points — no member self hit can inflate
     // recall (rows-only like ann_family_eval: timing columns)
@@ -598,8 +584,6 @@ object SparkEntry {
     "item_jaccard" -> ((s, d) => Analytics.itemJaccard(s, d)),
     // FAISS range_search analog: every neighbor above a cosine radius
     "vs_range_search" -> ((s, d) => VectorSearch.rangeSearch(s, d, queryId = 0, minScore = 0.25)),
-    // Matryoshka truncated-dim shortlist + full-dim rerank
-    "vs_matryoshka_topk" -> ((s, d) => VectorSearch.matryoshkaTopK(s, d, queryId = 0)),
     // PMI item-association matrix (independence-normalized CF)
     "item_pmi" -> ((s, d) => Analytics.itemPmi(s, d)),
     // 7x24 weekly-seasonality load profile per event type
@@ -991,7 +975,7 @@ object SparkEntry {
           (1 until pos).map(p => s"SELECT doc_id FROM pk$p").mkString(" UNION ALL ") + ") "
       // MATERIALIZED: pk$p is referenced by every later pick's NOT IN —
       // inlining would re-expand the whole prior chain per reference
-      // (the nswBaseCtes lesson: unrolled sequential CTEs must pin)
+      // (the graph-walk oracle lesson: unrolled sequential CTEs must pin)
       s"""pk$pos AS MATERIALIZED (SELECT $pos AS pos, doc_id, '${teams(pos - 1)}' AS team, rk AS team_rank
          |       FROM $src ${notIn}ORDER BY rk LIMIT 1)""".stripMargin
     }.mkString(",\n")
@@ -1049,51 +1033,6 @@ object SparkEntry {
        |       round(coalesce((SELECT s FROM rr WHERE rnp = np.np), 0.0) / (SELECT nq FROM nqv), 5) AS "MRR",
        |       CAST((SELECT nq FROM nqv) AS BIGINT) AS "QueriesUsed"
        |FROM nps np""".stripMargin
-
-  /** CTEs replaying the [[graft.operators.RpTree]] forest build and
-    * query routing: per level, the two lowest-md5 anchors per (tree,
-    * node), the a−b double plane with its midpoint threshold (every
-    * dot a list_dot_product — the dotd parity contract), and the
-    * exact-double >= routing; then the query's own descent through
-    * the same planes. Ends at leaf CTEs `rt$depth` (members) and
-    * `rq$depth` (query leaves).
-    */
-  private def rpTreeCtes(nTrees: Int, depth: Int): String = {
-    val ts = (0 until nTrees).mkString(", ")
-    val plane = "list_transform(ea.embedding, (x, i) -> x::DOUBLE - eb.embedding[i]::DOUBLE)"
-    val base =
-      s"""rt0 AS (SELECT t, vec_id, CAST(0 AS BIGINT) AS node
-         |        FROM embeddings CROSS JOIN (SELECT unnest([$ts]) AS t)),
-         |rq0 AS (SELECT unnest([$ts]) AS t, CAST(0 AS BIGINT) AS node)""".stripMargin
-    val steps = (0 until depth).map { l =>
-      s"""rab$l AS (SELECT t, node,
-         |           max(CASE WHEN rk = 1 THEN vec_id END) AS aid,
-         |           coalesce(max(CASE WHEN rk = 2 THEN vec_id END),
-         |                    max(CASE WHEN rk = 1 THEN vec_id END)) AS bid
-         |         FROM (SELECT t, node, vec_id,
-         |                      row_number() OVER (PARTITION BY t, node
-         |                        ORDER BY md5('annoy:' || t::VARCHAR || ':' || node::VARCHAR || ':' || vec_id::VARCHAR),
-         |                                 vec_id) AS rk
-         |               FROM rt$l) z WHERE rk <= 2 GROUP BY 1, 2),
-         |rpl$l AS (SELECT ab.t, ab.node, $plane AS plane,
-         |           (list_dot_product($plane, ea.embedding::DOUBLE[])
-         |            + list_dot_product($plane, eb.embedding::DOUBLE[])) / 2.0 AS thr
-         |         FROM rab$l ab
-         |         JOIN embeddings ea ON ea.vec_id = ab.aid
-         |         JOIN embeddings eb ON eb.vec_id = ab.bid),
-         |rt${l + 1} AS (SELECT m.t, m.vec_id,
-         |               m.node * 2 + (CASE WHEN list_dot_product(p.plane, e.embedding::DOUBLE[]) >= p.thr
-         |                             THEN 1 ELSE 0 END) AS node
-         |        FROM rt$l m JOIN embeddings e USING (vec_id)
-         |        JOIN rpl$l p ON p.t = m.t AND p.node = m.node),
-         |rq${l + 1} AS (SELECT q.t,
-         |               q.node * 2 + (CASE WHEN list_dot_product(p.plane,
-         |                               (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)) >= p.thr
-         |                             THEN 1 ELSE 0 END) AS node
-         |        FROM rq$l q JOIN rpl$l p ON p.t = q.t AND p.node = q.node)""".stripMargin
-    }.mkString(",\n")
-    base + ",\n" + steps
-  }
 
   /** Shared CTEs replaying the SimHash signature build + capped chunk
     * blocking ([[graft.operators.Dedup.simhash]]: md5-number token
@@ -4242,54 +4181,15 @@ object SparkEntry {
          |WHERE bb.vec_id <> 0
          |ORDER BY score DESC, e.vec_id LIMIT 10""".stripMargin
     },
-    // the NSW walk replays exactly: top-8 rounded-cosine neighbor
+    // the batch walk replayed per query: top-8 rounded-cosine neighbor
     // lists over the SAME banded-LSH candidate blocking as
-    // dedup_embedding_lsh, SYMMETRIZED and bridge-augmented (the
-    // connectivity construction — see nswGraphCtes), 6 unrolled beam
-    // steps (top-4 of frontier ∪ neighbors by score DESC, id —
-    // keeping the frontier makes the walk monotone), then an exact
-    // rerank of everything visited
-    "ann_graph_topk" ->
-      s"""WITH $lshBlockCtes,
-         |$nswBaseCtes,
-         |-- walk seeds: the global-lowest fixed entry AND the query's
-         |-- own node (member-query self seed — GraphAnn.graphTopK)
-         |f0 AS (SELECT min(vec_id) AS v FROM embeddings WHERE vec_id <> 0
-         |       UNION SELECT 0),
-         |${graphAnnSteps(6, 4)},
-         |visited AS (SELECT v FROM f0
-         |${(0 until 6).map(i => s"            UNION SELECT v FROM u$i").mkString("\n")}),
-         |fin AS (SELECT v FROM visited WHERE v <> 0)
-         |SELECT v AS n_id, es.s AS score,
-         |       row_number() OVER (ORDER BY es.s DESC, v) AS rk
-         |FROM fin JOIN es ON es.vec_id = fin.v
-         |QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-    // the NON-member walk (GraphAnn.graphTopKVec): the query vector is
-    // a literal the corpus never saw — single hub seed (the global-min
-    // entry, whose bridge edges reach every component), no
-    // self-exclusion in the rerank
-    "vs_graph_qvec" ->
-      s"""WITH $lshBlockCtes,
-         |q AS (SELECT $qvSqlList::DOUBLE[] AS qv),
-         |es AS MATERIALIZED (SELECT e.vec_id, ${cos5("e.embedding", "q.qv")} AS s
-         |       FROM embeddings e, q),
-         |$nswGraphCtes,
-         |f0 AS (SELECT min(vec_id) AS v FROM embeddings),
-         |${graphAnnSteps(6, 4)},
-         |visited AS (SELECT v FROM f0
-         |${(0 until 6).map(i => s"            UNION SELECT v FROM u$i").mkString("\n")})
-         |SELECT v AS n_id, es.s AS score,
-         |       row_number() OVER (ORDER BY es.s DESC, v) AS rk
-         |FROM visited JOIN es ON es.vec_id = visited.v
-         |QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-    // the 2-level walk: promoted subgraph descent picks the base
-    // entry, base walk from there, ONE rerank over both visited sets
-    // the batch walk replayed per query: per-(q, node) rounded score
-    // frame, seeds = the lowest-id (or second-lowest for q = lowest)
-    // fixed entry PLUS the query's own node (member-query self seed),
-    // 6 unrolled per-q beam steps, final per-q rerank over each
-    // query's own visited union — row-identical to running the
-    // single-query walk oracle once per sampled q
+    // dedup_embedding_lsh, symmetrized and bridge-augmented (see
+    // nswGraphCtes); a per-(q, node) rounded score frame; seeds = the
+    // lowest-id (or second-lowest for q = lowest) fixed entry PLUS the
+    // query's own node; 6 unrolled per-q beam steps (top-4 of
+    // frontier ∪ neighbors by score DESC, id — keeping the frontier
+    // makes the walk monotone); final per-q rerank over each query's
+    // own visited union
     "ann_graph_knn_join" ->
       s"""WITH $lshBlockCtes,
          |$nswGraphCtes,
@@ -4309,53 +4209,6 @@ object SparkEntry {
          |       CAST(row_number() OVER (PARTITION BY fin.q_id ORDER BY b.s DESC, fin.v) AS BIGINT) AS rk
          |FROM fin JOIN bes b ON b.q_id = fin.q_id AND b.vec_id = fin.v
          |QUALIFY rk <= 10 ORDER BY fin.q_id, rk""".stripMargin,
-    "ann_hnsw_topk" ->
-      s"""WITH $lshBlockCtes,
-         |$nswBaseCtes,
-         |prom AS MATERIALIZED (SELECT vec_id FROM embeddings
-         |         WHERE ('0x' || substr(md5('hnsw:' || vec_id::VARCHAR), 1, 8))::UBIGINT::BIGINT % 4 = 0),
-         |nbr1 AS MATERIALIZED (SELECT src, dst FROM (
-         |           SELECT s.src, s.dst,
-         |                  row_number() OVER (PARTITION BY s.src ORDER BY s.s DESC, s.dst) AS rk
-         |           FROM scored s
-         |           SEMI JOIN prom pa ON pa.vec_id = s.src
-         |           SEMI JOIN prom pb ON pb.vec_id = s.dst) WHERE rk <= 8),
-         |-- engine-fallback mirror (GraphAnn.hnswTopK): when NO vec_id
-         |-- hashes into the promoted layer, the coarse descent starts
-         |-- from the global lowest-id base entry instead of vanishing
-         |hf0 AS (SELECT coalesce((SELECT min(vec_id) FROM prom WHERE vec_id <> 0),
-         |                        (SELECT min(vec_id) FROM embeddings WHERE vec_id <> 0)) AS v),
-         |${graphWalkSteps("h", "nbr1", 4, 2)},
-         |hvis AS (SELECT v FROM hf0
-         |${(0 until 4).map(i => s"         UNION SELECT v FROM hu$i").mkString("\n")}),
-         |-- base seeds: the coarse hand-off pick AND the member
-         |-- query's own node (GraphAnn.hnswTopK)
-         |f0 AS (SELECT v FROM (SELECT u.v FROM hvis u JOIN es ON es.vec_id = u.v
-         |                      ORDER BY es.s DESC, u.v LIMIT 1)
-         |       UNION SELECT 0),
-         |${graphAnnSteps(6, 4)},
-         |visited AS (SELECT v FROM hvis
-         |            UNION SELECT v FROM f0
-         |${(0 until 6).map(i => s"            UNION SELECT v FROM u$i").mkString("\n")}),
-         |fin AS (SELECT v FROM visited WHERE v <> 0)
-         |SELECT v AS n_id, es.s AS score,
-         |       row_number() OVER (ORDER BY es.s DESC, v) AS rk
-         |FROM fin JOIN es ON es.vec_id = fin.v
-         |QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-    // Annoy-style RP-tree forest replayed level by level: hash-sampled
-    // anchors, a-b midpoint hyperplanes, exact-double routing, union
-    // of the query's leaves, exact cosine rerank
-    "ann_rptree_topk" ->
-      s"""WITH ${rpTreeCtes(4, 3)},
-         |rcand AS (SELECT DISTINCT m.vec_id FROM rt3 m
-         |          JOIN rq3 q ON q.t = m.t AND q.node = m.node
-         |          WHERE m.vec_id <> 0),
-         |rsc AS (SELECT c.vec_id AS n_id, ${cos5("e.embedding", "qq.qv")} AS score
-         |        FROM rcand c JOIN embeddings e ON e.vec_id = c.vec_id,
-         |             (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) qq)
-         |SELECT n_id, score,
-         |       row_number() OVER (ORDER BY score DESC, n_id)::BIGINT AS rk
-         |FROM rsc QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
     // SemDeDup replayed over the same deterministic IVF assignment:
     // within-cell exact-cosine pairs at threshold 0.4, transitive
     // closure, keep the component-minimum id
@@ -5310,17 +5163,6 @@ object SparkEntry {
          |      FROM embeddings e, q WHERE e.vec_id <> 0)
          |SELECT vec_id, score FROM s WHERE score >= 0.25
          |ORDER BY score DESC, vec_id""".stripMargin,
-    // prefix-16 shortlist then full-dim rerank, both cuts tie-broken
-    // on vec_id — the cascade replayed end-to-end
-    "vs_matryoshka_topk" ->
-      s"""WITH e AS (SELECT vec_id, embedding, embedding[1:16] AS pre FROM embeddings),
-         |q AS (SELECT pre AS qp, embedding AS qv FROM e WHERE vec_id = 0),
-         |sh AS (SELECT e.vec_id, ${cos5("e.pre", "q.qp")} AS pre_score
-         |       FROM e, q WHERE e.vec_id <> 0
-         |       ORDER BY pre_score DESC, e.vec_id LIMIT 50)
-         |SELECT sh.vec_id, sh.pre_score, ${cos5("e.embedding", "q.qv")} AS score
-         |FROM sh JOIN e ON e.vec_id = sh.vec_id, q
-         |ORDER BY score DESC, sh.vec_id LIMIT 10""".stripMargin,
     // same capped baskets as item_jaccard; PMI = ln(co*N/(sa*sb))
     // with every count exact and ln the single float op
     "item_pmi" ->
@@ -6474,46 +6316,6 @@ object SparkEntry {
   /** PPR rounds: identical hop/damping arithmetic to [[pagerankSteps]]
     * except the 15% restart mass returns ONLY to the seed row.
     */
-  /** Unrolled beam-step CTEs for the `ann_graph_topk` oracle: step i
-    * inspects the frontier's neighbor lists (u{i} = frontier ∪
-    * neighbors) and keeps the top-`beam` by rounded query-cosine,
-    * ties to the lower id — NSW ef-search with ef = beam.
-    */
-  /** One unrolled beam-walk CTE chain (u = visited expansion, f =
-    * next frontier), parameterized by a name prefix and the neighbor
-    * CTE so the flat-NSW and HNSW oracles share one generator.
-    */
-  private def graphWalkSteps(pfx: String, nbrCte: String,
-                             hops: Int, beam: Int): String =
-    (0 until hops).map { i =>
-      // MATERIALIZED: u_i reads f_i twice and f_{i+1} chains on u_i —
-      // inlined, the chain re-evaluates exponentially in hops
-      // (measured: the 2-level hnsw oracle at 335 s vs sub-second
-      // materialized; the frames are ≤ beam·(g+1) rows)
-      s"""${pfx}u$i AS MATERIALIZED (SELECT ${pfx}f$i.v FROM ${pfx}f$i
-         |  UNION SELECT n.dst AS v FROM ${pfx}f$i JOIN $nbrCte n ON n.src = ${pfx}f$i.v),
-         |${pfx}f${i + 1} AS MATERIALIZED (SELECT ${pfx}u$i.v FROM ${pfx}u$i JOIN es ON es.vec_id = ${pfx}u$i.v
-         |  ORDER BY es.s DESC, ${pfx}u$i.v LIMIT $beam)""".stripMargin
-    }.mkString(",\n")
-
-  private def graphAnnSteps(hops: Int, beam: Int): String =
-    graphWalkSteps("", "nbr", hops, beam)
-
-  /** The NSW oracles' shared base: per-corpus query scores (`es`),
-    * the symmetrized LSH-blocked candidate pairs scored exactly
-    * (`scored`), and the base-layer top-8 neighbor lists (`nbr`) —
-    * the SQL mirror of [[graft.operators.GraphAnn.buildGraph]].
-    * Callers prepend `$lshBlockCtes`.
-    */
-  /** The query-INDEPENDENT half of the NSW oracles: symmetrized
-    * LSH-blocked candidate pairs scored exactly (`scored`), the
-    * base-layer top-8 neighbor lists (`nbrf`), their bidirectional
-    * closure (`nbru` — epoch=sym), and the connectivity-bridged walk
-    * graph (`nbr` — epoch=bridge) — the SQL mirror of
-    * [[graft.operators.GraphAnn.buildGraph]] + [[graft.operators
-    * .GraphAnn.ensureGraph]]'s derived epochs. Callers prepend
-    * `$lshBlockCtes`.
-    */
   /** One rerank-depth recall curve as a prefixed CTE chain ending in
     * `${pfx}curve`(c, shortlist, n_hits, recall_at_k) — the shared
     * replay of [[graft.operators.Quantized.rerankDepthSweep]] at one
@@ -6563,6 +6365,15 @@ object SparkEntry {
          |  GROUP BY l.node, l.lab)""".stripMargin
     }.mkString(",\n")
 
+  /** The query-INDEPENDENT half of the graph-walk oracle:
+    * symmetrized LSH-blocked candidate pairs scored exactly
+    * (`scored`), the top-8 neighbor lists (`nbrf`), their
+    * bidirectional closure (`nbru` — epoch=sym), and the
+    * connectivity-bridged walk graph (`nbr` — epoch=bridge) — the SQL
+    * mirror of [[graft.operators.GraphAnn.buildGraph]] +
+    * [[graft.operators.GraphAnn.ensureGraph]]'s derived epochs.
+    * Callers prepend `$lshBlockCtes`.
+    */
   private lazy val nswGraphCtes: String =
     s"""spairs AS (SELECT a_id AS src, b_id AS dst FROM cand
        |           UNION ALL SELECT b_id, a_id FROM cand),
@@ -6588,22 +6399,18 @@ object SparkEntry {
        |       UNION SELECT hubm.h AS src, rep AS dst FROM breps, hubm
        |       UNION SELECT rep AS src, hubm.h AS dst FROM breps, hubm)""".stripMargin
 
-  /** [[nswGraphCtes]] plus the single-query (vec 0) score frame. */
-  private lazy val nswBaseCtes: String =
-    s"""q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |es AS MATERIALIZED (SELECT e.vec_id, ${cos5("e.embedding", "q.qv")} AS s
-       |       FROM embeddings e, q),
-       |$nswGraphCtes""".stripMargin
-
   /** Unrolled BATCH beam-walk steps for the `ann_graph_knn_join`
-    * oracle — [[graphWalkSteps]] partitioned by q_id: bu{i} = each
-    * query's frontier ∪ its neighbors, bf{i+1} = per-query
-    * top-`beam` by rounded query-cosine (ties → lower id) against
-    * the per-(q, node) score frame `bes`.
+    * oracle, partitioned by q_id: bu{i} = each query's frontier ∪ its
+    * neighbors, bf{i+1} = per-query top-`beam` by rounded
+    * query-cosine (ties → lower id) against the per-(q, node) score
+    * frame `bes` — NSW ef-search with ef = beam.
     */
   private def batchWalkSteps(hops: Int, beam: Int): String =
     (0 until hops).map { i =>
-      // MATERIALIZED for the same reason as graphWalkSteps
+      // MATERIALIZED: bu_i reads bf_i twice and bf_{i+1} chains on
+      // bu_i — inlined, the chain re-evaluates exponentially in hops
+      // (measured on a deeper walk oracle: 335 s vs sub-second
+      // materialized; the frames are ≤ |Q|·beam·(g+1) rows)
       s"""bu$i AS MATERIALIZED (SELECT q_id, v FROM bf$i
          |  UNION SELECT f.q_id, n.dst AS v FROM bf$i f JOIN nbr n ON n.src = f.v),
          |bf${i + 1} AS MATERIALIZED (SELECT q_id, v FROM (

@@ -39,7 +39,7 @@ object Tables {
     * listing + a parquet footer schema-inference pass, which Spark 4
     * runs as a small distributed job) — measured 30-80 ms per call at
     * sf0.1, once per `Tables.X()` call, i.e. 100+ times inside the
-    * 13-family eval's serving loop alone. The memo returns the SAME
+    * index-family eval's serving loop alone. The memo returns the SAME
     * lazy plan (no persist — every action still scans parquet, so this
     * is metadata reuse, not result caching; the production analog is a
     * catalog table resolved once per session), or the warmed frame.

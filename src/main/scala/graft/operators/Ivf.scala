@@ -416,7 +416,7 @@ object Ivf {
     * [[indexPath]] ([[graft.sources.DriverMemo]]; nCells rows × dim
     * doubles). Single-query probe planning ran one
     * centroid-collect JOB per call (measured 30-80 ms at sf0.1, one
-    * per family call in the 13-family eval); the table is immutable
+    * per family call in the index-family eval); the table is immutable
     * per artifact path, so the second call should not re-run it.
     * [[rebalanceIndex]] rewrites centroids in place and drops this
     * entry with [[IndexStore.invalidate]].
@@ -441,15 +441,14 @@ object Ivf {
   /** The trade-off table generalized ACROSS the engine's whole index
     * family — the reference compares Flat vs IVF (ann_tradeoff_table
     * .csv); a user choosing an index needs the same three columns for
-    * every option: exact flat (the 1.0/1.0 anchor), IVF at nprobe,
-    * multi-probe LSH, SQ8, PQ/ADC, the IVF+PQ composites, binary,
-    * Matryoshka, and the NSW/HNSW graph walks — all
-    * against the same query sample and the same exact ground truth,
-    * each timed. Queries run
-    * through the single-query entry points (the persisted build-once
-    * artifacts), so the sweep measures probing, not fitting.
-    */
-  /** `memberQueries = false` prices the HONEST serving case: the
+    * every option. Nine families: exact flat (the 1.0/1.0 anchor), IVF
+    * at nprobe, multi-probe LSH, SQ8, PQ/ADC, the three IVF+PQ
+    * composites and binary — all against the same query sample and
+    * the same exact ground truth, each timed. Queries run through the
+    * single-query entry points (the persisted build-once artifacts),
+    * so the sweep measures probing, not fitting.
+    *
+    * `memberQueries = false` prices the HONEST serving case: the
     * sampled query VECTORS are held OUT of every index build (each
     * family builds on a corpus-minus-queries carve-out, published
     * once per (corpus, sample) fingerprint) and every family searches
@@ -480,11 +479,8 @@ object Ivf {
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val searchDir = if (memberQueries) dir else heldOutDir(spark, dir, qIds)
-    // GT through the recall seam (exact by default; the graph source
-    // is what lets this table be measured at the 1 M-vector scale
-    // point — BASELINE.md records the swap's fidelity), over the same
-    // bounded batch. Non-member GT is the exact flat scan of each
-    // held-out vector against the carve-out.
+    // exact GT over the same bounded batch. Non-member GT is the
+    // exact flat scan of each held-out vector against the carve-out.
     val gt: Map[Long, Map[Long, Long]] =
       if (memberQueries)
         VectorSearch.recallGroundTruth(spark, dir, queryMod, k, maxQueries)
@@ -535,27 +531,9 @@ object Ivf {
         ids(Quantized.ivfPqResidualTopK(spark, dir, q, nCells, nprobe, k))),
       // 1-bit sign quantization + exact rerank (IndexBinaryFlat shape)
       ("binary_c50", (q: Long) =>
-        ids(Quantized.binaryTopK(spark, dir, q, c = 50, k = k))),
-      // truncated-dim prefix shortlist + exact rerank (MRL serving)
-      ("matryoshka16_c50", (q: Long) =>
-        ids(VectorSearch.matryoshkaTopK(spark, dir, q, prefixDims = 16, c = 50, k = k))),
-      // graph family (the industry-default ANN index, the r11
-      // verdict's one named bake-off gap): NSW beam walk over the
-      // build-once top-g neighbor graph, and its hierarchical (HNSW)
-      // variant whose coarse promoted-layer descent hands the base
-      // walk its entry — same single-query entry points the hard
-      // oracles `ann_graph_topk` / `ann_hnsw_topk` replay in SQL
-      ("graph_beam", (q: Long) =>
-        ids(GraphAnn.graphTopK(spark, dir, q, g = 8, hops = 6, beam = 4, k = k))),
-      ("hnsw", (q: Long) => ids(GraphAnn.hnswTopK(spark, dir, q, g = 8, k = k))),
-      // Annoy-style RP-tree forest (leaf-union candidates + exact
-      // rerank) — the tree family completing the industry index set;
-      // per-query cost is the shared cached build plus nTrees
-      // leaf probes, the same entry point `ann_rptree_topk` oracles
-      ("rptree_t4d3", (q: Long) =>
-        ids(RpTree.rpTreeTopK(spark, dir, q, nTrees = 4, depth = 3, k = k))))
+        ids(Quantized.binaryTopK(spark, dir, q, c = 50, k = k))))
     else Seq(
-      // the SAME thirteen families through their caller-vector entry
+      // the SAME nine families through their caller-vector entry
       // points against the held-out carve-out — row names match the
       // member table so the two read side-by-side
       ("flat", (q: Long) => ids(VectorSearch.topKVec(spark, searchDir, qVecs(q), k))),
@@ -573,16 +551,7 @@ object Ivf {
       (s"ivfpq_res_nprobe$nprobe", (q: Long) =>
         ids(Quantized.ivfPqResidualTopKVec(spark, searchDir, qVecs(q), nCells, nprobe, k))),
       ("binary_c50", (q: Long) =>
-        ids(Quantized.binaryTopKVec(spark, searchDir, qVecs(q), c = 50, k = k))),
-      ("matryoshka16_c50", (q: Long) =>
-        ids(VectorSearch.matryoshkaTopKVec(spark, searchDir, qVecs(q),
-          prefixDims = 16, c = 50, k = k))),
-      ("graph_beam", (q: Long) =>
-        ids(GraphAnn.graphTopKVec(spark, searchDir, qVecs(q), g = 8, hops = 6,
-          beam = 4, k = k))),
-      ("hnsw", (q: Long) => ids(GraphAnn.hnswTopKVec(spark, searchDir, qVecs(q), g = 8, k = k))),
-      ("rptree_t4d3", (q: Long) =>
-        ids(RpTree.rpTreeTopKVec(spark, searchDir, qVecs(q), nTrees = 4, depth = 3, k = k))))
+        ids(Quantized.binaryTopKVec(spark, searchDir, qVecs(q), c = 50, k = k))))
     // warm every family CONCURRENTLY first: the one-time artifact
     // builds (PQ fit/encode, IVF/LSH publication) dominate a cold
     // sweep and overlap safely — IndexStore's staged-rename publish

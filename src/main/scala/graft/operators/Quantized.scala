@@ -592,7 +592,7 @@ object Quantized {
     * depth `c` against exact recall, the knob the sf50 scale point
     * showed MUST grow with corpus density (c=50 recovered nothing over
     * raw ADC at 1 M vectors while sufficing at 2 k — BASELINE.md's
-    * 13-family table). For each depth: Recall@k of
+    * family table). For each depth: Recall@k of
     * "ADC-rank the probed cells, keep the top-c, exact-rerank those c"
     * against the true exact top-k.
     *

@@ -21,11 +21,11 @@ import graft.Tables
   *    merged on the driver. No exchange, no full sort of the corpus.
   *  - [[ranked]] adds the rank column 1..min(k, n) over that k-row
   *    result. The window runs after the cut, so it sorts at most k
-  *    rows. It is partitioned by a private constant key that Catalyst
-  *    cannot fold (an unpartitioned window funnels its input into one
-  *    task, and PlanSpec gates every such window by name); the cut's
-  *    single output partition already satisfies the window's
-  *    clustering, so the rank adds no exchange.
+  *    rows. It is unpartitioned: its child is the literal-k limit, a
+  *    frame bounded whatever the corpus size (the structural proof
+  *    PlanSpec's window lint accepts), and the cut's single output
+  *    partition already satisfies the window's distribution, so the
+  *    rank adds no exchange.
   *  - [[perKey]] is the per-key cut (`row_number` over the keys,
   *    `rk <= k`), which Spark plans as WindowGroupLimit: each map-side
   *    partition keeps at most k rows per key before the shuffle.
@@ -60,8 +60,7 @@ object TopK {
     */
   def ranked(df: DataFrame, k: Int, rk: String, order: Column*): DataFrame = {
     val cut = first(df, k, order: _*)
-    cut.withColumn(rk,
-      row_number().over(Window.partitionBy(constKey(cut)).orderBy(order: _*)).cast("long"))
+    cut.withColumn(rk, row_number().over(Window.orderBy(order: _*)).cast("long"))
   }
 
   /** Per-key top-k: a long rank column `rk` (1.. within each `keys`
@@ -72,17 +71,6 @@ object TopK {
     df.withColumn(rk,
       row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)).cast("long"))
       .where(col(rk) <= k)
-
-  /** A constant 0 that Catalyst cannot constant-fold: pmod(h, 1) is 0
-    * for every h, but the hash reads the row. A bare `lit(0)` folds out
-    * of the window spec and leaves a partition-less window; the
-    * previous shape, a 1-row `crossJoin(broadcast(...))` key, paid a
-    * broadcast job plus a BroadcastNestedLoopJoin per call. Hashing
-    * every column keeps the key non-foldable even when some columns
-    * are literals.
-    */
-  private def constKey(df: DataFrame): Column =
-    pmod(hash(df.columns.map(c => col(s"`$c`")): _*), lit(1))
 
   case class ScoredPair(q_id: Long, n_id: Long, score: Double)
 

@@ -471,38 +471,13 @@ object VectorSearch {
       Seq(col("q_id")), k, "rk", byScore("n_id"): _*)
 
   /** Ground truth (q_id, n_id, score, rk) of the [[querySample]] batch
-    * for every recall sweep; the only reader of `spark.graft.recall.gt`:
-    * `exact` (default) is brute force, `graph` the NSW batch descent
-    * ([[GraphAnn.graphKnnJoin]], hop-bounded probe scans) semi-joined
-    * down to the bounded batch. The graph source makes the sweeps
-    * runnable where the n² exact pass is unpayable (the sf50 point); a
-    * spec asserts the two agree pair-for-pair at oracle scale, and
-    * BASELINE.md records the sweep-metric delta at sf0.1.
-    *
-    * GT-grade walk parameters: the serving defaults (hops=6, beam=4)
-    * trade recall for latency; ground truth wants the opposite, so the
-    * graph source walks hops=8, beam=24 — measured pair-EXACT against
-    * brute force at sf0.001 AND sf0.01 (beam=16 still missed one
-    * rank-1 neighbor at sf0.01). Cost stays |Q|·beam·(g+1) rows per
-    * hop — linear, nothing scales with the corpus but the probe scans.
+    * for every recall sweep: the exact per-query top-k, self excluded
+    * (brute force over one broadcast-batch scan).
     */
   def recallGroundTruth(spark: SparkSession, dir: String, queryMod: Int, k: Int,
                         maxQueries: Int = Int.MaxValue): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    spark.conf.getOption("spark.graft.recall.gt").getOrElse("exact") match {
-      case "exact" => exactKnn(e, querySample(e, queryMod, maxQueries), k)
-      case "graph" =>
-        // entrySelf: GT queries are corpus members — walking from the
-        // query's own node explores its own component, which is what
-        // survives disconnected-component corpora (see graphKnnJoin)
-        val walk = GraphAnn.graphKnnJoin(spark, dir, queryMod, k, g = 8, hops = 8,
-          beam = 24, entrySelf = true)
-        if (maxQueries == Int.MaxValue) walk
-        else walk.join(broadcast(querySample(e, queryMod, maxQueries).select(col("q_id"))),
-          Seq("q_id"), "left_semi")
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.recall.gt must be exact|graph, got '$other'")
-    }
+    exactKnn(e, querySample(e, queryMod, maxQueries), k)
   }
 
   /** Recall@K and MRR of `ranked` (by, q_id, n_id, rk) against `gt`
@@ -962,64 +937,12 @@ object VectorSearch {
       .where(col("score") >= minScore)
       .orderBy(byScore("vec_id"): _*)
 
-  /** Matryoshka (truncated-dimension) search — the MRL serving trick
-    * (Kusupati et al. 2022): embeddings trained front-loaded let a
-    * PREFIX of the dimensions stand in for the whole vector, so stage
-    * one ranks by cosine over the first `prefixDims` coordinates (a
-    * 4× cheaper scan at 16/64 — same win as SQ8/PQ but with zero
-    * codebook, zero training, zero extra artifact) and stage two
-    * rescores only the `c`-row shortlist at full precision. Both cuts
-    * are TakeOrdered with (score, vec_id) ties, so the whole cascade
-    * replays in SQL; the prefix slice is a narrow codegen projection
-    * fused into the scan. The flat-family cousin of
-    * [[graft.operators.Quantized.binaryTopK]] on the compression axis.
-    */
-  def matryoshkaTopK(spark: SparkSession, dir: String, queryId: Long,
-                     prefixDims: Int = 16, c: Int = 50, k: Int = 10): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val pre = slice(col("embedding"), 1, prefixDims)
-    val qp = e.where(col("vec_id") === queryId)
-      .select(pre.as("qp"), col("embedding").as("qv"))
-      .withColumn("qpn", l2norm(col("qp")))
-      .withColumn("qn", l2norm(col("qv")))
-    val short = TopK.first(e.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qp.select(col("qp"), col("qpn"))))
-      .select(col("vec_id"),
-        cosine5(pre, col("qp"), l2norm(pre), col("qpn")).as("pre_score")),
-      c, byScore("vec_id", "pre_score"): _*)
-    TopK.first(e.join(broadcast(short), Seq("vec_id"))
-      .crossJoin(broadcast(qp.select(col("qv"), col("qn"))))
-      .select(col("vec_id"), col("pre_score"),
-        cosine5(col("embedding"), col("qv"), l2norm(col("embedding")), col("qn")).as("score")),
-      k, byScore("vec_id"): _*)
-  }
-
-  /** [[matryoshkaTopK]] for a CALLER-SUPPLIED query vector (non-member
-    * serving): the prefix slice and both norms fold on the driver and
-    * ship as plan literals; no self-exclusion.
-    */
-  def matryoshkaTopKVec(spark: SparkSession, dir: String, qv: Array[Float],
-                        prefixDims: Int = 16, c: Int = 50, k: Int = 10): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val pre = slice(col("embedding"), 1, prefixDims)
-    val qp = typedlit(qv.take(prefixDims))
-    val q = typedlit(qv)
-    val short = TopK.first(e
-      .select(col("vec_id"), cosine5(pre, qp, l2norm(pre), l2norm(qp)).as("pre_score")),
-      c, byScore("vec_id", "pre_score"): _*)
-    TopK.first(e.join(broadcast(short), Seq("vec_id"))
-      .select(col("vec_id"), col("pre_score"),
-        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score")),
-      k, byScore("vec_id"): _*)
-  }
-
-  /** Matryoshka truncation curve — the sizing read behind
-    * [[matryoshkaTopK]]'s single prefix choice (Kusupati et al. 2022
-    * §4's accuracy-vs-dims table, over this corpus): for each prefix
-    * width, Recall@K and MRR of the prefix-cosine top-k against the
-    * full-dim [[recallGroundTruth]] (exact unless
-    * `spark.graft.recall.gt=graph`), over the same [[querySample]]
-    * batch the other retrieval evals use. The knee of this curve IS the serving
+  /** Matryoshka truncation curve — the sizing read for a prefix-dim
+    * shortlist (Kusupati et al. 2022 §4's accuracy-vs-dims table, over
+    * this corpus): for each prefix width, Recall@K and MRR of the
+    * prefix-cosine top-k against the full-dim exact
+    * [[recallGroundTruth]], over the same [[querySample]] batch the
+    * other retrieval evals use. The knee of this curve IS the serving
     * decision: everything right of it is paying full-dim scan cost
     * for recall the prefix already had.
     *

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
   * interactions). Every driver-side reuse goes through here: resolved
   * and warmed table handles ([[graft.Tables]]), opened index artifacts
   * and their tombstone probes ([[IndexStore]]), collected probe
-  * metadata (IVF centroids, RP-tree planes, PQ codebooks, the TF-IDF
+  * metadata (IVF centroids, PQ codebooks, the TF-IDF
   * query-side idf table), persisted
   * dedup intermediates, decoded joblib models, induced vocabularies
   * and the query-path scratch frames of [[ScratchCache]]. Entries are

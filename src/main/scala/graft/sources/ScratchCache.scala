@@ -24,10 +24,11 @@ import org.apache.spark.sql.DataFrame
   * their shared edge frame — at a cap of 8 the edge frame (whose
   * recency never refreshes: it is USED by every round's plan but
   * materialize() is only CALLED on it once) was evicted mid-loop and
-  * the edge build re-ran for the remaining rounds; at 24, the
-  * 13-index-family eval harness (whose families insert ~2-8 scratch
-  * frames each) thrashed the earlier families out before their timed
-  * loops ran. Storage is MEMORY_AND_DISK, so lineage stays
+  * the edge build re-ran for the remaining rounds. A cap of 24 was
+  * measured to thrash the index-family eval harness when it still ran
+  * the single-query graph walks (each cached a per-graph adjacency
+  * frame); 64 has not been re-measured against the nine families
+  * left. Storage is MEMORY_AND_DISK, so lineage stays
   * RECOMPUTABLE — a lost block is recomputed from source, not a query
   * failure, and an evicted frame still referenced by an un-executed
   * caller plan simply recomputes.

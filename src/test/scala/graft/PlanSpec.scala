@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Analytics, Curation, Ivf, Quantized, TopK, VectorSearch}
 
@@ -21,6 +22,34 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> scala.util.Try(fn(spark, TestSpark.sf).queryExecution.optimizedPlan)
     }
+
+  /** The window's input with cardinality-preserving projections
+    * stripped (column pruning may sit a Project between a window and
+    * the limit it ranks).
+    */
+  private def windowChild(w: org.apache.spark.sql.catalyst.plans.logical.Window)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    var c = w.child
+    while (c.isInstanceOf[Project]) c = c.asInstanceOf[Project].child
+    c
+  }
+
+  /** Every unpartitioned window in `p` whose frame is not structurally
+    * bounded, i.e. whose child is not a GlobalLimit with a literal
+    * limit (such a frame holds at most that many rows whatever the
+    * corpus size).
+    */
+  private def unboundedGlobalWindows(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.Window] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window}
+    p.collect {
+      case w: Window if w.partitionSpec.isEmpty && (windowChild(w) match {
+        case GlobalLimit(IntegerLiteral(_), _) => false
+        case _ => true
+      }) => w
+    }
+  }
 
   test("global top-k plans as TakeOrderedAndProject (no full sort)") {
     val p = plan(VectorSearch.topK(spark, TestSpark.sf, 0, 10))
@@ -251,15 +280,17 @@ class PlanSpec extends AnyFunSuite {
     // plans as TakeOrderedAndProject (per-partition heaps, no
     // exchange), and the rk window runs over that k-row
     // SinglePartition result — zero Exchange nodes end to end, so a
-    // probe call never pays AQE stage coordination. The window must
-    // still be PARTITIONED (FoldablePropagation must not erase the
-    // constKey spec — a partition-less global window is the shape the
-    // PlanSpec global sweep gates).
+    // probe call never pays AQE stage coordination. The window is
+    // unpartitioned, and its child must be the k-row limit: the
+    // bounded frame the global window lint accepts.
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window}
     val df = Ivf.ivfTopK(spark, TestSpark.sf, queryId = 0, nCells = 16, nprobe = 4, k = 10)
-    val bad = df.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window if w.partitionSpec.isEmpty => w
-    }
-    assert(bad.isEmpty, s"partition-less window found:\n${bad.mkString("\n")}")
+    val windows = df.queryExecution.optimizedPlan.collect { case w: Window => w }
+    assert(windows.nonEmpty && windows.forall(w => windowChild(w) match {
+      case GlobalLimit(IntegerLiteral(10), _) => true
+      case _ => false
+    }), s"rank window must sit on the 10-row limit:\n${windows.mkString("\n")}")
+    assert(unboundedGlobalWindows(df.queryExecution.optimizedPlan).isEmpty)
     val p = plan(df)
     val winIdx = p.indexOf("Window")
     val takeIdx = p.indexOf("TakeOrderedAndProject")
@@ -721,13 +752,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange"), "query row must broadcast")
   }
 
-  test("matryoshka cascade broadcasts both stages and take-orders both cuts") {
-    val p = plan(VectorSearch.matryoshkaTopK(spark, TestSpark.sf, 0))
-    assert(p.linesIterator.count(_.contains("TakeOrderedAndProject")) >= 2,
-      s"both cuts must be bounded heaps:\n${p.take(800)}")
-    assert(!p.contains("SortMergeJoin"), "no corpus-shuffling join in the cascade")
-  }
-
   test("item PMI ranks per item with WindowGroupLimit, not a global sort") {
     val p = plan(Analytics.itemPmi(spark, TestSpark.sf))
     assert(p.contains("WindowGroupLimit"), p.take(800))
@@ -803,12 +827,12 @@ class PlanSpec extends AnyFunSuite {
   test("no query plans an unpartitioned window outside the documented bounded-frame folds") {
     // An unpartitioned window funnels its whole input into ONE task,
     // so it is allowed only where the windowed frame is provably
-    // bounded — a histogram or rollup whose row count is independent
-    // of corpus size (degree histograms, |weeks|/|days|/|types|
-    // calendars). A rank over a top-K cut goes through TopK.ranked,
-    // whose window is partitioned, so it needs no entry. Every
-    // allowlisted query names its bounded frame; adding a query here
-    // requires the same argument.
+    // bounded. Structurally: its child is a literal-limit GlobalLimit
+    // (a rank over a top-K cut, TopK.ranked), which needs no entry.
+    // Otherwise by name: a histogram or rollup whose row count is
+    // independent of corpus size (degree histograms, |weeks|/|days|/
+    // |types| calendars). Every allowlisted query names its bounded
+    // frame; adding a query here requires the same argument.
     val boundedFrameFolds = Set(
       "engagement_gini",      // (event-count, multiplicity) histogram
       "ui_matrix_stats",      // (item-degree, multiplicity) histogram
@@ -820,10 +844,7 @@ class PlanSpec extends AnyFunSuite {
     // is listed (and fails the test) instead of hiding the queries
     // after it
     val linted = optimizedPlans.map { case (name, p) =>
-      name -> p.map(_.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }.nonEmpty)
+      name -> p.map(unboundedGlobalWindows(_).nonEmpty)
     }
     val unplanned = linted.collect { case (name, scala.util.Failure(e)) =>
       s"$name (${String.valueOf(e).takeWhile(_ != '\n')})" }
@@ -832,6 +853,20 @@ class PlanSpec extends AnyFunSuite {
     assert(undocumented.isEmpty && unplanned.isEmpty,
       s"unpartitioned windows outside the bounded-frame allowlist: ${undocumented.mkString(", ")}" +
         s"; queries that could not be planned: ${unplanned.mkString("; ")}")
+  }
+
+  test("the window lint rejects an unpartitioned window over an unbounded frame") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val e = graft.Tables.embeddings(spark, TestSpark.sf).select(col("vec_id"))
+    val global = e.withColumn("rk", row_number().over(Window.orderBy(col("vec_id"))))
+    assert(unboundedGlobalWindows(global.queryExecution.optimizedPlan).nonEmpty,
+      "a corpus-wide unpartitioned window must fail the lint")
+    // the same window over a literal-k cut passes
+    val ranked = TopK.ranked(e.withColumn("score", col("vec_id") * 0.5), 10, "rk",
+      TopK.byScore("vec_id"): _*)
+    assert(unboundedGlobalWindows(ranked.queryExecution.optimizedPlan).isEmpty,
+      "TopK.ranked's window sits on its literal-k limit")
   }
 
   test("text kernels split once per row and hash once per exploded row") {

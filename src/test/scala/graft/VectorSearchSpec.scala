@@ -432,8 +432,7 @@ class VectorSearchSpec extends AnyFunSuite {
     val byF = Ivf.familyEval(spark, TestSpark.sf, queryMod = 100, k = 10).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     assert(byF.keySet == Set("flat", "ivf_nprobe4", "lsh_multiprobe", "sq8", "pq_adc",
-      "ivfpq_nprobe4", "ivfpq_rerank_c50", "ivfpq_res_nprobe4",
-      "binary_c50", "matryoshka16_c50", "graph_beam", "hnsw", "rptree_t4d3"))
+      "ivfpq_nprobe4", "ivfpq_rerank_c50", "ivfpq_res_nprobe4", "binary_c50"))
     assert(byF("flat") == ((1.0, 1.0)), "exact search must match its own ground truth")
     byF.values.foreach { case (p, mrr) =>
       assert(p >= 0.0 && p <= 1.0 && mrr >= 0.0 && mrr <= 1.0)
@@ -451,19 +450,13 @@ class VectorSearchSpec extends AnyFunSuite {
       memberQueries = false).collect()
     val byF = rows.map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     assert(byF.keySet == Set("flat", "ivf_nprobe4", "lsh_multiprobe", "sq8", "pq_adc",
-      "ivfpq_nprobe4", "ivfpq_rerank_c50", "ivfpq_res_nprobe4",
-      "binary_c50", "matryoshka16_c50", "graph_beam", "hnsw", "rptree_t4d3"))
+      "ivfpq_nprobe4", "ivfpq_rerank_c50", "ivfpq_res_nprobe4", "binary_c50"))
     // ground truth IS the exact flat scan of each held-out vector
     // against the carve-out, so flat must anchor at 1.0/1.0
     assert(byF("flat") == ((1.0, 1.0)), s"flat anchor: ${byF("flat")}")
     byF.values.foreach { case (p, mrr) =>
       assert(p >= 0.0 && p <= 1.0 && mrr >= 0.0 && mrr <= 1.0)
     }
-    // the graph walk must find SOMETHING for held-out queries — the
-    // r14 sf50 point measured 0.0 here before the bridge construction
-    assert(byF("graph_beam")._1 > 0.0,
-      s"non-member graph recall collapsed: ${byF("graph_beam")}")
-    assert(byF("hnsw")._1 > 0.0, s"non-member hnsw recall collapsed: ${byF("hnsw")}")
   }
 
   test("caller-vector entry points: every family finds a planted corpus vector without self machinery") {
@@ -472,28 +465,26 @@ class VectorSearchSpec extends AnyFunSuite {
     // score 1.0 for the exact-rescoring families, top-k membership for
     // the quantized rankings (their scores quantize but the planted
     // row's quantization error is 0-ish). Determinism: two runs agree.
-    import graft.operators.{GraphAnn, Quantized, RpTree}
+    import graft.operators.Quantized
     val planted = 7L
+    val corpus = Tables.embeddings(spark, TestSpark.sf).select(col("vec_id")).collect()
+      .map(_.getLong(0)).toSet
     val qv = Tables.embeddings(spark, TestSpark.sf)
       .where(col("vec_id") === planted)
       .select(col("embedding")).head.getSeq[Float](0).toArray
     def idsOf(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.collect().map(_.getLong(0)).toSeq
-    val runs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("flat", () => VectorSearch.topKVec(spark, TestSpark.sf, qv, 10)),
-      ("ivf", () => Ivf.ivfTopKVec(spark, TestSpark.sf, qv, 16, 4, 10)),
-      ("lsh", () => graft.operators.Lsh.lshTopKVec(spark, TestSpark.sf, qv, 8, 10)),
-      ("sq8", () => Quantized.sq8TopKVec(spark, TestSpark.sf, qv, 10)),
-      ("pq", () => Quantized.pqTopKVec(spark, TestSpark.sf, qv, 10)),
-      ("ivfpq", () => Quantized.ivfPqTopKVec(spark, TestSpark.sf, qv, 16, 4, 10)),
-      ("ivfpq_rerank", () => Quantized.ivfPqRerankTopKVec(spark, TestSpark.sf, qv, 16, 4, 50, 10)),
-      ("ivfpq_res", () => Quantized.ivfPqResidualTopKVec(spark, TestSpark.sf, qv, 16, 4, 10)),
-      ("binary", () => Quantized.binaryTopKVec(spark, TestSpark.sf, qv)),
-      ("matryoshka", () => VectorSearch.matryoshkaTopKVec(spark, TestSpark.sf, qv)),
-      ("graph", () => GraphAnn.graphTopKVec(spark, TestSpark.sf, qv)),
-      ("hnsw", () => GraphAnn.hnswTopKVec(spark, TestSpark.sf, qv)),
-      ("rptree", () => RpTree.rpTreeTopKVec(spark, TestSpark.sf, qv)))
-    runs.foreach { case (name, run) =>
+    def runs(k: Int): Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("flat", () => VectorSearch.topKVec(spark, TestSpark.sf, qv, k)),
+      ("ivf", () => Ivf.ivfTopKVec(spark, TestSpark.sf, qv, 16, 4, k)),
+      ("lsh", () => graft.operators.Lsh.lshTopKVec(spark, TestSpark.sf, qv, 8, k)),
+      ("sq8", () => Quantized.sq8TopKVec(spark, TestSpark.sf, qv, k)),
+      ("pq", () => Quantized.pqTopKVec(spark, TestSpark.sf, qv, k)),
+      ("ivfpq", () => Quantized.ivfPqTopKVec(spark, TestSpark.sf, qv, 16, 4, k)),
+      ("ivfpq_rerank", () => Quantized.ivfPqRerankTopKVec(spark, TestSpark.sf, qv, 16, 4, 50, k)),
+      ("ivfpq_res", () => Quantized.ivfPqResidualTopKVec(spark, TestSpark.sf, qv, 16, 4, k)),
+      ("binary", () => Quantized.binaryTopKVec(spark, TestSpark.sf, qv, k = k)))
+    runs(10).foreach { case (name, run) =>
       val a = run().collect()
       assert(a.nonEmpty, s"$name returned nothing")
       assert(a.map(_.toSeq).toSeq == run().collect().map(_.toSeq).toSeq,
@@ -502,16 +493,31 @@ class VectorSearchSpec extends AnyFunSuite {
         s"$name missed the planted vector: ${idsOf(run())}")
     }
     // exact-rescoring families: the planted row is rank 1, score 1.0
-    Seq("flat", "ivf", "lsh", "ivfpq_rerank", "binary", "matryoshka",
-      "graph", "hnsw", "rptree").foreach { name =>
-      val top = runs.toMap.apply(name)().collect().head
+    Seq("flat", "ivf", "lsh", "ivfpq_rerank", "binary").foreach { name =>
+      val top = runs(10).toMap.apply(name)().collect().head
       val (id, score) = name match {
-        // (vec_id, bucket|hamming|pre_score|cell, score) shapes
-        case "lsh" | "binary" | "matryoshka" | "ivf" =>
-          (top.getLong(0), top.getDouble(2))
+        // (vec_id, bucket|hamming|cell, score) shapes
+        case "lsh" | "binary" | "ivf" => (top.getLong(0), top.getDouble(2))
         case _ => (top.getLong(0), top.getDouble(1))
       }
       assert(id == planted && score == 1.0, s"$name top hit: $top")
+    }
+    // k >= n: every family returns at most k distinct corpus ids and
+    // neither throws nor pads; a rank column stays dense 1..rows. The
+    // exhaustive families (flat, sq8, pq) return the whole corpus.
+    val bigK = corpus.size + 5
+    runs(bigK).foreach { case (name, run) =>
+      val df = run()
+      val rows = df.collect()
+      val ids = rows.map(_.getLong(0)).toSeq
+      assert(ids.distinct.length == ids.length, s"$name k>=n: duplicate ids")
+      assert(ids.forall(corpus), s"$name k>=n: ids outside the corpus")
+      assert(rows.length <= bigK, s"$name k>=n: ${rows.length} rows > k")
+      if (df.columns.contains("rk"))
+        assert(rows.map(_.getAs[Long]("rk")).sorted.toSeq == (1L to rows.length.toLong),
+          s"$name k>=n: ranks not dense")
+      if (Set("flat", "sq8", "pq")(name))
+        assert(rows.length == corpus.size, s"$name k>=n: ${rows.length} of ${corpus.size} rows")
     }
   }
 
@@ -839,33 +845,6 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
-  test("matryoshka cascade replays from a driver-side prefix shortlist and rerank") {
-    def cos5(a: Array[Float], b: Array[Float]): Double = {
-      val d = a.zip(b).map(p => p._1.toDouble * p._2.toDouble).sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      BigDecimal(d / (na * nb)).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    val vecs = Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val qp = vecs(0L).take(16); val qv = vecs(0L)
-    val short = vecs.toSeq.filter(_._1 != 0L)
-      .map { case (id, v) => (id, cos5(v.take(16), qp)) }
-      .sortBy { case (id, s) => (-s, id) }.take(50)
-    val want = short.map { case (id, ps) => (id, ps, cos5(vecs(id), qv)) }
-      .sortBy { case (id, _, s) => (-s, id) }.take(10)
-    val got = VectorSearch.matryoshkaTopK(spark, TestSpark.sf, queryId = 0)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-    assert(got == want)
-    // final ranking is by the FULL-dim score (the rerank actually
-    // reorders the prefix shortlist), descending
-    val scores = got.map(_._3)
-    assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
-    // NOTE: no recall-vs-exact assertion here — the synthetic corpus
-    // is not Matryoshka-trained, so the prefix is not front-loaded;
-    // on MRL embeddings the 16-dim stage is the documented scale path
-  }
-
   test("knn ndcg matches a driver recount and sits in [0,1]") {
     def cos5(a: Array[Float], b: Array[Float]): Double = {
       val d = a.zip(b).map(p => p._1.toDouble * p._2.toDouble).sum
@@ -907,33 +886,39 @@ class VectorSearchSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.index.root", tmpRoot)
     try {
       // append exact twins of two corpus vectors under fresh ids: the
-      // twin of vector 3 is the best possible answer (cos = 1) for
-      // query 3 — it can only be found if the backlinks actually wire
-      // the new node into the walkable graph
+      // twin of vector 0 is the best possible answer (cos = 1) for
+      // query 0 — it can only be found if the backlinks actually wire
+      // the new node into the walkable graph (old lists are never
+      // re-trimmed, so no forward edge of an old node points at it)
       val twins = Tables.embeddings(spark, TestSpark.sf)
-        .where(col("vec_id").isin(3L, 4L))
+        .where(col("vec_id").isin(0L, 4L))
         .select((col("vec_id") + 9000L).as("vec_id"), col("label"), col("embedding"))
       GraphAnn.appendToGraph(spark, TestSpark.sf, 8, twins)
       // searchable set contains the appended ids exactly once
       val ids = GraphAnn.vectors(spark, TestSpark.sf, 8)
         .where(col("vec_id") >= 9000L).select("vec_id").collect().map(_.getLong(0))
-      assert(ids.sorted.toSeq == Seq(9003L, 9004L))
-      val res = GraphAnn.graphTopK(spark, TestSpark.sf, queryId = 3).collect()
-      assert(res.head.getLong(0) == 9003L && res.head.getDouble(1) == 1.0,
+      assert(ids.sorted.toSeq == Seq(9000L, 9004L))
+      // each new vector has its own top-8 forward list (rk 1..8) and
+      // every one of those edges is committed reversed as a backlink
+      val edges = GraphAnn.ensureGraph(spark, TestSpark.sf, 8)
+        .select("src", "dst", "rk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      Seq(9000L, 9004L).foreach { nv =>
+        val fwd = edges.filter(e => e._1 == nv && e._3 >= 1L)
+        assert(fwd.map(_._3).sorted.toSeq == (1L to 8L), s"list of $nv: ${fwd.toSeq}")
+        fwd.foreach(e => assert(edges.exists(b => b._1 == e._2 && b._2 == nv && b._3 == 0L),
+          s"missing backlink ${e._2} -> $nv"))
+      }
+      def topOf(q: Long) = GraphAnn.graphKnnJoin(spark, TestSpark.sf, queryMod = 100, k = 10)
+        .where(col("q_id") === q).orderBy("rk").collect()
+      val res = topOf(0L)
+      assert(res.head.getLong(1) == 9000L && res.head.getDouble(2) == 1.0,
         s"appended twin must be the top hit: ${res.map(_.toSeq).mkString(";")}")
       // appending the same batch again must not duplicate results
       GraphAnn.appendToGraph(spark, TestSpark.sf, 8, twins)
-      val res2 = GraphAnn.graphTopK(spark, TestSpark.sf, queryId = 3).collect()
-      assert(res2.map(_.getLong(0)).distinct.length == res2.length)
-      assert(res2.head.getLong(0) == 9003L)
-      // hierarchical search shares the maintenance story: the STALE
-      // level-1 layer only picks the base entry (rebuild cadence is
-      // policy), while the base layer's backlinks must still make the
-      // appended twin reachable through the 2-level walk
-      val resH = GraphAnn.hnswTopK(spark, TestSpark.sf, queryId = 3).collect()
-      assert(resH.head.getLong(0) == 9003L && resH.head.getDouble(1) == 1.0,
-        s"hnsw must reach the appended twin: ${resH.map(_.toSeq).mkString(";")}")
-      assert(resH.map(_.getLong(0)).distinct.length == resH.length)
+      val res2 = topOf(0L)
+      assert(res2.map(_.getLong(1)).distinct.length == res2.length)
+      assert(res2.head.getLong(1) == 9000L)
     } finally spark.conf.unset("spark.graft.index.root")
   }
 
@@ -1081,22 +1066,25 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(depth <= GraphAnn.BridgeRounds + 1,
       s"hub eccentricity $depth exceeds the BridgeRounds + 1 guarantee")
     // search: deterministic, ranked, query-free, scores recomputable
-    val a = GraphAnn.graphTopK(spark, TestSpark.sf, queryId = 0).collect()
-    val b = GraphAnn.graphTopK(spark, TestSpark.sf, queryId = 0).collect()
-    assert(a.toSeq == b.toSeq)
-    assert(a.length == 10 && a.map(_.getLong(2)).toSeq == (1L to 10L))
-    a.foreach { r =>
-      assert(r.getLong(0) != 0L, "query must not answer itself")
-      assert(r.getDouble(1) == cos5(vecs(r.getLong(0)), vecs(0L)), r.toString)
+    def walk() = GraphAnn.graphKnnJoin(spark, TestSpark.sf, queryMod = 100, k = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
+    val all2 = walk()
+    assert(all2 == walk())
+    all2.groupBy(_._1).foreach { case (q, rs) =>
+      assert(rs.length == 10 && rs.map(_._4).sorted == (1L to 10L), s"query $q ranks")
+      rs.foreach { r =>
+        assert(r._2 != q, "query must not answer itself")
+        assert(r._3 == cos5(vecs(r._2), vecs(q)), r.toString)
+      }
     }
     // beam ef-search must find most of the exact top-10 on the test
     // corpus (measured 8/10 at sf0.001; floor leaves jitter margin —
     // the walk itself is deterministic, the floor guards refactors)
+    val a = all2.filter(_._1 == 0L).map(_._2)
     val exact = vecs.toSeq.filter(_._1 != 0L)
       .map { case (id, v) => (id, cos5(v, vecs(0L))) }
       .sortBy { case (id, s) => (-s, id) }.take(10).map(_._1).toSet
-    assert(a.map(_.getLong(0)).count(exact) >= 6,
-      s"recall collapsed: ${a.map(_.getLong(0)).toSeq} vs $exact")
+    assert(a.count(exact) >= 6, s"recall collapsed: $a vs $exact")
   }
 
   test("label-noise suspects: plurality disagrees, counts reconcile, ranked cut") {
@@ -1248,57 +1236,49 @@ class VectorSearchSpec extends AnyFunSuite {
   }
 
   test("batch graph kNN join is row-identical to the single-query walk per query") {
-    // the set-at-a-time walk must reproduce graphTopK exactly: same
-    // entry rule, same per-hop beam, same rerank — for EVERY sampled
-    // query, not just vec 0
+    // the set-at-a-time walk must reproduce a driver-side walk exactly
+    // for EVERY sampled query: one beam seeded {fixed entry, self}
+    // (the fixed entry is the lowest id, or the second-lowest for the
+    // query that IS the lowest), 6 hops of "next frontier = top-4 of
+    // frontier ∪ neighbors by (score DESC, id)", then the visited set
+    // minus the query, reranked by (score DESC, id)
+    import graft.functions.VectorFunctions.{cosineLocal, dotLocal, r5}
     import graft.operators.GraphAnn
     val dir = TestSpark.sf
-    val batch = GraphAnn.graphKnnJoin(spark, dir, queryMod = 100, k = 10).collect()
+    val (hops, beam, k) = (6, 4, 10)
+    val vecs = Tables.embeddings(spark, dir).select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val adj = GraphAnn.ensureGraph(spark, dir, 8).select("src", "dst").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
+      .map { case (src, es) => src -> es.map(_._2).toSeq }
+    def cos5(a: Array[Float], b: Array[Float]): Double = {
+      val (ad, bd) = (a.map(_.toDouble), b.map(_.toDouble))
+      r5(cosineLocal(dotLocal(ad, bd), math.sqrt(dotLocal(ad, ad)), math.sqrt(dotLocal(bd, bd))))
+    }
+    val sorted = vecs.keys.toSeq.sorted
+    def driverWalk(q: Long): Seq[(Long, Double)] = {
+      val score = (v: Long) => cos5(vecs(v), vecs(q))
+      val byScore = Ordering.by[Long, (Double, Long)](v => (-score(v), v))
+      val entry = if (q == sorted.head) sorted(1) else sorted.head
+      var frontier = Seq(entry, q).distinct
+      val visited = scala.collection.mutable.Set(frontier: _*)
+      for (_ <- 0 until hops) {
+        val u = (frontier ++ frontier.flatMap(adj.getOrElse(_, Nil))).distinct
+        visited ++= u
+        frontier = u.sorted(byScore).take(beam)
+      }
+      visited.toSeq.filter(_ != q).sorted(byScore).take(k).map(v => v -> score(v))
+    }
+    val batch = GraphAnn.graphKnnJoin(spark, dir, queryMod = 100, k = k, hops = hops,
+        beam = beam).collect()
       .groupBy(_.getLong(0))
       .map { case (q, rs) =>
         q -> rs.sortBy(_.getLong(3)).map(r => (r.getLong(1), r.getDouble(2))).toSeq }
-    assert(batch.keySet == Tables.embeddings(spark, dir)
-      .where(col("vec_id") % 100 === 0).collect().map(_.getLong(0)).toSet)
+    assert(batch.keySet == vecs.keySet.filter(_ % 100 == 0))
     batch.keys.toSeq.sorted.foreach { q =>
-      val single = GraphAnn.graphTopK(spark, dir, queryId = q, g = 8, hops = 6,
-          beam = 4, k = 10).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(batch(q) == single, s"query $q: batch=${batch(q)} single=$single")
+      val single = driverWalk(q)
+      assert(batch(q) == single, s"query $q: batch=${batch(q)} driver=$single")
     }
-  }
-
-  test("graph ground truth equals exact ground truth at oracle scale (the sf50 GT swap)") {
-    // the opt-in spark.graft.recall.gt=graph source must be a faithful
-    // stand-in for brute force where brute force IS payable — pair
-    // identity here is what licenses the swap at 1 M vectors, where
-    // queries × corpus is not
-    val exact = VectorSearch.knnJoin(spark, TestSpark.sf, queryMod = 100, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    // the seam routes by config, walks at GT-grade params, and
-    // rejects unknown sources
-    try {
-      spark.conf.set("spark.graft.recall.gt", "graph")
-      val viaSeam = VectorSearch.recallGroundTruth(spark, TestSpark.sf, 100, 10)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-      assert(viaSeam == exact,
-        "graph-GT must reproduce exact-GT (id, rank) pairs at oracle scale")
-      spark.conf.set("spark.graft.recall.gt", "bogus")
-      intercept[IllegalArgumentException] {
-        VectorSearch.recallGroundTruth(spark, TestSpark.sf, 100, 10)
-      }
-    } finally spark.conf.unset("spark.graft.recall.gt")
-  }
-
-  test("recall sweep under graph ground truth reproduces the exact-GT curve at oracle scale") {
-    val exactCurve = Ivf.recallEval(spark, TestSpark.sf, nCells = 8, queryMod = 100,
-      k = 10, nprobes = Seq(1, 2)).collect().map(_.toSeq).toSeq
-    val graphCurve = try {
-      spark.conf.set("spark.graft.recall.gt", "graph")
-      Ivf.recallEval(spark, TestSpark.sf, nCells = 8, queryMod = 100,
-        k = 10, nprobes = Seq(1, 2)).collect().map(_.toSeq).toSeq
-    } finally spark.conf.unset("spark.graft.recall.gt")
-    assert(graphCurve == exactCurve,
-      "the GT swap must not move the sweep's metrics where both sources are payable")
   }
 
   test("nprobe planner picks the cheapest measured probe depth meeting the target") {
@@ -1316,39 +1296,6 @@ class VectorSearchSpec extends AnyFunSuite {
     curve.filter(_._1 < exp._1).foreach { c =>
       if (met.nonEmpty) assert(c._2 < 0.9, s"nprobe ${c._1} met the target but wasn't picked")
     }
-  }
-
-  test("rptree: partition-per-tree leaves, exact-rerank scores, deterministic rebuild") {
-    import graft.operators.RpTree
-    val dir = TestSpark.sf
-    val (leaves, planes) = RpTree.build(spark, dir, nTrees = 4, depth = 3)
-    val lv = leaves.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val n = Tables.embeddings(spark, dir).count()
-    // every vector lands in exactly one leaf per tree; leaf ids < 2^3
-    assert(lv.length == 4 * n)
-    assert(lv.forall { case (_, _, node) => node >= 0 && node < 8 })
-    assert(lv.groupBy(t => (t._1, t._2)).forall(_._2.length == 1))
-    // plane tables are bounded by the node fan-out per level
-    planes.zipWithIndex.foreach { case (pl, l) =>
-      assert(pl.count() <= 4L * (1L << l), s"level $l plane count")
-    }
-    // top-k is an EXACT rerank: each returned score equals the flat
-    // cosine for that id, and ranks are contiguous by (score, id)
-    val got = RpTree.rpTreeTopK(spark, dir, queryId = 0).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    assert(got.nonEmpty && got.length <= 10)
-    assert(got.map(_._3).toSeq == (1L to got.length).toSeq)
-    val flat = VectorSearch.topK(spark, dir, 0, n.toInt).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    got.foreach { case (id, s, _) => assert(flat(id) == s, s"score of $id") }
-    val ss = got.map(_._2)
-    assert(ss.zip(ss.tail).forall { case (a, b) => a >= b })
-    // hash-anchored build is deterministic: a rebuild reproduces the
-    // identical forest
-    graft.sources.ScratchCache.clear()
-    val (leaves2, _) = RpTree.build(spark, dir, nTrees = 4, depth = 3)
-    assert(leaves2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSet == lv.toSet)
   }
 
   test("familyEval rows reconcile with the individually-oracled family entry points") {
@@ -1389,17 +1336,7 @@ class VectorSearchSpec extends AnyFunSuite {
         ids(Quantized.ivfPqRerankTopK(spark, dir, q, 16, 4, 50, k))),
       "ivfpq_res_nprobe4" -> ((q: Long) =>
         ids(Quantized.ivfPqResidualTopK(spark, dir, q, 16, 4, k))),
-      "binary_c50" -> ((q: Long) => ids(Quantized.binaryTopK(spark, dir, q, 50, k))),
-      "matryoshka16_c50" -> ((q: Long) =>
-        ids(VectorSearch.matryoshkaTopK(spark, dir, q, 16, 50, k))),
-      // the r12 additions: same entry points the ann_graph_topk /
-      // ann_hnsw_topk hard oracles replay in SQL
-      "graph_beam" -> ((q: Long) =>
-        ids(graft.operators.GraphAnn.graphTopK(spark, dir, q, 8, 6, 4, k))),
-      "hnsw" -> ((q: Long) => ids(graft.operators.GraphAnn.hnswTopK(spark, dir, q, 8, k))),
-      // the Annoy-family row: same entry point ann_rptree_topk oracles
-      "rptree_t4d3" -> ((q: Long) =>
-        ids(graft.operators.RpTree.rpTreeTopK(spark, dir, q, 4, 3, k))))
+      "binary_c50" -> ((q: Long) => ids(Quantized.binaryTopK(spark, dir, q, 50, k))))
     assert(checks.map(_._1).toSet == fe.keySet, "family row set")
     checks.foreach { case (fam, run) =>
       val (p, rr) = recount(run)
@@ -1437,46 +1374,5 @@ class VectorSearchSpec extends AnyFunSuite {
     val occ = Ivf.buildIndex(spark, TestSpark.sf, 16)._1
       .groupBy(col("cell")).count().collect().map(_.getLong(1)).sorted.reverse
     assert(rows.head.getLong(5) == occ.take(4).sum)
-  }
-
-  test("hnsw: 2-level search is deterministic, ranked, and holds the flat walk's recall") {
-    import graft.operators.GraphAnn
-    def cos5(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        d += a(i).toDouble * b(i).toDouble
-        na += a(i).toDouble * a(i).toDouble
-        nb += b(i).toDouble * b(i).toDouble
-        i += 1
-      }
-      BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
-        .setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    val vecs = Tables.embeddings(spark, TestSpark.sf).select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val a = GraphAnn.hnswTopK(spark, TestSpark.sf, queryId = 0).collect()
-    val b = GraphAnn.hnswTopK(spark, TestSpark.sf, queryId = 0).collect()
-    assert(a.toSeq == b.toSeq, "hnsw search must be deterministic")
-    assert(a.length == 10 && a.map(_.getLong(2)).toSeq == (1L to 10L))
-    a.foreach { r =>
-      assert(r.getLong(0) != 0L, "query must not answer itself")
-      assert(r.getDouble(1) == cos5(vecs(r.getLong(0)), vecs(0L)), r.toString)
-    }
-    // hierarchy hands the base walk a BETTER-or-equal entry than the
-    // fixed lowest-id one, so recall must not collapse below the flat
-    // walk's floor on the same corpus
-    val exact = vecs.toSeq.filter(_._1 != 0L)
-      .map { case (id, v) => (id, cos5(v, vecs(0L))) }
-      .sortBy { case (id, s) => (-s, id) }.take(10).map(_._1).toSet
-    assert(a.map(_.getLong(0)).count(exact) >= 6,
-      s"recall collapsed: ${a.map(_.getLong(0)).toSeq} vs $exact")
-    // the level-1 promotion is the documented id hash: the promoted
-    // set the engine walks is reproducible from ids alone
-    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val promoted = vecs.keySet.filter(id =>
-      java.lang.Long.parseLong(md5hex(s"hnsw:$id").take(8), 16) % 4 == 0)
-    assert(promoted.nonEmpty && promoted.size < vecs.size,
-      "promotion must select a strict non-empty subset at test scale")
   }
 }
