@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.operators.ReferenceInterop.Root
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the operator
   * inventory each entry maps to.
@@ -34,9 +35,11 @@ object SparkEntry {
     // reference's OWN corpus (its .npy matrix and its FAISS flat
     // index, byte-identical payloads) — dir-independent on purpose
     "vs_topk_reference" -> ((s, _) => VectorSearch.topKOf(
-      graft.sources.NpySource.readNpy(s, "/root/reference/product_embeddings.npy"), 0, 10)),
+      graft.sources.NpySource.readNpy(s, ReferenceInterop.ProductsNpy), 0, 10,
+      ReferenceInterop.ProductsNpy)),
     "vs_topk_faiss" -> ((s, _) => VectorSearch.topKOf(
-      graft.sources.FaissSource.readFlat(s, "/root/reference/faiss_products_flat.index"), 0, 10)),
+      graft.sources.FaissSource.readFlat(s, ReferenceInterop.ProductsFlatIndex), 0, 10,
+      ReferenceInterop.ProductsFlatIndex)),
     // free text against the reference's REAL MiniLM space: the lexicon
     // induced from (reviews.csv, review_embeddings.npy) encodes the
     // typed query, product_embeddings.npy answers it — app.py's
@@ -54,10 +57,10 @@ object SparkEntry {
     "reference_product_rollup" -> ((s, _) => ReferenceInterop.productRollupAudit(s)),
     "reference_brand_facets" -> ((s, _) => ReferenceInterop.brandFacets(s)),
     "vs_topk_reference_text" -> ((s, _) => VectorSearch.topKVecOf(
-      graft.sources.NpySource.readNpy(s, "/root/reference/product_embeddings.npy"),
+      graft.sources.NpySource.readNpy(s, ReferenceInterop.ProductsNpy),
       graft.functions.CorpusLexicalEncoder.encodeWithVocab(
         graft.functions.CorpusLexicalQueryEncoder.referenceVocabulary(s,
-          "/root/reference/reviews.csv", "/root/reference/review_embeddings.npy"),
+          ReferenceInterop.ReviewsCsv, ReferenceInterop.ReviewsNpy),
         "kindle tablet battery"), 10)),
     // the reference's FITTED sklearn model served as-is: the typed
     // query transformed by the joblib vectorizer's own vocabulary+idf,
@@ -1272,7 +1275,7 @@ object SparkEntry {
     val qvals = queryTerms.map(t => s"('$t')").mkString(", ")
     s"""skp AS (SELECT row_number() OVER () - 1 AS doc_id, id, brand, example_text,
        |               avg_rating, n_reviews
-       |        FROM read_csv('/root/reference/products.csv', header=true)),
+       |        FROM read_csv('$Root/products.csv', header=true)),
        |sktk AS (SELECT doc_id, unnest(list_filter(regexp_extract_all(lower(example_text), '[a-z0-9_]+'),
        |                                           t -> length(t) >= 2)) AS term FROM skp),
        |sknn AS (SELECT count(*) AS n FROM skp),
@@ -1356,11 +1359,11 @@ object SparkEntry {
     // bytes IN SQL (IEEE 754 float32 from hex — an independent decode
     // path from the engine's ByteBuffer read), then the same top-k
     "vs_topk_reference" ->
-      refFlatTopKSql("/root/reference/product_embeddings.npy", 128),
+      refFlatTopKSql(ReferenceInterop.ProductsNpy, 128),
     // the FAISS IndexFlatIP artifact: same payload at offset 45
     // (fourcc + d + ntotal + 2 reserved + is_trained + metric + count)
     "vs_topk_faiss" ->
-      refFlatTopKSql("/root/reference/faiss_products_flat.index", 45),
+      refFlatTopKSql(ReferenceInterop.ProductsFlatIndex, 45),
     // the reference's IVF artifact replayed from its bytes: the
     // embedded quantizer's 39 centroids (offset 98), the list-size
     // directory (offset 60043) and the codes-then-ids inverted lists
@@ -1370,8 +1373,8 @@ object SparkEntry {
     // nlist=39, per-list stride = size * (1536 + 8))
     "ann_ivf_topk_reference" -> {
       val dec = f32FromU32.replace("\n", " ")
-      s"""WITH rawh AS MATERIALIZED (SELECT hex(content) AS H FROM read_blob('/root/reference/faiss_reviews_ivf.index')),
-         |qw AS (SELECT substring(hex(content), 2*128+1, 3072) AS hh FROM read_blob('/root/reference/review_embeddings.npy')),
+      s"""WITH rawh AS MATERIALIZED (SELECT hex(content) AS H FROM read_blob('$Root/faiss_reviews_ivf.index')),
+         |qw AS (SELECT substring(hex(content), 2*128+1, 3072) AS hh FROM read_blob('$Root/review_embeddings.npy')),
          |qu AS (SELECT r.p, ('0x' || hh[8*r.p+7:8*r.p+8] || hh[8*r.p+5:8*r.p+6] ||
          |       hh[8*r.p+3:8*r.p+4] || hh[8*r.p+1:8*r.p+2])::UBIGINT AS u
          |       FROM qw, range(0, 384) r(p)),
@@ -1405,20 +1408,20 @@ object SparkEntry {
     // ratings → NULL on both engines, ratings are exact dyadic halves
     // so the mean replays bit-for-bit
     "reference_product_rollup" ->
-      """WITH rev AS (SELECT id, "reviews.rating" AS rating
-        |             FROM read_csv('/root/reference/reviews.csv', header=true)),
+      s"""WITH rev AS (SELECT id, "reviews.rating" AS rating
+        |             FROM read_csv('$Root/reviews.csv', header=true)),
         |agg AS (SELECT id, count(*) AS n_reviews, round(avg(rating), 5) AS avg_rating
         |        FROM rev GROUP BY 1),
         |prod AS (SELECT id, n_reviews::BIGINT AS pub_n_reviews,
         |                round(avg_rating, 5) AS pub_avg_rating
-        |         FROM read_csv('/root/reference/products.csv', header=true))
+        |         FROM read_csv('$Root/products.csv', header=true))
         |SELECT a.id, a.n_reviews, a.avg_rating, p.pub_n_reviews, p.pub_avg_rating,
         |       a.n_reviews = p.pub_n_reviews AS n_reviews_match,
         |       a.avg_rating = p.pub_avg_rating AS avg_rating_match
         |FROM agg a JOIN prod p USING (id) ORDER BY id""".stripMargin,
     "reference_brand_facets" ->
-      """SELECT brand, count(*) AS n_products, sum(n_reviews)::BIGINT AS n_reviews
-        |FROM read_csv('/root/reference/products.csv', header=true)
+      s"""SELECT brand, count(*) AS n_products, sum(n_reviews)::BIGINT AS n_reviews
+        |FROM read_csv('$Root/products.csv', header=true)
         |GROUP BY 1 ORDER BY n_products DESC, brand""".stripMargin,
     // the whole reference free-text path replayed: file-order CSV row
     // ids, independent re-tokenization, per-term float32 centroids
@@ -1426,11 +1429,11 @@ object SparkEntry {
     // normalize, cosine over the byte-decoded product matrix
     "vs_topk_reference_text" ->
       s"""WITH rev AS (SELECT row_number() OVER () - 1 AS doc_id, combined_text AS text
-         |             FROM read_csv('/root/reference/reviews.csv', header=true)),
+         |             FROM read_csv('$Root/reviews.csv', header=true)),
          |toks AS (SELECT doc_id, unnest(list_filter(regexp_extract_all(lower(text), '[a-z0-9_]+'),
          |                                           t -> length(t) >= 2)) AS term FROM rev),
          |dt AS (SELECT DISTINCT doc_id, term FROM toks WHERE term IN ('kindle', 'tablet', 'battery')),
-         |${npyDecodeCtes("rfl", "/root/reference/review_embeddings.npy", 1578)},
+         |${npyDecodeCtes("rfl", ReferenceInterop.ReviewsNpy, 1578)},
          |dims AS (SELECT dt.term, f.p, CAST(avg(f.v) AS FLOAT) AS v
          |         FROM dt JOIN rfl f ON f.vec_id = dt.doc_id GROUP BY 1, 2),
          |m AS (SELECT a.p, (a.v::DOUBLE + b.v::DOUBLE + c.v::DOUBLE) / 3 AS mv
@@ -1439,7 +1442,7 @@ object SparkEntry {
          |nrm AS (SELECT list_sum(list_transform(list(mv ORDER BY p), x -> x * x)) AS n2 FROM m),
          |qvf AS (SELECT list(CAST(mv * (1 / sqrt(n2)) AS FLOAT) ORDER BY p) AS q FROM m, nrm),
          |qv AS (SELECT list_transform(q, x -> x::DOUBLE) AS q FROM qvf),
-         |${npyDecodeCtes("pfl", "/root/reference/product_embeddings.npy", 66)},
+         |${npyDecodeCtes("pfl", ReferenceInterop.ProductsNpy, 66)},
          |pemb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM pfl GROUP BY 1)
          |SELECT p.vec_id, round(list_dot_product(p.e, qv.q) /
          |       (sqrt(list_dot_product(p.e, p.e)) * sqrt(list_dot_product(qv.q, qv.q))), 5) AS score
@@ -1459,11 +1462,11 @@ object SparkEntry {
     // keyword leg, min-max normalized and α-blended
     "hybrid_topk_sklearn" ->
       s"""WITH rev AS (SELECT row_number() OVER () - 1 AS doc_id, combined_text AS text
-         |             FROM read_csv('/root/reference/reviews.csv', header=true)),
+         |             FROM read_csv('$Root/reviews.csv', header=true)),
          |rtk AS (SELECT doc_id, unnest(list_filter(regexp_extract_all(lower(text), '[a-z0-9_]+'),
          |                                          t -> length(t) >= 2)) AS term FROM rev),
          |dt AS (SELECT DISTINCT doc_id, term FROM rtk WHERE term IN ('kindle', 'tablet', 'battery')),
-         |${npyDecodeCtes("rfl", "/root/reference/review_embeddings.npy", 1578)},
+         |${npyDecodeCtes("rfl", ReferenceInterop.ReviewsNpy, 1578)},
          |dims AS (SELECT dt.term, f.p, CAST(avg(f.v) AS FLOAT) AS v
          |         FROM dt JOIN rfl f ON f.vec_id = dt.doc_id GROUP BY 1, 2),
          |m AS (SELECT a.p, (a.v::DOUBLE + b.v::DOUBLE + c.v::DOUBLE) / 3 AS mv
@@ -1472,7 +1475,7 @@ object SparkEntry {
          |mnrm AS (SELECT list_sum(list_transform(list(mv ORDER BY p), x -> x * x)) AS n2 FROM m),
          |qvf AS (SELECT list(CAST(mv * (1 / sqrt(n2)) AS FLOAT) ORDER BY p) AS q FROM m, mnrm),
          |qv AS (SELECT list_transform(q, x -> x::DOUBLE) AS q FROM qvf),
-         |${npyDecodeCtes("pfl", "/root/reference/product_embeddings.npy", 66)},
+         |${npyDecodeCtes("pfl", ReferenceInterop.ProductsNpy, 66)},
          |pemb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM pfl GROUP BY 1),
          |vsc AS (SELECT p.vec_id AS doc_id, list_dot_product(p.e, qv.q) AS vs FROM pemb p, qv),
          |${sklearnTfidfCtes(Seq("kindle", "tablet", "battery"))},
@@ -1492,11 +1495,11 @@ object SparkEntry {
     // runs BEFORE the min-max, exactly as app.py slices tf_full[cand]
     "hybrid_filtered_sklearn" ->
       s"""WITH rev AS (SELECT row_number() OVER () - 1 AS doc_id, combined_text AS text
-         |             FROM read_csv('/root/reference/reviews.csv', header=true)),
+         |             FROM read_csv('$Root/reviews.csv', header=true)),
          |rtk AS (SELECT doc_id, unnest(list_filter(regexp_extract_all(lower(text), '[a-z0-9_]+'),
          |                                          t -> length(t) >= 2)) AS term FROM rev),
          |dt AS (SELECT DISTINCT doc_id, term FROM rtk WHERE term IN ('kindle', 'tablet', 'battery')),
-         |${npyDecodeCtes("rfl", "/root/reference/review_embeddings.npy", 1578)},
+         |${npyDecodeCtes("rfl", ReferenceInterop.ReviewsNpy, 1578)},
          |dims AS (SELECT dt.term, f.p, CAST(avg(f.v) AS FLOAT) AS v
          |         FROM dt JOIN rfl f ON f.vec_id = dt.doc_id GROUP BY 1, 2),
          |m AS (SELECT a.p, (a.v::DOUBLE + b.v::DOUBLE + c.v::DOUBLE) / 3 AS mv
@@ -1505,7 +1508,7 @@ object SparkEntry {
          |mnrm AS (SELECT list_sum(list_transform(list(mv ORDER BY p), x -> x * x)) AS n2 FROM m),
          |qvf AS (SELECT list(CAST(mv * (1 / sqrt(n2)) AS FLOAT) ORDER BY p) AS q FROM m, mnrm),
          |qv AS (SELECT list_transform(q, x -> x::DOUBLE) AS q FROM qvf),
-         |${npyDecodeCtes("pfl", "/root/reference/product_embeddings.npy", 66)},
+         |${npyDecodeCtes("pfl", ReferenceInterop.ProductsNpy, 66)},
          |pemb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM pfl GROUP BY 1),
          |${sklearnTfidfCtes(Seq("kindle", "tablet", "battery"))},
          |cf AS (SELECT doc_id FROM skp
@@ -1529,8 +1532,8 @@ object SparkEntry {
     // file-order row becomes the query, raw dot, self excluded
     "vs_item_similar_reference" ->
       s"""WITH prod AS (SELECT row_number() OVER () - 1 AS doc_id, id, brand
-         |              FROM read_csv('/root/reference/products.csv', header=true)),
-         |${npyDecodeCtes("pfl", "/root/reference/product_embeddings.npy", 66)},
+         |              FROM read_csv('$Root/products.csv', header=true)),
+         |${npyDecodeCtes("pfl", ReferenceInterop.ProductsNpy, 66)},
          |pemb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM pfl GROUP BY 1),
          |qi AS (SELECT doc_id FROM prod WHERE id = 'AV1T09fyvKc47QAVgf2R'),
          |qv AS (SELECT e AS q FROM pemb, qi WHERE vec_id = qi.doc_id)
@@ -1543,8 +1546,8 @@ object SparkEntry {
     // CSV, vectors decode from bytes, V @ V.T as pairs
     "vs_compare_reference" ->
       s"""WITH prod AS (SELECT row_number() OVER () - 1 AS doc_id, id
-         |              FROM read_csv('/root/reference/products.csv', header=true)),
-         |${npyDecodeCtes("pfl", "/root/reference/product_embeddings.npy", 66)},
+         |              FROM read_csv('$Root/products.csv', header=true)),
+         |${npyDecodeCtes("pfl", ReferenceInterop.ProductsNpy, 66)},
          |pemb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM pfl GROUP BY 1),
          |sel AS (SELECT p.id, e.e FROM prod p JOIN pemb e ON e.vec_id = p.doc_id
          |        WHERE p.id IN ('AV000tWuGV-KLJ3ac2-b', 'AV00l7jV-jtxr-f30lnX',
@@ -1558,8 +1561,8 @@ object SparkEntry {
     // layout), vectors from the byte-identical npy rows
     "ann_demo_reference" -> {
       val dec = f32FromU32.replace("\n", " ")
-      s"""WITH rawh AS MATERIALIZED (SELECT hex(content) AS H FROM read_blob('/root/reference/faiss_reviews_ivf.index')),
-         |${npyDecodeCtes("rfl", "/root/reference/review_embeddings.npy", 1578)},
+      s"""WITH rawh AS MATERIALIZED (SELECT hex(content) AS H FROM read_blob('$Root/faiss_reviews_ivf.index')),
+         |${npyDecodeCtes("rfl", ReferenceInterop.ReviewsNpy, 1578)},
          |remb AS (SELECT vec_id, list(v ORDER BY p) AS e FROM rfl GROUP BY 1),
          |qv AS (SELECT e AS q FROM remb WHERE vec_id = 0),
          |cshh AS (SELECT v.i AS cell, substring(H, 2*(98 + 1536*v.i)+1, 3072) AS hh
@@ -1587,9 +1590,9 @@ object SparkEntry {
          |ORDER BY method, score DESC, vec_id""".stripMargin
     },
     "reference_ann_table" ->
-      """SELECT nprobe, "Precision@K" AS precision_at_k, MRR AS mrr,
+      s"""SELECT nprobe, "Precision@K" AS precision_at_k, MRR AS mrr,
         |       AvgQueryTime_ms AS avg_query_time_ms, QueriesUsed AS queries_used
-        |FROM read_csv('/root/reference/ann_tradeoff_table.csv', header=true)
+        |FROM read_csv('$Root/ann_tradeoff_table.csv', header=true)
         |ORDER BY nprobe""".stripMargin,
     "vs_topk_qvec" ->
       s"""WITH q AS (SELECT $qvSqlList::DOUBLE[] AS qv)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dense-vector column functions over `array<float>` embedding columns.
@@ -79,15 +79,26 @@ object VectorFunctions {
   def r5(x: Double): Double =
     BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  def memberNotFound(dir: String, id: Long): IllegalArgumentException =
-    new IllegalArgumentException(s"query vector $id not found in $dir/embeddings.parquet")
+  /** The one error of a by-id search whose id is not a row of
+    * `source` (the corpus file, or the reference matrix a frame reads).
+    */
+  def memberNotFound(source: String, id: Long): IllegalArgumentException =
+    new IllegalArgumentException(s"query vector $id not found in $source")
 
-  /** A corpus member's embedding by id — the query of every by-id
-    * search — or [[memberNotFound]].
+  /** A corpus member's embedding by id, or [[memberNotFound]]: the
+    * query of every by-id search, looked up once on the driver, which
+    * then scores through the by-vector path with the member excluded
+    * (`vec_id =!= param(id)`).
     */
   def memberVector(spark: SparkSession, dir: String, id: Long): Array[Float] =
-    graft.Tables.embeddings(spark, dir).where(col("vec_id") === id)
+    memberVector(graft.Tables.embeddings(spark, dir), id, s"$dir/embeddings.parquet")
+
+  /** [[memberVector]] over any (vec_id, embedding) frame, `source`
+    * naming it in the error.
+    */
+  def memberVector(frame: DataFrame, id: Long, source: String): Array[Float] =
+    frame.where(col("vec_id") === id)
       .select(col("embedding")).collect().headOption
-      .getOrElse(throw memberNotFound(dir, id))
+      .getOrElse(throw memberNotFound(source, id))
       .getSeq[Float](0).toArray
 }

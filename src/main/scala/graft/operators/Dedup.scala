@@ -938,7 +938,7 @@ object Dedup {
     * it collides in, every occurrence carrying the identical rounded
     * score. Consumers that fold the stream through a dedup-aware
     * bounded aggregator ([[GraphAnn.buildGraph]]'s per-node top-g via
-    * [[TopK.TopKDistinctAgg]]) skip the distinct's full-stream shuffle
+    * [[TopK.TopKAgg]]) skip the distinct's full-stream shuffle
     * — at the 1 M-vector scale point that pass shuffled ~10⁸ slim
     * pair rows twice (distinct + window) for lists that keep 8.
     */

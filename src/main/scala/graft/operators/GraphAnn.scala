@@ -61,7 +61,7 @@ object GraphAnn {
     *
     * Ranking shape (the r13 sf50 point's one heavy build, 727.9 s at
     * 1 M vectors): the raw scored collision stream folds through a
-    * dedup-aware bounded heap ([[TopK.TopKDistinctAgg]] — duplicate
+    * dedup-aware bounded heap ([[TopK.TopKAgg]] — duplicate
     * (src, dst) collisions carry identical rounded scores, so deduping
     * inside the buffer is exact) instead of the old
     * `.distinct()` + global ranking window. Map-side partials emit at
@@ -81,7 +81,7 @@ object GraphAnn {
       .select(col("src").as("q_id"), col("dst").as("n_id"), col("score"))
       .as[TopK.ScoredPair]
     sym.groupByKey(_.q_id)
-      .agg(new TopK.TopKDistinctAgg(g).toColumn.name("top"))
+      .agg(new TopK.TopKAgg(g).toColumn.name("top"))
       .flatMap { case (src, top) =>
         top.iterator.zipWithIndex.map { case ((s, dst), i) =>
           (src, dst, s, (i + 1).toLong) }

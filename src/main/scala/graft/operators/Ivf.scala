@@ -278,24 +278,12 @@ object Ivf {
     // fit as buildIndex (cells need rough shape, not a full-corpus fit)
     val (assigned, centroids) = fitAndAssign(spark,
       current.select(col("vec_id"), col("label"), col("embedding")), nCells)
+    // cells: ONE epoch replaces every other (the same visibility
+    // contract as append/compact — a racing reader sees the old cells
+    // or the new, never a mix); tombstoned rows were excluded from the
+    // rewrite, so the set retires with them
+    IndexStore.replaceEpochs(spark, s"$path/cells", path, "rebalance", "cell", assigned)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // cells: stage hidden, commit as ONE epoch, then drop the old
-    // epochs (the same visibility contract as append/compact — a
-    // racing reader sees the old cells or the new, never a mix)
-    val staging = IndexStore.stageEpochPath(s"$path/cells", "rebalance")
-    assigned.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    val cellsPath = fs.makeQualified(new Path(s"$path/cells"))
-    val newEpoch = s"epoch=${new Path(staging).getName.stripPrefix(".tmp-")}"
-    require(fs.rename(fs.makeQualified(new Path(staging)), new Path(cellsPath, newEpoch)),
-      s"rebalance commit failed under $path")
-    IndexStore.foldIngestHwm(spark, s"$path/cells")
-    fs.listStatus(cellsPath).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("epoch=") && nm != newEpoch) fs.delete(st.getPath, true)
-    }
-    // tombstoned rows were excluded from the rewrite — retire the set
-    IndexStore.clearTombstones(spark, path)
     // centroids last: stage + swap (a 1-file table; the delete+rename
     // window is why this is a maintenance-window op)
     val cTmp = s"$path/.tmp-centroids-${java.util.UUID.randomUUID.toString.take(8)}"
@@ -687,6 +675,7 @@ object Ivf {
                           nprobe: Int = 4): DataFrame = {
     import spark.implicits._
     require(labels.nonEmpty, "label filter must name at least one label")
+    val qv = memberVector(spark, dir, queryId)
     val (cells, _) = ensureIndex(spark, dir, nCells)
     val cnt = cells.agg(count(lit(1)).as("n"),
       count(when(col("label").isin(labels: _*), 1)).as("n_cand")).head
@@ -695,14 +684,13 @@ object Ivf {
     val prefilter = nCand * nprobe < k.toLong * nCells ||
       nCand <= (n * nprobe) / nCells
     if (prefilter)
-      TopK.ranked(VectorSearch.scoredById(Tables.embeddings(spark, dir), queryId,
-          _.where(col("label").isin(labels: _*)))
+      TopK.ranked(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), qv.map(_.toDouble),
+          col("label").isin(labels: _*) && VectorSearch.notSelf(queryId))
         .select(lit("prefilter").as("strategy"), col("vec_id").as("n_id"), col("score")),
         k, "rk", byScore("n_id"): _*)
         .orderBy(col("rk"))
     else
-      probe(spark, dir, memberVector(spark, dir, queryId), Some(queryId),
-        col("label").isin(labels: _*), nCells, nprobe, k)
+      probe(spark, dir, qv, Some(queryId), col("label").isin(labels: _*), nCells, nprobe, k)
         .select(lit("postfilter").as("strategy"), col("n_id"), col("score"), col("rk"))
         .orderBy(col("rk"))
   }

@@ -92,8 +92,10 @@ object Quantized {
     */
   def sq8TopK(spark: SparkSession, dir: String, queryId: Long, k: Int): DataFrame = {
     val (codes, stats) = ensureSq8Index(spark, dir)
+    // the member's stored CODE (never the float corpus) — a driver lookup
     val q = codes.where(col("vec_id") === queryId)
-      .select(col("codes").cast("array<double>"), col("csum")).head
+      .select(col("codes").cast("array<double>"), col("csum")).head(1).headOption
+      .getOrElse(throw memberNotFound(s"$dir/embeddings.parquet", queryId))
     sq8TopKCore(codes, stats, q.getSeq[Double](0).toArray, q.getDouble(1),
       Some(queryId), k)
   }
@@ -561,30 +563,29 @@ object Quantized {
     * contract VectorSearchSpec asserts).
     */
   def ivfPqRerankTopK(spark: SparkSession, dir: String, queryId: Long, nCells: Int,
-                      nprobe: Int, c: Int, k: Int, m: Int = 8, kCents: Int = 16): DataFrame = {
-    val shortlist = ivfPqTopK(spark, dir, queryId, nCells, nprobe, c, m, kCents)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    TopK.first(e.where(col("vec_id").isin(shortlist: _*))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score")),
-      k, TopK.byScore("vec_id"): _*)
-  }
+                      nprobe: Int, c: Int, k: Int, m: Int = 8, kCents: Int = 16): DataFrame =
+    ivfPqRerankTopKCore(spark, dir, memberVector(spark, dir, queryId).map(_.toDouble),
+      Some(queryId), nCells, nprobe, c, k, m, kCents)
 
   /** [[ivfPqRerankTopK]] for a CALLER-SUPPLIED query vector
-    * (non-member serving): the ADC shortlist comes from
-    * [[ivfPqTopKVec]] and the exact rescore scores the literal vector
-    * — no corpus lookup, no self-exclusion.
+    * (non-member serving): the same shortlist and exact rescore, no
+    * corpus lookup, no self-exclusion.
     */
   def ivfPqRerankTopKVec(spark: SparkSession, dir: String, qv: Array[Float],
                          nCells: Int, nprobe: Int, c: Int, k: Int,
-                         m: Int = 8, kCents: Int = 16): DataFrame = {
-    val shortlist = ivfPqTopKVec(spark, dir, qv, nCells, nprobe, c, m, kCents)
+                         m: Int = 8, kCents: Int = 16): DataFrame =
+    ivfPqRerankTopKCore(spark, dir, qv.map(_.toDouble), None, nCells, nprobe, c, k, m, kCents)
+
+  /** The `c`-row ADC shortlist ([[ivfPqTopKCore]], `exclude` applied
+    * there), collected as literal ids, rescored by the exact by-vector
+    * scorer.
+    */
+  private def ivfPqRerankTopKCore(spark: SparkSession, dir: String, qv: Array[Double],
+                                  exclude: Option[Long], nCells: Int, nprobe: Int,
+                                  c: Int, k: Int, m: Int, kCents: Int): DataFrame = {
+    val shortlist = ivfPqTopKCore(spark, dir, qv, exclude, nCells, nprobe, c, m, kCents)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-    TopK.first(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), qv.map(_.toDouble),
+    TopK.first(VectorSearch.scoredByVec(Tables.embeddings(spark, dir), qv,
       col("vec_id").isin(shortlist: _*)), k, TopK.byScore("vec_id"): _*)
   }
 
@@ -608,19 +609,16 @@ object Quantized {
                        cs: Seq[Int] = Seq(10, 25, 50, 100)): DataFrame = {
     import spark.implicits._
     val cMax = cs.max
-    // ranked prefix source: ivfPqTopK at the deepest depth
-    val short = ivfPqTopK(spark, dir, queryId, nCells, nprobe, cMax)
+    val qv = memberVector(spark, dir, queryId)
+    val e = Tables.embeddings(spark, dir)
+    // ranked prefix source: the ivfPqTopK shortlist at the deepest depth
+    val short = ivfPqTopKCore(spark, dir, qv.map(_.toDouble), Some(queryId), nCells, nprobe,
+        cMax, m = 8, kCents = 16)
       .select(col("vec_id")).collect().map(_.getLong(0))
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
     // one exact-scoring pass over the deepest shortlist (≤ cMax rows)
-    val scored = e.where(col("vec_id").isin(short: _*))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
+    val scored = VectorSearch.scoredByVec(e, qv.map(_.toDouble), col("vec_id").isin(short: _*))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val gt = VectorSearch.topK(spark, dir, queryId, k)
+    val gt = VectorSearch.memberTopK(e, qv, queryId, k)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     val rows = cs.sorted.map { c =>
       val prefix = short.take(c)
@@ -920,43 +918,37 @@ object Quantized {
   }
 
   def binaryTopK(spark: SparkSession, dir: String, queryId: Long,
-                 c: Int = 50, k: Int = 10): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val sigs = ensureBinaryIndex(spark, dir)
-    val qs = sigs.where(col("vec_id") === queryId).select(col("sig").as("qsig"))
-    val short = TopK.first(sigs.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qs))
-      .select(col("vec_id"),
-        bit_count(col("sig").bitwiseXOR(col("qsig"))).cast("long").as("hamming")),
-      c, col("hamming"), col("vec_id"))
-    val qe = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), l2norm(col("embedding")).as("qn"))
-    TopK.first(e.join(broadcast(short), Seq("vec_id"))
-      .crossJoin(broadcast(qe))
-      .select(col("vec_id"), col("hamming"),
-        cosine5(col("embedding"), col("qv"), l2norm(col("embedding")), col("qn")).as("score")),
-      k, TopK.byScore("vec_id"): _*)
-  }
+                 c: Int = 50, k: Int = 10): DataFrame =
+    binaryTopKCore(spark, dir, memberVector(spark, dir, queryId), Some(queryId), c, k)
 
   /** [[binaryTopK]] for a CALLER-SUPPLIED query vector (non-member
-    * serving): the 64-bit sign signature folds on the driver with the
-    * build rule (bit i set iff component i > 0) and ships as a plan
-    * literal; Hamming shortlist, exact rescore, no self-exclusion.
+    * serving): the same shortlist and rescore, no self-exclusion.
     */
   def binaryTopKVec(spark: SparkSession, dir: String, qv: Array[Float],
-                    c: Int = 50, k: Int = 10): DataFrame = {
+                    c: Int = 50, k: Int = 10): DataFrame =
+    binaryTopKCore(spark, dir, qv, None, c, k)
+
+  /** The 64-bit sign signature folds on the driver with the build rule
+    * (bit i set iff component i > 0 — a member's equals its stored
+    * `sig`) and ships as a plan literal; `exclude` drops the member at
+    * the Hamming shortlist, and the shortlist is rescored against the
+    * literal vector with exact cosine.
+    */
+  private def binaryTopKCore(spark: SparkSession, dir: String, qv: Array[Float],
+                             exclude: Option[Long], c: Int, k: Int): DataFrame = {
     val sigs = ensureBinaryIndex(spark, dir)
     val qsig = qv.take(64).zipWithIndex.foldLeft(0L) { case (acc, (x, i)) =>
       if (x > 0f) acc | (1L << i) else acc
     }
-    val short = TopK.first(sigs
+    val short = TopK.first(sigs.where(exclude.map(col("vec_id") =!= _).getOrElse(lit(true)))
       .select(col("vec_id"),
         bit_count(col("sig").bitwiseXOR(lit(qsig))).cast("long").as("hamming")),
       c, col("hamming"), col("vec_id"))
-    val q = typedlit(qv)
+    val qd = qv.map(_.toDouble)
     TopK.first(Tables.embeddings(spark, dir).join(broadcast(short), Seq("vec_id"))
       .select(col("vec_id"), col("hamming"),
-        cosine5(col("embedding"), q, l2norm(col("embedding")), l2norm(q)).as("score")),
+        cosine5(col("embedding"), typedlit(qd), l2norm(col("embedding")), normParam(qd))
+          .as("score")),
       k, TopK.byScore("vec_id"): _*)
   }
 }

@@ -17,8 +17,16 @@ import graft.sources.{FaissSource, NpySource, Sources}
   */
 object ReferenceInterop {
 
-  val ReviewsCsv = "/root/reference/reviews.csv"
-  val ProductsCsv = "/root/reference/products.csv"
+  /** The reference corpus directory. Every reference artifact path —
+    * here, in [[SklearnTfidf]], in the query map and in the oracle SQL
+    * — derives from it.
+    */
+  val Root = "/root/reference"
+
+  val ReviewsCsv = s"$Root/reviews.csv"
+  val ProductsCsv = s"$Root/products.csv"
+  val ProductsNpy = s"$Root/product_embeddings.npy"
+  val ProductsFlatIndex = s"$Root/faiss_products_flat.index"
 
   private val reviewsSchema = StructType(Seq(
     StructField("id", StringType),
@@ -68,8 +76,8 @@ object ReferenceInterop {
       .orderBy(col("id"))
   }
 
-  val ReviewsIvfIndex = "/root/reference/faiss_reviews_ivf.index"
-  val ReviewsNpy = "/root/reference/review_embeddings.npy"
+  val ReviewsIvfIndex = s"$Root/faiss_reviews_ivf.index"
+  val ReviewsNpy = s"$Root/review_embeddings.npy"
 
   /** nprobe search SERVED FROM the reference's own trained IVF index
     * (faiss_reviews_ivf.index — the artifact app.py:75-80 loads and
@@ -96,11 +104,11 @@ object ReferenceInterop {
   }
 
   /** One row of a reference `.npy` matrix as a driver-side query
-    * vector (the app loop's `embeddings[idx]` lookup).
+    * vector (the app loop's `embeddings[idx]` lookup), or
+    * [[memberNotFound]] naming the file.
     */
   def npyRow(spark: SparkSession, path: String, rowId: Long): Array[Float] =
-    NpySource.readNpy(spark, path)
-      .where(col("vec_id") === rowId).collect().head.getSeq[Float](1).toArray
+    memberVector(NpySource.readNpy(spark, path), rowId, path)
 
   /** app.py:221-241 `search_by_product_id` on the reference's own
     * artifacts: the typed product id resolves to its catalog row
@@ -118,8 +126,8 @@ object ReferenceInterop {
       .collect().headOption
       .getOrElse(throw new NoSuchElementException(s"unknown product id '$pid'"))
       .getLong(0)
-    val qv = npyRow(spark, "/root/reference/product_embeddings.npy", qidx)
-    NpySource.readNpy(spark, "/root/reference/product_embeddings.npy")
+    val qv = npyRow(spark, ProductsNpy, qidx)
+    NpySource.readNpy(spark, ProductsNpy)
       .where(col("vec_id") =!= qidx)
       .select(col("vec_id").as("doc_id"),
         round(dotd(col("embedding"), typedlit(qv)), 5).as("score"))
@@ -142,7 +150,7 @@ object ReferenceInterop {
     val meta = Sources.readCsvRowIndexed(spark, ProductsCsv, productsSchema)
       .select(col("row_id").as("doc_id"), col("id"))
       .where(col("id").isin(pids: _*))
-    val emb = NpySource.readNpy(spark, "/root/reference/product_embeddings.npy")
+    val emb = NpySource.readNpy(spark, ProductsNpy)
       .join(broadcast(meta), col("vec_id") === col("doc_id"))
       .select(col("id"), col("embedding"))
     val a = emb.select(col("id").as("a_id"), col("embedding").as("av"))
@@ -153,7 +161,7 @@ object ReferenceInterop {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  val ReviewsFlatIndex = "/root/reference/faiss_reviews_flat.index"
+  val ReviewsFlatIndex = s"$Root/faiss_reviews_flat.index"
 
   /** Tab-3 ANN demo (app.py:365-447): the SAME query review searched
     * through BOTH of the reference's review indexes — the flat
@@ -186,7 +194,7 @@ object ReferenceInterop {
     flat.unionAll(ivf).orderBy(col("method"), col("score").desc, col("vec_id"))
   }
 
-  val AnnTableCsv = "/root/reference/ann_tradeoff_table.csv"
+  val AnnTableCsv = s"$Root/ann_tradeoff_table.csv"
 
   /** The reference's published ANN trade-off table served as-is
     * (app.py:65-67 `load_ann_table`, rendered at app.py:369-371) —

@@ -26,8 +26,8 @@ import graft.sources.JoblibSource.{CsrMatrix, TfidfVectorizerModel}
   */
 object SklearnTfidf {
 
-  val VectorizerJoblib = "/root/reference/tfidf_vectorizer.joblib"
-  val MatrixJoblib = "/root/reference/tfidf_matrix.joblib"
+  val VectorizerJoblib = s"${ReferenceInterop.Root}/tfidf_vectorizer.joblib"
+  val MatrixJoblib = s"${ReferenceInterop.Root}/tfidf_matrix.joblib"
 
   private[graft] def model(spark: SparkSession,
                            path: String = VectorizerJoblib): TfidfVectorizerModel =
@@ -150,7 +150,7 @@ object SklearnTfidf {
       .where(minReviews.map(n => coalesce(col("n_reviews"), lit(0L)) >= n)
         .getOrElse(lit(true)))
       .select(col("doc_id"))
-    val vec = NpySource.readNpy(spark, "/root/reference/product_embeddings.npy")
+    val vec = NpySource.readNpy(spark, ReferenceInterop.ProductsNpy)
       .select(col("vec_id").as("doc_id"),
         dotd(col("embedding"), typedlit(qvec)).as("vscore"))
       .join(broadcast(candIds), Seq("doc_id"), "left_semi")

@@ -679,8 +679,9 @@ object TextRetrieval {
     * exactly reference app.py:190-219; `metaFilter` composes it with
     * the reference's candidate filters (min-max over candidates).
     *
-    * The query norm rides the 1-row broadcast (computed once), so the
-    * corpus-side projection runs two VecDots per row.
+    * The vector leg is [[hybridTopKFree]]'s: the document's embedding
+    * looked up once on the driver ([[memberVector]]), then scored as a
+    * caller vector, the document itself excluded.
     */
   def hybridTopK(spark: SparkSession, dir: String, queryDoc: Long, alpha: Double, k: Int,
                  metaFilter: Option[Column] = None): DataFrame = {
@@ -691,12 +692,8 @@ object TextRetrieval {
     val ts = wn.where(col("doc_id") =!= queryDoc)
       .join(broadcast(qw), "term")
       .groupBy("doc_id").agg(sum(col("wn") * col("qwn")).as("ts"))
-    val qe = Tables.embeddings(spark, dir).where(col("vec_id") === queryDoc)
-      .select(col("embedding").as("qemb"), l2norm(col("embedding")).as("qn"))
-    val vs = candidates(spark, dir, metaFilter)
-      .where(col("vec_id") =!= queryDoc).crossJoin(broadcast(qe))
-      .select(col("vec_id").as("doc_id"),
-        cosine(col("embedding"), col("qemb"), l2norm(col("embedding")), col("qn")).as("vs"))
+    val vs = vectorCandidates(spark, dir, memberVector(spark, dir, queryDoc), metaFilter)
+      .where(col("doc_id") =!= param(queryDoc))
     blend(vs, ts, alpha, k)
   }
 

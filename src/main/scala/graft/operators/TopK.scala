@@ -77,35 +77,19 @@ object TopK {
   /** Keeps the k best (score DESC, n_id ASC) pairs; the buffer is
     * allowed to grow to 2k between trims so sorting amortizes to
     * O(log k) per row.
+    *
+    * The SAME (key, n_id) pair may arrive several times with an
+    * IDENTICAL score — the banded-LSH candidate stream, where a pair
+    * collides in up to nBands buckets and every collision rescores the
+    * same rounded cosine. The buffer dedups by n_id after the (score
+    * DESC, n_id) sort, so the kept occurrence is canonical and no
+    * upstream `.distinct()` (a full shuffle of the candidate stream)
+    * is needed; on inputs with unique pairs the dedup keeps every row.
+    * Associativity holds exactly because duplicate scores are equal by
+    * construction: top-k of a dedup'd union = top-k of the union of
+    * per-partial dedup'd top-ks.
     */
   class TopKAgg(k: Int) extends Aggregator[ScoredPair, List[(Double, Long)], Seq[(Double, Long)]] {
-    private def best(b: List[(Double, Long)]): List[(Double, Long)] =
-      b.sortBy { case (s, id) => (-s, id) }.take(k)
-    private def trim(b: List[(Double, Long)]): List[(Double, Long)] =
-      if (b.lengthCompare(2 * k) <= 0) b else best(b)
-    override def zero: List[(Double, Long)] = Nil
-    override def reduce(b: List[(Double, Long)], a: ScoredPair): List[(Double, Long)] =
-      trim((a.score, a.n_id) :: b)
-    override def merge(x: List[(Double, Long)], y: List[(Double, Long)]): List[(Double, Long)] =
-      trim(x ::: y)
-    override def finish(b: List[(Double, Long)]): Seq[(Double, Long)] = best(b)
-    override def bufferEncoder: Encoder[List[(Double, Long)]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[(Double, Long)]] = ExpressionEncoder()
-  }
-
-  /** [[TopKAgg]] for inputs where the SAME (key, n_id) pair can arrive
-    * multiple times with an IDENTICAL score — the banded-LSH candidate
-    * stream, where a pair collides in up to nBands buckets and every
-    * collision rescores the same rounded cosine. Deduping INSIDE the
-    * bounded buffer (by n_id, after the (score DESC, n_id) sort, so
-    * the kept occurrence is canonical) makes the upstream
-    * `.distinct()` pass — a full shuffle of the entire candidate
-    * stream — unnecessary: map-side partials already emit at most k
-    * DISTINCT ids per key per partition. Associativity holds exactly
-    * because duplicate scores are equal by construction: top-k of a
-    * dedup'd union = top-k of the union of per-partial dedup'd top-ks.
-    */
-  class TopKDistinctAgg(k: Int) extends Aggregator[ScoredPair, List[(Double, Long)], Seq[(Double, Long)]] {
     private def best(b: List[(Double, Long)]): List[(Double, Long)] =
       b.sortBy { case (s, id) => (-s, id) }.distinctBy(_._2).take(k)
     private def trim(b: List[(Double, Long)]): List[(Double, Long)] =

@@ -8,40 +8,38 @@ import graft.operators.TopK.byScore
 
 /** Exact (flat) vector search operators — the reference's core surface.
   *
-  * Design for scale: the query side is always tiny (one vector or a
-  * sampled batch) and is `broadcast()`; the corpus is scanned once with
-  * no shuffle. Every cut and rank goes through [[TopK]].
+  * Design for scale: the query side is always tiny. One query vector —
+  * a caller's, or a member's looked up once by [[memberVector]] — ships
+  * as a plan literal; a sampled batch is `broadcast()`. The corpus is
+  * scanned once with no shuffle. Every cut and rank goes through
+  * [[TopK]].
   */
 object VectorSearch {
 
-  /** Free-text semantic search analog (reference app.py:173-188):
-    * score every corpus vector against one query vector, return top-k.
-    * The reference embeds the query with SBERT; here the query vector
-    * is looked up by id (the embedding-model stub — see SURVEY.md §3).
+  /** Item-to-item search (reference app.py:221-241
+    * `search_by_product_id`): the member's stored embedding, looked up
+    * once on the driver ([[memberVector]]; an absent id fails with
+    * [[memberNotFound]]), scored against every OTHER corpus row passing
+    * `filter` by the same cosine scan a typed query gets
+    * ([[topKVec]], app.py:173-188), top-k.
     */
   def topK(spark: SparkSession, dir: String, queryId: Long, k: Int,
            filter: Column = lit(true)): DataFrame =
-    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId, _.where(filter)),
-      k, byScore("vec_id"): _*)
+    memberTopK(Tables.embeddings(spark, dir), memberVector(spark, dir, queryId), queryId, k,
+      filter)
 
-  /** (vec_id, score) of every candidate against the member `queryId`.
-    * The query row comes from the UNFILTERED frame; `candidates` narrows
-    * only the scored side, which never includes the query itself. The
-    * query norm is computed once on the broadcast side and the corpus
-    * norm once per row, never per pair. The lookup `vec_id = q` stays a
-    * literal (parquet pushes it down); the exclusion is a [[param]], so
-    * the corpus-side code compiles once.
+  /** The self-exclusion of a by-id search: a [[param]], so the scan
+    * compiles once whatever the id.
     */
-  private[operators] def scoredById(frame: DataFrame, queryId: Long,
-                                    candidates: DataFrame => DataFrame): DataFrame = {
-    val e = frame.withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    candidates(e.where(col("vec_id") =!= param(queryId)))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("score"))
-  }
+  private[operators] def notSelf(queryId: Long): Column = col("vec_id") =!= param(queryId)
+
+  /** Top-k of the `frame` rows passing `filter` against the member
+    * `queryId`'s vector `qv`, the member itself excluded.
+    */
+  private[operators] def memberTopK(frame: DataFrame, qv: Array[Float], queryId: Long, k: Int,
+                                    filter: Column = lit(true)): DataFrame =
+    TopK.first(scoredByVec(frame, qv.map(_.toDouble), filter && notSelf(queryId)),
+      k, byScore("vec_id"): _*)
 
   /** (vec_id, score) of every row of `frame` passing `filter` against a
     * query vector `qd` (an array literal, passed to generated code by
@@ -58,12 +56,15 @@ object VectorSearch {
   /** [[topK]] over an EXTERNAL (vec_id, embedding) frame — the door
     * the reference-artifact sources walk through
     * ([[graft.sources.NpySource]], [[graft.sources.FaissSource]]):
-    * same broadcast-query / single-corpus-scan / TakeOrdered shape,
-    * corpus-agnostic, so the engine answers the reference's OWN
-    * matrices (app.py:68-80) and not just the parquet twin.
+    * the member's row looked up once on the driver (an absent id fails
+    * with [[memberNotFound]] naming `source`), then the same
+    * single-corpus-scan / TakeOrdered shape, so the engine answers the
+    * reference's OWN matrices (app.py:68-80) and not just the parquet
+    * twin.
     */
-  def topKOf(frame: DataFrame, queryId: Long, k: Int): DataFrame =
-    TopK.first(scoredById(frame, queryId, identity), k, byScore("vec_id"): _*)
+  def topKOf(frame: DataFrame, queryId: Long, k: Int,
+             source: String = "the searched frame"): DataFrame =
+    memberTopK(frame, memberVector(frame, queryId, source), queryId, k)
 
   /** [[topKVec]] over an EXTERNAL frame: external query vector (a plan
     * literal, no self-exclusion) against an external (vec_id,
@@ -112,13 +113,11 @@ object VectorSearch {
     * array is materialized. Ascending distance, ties on id.
     */
   def topKL2(spark: SparkSession, dir: String, queryId: Long, k: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val q = e.where(col("vec_id") === queryId).select(col("embedding").as("qv"))
-    TopK.first(e.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
+    val qd = memberVector(spark, dir, queryId).map(_.toDouble)
+    TopK.first(Tables.embeddings(spark, dir).where(notSelf(queryId))
       .select(col("vec_id"),
-        round(sqrt(dotd(col("embedding"), col("embedding")) + dotd(col("qv"), col("qv"))
-          - lit(2) * dotd(col("embedding"), col("qv"))), 5).as("dist")),
+        round(sqrt(dotd(col("embedding"), col("embedding")) + param(dotLocal(qd, qd))
+          - lit(2) * dotd(col("embedding"), typedlit(qd))), 5).as("dist")),
       k, col("dist"), col("vec_id"))
   }
 
@@ -399,8 +398,8 @@ object VectorSearch {
     val d = Tables.documents(spark, dir)
       .where(col("lang") === lang && col("n_chars") >= minChars)
       .select(col("doc_id"))
-    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId,
-      _.join(d, col("vec_id") === col("doc_id"))), k, byScore("vec_id"): _*)
+    memberTopK(Tables.embeddings(spark, dir).join(d, col("vec_id") === col("doc_id")),
+      memberVector(spark, dir, queryId), queryId, k)
   }
 
   /** Two-stage retrieval with an ARRAY-membership metadata filter —
@@ -416,8 +415,8 @@ object VectorSearch {
     val d = Analytics.docTags(spark, dir)
       .where(array_contains(col("tags"), tag))
       .select(col("doc_id"))
-    TopK.first(scoredById(Tables.embeddings(spark, dir), queryId,
-      _.join(d, col("vec_id") === col("doc_id"))), k, byScore("vec_id"): _*)
+    memberTopK(Tables.embeddings(spark, dir).join(d, col("vec_id") === col("doc_id")),
+      memberVector(spark, dir, queryId), queryId, k)
   }
 
   /** Pairwise cosine similarity matrix for a small id set
@@ -694,13 +693,11 @@ object VectorSearch {
     import spark.implicits._
     require(lambda >= 0 && lambda <= 1, s"lambda must be in [0,1]: $lambda")
     require(fetchK >= k, s"fetchK $fetchK must be >= k $k")
-    val e = Tables.embeddings(spark, dir).withColumn("nrm", l2norm(col("embedding")))
-    val q = e.where(col("vec_id") === queryId)
-      .select(col("embedding").as("qv"), col("nrm").as("qn"))
-    val cands = TopK.first(e.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
+    val qd = memberVector(spark, dir, queryId).map(_.toDouble)
+    val cands = TopK.first(Tables.embeddings(spark, dir).where(notSelf(queryId))
+      .withColumn("nrm", l2norm(col("embedding")))
       .select(col("vec_id"),
-        cosine5(col("embedding"), col("qv"), col("nrm"), col("qn")).as("relevance"),
+        cosine5(col("embedding"), typedlit(qd), col("nrm"), normParam(qd)).as("relevance"),
         col("embedding"), col("nrm")), fetchK, byScore("vec_id", "relevance"): _*)
       .collect()
       .map(r => (r.getLong(0), r.getDouble(1),
@@ -838,33 +835,27 @@ object VectorSearch {
     *
     * The per-dim μ/σ are [[embedDimStats]]'s 5-decimal ROUNDED values
     * (the label-centroid contract, so summation order can't drift the
-    * oracle), assembled IN-PLAN into one (μ[], σ[]) row broadcast
-    * over a single corpus scan — never collected to the driver.
-    * Zero-variance dims contribute 0 on both engines. Scale shape:
-    * one dim-keyed aggregate (|dims| rows) + one narrow whiten-and-
-    * score scan + TakeOrdered — the [[topK]] plan plus a 64-row
-    * broadcast.
+    * oracle), collected to the driver (|dims| rows) and shipped as two
+    * plan literals. The member's vector ([[memberVector]]) whitens on
+    * the driver with the plan's own double ops, so the query enters the
+    * by-vector scorer like every by-id search. Zero-variance dims
+    * contribute 0 on both engines. Scale shape: one dim-keyed aggregate
+    * (|dims| rows) + one narrow whiten-and-score scan + TakeOrdered —
+    * the [[topK]] plan.
     */
   def embedWhitenTopK(spark: SparkSession, dir: String, queryId: Long = 0L,
                       k: Int = 10): DataFrame = {
-    val statsRow = embedDimStats(spark, dir)
-      .agg(array_sort(collect_list(struct(col("pos"), col("mean_v"), col("std_v"))))
-        .as("st"))
-      .select(expr("transform(st, s -> s.mean_v)").as("mul"),
-        expr("transform(st, s -> s.std_v)").as("sdl"))
+    val st = embedDimStats(spark, dir).select(col("mean_v"), col("std_v")).collect()
+    val (mu, sd) = (st.map(_.getDouble(0)), st.map(_.getDouble(1)))
+    val qw = memberVector(spark, dir, queryId).zipWithIndex.map { case (x, i) =>
+      if (sd(i) == 0.0) 0.0 else (x.toDouble - mu(i)) / sd(i)
+    }
     val wExpr = "transform(embedding, (x, i) -> CASE WHEN element_at(sdl, i + 1) = 0D " +
       "THEN 0D ELSE (cast(x AS double) - element_at(mul, i + 1)) / element_at(sdl, i + 1) END)"
     val w = Tables.embeddings(spark, dir)
-      .crossJoin(broadcast(statsRow))
-      .select(col("vec_id"), expr(wExpr).as("wx"))
-      .withColumn("nrm", l2norm(col("wx")))
-    val q = w.where(col("vec_id") === queryId)
-      .select(col("wx").as("qv"), col("nrm").as("qn"))
-    TopK.first(w.where(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        cosine5(col("wx"), col("qv"), col("nrm"), col("qn")).as("score")),
-      k, byScore("vec_id"): _*)
+      .select(col("vec_id"), col("embedding"), typedlit(mu).as("mul"), typedlit(sd).as("sdl"))
+      .select(col("vec_id"), expr(wExpr).as("embedding"))
+    TopK.first(scoredByVec(w, qw, notSelf(queryId)), k, byScore("vec_id"): _*)
   }
 
   /** Embedding anisotropy report (Ethayarajh 2019's diagnosis:
@@ -925,15 +916,16 @@ object VectorSearch {
     * The "how many are THIS close" door that top-k cannot answer —
     * dedup radii, recall floors, alerting on embedding collapse. The
     * threshold is applied to the ROUNDED score so the cut replays
-    * bit-for-bit cross-engine. Scale shape: the same single broadcast
-    * scan as [[topK]] with the filter fused before the sort, so the
+    * bit-for-bit cross-engine. Scale shape: the same single
+    * literal-query scan as [[topK]] with the filter below the sort, so the
     * ORDER BY ranks only the rows inside the radius (a meaningful
     * radius admits a vanishing corpus fraction — the sort volume is
     * the RESULT size, never the corpus).
     */
   def rangeSearch(spark: SparkSession, dir: String, queryId: Long,
                   minScore: Double): DataFrame =
-    scoredById(Tables.embeddings(spark, dir), queryId, identity)
+    scoredByVec(Tables.embeddings(spark, dir),
+      memberVector(spark, dir, queryId).map(_.toDouble), notSelf(queryId))
       .where(col("score") >= minScore)
       .orderBy(byScore("vec_id"): _*)
 

@@ -320,7 +320,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
     */
   def compact(spark: SparkSession, dataDir: String, tombstoneRoot: String,
               partitionCol: String): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.broadcast
     val fs = new Path(dataDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tomb = fs.makeQualified(new Path(s"$tombstoneRoot/_tombstones"))
     if (!fs.exists(tomb)) return
@@ -329,16 +329,29 @@ object IndexStore extends org.apache.spark.internal.Logging {
     // partition discovery; refuse instead of corrupting
     require(fs.listStatus(new Path(dataDir)).exists(_.getPath.getName.startsWith("epoch=")),
       s"$dataDir does not use the epoch layout; compact() only maintains epoch-partitioned artifacts")
-    val survivors = spark.read.parquet(dataDir)
-      .join(broadcast(spark.read.parquet(tomb.toString)), Seq("vec_id"), "left_anti")
-      .drop("epoch")
-    val staging = stageEpochPath(dataDir, "compact")
-    survivors.repartition(col(partitionCol))
+    replaceEpochs(spark, dataDir, tombstoneRoot, "compact", partitionCol,
+      spark.read.parquet(dataDir)
+        .join(broadcast(spark.read.parquet(tomb.toString)), Seq("vec_id"), "left_anti")
+        .drop("epoch"))
+  }
+
+  /** The epoch swap of every maintenance rewrite (compact, IVF
+    * rebalance): stage `rows` hidden, commit them as ONE `epoch=<kind>-*`
+    * dir by rename, fold the ingest hwm, drop every other epoch,
+    * invalidate the memos and retire `tombstoneRoot`'s tombstone set
+    * (the rewrite already left those rows out). Old epochs go AFTER the
+    * new one is visible, so every id stays reachable throughout.
+    */
+  private[graft] def replaceEpochs(spark: SparkSession, dataDir: String, tombstoneRoot: String,
+                                   kind: String, partitionCol: String, rows: DataFrame): Unit = {
+    val fs = new Path(dataDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = stageEpochPath(dataDir, kind)
+    rows.repartition(org.apache.spark.sql.functions.col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(staging)
     val dataPath = fs.makeQualified(new Path(dataDir))
     val newEpochName = s"epoch=${new Path(staging).getName.stripPrefix(".tmp-")}"
     require(fs.rename(fs.makeQualified(new Path(staging)), new Path(dataPath, newEpochName)),
-      s"compact commit failed under $dataDir")
+      s"$kind commit failed under $dataDir")
     foldIngestHwm(spark, dataDir)
     fs.listStatus(dataPath).foreach { st =>
       val nm = st.getPath.getName
@@ -355,7 +368,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * guards gone — epoch dir folded away, hwm stale) and append
     * duplicate vectors.
     */
-  private[graft] def foldIngestHwm(spark: SparkSession, dataDir: String): Unit = {
+  private def foldIngestHwm(spark: SparkSession, dataDir: String): Unit = {
     val fs = new Path(dataDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val folded = maxIngestEpoch(fs, dataDir)
     if (folded >= 0 && !readIngestHwmFile(fs, dataDir).exists(_ >= folded))
@@ -366,7 +379,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * maintenance ops (compact, rebalance) that just rewrote the
     * artifact minus the tombstoned rows.
     */
-  private[graft] def clearTombstones(spark: SparkSession, root: String): Unit = {
+  private def clearTombstones(spark: SparkSession, root: String): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tomb = new Path(s"$root/_tombstones")
     if (fs.exists(tomb)) fs.delete(tomb, true)

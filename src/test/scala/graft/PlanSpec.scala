@@ -741,15 +741,15 @@ class PlanSpec extends AnyFunSuite {
 
   test("range search sorts only the inside-radius rows, never the corpus") {
     val p = plan(VectorSearch.rangeSearch(spark, TestSpark.sf, 0, 0.25))
-    // the radius predicate runs BELOW the sort (Catalyst fuses it into
-    // the broadcast join condition), so the Sort ranks result-sized
-    // input — never the corpus
+    // the radius predicate runs BELOW the sort, so the Sort ranks
+    // result-sized input — never the corpus
     val lines = p.linesIterator.toSeq
     val sortIdx = lines.indexWhere(_.contains("Sort "))
     val predIdx = lines.indexWhere(_.contains(">= 0.25"))
     assert(sortIdx >= 0 && predIdx > sortIdx,
       s"radius predicate must run below the sort:\n${p.take(800)}")
-    assert(p.contains("BroadcastExchange"), "query row must broadcast")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      s"no join: the query is a plan literal:\n${p.take(800)}")
   }
 
   test("item PMI ranks per item with WindowGroupLimit, not a global sort") {
@@ -894,7 +894,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("a query that cannot be planned fails only by naming a missing reference artifact") {
-    val named = "reference artifact missing: "
+    val named = s"reference artifact missing: ${graft.operators.ReferenceInterop.Root}/"
     def causes(e: Throwable): Seq[Throwable] =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
     val other = optimizedPlans.collect {

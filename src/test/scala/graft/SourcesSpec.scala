@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.ReferenceInterop
 import graft.sources.Sources
 
 /** Deterministic stand-in for a real embedding model — resolved by
@@ -190,7 +191,7 @@ class SourcesSpec extends AnyFunSuite {
       sys.props("graft.test.onnx.dim") = "384"
       try {
         val corpus = graft.sources.NpySource.readNpy(
-          spark, "/root/reference/product_embeddings.npy")
+          spark, ReferenceInterop.ProductsNpy)
         val refQv = graft.functions.QueryEncoder.required(spark).encode(query)
         assert(refQv.length == 384, "model-config width must reach the seam")
         val a = VectorSearch.topKVecOf(corpus, refQv, 10).collect()
@@ -792,7 +793,7 @@ class SourcesSpec extends AnyFunSuite {
   test("npy reader ingests the reference's own embedding artifacts") {
     import graft.sources.NpySource
     // 66×384 f4 matrix (reference app.py:68-70 loads it with np.load)
-    val df = NpySource.readNpy(spark, "/root/reference/product_embeddings.npy")
+    val df = NpySource.readNpy(spark, ReferenceInterop.ProductsNpy)
     assert(df.count() == 66L)
     val rows = df.orderBy("vec_id").collect()
     assert(rows.head.getLong(0) == 0L && rows.last.getLong(0) == 65L)
@@ -804,7 +805,7 @@ class SourcesSpec extends AnyFunSuite {
     val r65 = rows.last.getSeq[Float](1)
     assert(math.abs(r65(0) - (-0.04671314f)) < 1e-7f)
     // small batchRows must shard the read without changing the result
-    val sharded = NpySource.readNpy(spark, "/root/reference/product_embeddings.npy", batchRows = 7)
+    val sharded = NpySource.readNpy(spark, ReferenceInterop.ProductsNpy, batchRows = 7)
       .orderBy("vec_id").collect()
     assert(sharded.map(_.getLong(0)).toSeq == rows.map(_.getLong(0)).toSeq)
     assert(sharded.zip(rows).forall { case (a, b) =>
@@ -816,9 +817,9 @@ class SourcesSpec extends AnyFunSuite {
     // the reference builds faiss_products_flat.index FROM
     // product_embeddings.npy (app.py:75-80), so the two artifacts must
     // decode to bit-identical float rows in the same insertion order
-    val faiss = FaissSource.readFlat(spark, "/root/reference/faiss_products_flat.index")
+    val faiss = FaissSource.readFlat(spark, ReferenceInterop.ProductsFlatIndex)
       .orderBy("vec_id").collect()
-    val npy = NpySource.readNpy(spark, "/root/reference/product_embeddings.npy")
+    val npy = NpySource.readNpy(spark, ReferenceInterop.ProductsNpy)
       .orderBy("vec_id").collect()
     assert(faiss.length == 66 && faiss.length == npy.length)
     faiss.zip(npy).foreach { case (f, n) =>
@@ -828,7 +829,7 @@ class SourcesSpec extends AnyFunSuite {
     }
     // sharded read must not change the result
     val sharded = FaissSource.readFlat(spark,
-      "/root/reference/faiss_products_flat.index", batchRows = 7)
+      ReferenceInterop.ProductsFlatIndex, batchRows = 7)
       .orderBy("vec_id").collect()
     assert(sharded.zip(faiss).forall { case (a, b) =>
       a.getLong(0) == b.getLong(0) && a.getSeq[Float](1) == b.getSeq[Float](1) })
@@ -836,14 +837,14 @@ class SourcesSpec extends AnyFunSuite {
 
   test("faiss ivf reader reconstructs the review matrix; cell selection reads only those lists") {
     import graft.sources.{FaissSource, NpySource}
-    val h = FaissSource.readIvfHeader(spark, "/root/reference/faiss_reviews_ivf.index")
+    val h = FaissSource.readIvfHeader(spark, ReferenceInterop.ReviewsIvfIndex)
     assert(h.dim == 384 && h.nlist == 39 && h.rows == 1578L)
     assert(h.listSizes.sum == 1578L)
     // every (id, vector) pair across all lists equals the npy row —
     // the IVF artifact is a re-bucketing of the same matrix
-    val npy = NpySource.readNpy(spark, "/root/reference/review_embeddings.npy")
+    val npy = NpySource.readNpy(spark, ReferenceInterop.ReviewsNpy)
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val all = FaissSource.readIvfLists(spark, "/root/reference/faiss_reviews_ivf.index")
+    val all = FaissSource.readIvfLists(spark, ReferenceInterop.ReviewsIvfIndex)
       .collect()
     assert(all.length == 1578)
     assert(all.map(_.getLong(1)).sorted.toSeq == (0L until 1578L))
@@ -852,14 +853,13 @@ class SourcesSpec extends AnyFunSuite {
         s"vec ${r.getLong(1)} differs between ivf list and npy") }
     // selecting cells returns exactly those lists' members
     val some = FaissSource.readIvfLists(spark,
-      "/root/reference/faiss_reviews_ivf.index", Some(Seq(0, 3)))
+      ReferenceInterop.ReviewsIvfIndex, Some(Seq(0, 3)))
       .collect()
     assert(some.length == (h.listSizes(0) + h.listSizes(3)).toInt)
     assert(some.map(_.getInt(0)).toSet == Set(0, 3))
   }
 
   test("ivf search over the reference index matches brute force on the probed members") {
-    import graft.operators.ReferenceInterop
     val qv = ReferenceInterop.npyRow(spark, ReferenceInterop.ReviewsNpy, 0L)
     val got = ReferenceInterop.ivfTopK(spark, ReferenceInterop.ReviewsIvfIndex,
       qv, nprobe = 4, k = 10, excludeId = Some(0L)).collect()
@@ -884,7 +884,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ann demo: the ivf leg never beats the exhaustive flat leg at any rank") {
-    import graft.operators.ReferenceInterop
     val rows = ReferenceInterop.annDemoReference(spark).collect()
     val flat = rows.filter(_.getString(0) == "flat").map(_.getDouble(2))
     val ivf = rows.filter(_.getString(0) == "ivf").map(_.getDouble(2))
@@ -898,7 +897,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compare matrix is symmetric with a unit diagonal") {
-    import graft.operators.ReferenceInterop
     val ids = Seq("AV000tWuGV-KLJ3ac2-b", "AV00l7jV-jtxr-f30lnX", "AV1T09fyvKc47QAVgf2R")
     val m = ReferenceInterop.compareProductsReference(spark, ids).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
@@ -916,7 +914,7 @@ class SourcesSpec extends AnyFunSuite {
     // faiss_reviews_ivf.index is an IndexIVFFlat ("IwFl") — trained
     // state the flat reader must refuse, not misparse
     val e = intercept[IllegalArgumentException] {
-      FaissSource.readFlat(spark, "/root/reference/faiss_reviews_ivf.index")
+      FaissSource.readFlat(spark, ReferenceInterop.ReviewsIvfIndex)
     }
     assert(e.getMessage.contains("IwFl") && e.getMessage.contains("IndexFlat"))
   }
@@ -927,14 +925,14 @@ class SourcesSpec extends AnyFunSuite {
     val schema = StructType(Seq("id", "asins", "brand", "categories",
       "reviews.title", "reviews.text", "reviews.rating", "combined_text")
       .map(f => StructField(f, StringType)))
-    val df = Sources.readCsvRowIndexed(spark, "/root/reference/reviews.csv", schema)
+    val df = Sources.readCsvRowIndexed(spark, ReferenceInterop.ReviewsCsv, schema)
     val rows = df.select("row_id", "combined_text").orderBy("row_id").collect()
     assert(rows.length == 1578)
     assert(rows.map(_.getLong(0)).toSeq == (0L until 1578L))
     // file-order spot checks against the raw file's first data row
     assert(rows.head.getString(1).startsWith("paperwhite voyage, no regrets!"))
     // deterministic across reads
-    val again = Sources.readCsvRowIndexed(spark, "/root/reference/reviews.csv", schema)
+    val again = Sources.readCsvRowIndexed(spark, ReferenceInterop.ReviewsCsv, schema)
       .select("row_id", "combined_text").orderBy("row_id").collect()
     assert(again.map(_.getString(1)).toSeq == rows.map(_.getString(1)).toSeq)
     // positional ids are undefined over several files — must refuse
@@ -951,7 +949,7 @@ class SourcesSpec extends AnyFunSuite {
   test("reference lexical encoder serves free text in the real MiniLM space") {
     import graft.functions.{CorpusLexicalEncoder, CorpusLexicalQueryEncoder}
     val vocab = CorpusLexicalQueryEncoder.referenceVocabulary(spark,
-      "/root/reference/reviews.csv", "/root/reference/review_embeddings.npy")
+      ReferenceInterop.ReviewsCsv, ReferenceInterop.ReviewsNpy)
     assert(vocab.size > 5000, s"reference lexicon too small: ${vocab.size}")
     val qv = CorpusLexicalEncoder.encodeWithVocab(vocab, "kindle tablet battery")
     assert(qv.length == 384)

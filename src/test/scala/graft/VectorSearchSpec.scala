@@ -23,6 +23,89 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(res.where(!col("label").isin(1, 2, 3)).count() == 0)
   }
 
+  test("topKOf over the embeddings frame equals topK row for row") {
+    for (id <- Seq(0L, 7L, 37L)) {
+      val viaFrame = VectorSearch.topKOf(Tables.embeddings(spark, TestSpark.sf), id, 10).collect()
+      assert(viaFrame.length == 10)
+      assert(viaFrame.toSeq == VectorSearch.topK(spark, TestSpark.sf, id, 10).collect().toSeq)
+    }
+  }
+
+  test("every by-id entry point fails with memberNotFound for an absent id") {
+    import graft.operators.{Quantized, TextRetrieval}
+    val sf = TestSpark.sf
+    val absent = Tables.embeddings(spark, sf).agg(max(col("vec_id"))).head.getLong(0) + 1000
+    val source = s"$sf/embeddings.parquet"
+    val expected = graft.functions.VectorFunctions.memberNotFound(source, absent).getMessage
+    val labels = Tables.embeddings(spark, sf).select(col("label")).distinct()
+      .collect().map(_.getAs[Number](0).intValue).toSeq.sorted
+    // ReferenceInterop.annDemoReference (npyRow → memberVector) needs
+    // the reference artifacts and is left out
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "topK" -> (() => VectorSearch.topK(spark, sf, absent, 10)),
+      "filteredTopK" -> (() => VectorSearch.filteredTopK(spark, sf, absent, 10, Seq(1, 3))),
+      "topKOf" -> (() => VectorSearch.topKOf(Tables.embeddings(spark, sf), absent, 10, source)),
+      "metaFilteredTopK" -> (() => VectorSearch.metaFilteredTopK(spark, sf, absent, 10, "en", 0L)),
+      "tagFilteredTopK" -> (() => VectorSearch.tagFilteredTopK(spark, sf, absent, "len:1", 10)),
+      "topKL2" -> (() => VectorSearch.topKL2(spark, sf, absent, 10)),
+      "mmrRerank" -> (() => VectorSearch.mmrRerank(spark, sf, absent)),
+      "rangeSearch" -> (() => VectorSearch.rangeSearch(spark, sf, absent, 0.25)),
+      "embedWhitenTopK" -> (() => VectorSearch.embedWhitenTopK(spark, sf, absent)),
+      "ivfTopK" -> (() => Ivf.ivfTopK(spark, sf, absent, 16, 4, 10)),
+      "plannedFilteredTopK prefilter" ->
+        (() => Ivf.plannedFilteredTopK(spark, sf, absent, labels.take(1))),
+      "plannedFilteredTopK postfilter" ->
+        (() => Ivf.plannedFilteredTopK(spark, sf, absent, labels)),
+      "lshTopK" -> (() => Lsh.lshTopK(spark, sf, absent, nBits = 8, k = 10)),
+      "sq8TopK" -> (() => Quantized.sq8TopK(spark, sf, absent, 10)),
+      "pqTopK" -> (() => Quantized.pqTopK(spark, sf, absent, 10)),
+      "ivfPqTopK" -> (() => Quantized.ivfPqTopK(spark, sf, absent, 16, 4, 10)),
+      "ivfPqResidualTopK" -> (() => Quantized.ivfPqResidualTopK(spark, sf, absent, 16, 4, 10)),
+      "ivfPqRerankTopK" -> (() => Quantized.ivfPqRerankTopK(spark, sf, absent, 16, 4, 50, 10)),
+      "rerankDepthSweep" -> (() => Quantized.rerankDepthSweep(spark, sf, absent)),
+      "rerankPlanner" -> (() => Quantized.rerankPlanner(spark, sf, absent)),
+      "binaryTopK" -> (() => Quantized.binaryTopK(spark, sf, absent)),
+      "hybridTopK" -> (() => TextRetrieval.hybridTopK(spark, sf, absent, 0.7, 10)))
+    val wrong = calls.flatMap { case (name, call) =>
+      scala.util.Try(call().collect()) match {
+        case scala.util.Failure(e: IllegalArgumentException) if e.getMessage == expected => None
+        case scala.util.Failure(e) => Some(s"$name threw $e")
+        case scala.util.Success(rows) => Some(s"$name returned ${rows.length} rows")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("by-id searches get their query only from memberVector (no in-plan member lookup)") {
+    import java.nio.file.{Files, Paths}
+    // the member's stored CODE is sq8's query, not its float vector
+    val exceptions = Set("sq8TopK")
+    // the deleted in-plan scorer, spelled in two parts so that a grep
+    // for it over src/ finds nothing
+    val deleted = "scoredBy" + "Id"
+    val lookup = """col\("vec_id"\) === (queryId|queryDoc|qIdx|rowId)\b""".r
+    val defName = """\bdef (\w+)""".r
+    val dir = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(dir), s"run from the repository root (no $dir)")
+    val offenders = dir.toFile.listFiles().filter(_.getName.endsWith(".scala"))
+      .sortBy(_.getName).toSeq.flatMap { f =>
+        var enclosing = ""
+        new String(Files.readAllBytes(f.toPath), "UTF-8").linesIterator.zipWithIndex.flatMap {
+          case (line, i) =>
+            val code = line.trim
+            if (code.startsWith("*") || code.startsWith("//") || code.startsWith("/*")) None
+            else {
+              defName.findFirstMatchIn(code).foreach(m => enclosing = m.group(1))
+              if (code.contains(deleted) ||
+                  (lookup.findFirstIn(code).nonEmpty && !exceptions(enclosing)))
+                Some(s"${f.getName}:${i + 1} (in $enclosing): $code")
+              else None
+            }
+        }.toSeq
+      }
+    assert(offenders.isEmpty, s"${offenders.size} offending lines:\n${offenders.mkString("\n")}")
+  }
+
   test("simMatrix has unit diagonal and is symmetric") {
     val m = VectorSearch.simMatrix(spark, TestSpark.sf, Seq(0L, 1L, 2L, 3L)).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
