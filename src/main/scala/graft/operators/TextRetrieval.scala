@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VecExpressions.longDoubleMap
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.sources.IndexStore
@@ -216,27 +220,31 @@ object TextRetrieval {
     (qw.toMap, math.sqrt(qw.foldLeft(0.0) { case (acc, (_, w)) => acc + w * w }))
   }
 
-  /** (doc_id, ts): the unrounded TF-IDF cosine of every document that
-    * shares a term with the query. The scan reads only the query
-    * terms' `w` rows (a literal IN list parquet pushes down); the
-    * weights ride a map literal and the query norm a [[param]], so the
-    * generated code is the same for every query of the same length.
+  /** (doc_id, c): one TF-IDF cosine term per posting of a query term;
+    * a document's cosine `ts` is the sum of its `c`. The scan reads
+    * only the query terms' `w` rows (a literal IN list parquet pushes
+    * down); the weights ride a map literal and the query norm a
+    * [[param]], so the generated code is the same for every query of
+    * the same length.
     */
-  private def tfidfScores(spark: SparkSession, m: TfidfModel,
-                          queryTerms: Seq[String]): DataFrame = {
+  private def tfidfTerms(spark: SparkSession, m: TfidfModel,
+                         queryTerms: Seq[String]): DataFrame = {
     val (qw, qn) = queryWeights(spark, m, queryTerms)
     m.w.where(col("term").isin(qw.keys.toSeq.sorted: _*))
       .join(m.norms, "doc_id")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("w") / col("nrm") * element_at(typedlit(qw), col("term")) / param(qn))
-        .as("ts"))
+      .select(col("doc_id"),
+        (col("w") / col("nrm") * element_at(typedlit(qw), col("term")) / param(qn)).as("c"))
   }
+
+  /** (doc_id, ts): the per-document sum of a leg's (doc_id, c) terms. */
+  private def summed(terms: DataFrame): DataFrame =
+    terms.groupBy(col("doc_id")).agg(sum(col("c")).as("ts"))
 
   /** Keyword search: score = cosine(tfidf(query), tfidf(doc)), top-k.
     * Reference app.py:202-204 (tfidf_vec.transform + cosine_similarity).
     */
   def tfidfTopK(spark: SparkSession, dir: String, queryTerms: Seq[String], k: Int): DataFrame =
-    tfidfScores(spark, ensureModel(spark, dir), queryTerms)
+    summed(tfidfTerms(spark, ensureModel(spark, dir), queryTerms))
       .select(col("doc_id"), round(col("ts"), 5).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -253,10 +261,12 @@ object TextRetrieval {
     * average `avgdl` (1 row) — the two statistics Okapi BM25 adds over
     * TF-IDF. Build-once under the same fingerprint-addressed layout as
     * the model itself; `avg` is written LAST so the completeness
-    * marker rides the publish rename.
+    * marker rides the publish rename. `avgdl` is read once per
+    * artifact path into a [[graft.sources.DriverMemo]] (NaN for an
+    * empty corpus) and enters query plans as a [[param]].
     */
   private def ensureBm25(spark: SparkSession, dir: String,
-                         m: TfidfModel): (DataFrame, DataFrame) = {
+                         m: TfidfModel): (DataFrame, Double) = {
     val base = IndexStore.indexPath(spark, "bm25_v1", s"$dir/documents.parquet", "dl")
     IndexStore.publish(spark, base) { tmp =>
       m.tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
@@ -264,7 +274,11 @@ object TextRetrieval {
       spark.read.parquet(s"$tmp/dl").agg(avg(col("dl")).as("avgdl"))
         .write.mode("overwrite").parquet(s"$tmp/avg")
     }
-    (IndexStore.open(spark, s"$base/dl"), IndexStore.open(spark, s"$base/avg"))
+    val avgdl = graft.sources.DriverMemo.memo(spark, s"$base#avgdl") {
+      val r = IndexStore.open(spark, s"$base/avg").head()
+      java.lang.Double.valueOf(if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
+    }
+    (IndexStore.open(spark, s"$base/dl"), avgdl.doubleValue)
   }
 
   /** Okapi BM25 ranking — the standard keyword scorer the reference's
@@ -292,33 +306,33 @@ object TextRetrieval {
       .limit(k)
 
   /** The unrounded per-doc BM25 sum (doc_id, ts) — shared by
-    * [[bm25TopK]] (round + top-k) and the hybrid blend (min-max
-    * normalize). Association order mirrors the oracle SQL exactly
-    * (left-to-right) so both engines round the same doubles —
-    * SURVEY §4.
+    * [[bm25TopK]] and the other BM25 rankers (round + top-k).
+    * Association order mirrors the oracle SQL exactly (left-to-right)
+    * so both engines round the same doubles — SURVEY §4.
     */
   private def bm25Scores(spark: SparkSession, dir: String, queryTerms: Seq[String],
                          k1: Double, b: Double): DataFrame =
-    bm25Sums(spark, dir, ensureModel(spark, dir), queryTerms.distinct.map(_ -> 1.0), k1, b)
+    summed(bm25Terms(spark, dir, ensureModel(spark, dir), queryTerms.distinct.map(_ -> 1.0),
+      k1, b))
 
-  /** Σ over the weighted query terms of qw·idf(t)·tf·(k1+1) /
-    * (tf + k1·(1 − b + b·dl/avgdl)) per document (doc_id, ts). Each
-    * in-vocabulary term's factor qw·idf(t) is folded on the driver
-    * from the [[termIdf]] memo (qw = 1.0 leaves idf(t) bit-equal) and
-    * rides a map literal; the scan reads only those terms' `tf` rows.
+  /** qw·idf(t)·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) per posting
+    * of a weighted query term (doc_id, c); a document's BM25 score is
+    * the sum of its `c` ([[summed]]). Each in-vocabulary term's factor
+    * qw·idf(t) is folded on the driver from the [[termIdf]] memo
+    * (qw = 1.0 leaves idf(t) bit-equal) and rides a map literal; the
+    * scan reads only those terms' `tf` rows.
     */
-  private def bm25Sums(spark: SparkSession, dir: String, m: TfidfModel,
-                       qw: Seq[(String, Double)], k1: Double, b: Double): DataFrame = {
+  private def bm25Terms(spark: SparkSession, dir: String, m: TfidfModel,
+                        qw: Seq[(String, Double)], k1: Double, b: Double): DataFrame = {
     val idf = termIdf(spark, m)
     val f = qw.flatMap { case (t, w) => idf.get(t).map(s => t -> w * s.bm25) }.toMap
     val (dl, avgdl) = ensureBm25(spark, dir, m)
     m.tf.where(col("term").isin(f.keys.toSeq.sorted: _*))
       .join(dl, "doc_id")
-      .crossJoin(broadcast(avgdl))
-      .groupBy(col("doc_id"))
-      .agg(sum(element_at(typedlit(f), col("term")) * col("tf") * (lit(k1) + lit(1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
-        .as("ts"))
+      .select(col("doc_id"), (element_at(typedlit(f), col("term")) * col("tf") *
+        (lit(k1) + lit(1.0)) /
+        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / param(avgdl))))
+        .as("c"))
   }
 
   /** Raw-text BM25 front door — same tokenizer contract as
@@ -508,8 +522,8 @@ object TextRetrieval {
       .orderBy(col("sw").desc, col("term"))
       .limit(expandK)
       .select(col("term")).collect().map(_.getString(0)).toSeq
-    bm25Sums(spark, dir, m,
-      queryTerms.distinct.map(t => (t, 1.0)) ++ expanded.map(t => (t, 0.5)), k1, b)
+    summed(bm25Terms(spark, dir, m,
+      queryTerms.distinct.map(t => (t, 1.0)) ++ expanded.map(t => (t, 0.5)), k1, b))
       .select(col("doc_id"), round(col("ts"), 5).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -599,38 +613,109 @@ object TextRetrieval {
     }
   }
 
+  /** A candidate as the blend's scan returns it: the vector leg `vs`,
+    * the keyword leg `ts` (None: no posting) and the cut key
+    * round(vs·alpha, 5).
+    */
+  private[operators] case class BlendCand(doc_id: Long, vs: Option[Double], ts: Option[Double],
+                                          key: Option[Double])
+
+  /** One scan partition's share of the blend: every posted candidate,
+    * the k first unposted ones by (key, doc_id) under
+    * [[TopK.scoreOrdering]], and the partition's unposted count.
+    */
+  private[operators] case class BlendCut(posted: Seq[BlendCand], top: Seq[BlendCand],
+                                         unposted: Long)
+
+  private def cutPartition(rows: Iterator[BlendCand], k: Int): BlendCut = {
+    val order = TopK.scoreOrdering.on[BlendCand](c => (c.key.getOrElse(Double.NaN), c.doc_id))
+    val posted = mutable.ArrayBuffer.empty[BlendCand]
+    val top = mutable.PriorityQueue.empty[BlendCand](order) // head: the last one kept
+    var unposted = 0L
+    rows.foreach { c =>
+      if (c.ts.isDefined) posted += c
+      else {
+        unposted += 1
+        if (top.size < k) top.enqueue(c)
+        else if (k > 0 && order.lt(c, top.head)) { top.dequeue(); top.enqueue(c) }
+      }
+    }
+    BlendCut(posted.toSeq, top.toSeq, unposted)
+  }
+
+  private lazy val candEncoder = Encoders.product[BlendCand]
+  private lazy val cutEncoder = Encoders.product[BlendCut]
+
+  private val blendInput = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+    StructField("vs", DoubleType), StructField("ts", DoubleType, nullable = false)))
+
   /** The reference's hybrid blend of the candidates' vector leg `vs`
-    * (doc_id, vs) and the sparse keyword leg `ts` (doc_id, ts; a
-    * candidate without a posting reads 0): min-max-normalize ts OVER
-    * THE CANDIDATE SET (app.py:205-212 — filters apply before
+    * (doc_id, vs) and the sparse keyword leg, given as its per-posting
+    * terms (doc_id, c) whose per-document sum is `ts` (a candidate
+    * without a posting reads 0): min-max-normalize ts OVER THE
+    * CANDIDATE SET (app.py:205-212 — filters apply before
     * normalization, so the blend is filter-relative exactly like
     * `search_products_hybrid` running inside `candidate_indices()`),
     * then alpha·vs + (1-alpha)·minmax(ts), including the max>min guard
-    * and the 1e-12 denominator epsilon.
+    * and the 1e-12 denominator epsilon; top k by (hybrid_score DESC,
+    * doc_id) under [[TopK.scoreOrdering]], NaN last.
     *
-    * One action: the min/max aggregate joins the candidate ids (the
-    * `embedding` column pruned away) to the same broadcast of `ts` as
-    * the scoring side, so the sparse leg's exchange is reused and the
-    * leg executes once; the scoring side reads `embedding` in the
-    * plan's only embedding scan and ends in TakeOrderedAndProject.
+    * Three passes, and the Spark jobs are those of passes 1 and 2:
+    *  1. The keyword leg is collected and summed per document on the
+    *     driver (a TF-IDF leg: the postings ⋈ `norms` broadcast and the
+    *     result job; no shuffle). Driver memory is O(postings of the
+    *     query terms).
+    *  2. One scan of the candidates computes `vs`, looks `ts` up in a
+    *     map read by reference (`VecExpressions.longDoubleMap`, a
+    *     [[param]] whose plan string does not grow with the map) and
+    *     the cut key round(vs·alpha, 5) through a [[param]] (so fresh
+    *     query values compile nothing), and
+    *     returns, per partition, every posted candidate, the k first
+    *     unposted ones by (key, doc_id), and the unposted count.
+    *  3. The driver takes min/max of ts over the candidates, applies
+    *     the blend's Column expressions to the ≤ |posted| +
+    *     k·partitions returned rows (a local relation: no job), and
+    *     returns the first k as a local relation.
+    *
+    * Exactness: every keyword term is > 0 (smooth idf > 0, BM25 idf =
+    * ln(…+1) > 0, L2-normalized weights > 0), so ts ≥ 0. When an
+    * unposted candidate exists its ts is 0, so mn = 0 and its
+    * normalized tn is 0.0 whatever mx is; its score is then
+    * round(vs·alpha + 0.0, 5), equal to its cut key, and unposted
+    * candidates rank among themselves by (key, doc_id) alone. The
+    * unposted rows of the global top k are therefore among the
+    * per-partition cuts, and every posted row is returned, so the
+    * driver's top k is the top k over all candidates.
     */
-  private def blend(vs: DataFrame, ts: DataFrame, alpha: Double, k: Int,
-                    tsName: String = "tfidf_score"): DataFrame = {
-    val leg = broadcast(ts)
-    def posted(c: DataFrame): DataFrame = c.join(leg, Seq("doc_id"), "left")
-      .withColumn("ts", coalesce(col("ts"), lit(0.0)))
-    val stats = posted(vs.select(col("doc_id")))
-      .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"))
-    posted(vs).crossJoin(broadcast(stats))
-      .withColumn("tn", when(col("mx") > col("mn"),
-        (col("ts") - col("mn")) / (col("mx") - col("mn") + lit(1e-12))).otherwise(col("ts")))
+  private def blend(spark: SparkSession, vs: DataFrame, terms: DataFrame, alpha: Double,
+                    k: Int, tsName: String = "tfidf_score"): DataFrame = {
+    val ts = mutable.LongMap.empty[Double]
+    terms.collect().foreach { r =>
+      val (id, c) = (r.getLong(0), r.getDouble(1))
+      ts(id) = ts.get(id).fold(c)(_ + c)
+    }
+    val (ids, sums) = ts.toArray.unzip
+    val cuts = vs.select(col("doc_id"), col("vs"), longDoubleMap(ids, sums)(col("doc_id")).as("ts"),
+        round(col("vs") * param(alpha), 5).as("key"))
+      .as(candEncoder).mapPartitions(rows => Iterator(cutPartition(rows, k)))(cutEncoder).collect()
+    val legs: Seq[Double] = cuts.iterator.flatMap(_.posted).flatMap(_.ts).toSeq ++
+      (if (cuts.exists(_.unposted > 0)) Seq(0.0) else Nil)
+    val (mn, mx) = if (legs.isEmpty) (0.0, 0.0) else (legs.min, legs.max)
+    val rows = cuts.iterator.flatMap(c => c.posted ++ c.top)
+      .map(c => Row(c.doc_id, c.vs.map(Double.box).orNull, c.ts.getOrElse(0.0))).toSeq
+    val tn = when(lit(mx) > lit(mn),
+      (col("ts") - lit(mn)) / (lit(mx) - lit(mn) + lit(1e-12))).otherwise(col("ts"))
+    val blended = spark.createDataFrame(rows.asJava, blendInput)
       .select(
         col("doc_id"),
-        round(col("vs") * alpha + col("tn") * (1 - alpha), 5).as("hybrid_score"),
+        round(col("vs") * alpha + tn * (1 - alpha), 5).as("hybrid_score"),
         round(col("vs"), 5).as("vector_score"),
-        round(col("tn"), 5).as(tsName))
-      .orderBy(col("hybrid_score").desc, col("doc_id"))
-      .limit(k)
+        round(tn, 5).as(tsName))
+    val first = blended.collect()
+      .sortBy(r => (if (r.isNullAt(1)) Double.NaN else r.getDouble(1), r.getLong(0)))(
+        TopK.scoreOrdering)
+      .take(k)
+    spark.createDataFrame(first.toSeq.asJava, blended.schema)
   }
 
   /** Free-text hybrid search — the reference's ACTUAL interactive path
@@ -649,8 +734,8 @@ object TextRetrieval {
   def hybridTopKFree(spark: SparkSession, dir: String, qv: Array[Float],
                      queryTerms: Seq[String], alpha: Double, k: Int,
                      metaFilter: Option[Column] = None): DataFrame =
-    blend(vectorCandidates(spark, dir, qv, metaFilter),
-      tfidfScores(spark, ensureModel(spark, dir), queryTerms), alpha, k)
+    blend(spark, vectorCandidates(spark, dir, qv, metaFilter),
+      tfidfTerms(spark, ensureModel(spark, dir), queryTerms), alpha, k)
 
   /** (doc_id, vs) of every candidate against a caller vector. */
   private def vectorCandidates(spark: SparkSession, dir: String, qv: Array[Float],
@@ -689,12 +774,12 @@ object TextRetrieval {
     val wn = m.w.join(m.norms, "doc_id")
       .select(col("doc_id"), col("term"), (col("w") / col("nrm")).as("wn"))
     val qw = wn.where(col("doc_id") === queryDoc).select(col("term"), col("wn").as("qwn"))
-    val ts = wn.where(col("doc_id") =!= queryDoc)
+    val terms = wn.where(col("doc_id") =!= queryDoc)
       .join(broadcast(qw), "term")
-      .groupBy("doc_id").agg(sum(col("wn") * col("qwn")).as("ts"))
+      .select(col("doc_id"), (col("wn") * col("qwn")).as("c"))
     val vs = vectorCandidates(spark, dir, memberVector(spark, dir, queryDoc), metaFilter)
       .where(col("doc_id") =!= param(queryDoc))
-    blend(vs, ts, alpha, k)
+    blend(spark, vs, terms, alpha, k)
   }
 
   /** BM25-keyword-leg hybrid — the reference's blend contract
@@ -707,13 +792,14 @@ object TextRetrieval {
     * search: the blend AND its min-max run inside the filtered set.
     * Output: (doc_id, hybrid_score, vector_score, bm25_score).
     *
-    * Same one-action shape as [[hybridTopKFree]] ([[blend]]).
+    * Same three-pass shape as [[hybridTopKFree]] ([[blend]]).
     */
   def bm25HybridTopK(spark: SparkSession, dir: String, qv: Array[Float],
                      queryTerms: Seq[String], alpha: Double, k: Int,
                      metaFilter: Option[Column] = None,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    blend(vectorCandidates(spark, dir, qv, metaFilter), bm25Scores(spark, dir, queryTerms, k1, b),
+    blend(spark, vectorCandidates(spark, dir, qv, metaFilter),
+      bm25Terms(spark, dir, ensureModel(spark, dir), queryTerms.distinct.map(_ -> 1.0), k1, b),
       alpha, k, tsName = "bm25_score")
 
   /** Raw-text BM25-hybrid front door — same tokenizer contract as the

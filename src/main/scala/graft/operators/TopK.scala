@@ -16,6 +16,13 @@ import graft.Tables
   *    (distance ASC, id ASC) for distances. Ties therefore break
   *    toward the lower id on every engine, and the DuckDB oracles
   *    replay the same ORDER BY.
+  *  - NaN ranks last. A NaN score (a vector with a NaN component)
+  *    sorts after every number, level with a null score, and ties
+  *    among them break by id. Spark alone would sort NaN above every
+  *    number and rank such a vector first under DESC. `-0.0` and
+  *    `0.0` are equal, as in Spark's sort. [[scoreOrdering]] is the
+  *    same order on the driver, for cuts that run outside a Spark
+  *    sort.
   *  - [[first]] is ORDER BY … LIMIT k, which Spark plans as
   *    TakeOrderedAndProject: a bounded heap per input partition,
   *    merged on the driver. No exchange, no full sort of the corpus.
@@ -47,9 +54,25 @@ import graft.Tables
   */
 object TopK {
 
-  /** The similarity total order: `score` DESC, then `id` ASC. */
+  /** The similarity total order: `score` DESC with NaN and null after
+    * every number, then `id` ASC.
+    */
   def byScore(id: String, score: String = "score"): Seq[Column] =
-    Seq(col(score).desc, col(id))
+    Seq(when(isnan(col(score)), lit(null)).otherwise(col(score)).desc, col(id))
+
+  /** [[byScore]] on the driver, over (score, id) with NaN standing for
+    * a null score: the row that ranks first compares lowest.
+    */
+  val scoreOrdering: Ordering[(Double, Long)] = (x, y) => {
+    val (a, b) = (x._1, y._1)
+    val c =
+      if (a.isNaN) { if (b.isNaN) 0 else 1 }
+      else if (b.isNaN) -1
+      else if (a == b) 0
+      else if (a > b) -1
+      else 1
+    if (c != 0) c else java.lang.Long.compare(x._2, y._2)
+  }
 
   /** The first k rows of `df` under `order` (see the rank rules). */
   def first(df: DataFrame, k: Int, order: Column*): DataFrame =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types.DataType
 
 /** A per-request value that generated code reads at run time instead
@@ -20,6 +21,9 @@ import org.apache.spark.sql.types.DataType
   * value of one type, and the codegen cache serves every request
   * after the first of its shape. Array and string Literals are
   * already passed by reference; only primitives need this.
+  *
+  * A map value (a per-request lookup table) prints as its size, so
+  * the table does not grow every plan string and explain output.
   *
   * Not for values a scan predicate needs: parquet pushdown and
   * partition pruning translate Literals only, so a lookup key or a
@@ -42,5 +46,8 @@ case class Param(value: Any, dataType: DataType) extends LeafExpression {
         value = JavaCode.variable(v, dataType))
     }
 
-  override def toString: String = s"param($value)"
+  override def toString: String = value match {
+    case m: MapData => s"param(map of ${m.numElements()})"
+    case v => s"param($v)"
+  }
 }

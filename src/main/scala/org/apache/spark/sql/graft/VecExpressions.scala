@@ -6,9 +6,11 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, MapType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd dense dot product over array<float> / array<double>
@@ -201,4 +203,13 @@ object VecExpressions {
     val l = Literal(v)
     ExpressionUtils.column(Param(l.value, l.dataType))
   }
+
+  /** A per-request bigint → double map as a [[Param]]: looked up like a
+    * map literal, but its plan string stays one short token however
+    * many entries it holds. */
+  def longDoubleMap(keys: Array[Long], values: Array[Double]): Column =
+    ExpressionUtils.column(Param(
+      new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(keys),
+        UnsafeArrayData.fromPrimitiveArray(values)),
+      MapType(LongType, DoubleType, valueContainsNull = false)))
 }

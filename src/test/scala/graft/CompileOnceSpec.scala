@@ -11,7 +11,8 @@ import graft.operators.{Ivf, TextRetrieval, VectorSearch}
   * with fresh values (query vector, query text, probed cells) runs on
   * the generated classes of earlier requests of its shape. A
   * per-request primitive folded into the generated source would make
-  * every request compile anew.
+  * every request compile anew. The hybrids cover the blend's keyword
+  * map literal and its candidate scan's cut key.
   */
 class CompileOnceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -41,6 +42,11 @@ class CompileOnceSpec extends AnyFunSuite {
         "topKText" -> (i => VectorSearch.topKText(spark, sf, texts(i), 10)),
         "hybridTopKFree" -> (i =>
           TextRetrieval.hybridTopKFree(spark, sf, vecs(i), texts(i), 0.7, 10, None)),
+        "hybridTopKFree metaFilter" -> (i =>
+          TextRetrieval.hybridTopKFree(spark, sf, vecs(i), texts(i), 0.7, 10,
+            Some(col("lang") === "en" && col("n_chars") >= 200L))),
+        "bm25HybridTopK" -> (i =>
+          TextRetrieval.bm25HybridTopK(spark, sf, vecs(i), texts(i), 0.7, 10, None)),
         "ivfTopKVec" -> (i => Ivf.ivfTopKVec(spark, sf, vecs(i), 16, 4, 10)))
       val fresh = calls.map { case (name, call) =>
         call(0).collect()

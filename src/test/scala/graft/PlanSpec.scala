@@ -375,73 +375,87 @@ class PlanSpec extends AnyFunSuite {
     })
   }
 
-  /** The executed file scans of a collected frame, and the exchanges
-    * its plan reused (each a [[org.apache.spark.sql.execution.exchange.ReusedExchangeExec]]'s
-    * original).
+  /** The executed plans of every query one warm call runs (its eager
+    * driver passes plus the returned frame's `collect()`), and the
+    * Spark jobs they submit. A first call warms the model memos.
     */
-  private def scansAndReuse(df: org.apache.spark.sql.DataFrame)
-      : (Seq[org.apache.spark.sql.execution.SparkPlan],
-         Seq[org.apache.spark.sql.execution.FileSourceScanExec],
-         Seq[org.apache.spark.sql.execution.SparkPlan]) = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    df.collect()
-    val nodes = allExecNodes(df.queryExecution.executedPlan)
-    (nodes, nodes.collect { case s: FileSourceScanExec => s },
-      nodes.collect { case r: ReusedExchangeExec => r.child })
+  private def warmCall(call: () => org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graft.GraftBus
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    call().collect()
+    GraftBus.drain(sc)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(ql)
+    sc.addSparkListener(jl)
+    try {
+      call().collect()
+      GraftBus.drain(sc)
+    } finally {
+      spark.listenerManager.unregister(ql)
+      sc.removeSparkListener(jl)
+    }
+    (plans.toArray(Array.empty[QueryExecution]).toSeq.map(_.executedPlan), jobs.get)
   }
 
-  /** The one-action blend: no scratch cache and no file scan executed
-    * twice; the keyword leg's model table `leg` is read by ONE executed
-    * scan, under an exchange the plan reuses (the min/max side and the
-    * scoring side share it); and `embedding` is read by one scan only
-    * (the min/max side reads the candidate ids alone).
+  /** The hybrid blend's shape over one warm call of SparkEntry query
+    * `name`: no scratch cache, no file scan executed twice, `embedding`
+    * read by `embeddingScans` scans (the candidate scan, plus the member
+    * lookup of a by-id query), and at most `maxJobs` Spark jobs. Returns
+    * the executed file scans.
     */
-  private def assertOneActionBlend(df: org.apache.spark.sql.DataFrame, leg: String): Unit = {
+  private def assertBlendShape(name: String, maxJobs: Int, embeddingScans: Int = 1)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val (nodes, scans, reused) = scansAndReuse(df)
-    val shown = df.queryExecution.executedPlan.toString.take(4000)
+    val (plans, jobs) = warmCall(() => SparkEntry.queries(name)(spark, TestSpark.sf))
+    val nodes = plans.flatMap(allExecNodes)
+    val scans = nodes.collect { case s: FileSourceScanExec => s }
+    val shown = plans.map(_.toString.take(1500)).mkString("\n---\n")
     assert(!nodes.exists(_.getClass.getSimpleName.startsWith("InMemoryTableScan")),
-      "the blend must not go through a scratch cache:\n" + shown)
+      s"$name must not go through a scratch cache:\n" + shown)
     assert(scans.map(_.canonicalized).distinct.size == scans.size,
-      "a file scan executes twice:\n" + scans.mkString("\n"))
-    def readsLeg(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-      allExecNodes(p).exists {
-        case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == leg)
-        case _ => false
-      }
-    assert(scans.count(readsLeg) == 1, s"`$leg` must be read by one executed scan:\n" + shown)
-    assert(reused.exists(readsLeg), s"the `$leg` leg's exchange must be reused:\n" + shown)
-    assert(scans.count(_.requiredSchema.fieldNames.contains("embedding")) == 1,
-      "`embedding` must be read by one scan only:\n" + scans.mkString("\n"))
+      s"$name executes a file scan twice:\n" + scans.mkString("\n"))
+    assert(scans.count(_.requiredSchema.fieldNames.contains("embedding")) == embeddingScans,
+      s"$name must read `embedding` in $embeddingScans scan(s):\n" + scans.mkString("\n"))
+    assert(jobs <= maxJobs, s"$name ran $jobs Spark jobs, bound $maxJobs:\n" + shown)
+    scans
   }
 
+  /** The documents scan of a filtered hybrid carries both metadata
+    * predicates as pushed parquet filters. */
+  private def assertFiltersPushed(scans: Seq[org.apache.spark.sql.execution.FileSourceScanExec])
+      : Unit = {
+    val pushed = scans
+      .filter(_.relation.location.rootPaths.exists(_.getName == "documents.parquet"))
+      .map(_.metadata.getOrElse("PushedFilters", "")).mkString(" ")
+    assert(pushed.contains("EqualTo(lang,en)"), pushed)
+    assert(pushed.contains("GreaterThanOrEqual(n_chars,200)"), pushed)
+  }
+
+  // Job bounds: the free-text forms run the keyword leg (2 jobs) and
+  // the candidate scan (1); the by-id and filtered bounds are the
+  // counts of the earlier one-plan blend (hybrid_topk 9,
+  // hybrid_filtered 10, hybrid_filtered_free 7, bm25_hybrid_filtered 8).
   test("hybrid blend materializes the candidate subtree once (no double corpus scan)") {
-    // the serving path (free-text query) blends in one action
-    assertOneActionBlend(graft.operators.TextRetrieval.hybridTopKFree(spark, TestSpark.sf,
-      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), alpha = 0.7, k = 10), "w")
-    // more-like-this also reads the query document's own `w` rows and
-    // embedding (two lookup scans), but still executes no scan twice
-    // and no scratch cache
-    val (nodes, scans, reused) = scansAndReuse(graft.operators.TextRetrieval.hybridTopK(
-      spark, TestSpark.sf, queryDoc = 0, alpha = 0.7, k = 10))
-    assert(!nodes.exists(_.getClass.getSimpleName.startsWith("InMemoryTableScan")))
-    assert(scans.map(_.canonicalized).distinct.size == scans.size,
-      "a file scan executes twice:\n" + scans.mkString("\n"))
-    assert(reused.nonEmpty, "the keyword leg's exchange must be reused")
+    assertBlendShape("hybrid_topk_free", maxJobs = 3)
+    assertBlendShape("hybrid_topk_text", maxJobs = 3)
+    assertBlendShape("hybrid_topk", maxJobs = 9, embeddingScans = 2)
   }
 
   test("bm25 hybrid blend shares the single-scan shape and pushes candidate filters") {
-    import org.apache.spark.sql.functions.col
-    assertOneActionBlend(graft.operators.TextRetrieval.bm25HybridTopK(spark, TestSpark.sf,
-      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), alpha = 0.7, k = 10), "tf")
-    // the filtered variant pushes the metadata predicates into the
-    // documents scan
-    val p = plan(graft.operators.TextRetrieval.bm25HybridTopK(spark, TestSpark.sf,
-      SparkEntry.demoQueryVec, Seq("spark", "join", "vector"), 0.7, 10,
-      Some(col("lang") === "en" && col("n_chars") >= 200L)))
-    assert(p.contains("EqualTo(lang,en)"), p.take(1200))
-    assert(p.contains("GreaterThanOrEqual(n_chars,200)"), p.take(1200))
+    assertBlendShape("bm25_hybrid_topk", maxJobs = 3)
+    assertFiltersPushed(assertBlendShape("bm25_hybrid_filtered", maxJobs = 8))
   }
 
   test("array-membership filtered search keeps array_contains off the explode path") {
@@ -480,13 +494,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("filtered hybrid search pushes the metadata filters into the documents scan") {
-    import org.apache.spark.sql.functions.col
-    val df = graft.operators.TextRetrieval.hybridTopK(spark, TestSpark.sf,
-      queryDoc = 0, alpha = 0.7, k = 10,
-      metaFilter = Some(col("lang") === "en" && col("n_chars") >= 200L))
-    val p = plan(df)
-    assert(p.contains("EqualTo(lang,en)"), p.take(1200))
-    assert(p.contains("GreaterThanOrEqual(n_chars,200)"), p.take(1200))
+    assertFiltersPushed(assertBlendShape("hybrid_filtered", maxJobs = 10, embeddingScans = 2))
+    assertFiltersPushed(assertBlendShape("hybrid_filtered_free", maxJobs = 7))
   }
 
   test("random projection is a narrow map (no hash-partitioned shuffle)") {

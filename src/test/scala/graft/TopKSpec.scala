@@ -66,6 +66,48 @@ class TopKSpec extends AnyFunSuite {
     })
   }
 
+  test("scoreOrdering sorts (score, id) exactly as Spark sorts byScore: NaN and null last") {
+    import spark.implicits._
+    val scores = Seq(Some(Double.NaN), None, Some(-0.0), Some(0.0), Some(0.25), Some(-0.5),
+      Some(1.0))
+    check(Prop.forAll(for {
+      n <- Gen.choose(0, 30)
+      ids <- Gen.pick(n, 0L until 100L)
+      ss <- Gen.listOfN(n, Gen.oneOf(scores))
+    } yield ids.toSeq.zip(ss)) { rows =>
+      val bySpark = rows.toDF("id", "score").orderBy(TopK.byScore("id"): _*)
+        .collect().map(_.getLong(0)).toSeq
+      val driver = rows.sortBy { case (id, s) => (s.getOrElse(Double.NaN), id) }(
+        TopK.scoreOrdering).map(_._1)
+      bySpark == driver
+    })
+  }
+
+  test("a vector with a NaN component ranks after every number, never first") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-nan").toString
+    val embs = Seq(
+      0L -> Seq(Float.NaN, 1f, 0f), 1L -> Seq(1f, 0f, 0f), 2L -> Seq(0f, 1f, 0f),
+      3L -> Seq(1f, 1f, 0f))
+    embs.map { case (id, _) => (id, if (id == 0L) "apple" else "berry", "en", "gen", 5L) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars").write.parquet(s"$dir/documents.parquet")
+    embs.map { case (id, e) => (id, e, 0) }.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val q = Array(1f, 0f, 0f)
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
+    val calls = Seq(
+      "topKVec" -> graft.operators.VectorSearch.topKVec(spark, dir, q, 10),
+      // the NaN document posted, then unposted
+      "hybridTopKFree posted" ->
+        graft.operators.TextRetrieval.hybridTopKFree(spark, dir, q, Seq("apple"), 0.7, 10),
+      "hybridTopKFree unposted" ->
+        graft.operators.TextRetrieval.hybridTopKFree(spark, dir, q, Seq("berry"), 0.7, 10))
+    calls.foreach { case (name, df) =>
+      val got = ids(df)
+      assert(got.size == 4 && got.last == 0L, s"$name ranked the NaN vector at ${got.indexOf(0L)}: $got")
+    }
+  }
+
   test("the vector families rank only through TopK (no hand-written cut, rank window or constKey)") {
     val files = Seq("VectorSearch", "Ivf", "GraphAnn", "Lsh", "Quantized",
       "ReferenceInterop").map(f => s"src/main/scala/graft/operators/$f.scala") :+
