@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dense-vector column functions over `array<float>` embedding columns.
@@ -74,10 +74,12 @@ object VectorFunctions {
 
   /** HALF_UP at 5 decimals — SQL round()'s rule on Spark and DuckDB,
     * for scores and metrics computed on the driver (rint's half-even
-    * would diverge on .000005).
+    * would diverge on .000005). NaN and ±∞ pass through, as Spark's
+    * `round` leaves them.
     */
   def r5(x: Double): Double =
-    BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** The one error of a by-id search whose id is not a row of
     * `source` (the corpus file, or the reference matrix a frame reads).
@@ -85,20 +87,54 @@ object VectorFunctions {
   def memberNotFound(source: String, id: Long): IllegalArgumentException =
     new IllegalArgumentException(s"query vector $id not found in $source")
 
-  /** A corpus member's embedding by id, or [[memberNotFound]]: the
-    * query of every by-id search, looked up once on the driver, which
-    * then scores through the by-vector path with the member excluded
-    * (`vec_id =!= param(id)`).
+  /** The error of a by-id search whose member row cannot be a query:
+    * `what` names the defect (a null embedding, a null element).
     */
-  def memberVector(spark: SparkSession, dir: String, id: Long): Array[Float] =
-    memberVector(graft.Tables.embeddings(spark, dir), id, s"$dir/embeddings.parquet")
+  def memberInvalid(source: String, id: Long, what: String): IllegalArgumentException =
+    new IllegalArgumentException(s"query vector $id in $source has $what")
+
+  /** A corpus member's embedding by id, or [[memberNotFound]]: the
+    * query of every by-id search, looked up once on the driver
+    * ([[memberRows]]: no Spark job when the table's zone map isolates
+    * the id's row group), which then scores through the by-vector path
+    * with the member excluded (`vec_id =!= param(id)`).
+    */
+  def memberVector(spark: SparkSession, dir: String, id: Long): Array[Float] = {
+    val source = s"$dir/embeddings.parquet"
+    memberRows(spark, dir, Seq(id)).headOption
+      .map(r => memberEmbedding(source, id, r.getSeq[Any](1)))
+      .getOrElse(throw memberNotFound(source, id))
+  }
 
   /** [[memberVector]] over any (vec_id, embedding) frame, `source`
-    * naming it in the error.
+    * naming it in the error: one Spark lookup, its `vec_id = <id>` a
+    * literal parquet can push down.
     */
   def memberVector(frame: DataFrame, id: Long, source: String): Array[Float] =
     frame.where(col("vec_id") === id)
       .select(col("embedding")).collect().headOption
+      .map(r => memberEmbedding(source, id, r.getSeq[Any](0)))
       .getOrElse(throw memberNotFound(source, id))
-      .getSeq[Float](0).toArray
+
+  /** The (vec_id, embedding) rows of the corpus members `ids` (absent
+    * ids omitted): one driver point read ([[graft.sources.PointRead]]),
+    * or, when the zone map leaves an id more than one candidate row
+    * group, one Spark lookup with the ids pushed into the scan.
+    */
+  def memberRows(spark: SparkSession, dir: String, ids: Seq[Long]): Seq[Row] =
+    graft.sources.PointRead.members(spark, s"$dir/embeddings.parquet", ids).getOrElse(
+      graft.Tables.embeddings(spark, dir).where(col("vec_id").isin(ids.distinct: _*))
+        .select(col("vec_id"), col("embedding")).collect().toSeq)
+
+  /** A member's collected `embedding` as a query vector, or
+    * [[memberInvalid]] for a null embedding or a null element (which
+    * unboxing would otherwise read as a raw NullPointerException or a
+    * silent 0.0).
+    */
+  def memberEmbedding(source: String, id: Long, emb: scala.collection.Seq[Any]): Array[Float] = {
+    if (emb == null) throw memberInvalid(source, id, "a null embedding")
+    val hole = emb.indexOf(null)
+    if (hole >= 0) throw memberInvalid(source, id, s"a null element at position $hole")
+    emb.iterator.map(_.asInstanceOf[Float]).toArray
+  }
 }

@@ -5,11 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.VecExpressions.longDoubleMap
+import org.apache.spark.sql.graft.VecExpressions.longDoubleTable
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.sources.IndexStore
+import graft.sources.{DriverMemo, IndexStore}
 
 /** TF-IDF retrieval and hybrid (vector + keyword) search.
   *
@@ -199,7 +199,7 @@ object TextRetrieval {
     * per request. Driver memory is O(vocabulary).
     */
   private def termIdf(spark: SparkSession, m: TfidfModel): Map[String, TermIdf] =
-    graft.sources.DriverMemo.memo(spark, s"${m.path}#idf") {
+    DriverMemo.memo(spark, s"${m.path}#idf") {
       m.dfT.crossJoin(broadcast(m.n))
         .select(col("term"),
           (log((col("n") + 1) / (col("df") + 1)) + 1).as("idf"),
@@ -220,20 +220,40 @@ object TextRetrieval {
     (qw.toMap, math.sqrt(qw.foldLeft(0.0) { case (acc, (_, w)) => acc + w * w }))
   }
 
+  /** A per-document constant table (doc_id, value) of a model
+    * artifact — the TF-IDF `norms`, the BM25 `dl` — as a
+    * [[longDoubleTable]] lookup, collected once per fingerprinted
+    * artifact path `key` ([[DriverMemo]]), so no keyword query joins or
+    * broadcasts the O(documents) table per request. Driver memory is
+    * O(documents) once per model, where the broadcast shipped that much
+    * on every request. Every posting's document has a row: both tables
+    * aggregate the postings they serve.
+    */
+  private def perDocument(spark: SparkSession, key: String,
+                          table: => DataFrame): Column => Column =
+    DriverMemo.memo(spark, key) {
+      val rows = table.collect()
+      longDoubleTable(rows.map(_.getLong(0)), rows.map(_.getAs[Number](1).doubleValue))
+    }
+
+  /** `nrm` of a document: the L2 norm of its `w` row. */
+  private def norms(spark: SparkSession, m: TfidfModel): Column => Column =
+    perDocument(spark, s"${m.path}#norms", m.norms.select("doc_id", "nrm"))
+
   /** (doc_id, c): one TF-IDF cosine term per posting of a query term;
     * a document's cosine `ts` is the sum of its `c`. The scan reads
     * only the query terms' `w` rows (a literal IN list parquet pushes
-    * down); the weights ride a map literal and the query norm a
-    * [[param]], so the generated code is the same for every query of
-    * the same length.
+    * down); the document norms come from the [[norms]] lookup, the
+    * weights ride a map literal and the query norm a [[param]], so the
+    * generated code is the same for every query of the same length.
     */
   private def tfidfTerms(spark: SparkSession, m: TfidfModel,
                          queryTerms: Seq[String]): DataFrame = {
     val (qw, qn) = queryWeights(spark, m, queryTerms)
+    val nrm = norms(spark, m)
     m.w.where(col("term").isin(qw.keys.toSeq.sorted: _*))
-      .join(m.norms, "doc_id")
-      .select(col("doc_id"),
-        (col("w") / col("nrm") * element_at(typedlit(qw), col("term")) / param(qn)).as("c"))
+      .select(col("doc_id"), (col("w") / nrm(col("doc_id")) *
+        element_at(typedlit(qw), col("term")) / param(qn)).as("c"))
   }
 
   /** (doc_id, ts): the per-document sum of a leg's (doc_id, c) terms. */
@@ -262,11 +282,12 @@ object TextRetrieval {
     * TF-IDF. Build-once under the same fingerprint-addressed layout as
     * the model itself; `avg` is written LAST so the completeness
     * marker rides the publish rename. `avgdl` is read once per
-    * artifact path into a [[graft.sources.DriverMemo]] (NaN for an
-    * empty corpus) and enters query plans as a [[param]].
+    * artifact path into a [[DriverMemo]] (NaN for an empty corpus) and
+    * enters query plans as a [[param]]; `dl` is a [[perDocument]]
+    * lookup (an exact double of the bigint length).
     */
   private def ensureBm25(spark: SparkSession, dir: String,
-                         m: TfidfModel): (DataFrame, Double) = {
+                         m: TfidfModel): (Column => Column, Double) = {
     val base = IndexStore.indexPath(spark, "bm25_v1", s"$dir/documents.parquet", "dl")
     IndexStore.publish(spark, base) { tmp =>
       m.tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
@@ -274,11 +295,12 @@ object TextRetrieval {
       spark.read.parquet(s"$tmp/dl").agg(avg(col("dl")).as("avgdl"))
         .write.mode("overwrite").parquet(s"$tmp/avg")
     }
-    val avgdl = graft.sources.DriverMemo.memo(spark, s"$base#avgdl") {
+    val avgdl = DriverMemo.memo(spark, s"$base#avgdl") {
       val r = IndexStore.open(spark, s"$base/avg").head()
       java.lang.Double.valueOf(if (r.isNullAt(0)) Double.NaN else r.getDouble(0))
     }
-    (IndexStore.open(spark, s"$base/dl"), avgdl.doubleValue)
+    (perDocument(spark, s"$base#dl", IndexStore.open(spark, s"$base/dl").select("doc_id", "dl")),
+      avgdl.doubleValue)
   }
 
   /** Okapi BM25 ranking — the standard keyword scorer the reference's
@@ -319,8 +341,9 @@ object TextRetrieval {
     * of a weighted query term (doc_id, c); a document's BM25 score is
     * the sum of its `c` ([[summed]]). Each in-vocabulary term's factor
     * qw·idf(t) is folded on the driver from the [[termIdf]] memo
-    * (qw = 1.0 leaves idf(t) bit-equal) and rides a map literal; the
-    * scan reads only those terms' `tf` rows.
+    * (qw = 1.0 leaves idf(t) bit-equal) and rides a map literal, `dl`
+    * comes from its [[perDocument]] lookup; the scan reads only those
+    * terms' `tf` rows.
     */
   private def bm25Terms(spark: SparkSession, dir: String, m: TfidfModel,
                         qw: Seq[(String, Double)], k1: Double, b: Double): DataFrame = {
@@ -328,10 +351,9 @@ object TextRetrieval {
     val f = qw.flatMap { case (t, w) => idf.get(t).map(s => t -> w * s.bm25) }.toMap
     val (dl, avgdl) = ensureBm25(spark, dir, m)
     m.tf.where(col("term").isin(f.keys.toSeq.sorted: _*))
-      .join(dl, "doc_id")
       .select(col("doc_id"), (element_at(typedlit(f), col("term")) * col("tf") *
         (lit(k1) + lit(1.0)) /
-        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / param(avgdl))))
+        (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl(col("doc_id")) / param(avgdl))))
         .as("c"))
   }
 
@@ -662,12 +684,13 @@ object TextRetrieval {
     *
     * Three passes, and the Spark jobs are those of passes 1 and 2:
     *  1. The keyword leg is collected and summed per document on the
-    *     driver (a TF-IDF leg: the postings ⋈ `norms` broadcast and the
-    *     result job; no shuffle). Driver memory is O(postings of the
-    *     query terms).
-    *  2. One scan of the candidates computes `vs`, looks `ts` up in a
-    *     map read by reference (`VecExpressions.longDoubleMap`, a
-    *     [[param]] whose plan string does not grow with the map) and
+    *     driver (one job of the term-pruned postings scan; the document
+    *     norms or lengths are a [[perDocument]] lookup; no shuffle).
+    *     Driver memory is O(postings of the query terms).
+    *  2. One scan of the candidates computes `vs`, looks `ts` up by
+    *     binary search in a sorted table read by reference
+    *     ([[longDoubleTable]], a [[param]] whose plan string does not
+    *     grow with it; O(log posted documents) per candidate) and
     *     the cut key round(vs·alpha, 5) through a [[param]] (so fresh
     *     query values compile nothing), and
     *     returns, per partition, every posted candidate, the k first
@@ -695,7 +718,8 @@ object TextRetrieval {
       ts(id) = ts.get(id).fold(c)(_ + c)
     }
     val (ids, sums) = ts.toArray.unzip
-    val cuts = vs.select(col("doc_id"), col("vs"), longDoubleMap(ids, sums)(col("doc_id")).as("ts"),
+    val cuts = vs.select(col("doc_id"), col("vs"),
+        longDoubleTable(ids, sums)(col("doc_id")).as("ts"),
         round(col("vs") * param(alpha), 5).as("key"))
       .as(candEncoder).mapPartitions(rows => Iterator(cutPartition(rows, k)))(cutEncoder).collect()
     val legs: Seq[Double] = cuts.iterator.flatMap(_.posted).flatMap(_.ts).toSeq ++
@@ -771,8 +795,8 @@ object TextRetrieval {
   def hybridTopK(spark: SparkSession, dir: String, queryDoc: Long, alpha: Double, k: Int,
                  metaFilter: Option[Column] = None): DataFrame = {
     val m = ensureModel(spark, dir)
-    val wn = m.w.join(m.norms, "doc_id")
-      .select(col("doc_id"), col("term"), (col("w") / col("nrm")).as("wn"))
+    val nrm = norms(spark, m)
+    val wn = m.w.select(col("doc_id"), col("term"), (col("w") / nrm(col("doc_id"))).as("wn"))
     val qw = wn.where(col("doc_id") === queryDoc).select(col("term"), col("wn").as("qwn"))
     val terms = wn.where(col("doc_id") =!= queryDoc)
       .join(broadcast(qw), "term")

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.TopK.byScore
@@ -420,23 +422,34 @@ object VectorSearch {
   }
 
   /** Pairwise cosine similarity matrix for a small id set
-    * (reference app.py:348-356, product comparison tab). The matrix
-    * has at most (distinct ids)² rows, so ordering it is a [[TopK.first]]
-    * cut at that bound — TakeOrderedAndProject, not a range-partitioned
-    * global sort.
+    * (reference app.py:348-356, product comparison tab), computed on
+    * the driver: the members come from one [[memberRows]] read (a
+    * driver point read when the zone map isolates every id: no Spark
+    * job), and each pair is scored by the driver twins of
+    * [[cosine5]] ([[dotLocal]], [[cosineLocal]], [[r5]]), bit-equal to
+    * the plan. Returns a local relation of at most (distinct ids)²
+    * rows ordered by (a_id, b_id); absent ids are omitted, a member
+    * with a null embedding or element fails with [[memberInvalid]], and
+    * a pair of mismatched dimensions scores null.
     */
   def simMatrix(spark: SparkSession, dir: String, ids: Seq[Long]): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .where(col("vec_id").isin(ids: _*))
-      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("nrm"))
-    val a = e.select(col("vec_id").as("a_id"), col("embedding").as("av"), col("nrm").as("an"))
-    val b = e.select(col("vec_id").as("b_id"), col("embedding").as("bv"), col("nrm").as("bn"))
+    val source = s"$dir/embeddings.parquet"
+    val vs = memberRows(spark, dir, ids).map { r =>
+      val v = memberEmbedding(source, r.getLong(0), r.getSeq[Any](1)).map(_.toDouble)
+      (r.getLong(0), v, math.sqrt(dotLocal(v, v)))
+    }
     val n = ids.distinct.size
-    TopK.first(a.crossJoin(broadcast(b))
-      .select(col("a_id"), col("b_id"),
-        cosine5(col("av"), col("bv"), col("an"), col("bn")).as("score")),
-      n * n, col("a_id"), col("b_id"))
+    val pairs = for ((a, av, an) <- vs; (b, bv, bn) <- vs) yield {
+      val score = if (av.length != bv.length) null
+        else Double.box(r5(cosineLocal(dotLocal(av, bv), an, bn)))
+      Row(a, b, score)
+    }
+    spark.createDataFrame(pairs.sortBy(r => (r.getLong(0), r.getLong(1))).take(n * n).asJava,
+      simMatrixSchema)
   }
+
+  private val simMatrixSchema = StructType(Seq(StructField("a_id", LongType),
+    StructField("b_id", LongType), StructField("score", DoubleType)))
 
   /** The evaluation core's sample rule — every batch kNN op and recall
     * sweep samples here, scores with [[batchScores]], takes ground

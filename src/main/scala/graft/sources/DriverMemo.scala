@@ -10,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * and warmed table handles ([[graft.Tables]]), opened index artifacts
   * and their tombstone probes ([[IndexStore]]), collected probe
   * metadata (IVF centroids, PQ codebooks, the TF-IDF
-  * query-side idf table), persisted
+  * query-side idf table, the keyword models' per-document norms and
+  * lengths, the corpus zone maps of [[PointRead]]), persisted
   * dedup intermediates, decoded joblib models, induced vocabularies
   * and the query-path scratch frames of [[ScratchCache]]. Entries are
   * in-process serving state, rebuilt from the parquet artifacts in

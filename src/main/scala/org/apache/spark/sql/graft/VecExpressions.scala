@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes,
+  Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, MapType,
-  StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType,
+  LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd dense dot product over array<float> / array<double>
@@ -189,6 +190,64 @@ case class NGrams(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `table(key)` for a [[Param]] bigint → double map whose keys are
+  * sorted and distinct, found by binary search: O(log n) per row where
+  * a map literal's `element_at` scans the keys, O(n). An absent or
+  * null key reads null, as `element_at` does. Built through
+  * `VecExpressions.longDoubleTable`, which sorts the keys; the table
+  * prints as `param(map of n)`, so plan strings do not grow with it.
+  */
+case class SortedLookup(key: Expression, table: Param) extends BinaryExpression
+    with ImplicitCastInputTypes {
+  override def left: Expression = key
+  override def right: Expression = table
+  override def inputTypes: Seq[AbstractDataType] = Seq(LongType, table.dataType)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "lookup"
+
+  override def nullSafeEval(k: Any, m: Any): Any = {
+    val map = m.asInstanceOf[MapData]
+    val i = SortedKeys.indexOf(map.keyArray(), k.asInstanceOf[Long])
+    if (i < 0) null else map.valueArray().getDouble(i)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (k, m) => {
+      val i = ctx.freshName("lookupAt")
+      s"""
+         |int $i = ${SortedKeys.getClass.getName.stripSuffix("$")}.indexOf($m.keyArray(), $k);
+         |if ($i < 0) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = $m.valueArray().getDouble($i);
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression)
+      : Expression = copy(key = newLeft, table = newRight.asInstanceOf[Param])
+}
+
+/** Binary search over ascending bigint keys, a static method that
+  * generated code calls by name. */
+object SortedKeys {
+  /** The index of `k` in the ascending `keys`, or -1. */
+  def indexOf(keys: ArrayData, k: Long): Int = {
+    var lo = 0
+    var hi = keys.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val v = keys.getLong(mid)
+      if (v < k) lo = mid + 1
+      else if (v > k) hi = mid - 1
+      else return mid
+    }
+    -1
+  }
+}
+
 object VecExpressions {
   /** Column-level dot product (see VecDot). */
   def vec_dot(a: Column, b: Column): Column =
@@ -204,12 +263,19 @@ object VecExpressions {
     ExpressionUtils.column(Param(l.value, l.dataType))
   }
 
-  /** A per-request bigint → double map as a [[Param]]: looked up like a
-    * map literal, but its plan string stays one short token however
-    * many entries it holds. */
-  def longDoubleMap(keys: Array[Long], values: Array[Double]): Column =
-    ExpressionUtils.column(Param(
-      new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(keys),
-        UnsafeArrayData.fromPrimitiveArray(values)),
-      MapType(LongType, DoubleType, valueContainsNull = false)))
+  /** A bigint → double table (`keys` distinct) as a lookup column
+    * function: the pairs are sorted once here into a [[Param]], and each
+    * application is a [[SortedLookup]] of that one table, so a memo can
+    * keep the function and every plan reuses the same value.
+    */
+  def longDoubleTable(keys: Array[Long], values: Array[Double]): Column => Column = {
+    val order = keys.indices.sortBy(keys(_)).toArray
+    val ks = order.map(keys(_))
+    require(ks.indices.drop(1).forall(i => ks(i - 1) != ks(i)), "longDoubleTable keys must be distinct")
+    val table = Param(
+      new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(ks),
+        UnsafeArrayData.fromPrimitiveArray(order.map(values(_)))),
+      MapType(LongType, DoubleType, valueContainsNull = false))
+    key => ExpressionUtils.column(SortedLookup(ExpressionUtils.expression(key), table))
+  }
 }

@@ -12,16 +12,19 @@ import graft.operators.{Ivf, TextRetrieval, VectorSearch}
   * the generated classes of earlier requests of its shape. A
   * per-request primitive folded into the generated source would make
   * every request compile anew. The hybrids cover the blend's keyword
-  * map literal and its candidate scan's cut key.
+  * map literal and its candidate scan's cut key; the by-id searches
+  * cover the member lookup their construction runs.
   */
 class CompileOnceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
-  /** Generated classes compiled while collecting `df`. */
-  private def compiles(df: => DataFrame): Long = {
+  /** Generated classes compiled while constructing `call`'s frame and
+    * collecting it: a by-id search looks its member up at
+    * construction, so the count spans both. */
+  private def compiles(call: () => DataFrame): Long = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    df.collect()
+    call().collect()
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
@@ -47,11 +50,17 @@ class CompileOnceSpec extends AnyFunSuite {
             Some(col("lang") === "en" && col("n_chars") >= 200L))),
         "bm25HybridTopK" -> (i =>
           TextRetrieval.bm25HybridTopK(spark, sf, vecs(i), texts(i), 0.7, 10, None)),
-        "ivfTopKVec" -> (i => Ivf.ivfTopKVec(spark, sf, vecs(i), 16, 4, 10)))
+        "ivfTopKVec" -> (i => Ivf.ivfTopKVec(spark, sf, vecs(i), 16, 4, 10)),
+        // the by-id serve shapes, a fresh member id per request
+        "topK" -> (i => VectorSearch.topK(spark, sf, 10L + i, 10)),
+        "filteredTopK" -> (i => VectorSearch.filteredTopK(spark, sf, 20L + i, 10, Seq(1, 3))),
+        "metaFilteredTopK" -> (i =>
+          VectorSearch.metaFilteredTopK(spark, sf, 30L + i, 10, "en", 200L)),
+        "simMatrix" -> (i => VectorSearch.simMatrix(spark, sf, Seq(40L + i, 50L + i, 60L + i))))
       val fresh = calls.map { case (name, call) =>
         call(0).collect()
         call(1).collect()
-        name -> (2 until 4).map(i => compiles(call(i)))
+        name -> (2 until 4).map(i => compiles(() => call(i)))
       }
       assert(fresh.forall(_._2.forall(_ == 0)),
         s"classes compiled by warm requests with fresh values: $fresh")

@@ -411,9 +411,9 @@ class PlanSpec extends AnyFunSuite {
 
   /** The hybrid blend's shape over one warm call of SparkEntry query
     * `name`: no scratch cache, no file scan executed twice, `embedding`
-    * read by `embeddingScans` scans (the candidate scan, plus the member
-    * lookup of a by-id query), and at most `maxJobs` Spark jobs. Returns
-    * the executed file scans.
+    * read by `embeddingScans` scans (the candidate scan; a by-id query's
+    * member lookup is a driver point read), and at most `maxJobs` Spark
+    * jobs. Returns the executed file scans.
     */
   private def assertBlendShape(name: String, maxJobs: Int, embeddingScans: Int = 1)
       : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
@@ -443,19 +443,58 @@ class PlanSpec extends AnyFunSuite {
     assert(pushed.contains("GreaterThanOrEqual(n_chars,200)"), pushed)
   }
 
-  // Job bounds: the free-text forms run the keyword leg (2 jobs) and
-  // the candidate scan (1); the by-id and filtered bounds are the
-  // counts of the earlier one-plan blend (hybrid_topk 9,
-  // hybrid_filtered 10, hybrid_filtered_free 7, bm25_hybrid_filtered 8).
+  // Job bounds: the free-text forms run the keyword leg (1 job: the
+  // document norms or lengths are a driver lookup) and the candidate
+  // scan (1); a metadata filter adds its documents broadcast (1); the
+  // by-id form adds the query document's terms broadcast (1), and its
+  // member vector is a driver point read (no job, no `embedding` scan).
   test("hybrid blend materializes the candidate subtree once (no double corpus scan)") {
-    assertBlendShape("hybrid_topk_free", maxJobs = 3)
-    assertBlendShape("hybrid_topk_text", maxJobs = 3)
-    assertBlendShape("hybrid_topk", maxJobs = 9, embeddingScans = 2)
+    assertBlendShape("hybrid_topk_free", maxJobs = 2)
+    assertBlendShape("hybrid_topk_text", maxJobs = 2)
+    assertBlendShape("hybrid_topk", maxJobs = 3)
   }
 
   test("bm25 hybrid blend shares the single-scan shape and pushes candidate filters") {
-    assertBlendShape("bm25_hybrid_topk", maxJobs = 3)
-    assertFiltersPushed(assertBlendShape("bm25_hybrid_filtered", maxJobs = 8))
+    assertBlendShape("bm25_hybrid_topk", maxJobs = 2)
+    assertFiltersPushed(assertBlendShape("bm25_hybrid_filtered", maxJobs = 3))
+  }
+
+  // One bound per serve_small request shape (perfbench's seven types,
+  // filtered in both forms), counted over one warm call plus its
+  // collect(): a by-id member lookup is a driver point read, compare is
+  // scored on the driver, and the keyword leg reads the document norms
+  // from a driver lookup instead of a broadcast.
+  test("every serve request shape runs within its Spark job bound") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.CorpusLexicalEncoder
+    import graft.operators.TextRetrieval
+    val sf = TestSpark.sf
+    spark.conf.set("spark.graft.encoder.class", "graft.functions.CorpusLexicalQueryEncoder")
+    spark.conf.set(CorpusLexicalEncoder.DirKey, sf)
+    try {
+      val qv = Tables.embeddings(spark, sf).where(col("vec_id") === 5)
+        .select("embedding").head.getSeq[Float](0).toArray
+      val text = TextRetrieval.ensureModel(spark, sf).dfT
+        .orderBy(col("df").desc, col("term")).select("term").limit(3)
+        .collect().map(_.getString(0)).mkString(" ")
+      val shapes: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+        ("item", 1, () => VectorSearch.topK(spark, sf, 3L, 10)),
+        ("filtered, labels", 1, () => VectorSearch.filteredTopK(spark, sf, 3L, 10, Seq(1, 3))),
+        ("filtered, lang/min_chars", 2,
+          () => VectorSearch.metaFilteredTopK(spark, sf, 3L, 10, "en", 200L)),
+        ("compare", 0, () => VectorSearch.simMatrix(spark, sf, Seq(1L, 2L, 3L))),
+        ("hybrid, free text", 2,
+          () => TextRetrieval.hybridTopKFree(spark, sf, qv, text, 0.7, 10, None)),
+        ("text", 1, () => VectorSearch.topKText(spark, sf, text, 10)),
+        ("vec", 1, () => VectorSearch.topKVec(spark, sf, qv, 10)),
+        ("ivf", 1, () => Ivf.ivfTopKVec(spark, sf, qv, 16, 4, 10)))
+      val counts = shapes.map { case (name, bound, call) => (name, bound, warmCall(call)._2) }
+      assert(counts.forall { case (_, bound, jobs) => jobs <= bound },
+        counts.map { case (n, b, j) => s"$n: $j jobs, bound $b" }.mkString("\n"))
+    } finally {
+      spark.conf.unset("spark.graft.encoder.class")
+      spark.conf.unset(CorpusLexicalEncoder.DirKey)
+    }
   }
 
   test("array-membership filtered search keeps array_contains off the explode path") {
@@ -494,8 +533,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("filtered hybrid search pushes the metadata filters into the documents scan") {
-    assertFiltersPushed(assertBlendShape("hybrid_filtered", maxJobs = 10, embeddingScans = 2))
-    assertFiltersPushed(assertBlendShape("hybrid_filtered_free", maxJobs = 7))
+    assertFiltersPushed(assertBlendShape("hybrid_filtered", maxJobs = 4))
+    assertFiltersPushed(assertBlendShape("hybrid_filtered_free", maxJobs = 3))
   }
 
   test("random projection is a narrow map (no hash-partitioned shuffle)") {
@@ -520,13 +559,14 @@ class PlanSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"global-order window found:\n${bad.mkString("\n")}")
   }
 
-  test("bm25 broadcasts the query idf rows and takes top-k without a full sort") {
+  test("bm25 reads document lengths from a driver lookup (no join) and takes top-k without a full sort") {
     val df = graft.operators.TextRetrieval.bm25TopK(spark, TestSpark.sf,
       Seq("spark", "join", "vector"), k = 10)
     df.collect() // finalize the adaptive plan before asserting on it
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"), p.take(800))
-    assert(p.contains("BroadcastHashJoin"), p.take(800))
+    // `dl` is a sorted per-model lookup, not a per-request join
+    assert(!p.contains("Join") && p.contains("lookup(doc_id"), p.take(1500))
     // the query idf rows ride a map literal from the per-model idf memo,
     // and the postings scan reads only the query terms' rows
     assert(p.contains("In(term, [join,spark,vector])"), p.take(1500))

@@ -76,6 +76,31 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
+  test("a member with a null embedding or a null element fails by name on both lookup paths") {
+    val VF = graft.functions.VectorFunctions
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-member").toString
+    val source = s"$dir/embeddings.parquet"
+    spark.sql("""SELECT * FROM VALUES
+        (0L, array(1.0f, 0.0f), 0), (1L, CAST(NULL AS array<float>), 0),
+        (2L, array(1.0f, CAST(NULL AS float)), 0) AS t(vec_id, embedding, label)""")
+      .coalesce(1).write.parquet(source)
+    assert(graft.sources.PointRead.members(spark, source, Seq(1L, 2L)).isDefined,
+      "the one-file fixture must take the driver read")
+    for ((id, what) <- Seq(1L -> "a null embedding", 2L -> "a null element at position 1")) {
+      val want = VF.memberInvalid(source, id, what).getMessage
+      val calls: Seq[(String, () => Any)] = Seq(
+        "driver read" -> (() => VF.memberVector(spark, dir, id)),
+        "frame lookup" -> (() => VF.memberVector(Tables.embeddings(spark, dir), id, source)),
+        "topK" -> (() => VectorSearch.topK(spark, dir, id, 2).collect()),
+        "simMatrix" -> (() => VectorSearch.simMatrix(spark, dir, Seq(0L, id)).collect()))
+      calls.foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage == want, s"$name on member $id")
+      }
+    }
+    assert(VF.memberVector(spark, dir, 0L).toSeq == Seq(1.0f, 0.0f))
+  }
+
   test("by-id searches get their query only from memberVector (no in-plan member lookup)") {
     import java.nio.file.{Files, Paths}
     // the member's stored CODE is sq8's query, not its float vector
