@@ -559,7 +559,7 @@ class PlanSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"global-order window found:\n${bad.mkString("\n")}")
   }
 
-  test("bm25 reads document lengths from a driver lookup (no join) and takes top-k without a full sort") {
+  test("bm25 reads document lengths by lookup (no join) and takes top-k without a full sort") {
     val df = graft.operators.TextRetrieval.bm25TopK(spark, TestSpark.sf,
       Seq("spark", "join", "vector"), k = 10)
     df.collect() // finalize the adaptive plan before asserting on it
