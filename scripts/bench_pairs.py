@@ -20,6 +20,11 @@ wins at least 9 of every 10 pairs, and its median is better than the
 parent's by more than the parent's interquartile range. It also prints
 the median over the runs of each request type's p50 (`p50_ms.<type>`
 in the run records under `.bench_out/records/`).
+
+Every other end-to-end metric with a `bound` in BENCHMARK.json is marked
+REGRESSED when the change's median is worse than the parent's by more
+than that bound (a fraction of the parent's median); the script then
+exits with status 1, after printing every workload.
 """
 
 import argparse
@@ -74,9 +79,16 @@ def better(a, b, direction):
     return a < b if direction == "lower" else a > b
 
 
+def regressed(parent, change, direction, bound):
+    """True when the median `change` is worse than `parent` by more than `bound`."""
+    worse = change - parent if direction == "lower" else parent - change
+    return worse > bound * abs(parent)
+
+
 def report(workload, pairs, metrics, claim):
+    """Prints the workload's table; returns the names of its REGRESSED metrics."""
     print("== %s: %d pairs" % (workload, len(pairs)))
-    verdicts = {}
+    regressions = []
     for m in metrics:
         name, direction = m["name"], m["better"]
         par = [p["parent"]["line"]["metrics"][name]["value"] for p in pairs]
@@ -86,14 +98,17 @@ def report(workload, pairs, metrics, claim):
         pq, cq = quartiles(par), quartiles(chg)
         wins = sum(better(c, p, direction) for p, c in zip(par, chg))
         delta = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
+        mark = ""
+        if name != claim and "bound" in m and regressed(pq[1], cq[1], direction, m["bound"]):
+            regressions.append(name)
+            mark = "  REGRESSED (bound %+.0f%%)" % (m["bound"] * 100)
         print("  %-22s parent %.4g [%.4g, %.4g]  change %.4g [%.4g, %.4g]  "
-              "%+.1f%%  change won %d/%d" % (name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2],
-                                             delta, wins, len(pairs)))
+              "%+.1f%%  change won %d/%d%s" % (name, pq[1], pq[0], pq[2], cq[1], cq[0], cq[2],
+                                               delta, wins, len(pairs), mark))
         if name == claim:
             iqr = pq[2] - pq[0]
             beyond = better(cq[1], pq[1], direction) and abs(cq[1] - pq[1]) > iqr
             ok = wins * 10 >= 9 * len(pairs) and beyond
-            verdicts[name] = ok
             print("  claim %s: wins %d/%d (need >= 9/10), median gap %.4g vs parent IQR %.4g "
                   "-> %s" % (name, wins, len(pairs), abs(cq[1] - pq[1]), iqr,
                              "MET" if ok else "NOT MET"))
@@ -116,7 +131,7 @@ def report(workload, pairs, metrics, claim):
             print("  p50_ms.%-10s parent %.1f  change %.1f  (%+.1f%%)"
                   % (t, statistics.median(par), statistics.median(chg),
                      (statistics.median(chg) / statistics.median(par) - 1) * 100))
-    return verdicts
+    return regressions
 
 
 def main(argv):
@@ -137,6 +152,7 @@ def main(argv):
     metrics = spec["per_layer"] if a.trace else spec["end_to_end"]
     parent = a.parent_dir or export_rev(a.parent)
     results = {}
+    regressions = []
     try:
         for w in a.workloads.split(","):
             pairs = []
@@ -150,13 +166,17 @@ def main(argv):
                 pairs.append(pair)
                 print("  pair %d (seed %d) done" % (i + 1, seed), file=sys.stderr)
             results[w] = pairs
-            report(w, pairs, metrics, None if a.trace else a.claim)
+            regressions += ["%s %s" % (w, n)
+                            for n in report(w, pairs, metrics, None if a.trace else a.claim)]
     finally:
         if a.out:
             with open(a.out, "w") as f:
                 json.dump(results, f, indent=1, sort_keys=True)
         if not a.parent_dir:
             shutil.rmtree(parent, ignore_errors=True)
+    if regressions:
+        print("REGRESSED beyond bound: " + ", ".join(regressions))
+        sys.exit(1)
 
 
 if __name__ == "__main__":

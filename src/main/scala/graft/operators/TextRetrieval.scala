@@ -5,11 +5,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LongDoubleTable
 import org.apache.spark.sql.graft.VecExpressions.longDoubleTable
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
 import graft.functions.VectorFunctions._
-import graft.sources.{DriverMemo, IndexStore}
+import graft.sources.{DriverMemo, IndexStore, PointRead}
 
 /** TF-IDF retrieval and hybrid (vector + keyword) search.
   *
@@ -91,9 +92,15 @@ object TextRetrieval {
     * map-side combine) and never re-read, and no intermediate needs
     * `.cache()` (each is read back from its own parquet). `norms` is
     * written LAST: its _SUCCESS marks a complete model.
+    *
+    * The postings `w` and `tf` are sorted by (term, doc_id) inside each
+    * file (`sortWithinPartitions`: no shuffle), so a term's rows are
+    * one run of pages and the page index of `term` isolates them: the
+    * free-text hybrids read their query terms' postings on the driver
+    * ([[PointRead.rows]]) and decode only those pages.
     */
   def ensureModel(spark: SparkSession, dir: String): TfidfModel = {
-    val base = IndexStore.indexPath(spark, "tfidf_v1", s"$dir/documents.parquet", "skl")
+    val base = IndexStore.indexPath(spark, "tfidf_v2", s"$dir/documents.parquet", "skl")
     // the whole five-table model is staged under a hidden .tmp-* sibling and
     // committed by one atomic rename — a racing session either sees no
     // model (and builds its own staging dir) or a complete one
@@ -102,6 +109,7 @@ object TextRetrieval {
       docs.repartition(spark.sparkContext.defaultParallelism)
         .select(col("doc_id"), explode(sklearnTokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+        .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/tf")
       val tf = spark.read.parquet(s"$tmp/tf")
       tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -113,6 +121,7 @@ object TextRetrieval {
         .crossJoin(broadcast(spark.read.parquet(s"$tmp/n")))
         .withColumn("w", col("tf") * (log((col("n") + 1) / (col("df") + 1)) + 1))
         .select("doc_id", "term", "w")
+        .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$tmp/w")
       spark.read.parquet(s"$tmp/w")
         .groupBy("doc_id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
@@ -221,23 +230,24 @@ object TextRetrieval {
   }
 
   /** A per-document constant table (doc_id, value) of a model
-    * artifact — the TF-IDF `norms`, the BM25 `dl` — as a
-    * [[longDoubleTable]] lookup, collected once per fingerprinted
-    * artifact path `key` ([[DriverMemo]]), so no keyword query joins or
+    * artifact — the TF-IDF `norms`, the BM25 `dl` — as one sorted
+    * [[LongDoubleTable]], collected once per fingerprinted artifact path
+    * `key` ([[DriverMemo]]): plans read it as a lookup column and the
+    * driver keyword legs by binary search, so no keyword query joins or
     * broadcasts the O(documents) table per request. Driver memory is
     * O(documents) once per model, where the broadcast shipped that much
     * on every request. Every posting's document has a row: both tables
     * aggregate the postings they serve.
     */
   private def perDocument(spark: SparkSession, key: String,
-                          table: => DataFrame): Column => Column =
+                          table: => DataFrame): LongDoubleTable =
     DriverMemo.memo(spark, key) {
       val rows = table.collect()
       longDoubleTable(rows.map(_.getLong(0)), rows.map(_.getAs[Number](1).doubleValue))
     }
 
   /** `nrm` of a document: the L2 norm of its `w` row. */
-  private def norms(spark: SparkSession, m: TfidfModel): Column => Column =
+  private def norms(spark: SparkSession, m: TfidfModel): LongDoubleTable =
     perDocument(spark, s"${m.path}#norms", m.norms.select("doc_id", "nrm"))
 
   /** (doc_id, c): one TF-IDF cosine term per posting of a query term;
@@ -254,6 +264,38 @@ object TextRetrieval {
     m.w.where(col("term").isin(qw.keys.toSeq.sorted: _*))
       .select(col("doc_id"), (col("w") / nrm(col("doc_id")) *
         element_at(typedlit(qw), col("term")) / param(qn)).as("c"))
+  }
+
+  /** The (doc_id, term, value) postings of `terms` in the model table
+    * `name` (`w` or `tf`, whose value column has the table's name), in
+    * (term, doc_id) order. A driver keyed read ([[PointRead.rows]]: no
+    * Spark job; O(postings of the terms + one page run per covering row
+    * group) on the term-sorted layout), or one Spark scan of the
+    * `term IN (…)` rows when the reader does not cover the table. No
+    * term: no read.
+    */
+  private def postings(spark: SparkSession, m: TfidfModel, name: String,
+                       terms: Seq[String]): Seq[Row] = {
+    val cols = Seq("doc_id", "term", name)
+    PointRead.rows(spark, s"${m.path}/$name", "term", terms, cols, spanning = true).getOrElse(
+      (if (name == "w") m.w else m.tf).where(col("term").isin(terms: _*))
+        .select(cols.map(col): _*).collect().toSeq)
+      .sortBy(r => (r.getString(1), r.getLong(0)))
+  }
+
+  /** [[tfidfTerms]] on the driver, for the free-text hybrid: (doc_id, c)
+    * of every posting of the query terms in (term, doc_id) order, each
+    * `c` the plan's double, `w / nrm * q(term) / qn` evaluated left to
+    * right, with `nrm` from the same [[norms]] table.
+    */
+  private def tfidfLeg(spark: SparkSession, m: TfidfModel,
+                       queryTerms: Seq[String]): Seq[(Long, Double)] = {
+    val (qw, qn) = queryWeights(spark, m, queryTerms)
+    val nrm = norms(spark, m)
+    postings(spark, m, "w", qw.keys.toSeq.sorted).map { r =>
+      val d = r.getLong(0)
+      d -> r.getDouble(2) / nrm.at(d) * qw(r.getString(1)) / qn
+    }
   }
 
   /** (doc_id, ts): the per-document sum of a leg's (doc_id, c) terms. */
@@ -287,7 +329,7 @@ object TextRetrieval {
     * lookup (an exact double of the bigint length).
     */
   private def ensureBm25(spark: SparkSession, dir: String,
-                         m: TfidfModel): (Column => Column, Double) = {
+                         m: TfidfModel): (LongDoubleTable, Double) = {
     val base = IndexStore.indexPath(spark, "bm25_v1", s"$dir/documents.parquet", "dl")
     IndexStore.publish(spark, base) { tmp =>
       m.tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
@@ -347,14 +389,35 @@ object TextRetrieval {
     */
   private def bm25Terms(spark: SparkSession, dir: String, m: TfidfModel,
                         qw: Seq[(String, Double)], k1: Double, b: Double): DataFrame = {
-    val idf = termIdf(spark, m)
-    val f = qw.flatMap { case (t, w) => idf.get(t).map(s => t -> w * s.bm25) }.toMap
+    val f = bm25Factors(spark, m, qw)
     val (dl, avgdl) = ensureBm25(spark, dir, m)
     m.tf.where(col("term").isin(f.keys.toSeq.sorted: _*))
       .select(col("doc_id"), (element_at(typedlit(f), col("term")) * col("tf") *
         (lit(k1) + lit(1.0)) /
         (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl(col("doc_id")) / param(avgdl))))
         .as("c"))
+  }
+
+  /** Each in-vocabulary weighted query term's BM25 factor qw·idf(t). */
+  private def bm25Factors(spark: SparkSession, m: TfidfModel,
+                          qw: Seq[(String, Double)]): Map[String, Double] = {
+    val idf = termIdf(spark, m)
+    qw.flatMap { case (t, w) => idf.get(t).map(s => t -> w * s.bm25) }.toMap
+  }
+
+  /** [[bm25Terms]] on the driver, for the BM25 hybrid: (doc_id, c) of
+    * every `tf` posting of the query terms (qw = 1.0) in (term, doc_id)
+    * order, each `c` the plan's double — the same factor, `dl` table
+    * and `avgdl`, and the same association order.
+    */
+  private def bm25Leg(spark: SparkSession, dir: String, m: TfidfModel, queryTerms: Seq[String],
+                      k1: Double, b: Double): Seq[(Long, Double)] = {
+    val f = bm25Factors(spark, m, queryTerms.distinct.map(_ -> 1.0))
+    val (dl, avgdl) = ensureBm25(spark, dir, m)
+    postings(spark, m, "tf", f.keys.toSeq.sorted).map { r =>
+      val (d, tf) = (r.getLong(0), r.getLong(2).toDouble)
+      d -> f(r.getString(1)) * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl.at(d) / avgdl))
+    }
   }
 
   /** Raw-text BM25 front door — same tokenizer contract as
@@ -668,9 +731,6 @@ object TextRetrieval {
   private lazy val candEncoder = Encoders.product[BlendCand]
   private lazy val cutEncoder = Encoders.product[BlendCut]
 
-  private val blendInput = StructType(Seq(StructField("doc_id", LongType, nullable = false),
-    StructField("vs", DoubleType), StructField("ts", DoubleType, nullable = false)))
-
   /** The reference's hybrid blend of the candidates' vector leg `vs`
     * (doc_id, vs) and the sparse keyword leg, given as its per-posting
     * terms (doc_id, c) whose per-document sum is `ts` (a candidate
@@ -682,11 +742,11 @@ object TextRetrieval {
     * and the 1e-12 denominator epsilon; top k by (hybrid_score DESC,
     * doc_id) under [[TopK.scoreOrdering]], NaN last.
     *
-    * Three passes, and the Spark jobs are those of passes 1 and 2:
-    *  1. The keyword leg is collected and summed per document on the
-    *     driver (one job of the term-pruned postings scan; the document
-    *     norms or lengths are a [[perDocument]] lookup; no shuffle).
-    *     Driver memory is O(postings of the query terms).
+    * Three passes, and the one Spark job is pass 2's:
+    *  1. The keyword terms, read on the driver by the caller (the
+    *     free-text legs: [[tfidfLeg]], [[bm25Leg]]) or collected from a
+    *     frame (by-id), are summed per document in their order. Driver
+    *     memory is O(postings of the query terms).
     *  2. One scan of the candidates computes `vs`, looks `ts` up by
     *     binary search in a sorted table read by reference
     *     ([[longDoubleTable]], a [[param]] whose plan string does not
@@ -695,10 +755,11 @@ object TextRetrieval {
     *     query values compile nothing), and
     *     returns, per partition, every posted candidate, the k first
     *     unposted ones by (key, doc_id), and the unposted count.
-    *  3. The driver takes min/max of ts over the candidates, applies
-    *     the blend's Column expressions to the ≤ |posted| +
-    *     k·partitions returned rows (a local relation: no job), and
-    *     returns the first k as a local relation.
+    *  3. The driver takes min/max of ts over the candidates, scores the
+    *     ≤ |posted| + k·partitions returned rows with the driver twins
+    *     of the blend's expressions (the same double operations in the
+    *     same order, [[r5]] for `round`), and returns the first k as a
+    *     local relation: no further Spark execution.
     *
     * Exactness: every keyword term is > 0 (smooth idf > 0, BM25 idf =
     * ln(…+1) > 0, L2-normalized weights > 0), so ts ≥ 0. When an
@@ -710,13 +771,10 @@ object TextRetrieval {
     * per-partition cuts, and every posted row is returned, so the
     * driver's top k is the top k over all candidates.
     */
-  private def blend(spark: SparkSession, vs: DataFrame, terms: DataFrame, alpha: Double,
-                    k: Int, tsName: String = "tfidf_score"): DataFrame = {
+  private def blend(spark: SparkSession, vs: DataFrame, terms: Seq[(Long, Double)],
+                    alpha: Double, k: Int, tsName: String = "tfidf_score"): DataFrame = {
     val ts = mutable.LongMap.empty[Double]
-    terms.collect().foreach { r =>
-      val (id, c) = (r.getLong(0), r.getDouble(1))
-      ts(id) = ts.get(id).fold(c)(_ + c)
-    }
+    terms.foreach { case (id, c) => ts(id) = ts.get(id).fold(c)(_ + c) }
     val (ids, sums) = ts.toArray.unzip
     val cuts = vs.select(col("doc_id"), col("vs"),
         longDoubleTable(ids, sums)(col("doc_id")).as("ts"),
@@ -725,21 +783,16 @@ object TextRetrieval {
     val legs: Seq[Double] = cuts.iterator.flatMap(_.posted).flatMap(_.ts).toSeq ++
       (if (cuts.exists(_.unposted > 0)) Seq(0.0) else Nil)
     val (mn, mx) = if (legs.isEmpty) (0.0, 0.0) else (legs.min, legs.max)
-    val rows = cuts.iterator.flatMap(c => c.posted ++ c.top)
-      .map(c => Row(c.doc_id, c.vs.map(Double.box).orNull, c.ts.getOrElse(0.0))).toSeq
-    val tn = when(lit(mx) > lit(mn),
-      (col("ts") - lit(mn)) / (lit(mx) - lit(mn) + lit(1e-12))).otherwise(col("ts"))
-    val blended = spark.createDataFrame(rows.asJava, blendInput)
-      .select(
-        col("doc_id"),
-        round(col("vs") * alpha + tn * (1 - alpha), 5).as("hybrid_score"),
-        round(col("vs"), 5).as("vector_score"),
-        round(tn, 5).as(tsName))
-    val first = blended.collect()
-      .sortBy(r => (if (r.isNullAt(1)) Double.NaN else r.getDouble(1), r.getLong(0)))(
-        TopK.scoreOrdering)
-      .take(k)
-    spark.createDataFrame(first.toSeq.asJava, blended.schema)
+    def tn(ts: Double): Double = if (mx > mn) (ts - mn) / (mx - mn + 1e-12) else ts
+    val first = cuts.iterator.flatMap(c => c.posted ++ c.top).map { c =>
+      val t = tn(c.ts.getOrElse(0.0))
+      (c.doc_id, c.vs.map(v => r5(v * alpha + t * (1 - alpha))), c.vs.map(r5), r5(t))
+    }.toSeq.sortBy(r => (r._2.getOrElse(Double.NaN), r._1))(TopK.scoreOrdering).take(k)
+    spark.createDataFrame(first.map { case (id, h, v, t) =>
+      Row(id, h.map(Double.box).orNull, v.map(Double.box).orNull, t)
+    }.asJava, StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("hybrid_score", DoubleType), StructField("vector_score", DoubleType),
+      StructField(tsName, DoubleType))))
   }
 
   /** Free-text hybrid search — the reference's ACTUAL interactive path
@@ -750,16 +803,17 @@ object TextRetrieval {
     * `candidate_indices()` — the blend and its min-max run inside the
     * filtered candidate set.
     *
-    * Both query norms are folded on the DRIVER and enter the plan as
-    * params: the vector norm (same left-to-right double accumulation
-    * as VecDot), so scoring costs two VecDots per corpus row (dot +
-    * corpus norm), not four; and the TF-IDF norm ([[queryWeights]]).
+    * One Spark job, the candidate scan: the keyword leg is the query
+    * terms' postings read and weighted on the driver ([[tfidfLeg]]).
+    * The vector norm is folded on the driver (same left-to-right double
+    * accumulation as VecDot) and enters the plan as a param, so scoring
+    * costs two VecDots per corpus row (dot + corpus norm), not four.
     */
   def hybridTopKFree(spark: SparkSession, dir: String, qv: Array[Float],
                      queryTerms: Seq[String], alpha: Double, k: Int,
                      metaFilter: Option[Column] = None): DataFrame =
     blend(spark, vectorCandidates(spark, dir, qv, metaFilter),
-      tfidfTerms(spark, ensureModel(spark, dir), queryTerms), alpha, k)
+      tfidfLeg(spark, ensureModel(spark, dir), queryTerms), alpha, k)
 
   /** (doc_id, vs) of every candidate against a caller vector. */
   private def vectorCandidates(spark: SparkSession, dir: String, qv: Array[Float],
@@ -803,7 +857,7 @@ object TextRetrieval {
       .select(col("doc_id"), (col("wn") * col("qwn")).as("c"))
     val vs = vectorCandidates(spark, dir, memberVector(spark, dir, queryDoc), metaFilter)
       .where(col("doc_id") =!= param(queryDoc))
-    blend(spark, vs, terms, alpha, k)
+    blend(spark, vs, terms.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq, alpha, k)
   }
 
   /** BM25-keyword-leg hybrid — the reference's blend contract
@@ -823,7 +877,7 @@ object TextRetrieval {
                      metaFilter: Option[Column] = None,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame =
     blend(spark, vectorCandidates(spark, dir, qv, metaFilter),
-      bm25Terms(spark, dir, ensureModel(spark, dir), queryTerms.distinct.map(_ -> 1.0), k1, b),
+      bm25Leg(spark, dir, ensureModel(spark, dir), queryTerms, k1, b),
       alpha, k, tsName = "bm25_score")
 
   /** Raw-text BM25-hybrid front door — same tokenizer contract as the

@@ -3,8 +3,10 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VecExpressions.longDoubleTable
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
+import graft.sources.{DriverMemo, IndexStore}
 import graft.functions.VectorFunctions._
 import graft.operators.TopK.byScore
 
@@ -393,15 +395,61 @@ object VectorSearch {
 
   /** Two-stage retrieval where the metadata lives in ANOTHER table
     * (reference app.py:156-164 filters product metadata before
-    * searching embeddings): candidate set = documents join on id.
+    * searching embeddings): the candidates are the embeddings whose id
+    * is a document with `lang` = lang and `n_chars` ≥ minChars — the
+    * rows of the join of the two tables on id, one Spark job.
+    *
+    * The documents side is evaluated on the driver against [[langDocs]]
+    * (a null `lang` or `n_chars` never passes, as in the join), and the
+    * matching ids ride a sorted lookup ([[longDoubleTable]], a param) in
+    * the embeddings scan, so fresh filter values compile nothing. A
+    * passing document id that occurs twice, whose embedding the join
+    * would have emitted twice, fails with [[duplicateDocument]].
     */
   def metaFilteredTopK(spark: SparkSession, dir: String, queryId: Long, k: Int,
                        lang: String, minChars: Long): DataFrame = {
-    val d = Tables.documents(spark, dir)
-      .where(col("lang") === lang && col("n_chars") >= minChars)
-      .select(col("doc_id"))
-    memberTopK(Tables.embeddings(spark, dir).join(d, col("vec_id") === col("doc_id")),
-      memberVector(spark, dir, queryId), queryId, k)
+    val ids = langDocs(spark, dir).get(lang).fold(Array.empty[Long])(_.atLeast(minChars)).sorted
+    ids.indices.drop(1).find(i => ids(i - 1) == ids(i))
+      .foreach(i => throw duplicateDocument(s"$dir/documents.parquet", ids(i)))
+    val passing = longDoubleTable(ids, Array.fill(ids.length)(1.0))
+    memberTopK(Tables.embeddings(spark, dir), memberVector(spark, dir, queryId), queryId, k,
+      passing(col("vec_id")).isNotNull)
+  }
+
+  /** The error of a documents filter whose passing rows repeat `id`. */
+  def duplicateDocument(source: String, id: Long): IllegalArgumentException =
+    new IllegalArgumentException(s"document $id occurs more than once in $source")
+
+  /** One language's documents, ascending by `n_chars`. */
+  private final case class LangDocs(nChars: Array[Long], ids: Array[Long]) {
+    /** The ids of the documents with `n_chars` ≥ `min`. */
+    def atLeast(min: Long): Array[Long] = {
+      var (lo, hi) = (0, nChars.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (nChars(mid) < min) lo = mid + 1 else hi = mid
+      }
+      ids.drop(lo)
+    }
+  }
+
+  /** `documents`' (doc_id, n_chars) by `lang`, collected once per table
+    * mtime ([[graft.sources.DriverMemo]]): O(documents) driver memory
+    * and one Spark job per mtime. Rows with a null `doc_id`, `lang` or
+    * `n_chars` are left out, since no equality or comparison passes
+    * them.
+    */
+  private def langDocs(spark: SparkSession, dir: String): Map[String, LangDocs] = {
+    val path = s"$dir/documents.parquet"
+    DriverMemo.memo(spark, s"$path#langs", IndexStore.mtime(spark, path)) {
+      Tables.documents(spark, dir)
+        .where(col("doc_id").isNotNull && col("lang").isNotNull && col("n_chars").isNotNull)
+        .select(col("lang"), col("n_chars").cast("long"), col("doc_id")).collect()
+        .groupBy(_.getString(0)).map { case (l, rows) =>
+          val sorted = rows.sortBy(_.getLong(1))
+          l -> LangDocs(sorted.map(_.getLong(1)), sorted.map(_.getLong(2)))
+        }
+    }
   }
 
   /** Two-stage retrieval with an ARRAY-membership metadata filter —

@@ -263,19 +263,36 @@ object VecExpressions {
     ExpressionUtils.column(Param(l.value, l.dataType))
   }
 
-  /** A bigint → double table (`keys` distinct) as a lookup column
-    * function: the pairs are sorted once here into a [[Param]], and each
-    * application is a [[SortedLookup]] of that one table, so a memo can
-    * keep the function and every plan reuses the same value.
+  /** A bigint → double table (`keys` distinct), sorted once here into
+    * a [[LongDoubleTable]]: plans read it as a lookup column and the
+    * driver by binary search, so a memo can keep one table for both.
     */
-  def longDoubleTable(keys: Array[Long], values: Array[Double]): Column => Column = {
+  def longDoubleTable(keys: Array[Long], values: Array[Double]): LongDoubleTable = {
     val order = keys.indices.sortBy(keys(_)).toArray
     val ks = order.map(keys(_))
     require(ks.indices.drop(1).forall(i => ks(i - 1) != ks(i)), "longDoubleTable keys must be distinct")
-    val table = Param(
-      new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(ks),
-        UnsafeArrayData.fromPrimitiveArray(order.map(values(_)))),
-      MapType(LongType, DoubleType, valueContainsNull = false))
-    key => ExpressionUtils.column(SortedLookup(ExpressionUtils.expression(key), table))
+    new LongDoubleTable(ks, order.map(values(_)))
+  }
+}
+
+/** A bigint → double table over ascending distinct `keys`. Applied to a
+  * key column, it is a [[SortedLookup]] of one [[Param]] holding the
+  * pairs, so every plan reuses the same value; [[at]] reads the same
+  * pairs on the driver.
+  */
+final class LongDoubleTable private[graft] (keys: Array[Long], values: Array[Double]) {
+  private val table = Param(
+    new ArrayBasedMapData(UnsafeArrayData.fromPrimitiveArray(keys),
+      UnsafeArrayData.fromPrimitiveArray(values)),
+    MapType(LongType, DoubleType, valueContainsNull = false))
+
+  def apply(key: Column): Column =
+    ExpressionUtils.column(SortedLookup(ExpressionUtils.expression(key), table))
+
+  /** The value of `k`, by binary search; NoSuchElementException when absent. */
+  def at(k: Long): Double = {
+    val i = java.util.Arrays.binarySearch(keys, k)
+    if (i < 0) throw new NoSuchElementException(s"key $k is not in the table")
+    values(i)
   }
 }

@@ -13,7 +13,8 @@ import graft.operators.{Ivf, TextRetrieval, VectorSearch}
   * per-request primitive folded into the generated source would make
   * every request compile anew. The hybrids cover the blend's keyword
   * map literal and its candidate scan's cut key; the by-id searches
-  * cover the member lookup their construction runs.
+  * cover the member lookup their construction runs, and the
+  * documents-filtered one its fresh `lang` and `min_chars` values.
   */
 class CompileOnceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -56,6 +57,10 @@ class CompileOnceSpec extends AnyFunSuite {
         "filteredTopK" -> (i => VectorSearch.filteredTopK(spark, sf, 20L + i, 10, Seq(1, 3))),
         "metaFilteredTopK" -> (i =>
           VectorSearch.metaFilteredTopK(spark, sf, 30L + i, 10, "en", 200L)),
+        // fresh filter values: the passing ids are a lookup param
+        "metaFilteredTopK lang/min_chars" -> (i =>
+          VectorSearch.metaFilteredTopK(spark, sf, 30L, 10, Seq("en", "de", "fr", "es")(i),
+            50L * (i + 1))),
         "simMatrix" -> (i => VectorSearch.simMatrix(spark, sf, Seq(40L + i, 50L + i, 60L + i))))
       val fresh = calls.map { case (name, call) =>
         call(0).collect()

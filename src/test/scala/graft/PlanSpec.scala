@@ -432,6 +432,18 @@ class PlanSpec extends AnyFunSuite {
     scans
   }
 
+  /** No scan of a free-text hybrid reads the TF-IDF model's postings
+    * (`w` or `tf`): its keyword leg is a driver read of the query terms'
+    * pages. */
+  private def assertNoPostingsScan(name: String,
+                                   scans: Seq[org.apache.spark.sql.execution.FileSourceScanExec])
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    val postings = scans.filter(_.relation.location.rootPaths.exists(p =>
+      Set("w", "tf")(p.getName) && p.getParent.getName.startsWith("tfidf")))
+    assert(postings.isEmpty, s"$name scans the model's postings:\n" + postings.mkString("\n"))
+    scans
+  }
+
   /** The documents scan of a filtered hybrid carries both metadata
     * predicates as pushed parquet filters. */
   private def assertFiltersPushed(scans: Seq[org.apache.spark.sql.execution.FileSourceScanExec])
@@ -443,27 +455,30 @@ class PlanSpec extends AnyFunSuite {
     assert(pushed.contains("GreaterThanOrEqual(n_chars,200)"), pushed)
   }
 
-  // Job bounds: the free-text forms run the keyword leg (1 job: the
-  // document norms or lengths are a driver lookup) and the candidate
-  // scan (1); a metadata filter adds its documents broadcast (1); the
-  // by-id form adds the query document's terms broadcast (1), and its
-  // member vector is a driver point read (no job, no `embedding` scan).
+  // Job bounds: the free-text forms run the candidate scan (1 job);
+  // their keyword leg is a driver read of the query terms' postings
+  // (no job, no `w`/`tf` scan). A metadata filter adds its documents
+  // broadcast (1); the by-id form runs its keyword leg in Spark (1) and
+  // the query document's terms broadcast (1), and its member vector is
+  // a driver point read (no job, no `embedding` scan).
   test("hybrid blend materializes the candidate subtree once (no double corpus scan)") {
-    assertBlendShape("hybrid_topk_free", maxJobs = 2)
-    assertBlendShape("hybrid_topk_text", maxJobs = 2)
+    assertNoPostingsScan("hybrid_topk_free", assertBlendShape("hybrid_topk_free", maxJobs = 1))
+    assertNoPostingsScan("hybrid_topk_text", assertBlendShape("hybrid_topk_text", maxJobs = 1))
     assertBlendShape("hybrid_topk", maxJobs = 3)
   }
 
   test("bm25 hybrid blend shares the single-scan shape and pushes candidate filters") {
-    assertBlendShape("bm25_hybrid_topk", maxJobs = 2)
-    assertFiltersPushed(assertBlendShape("bm25_hybrid_filtered", maxJobs = 3))
+    assertNoPostingsScan("bm25_hybrid_topk", assertBlendShape("bm25_hybrid_topk", maxJobs = 1))
+    assertFiltersPushed(assertNoPostingsScan("bm25_hybrid_filtered",
+      assertBlendShape("bm25_hybrid_filtered", maxJobs = 2)))
   }
 
   // One bound per serve_small request shape (perfbench's seven types,
   // filtered in both forms), counted over one warm call plus its
   // collect(): a by-id member lookup is a driver point read, compare is
-  // scored on the driver, and the keyword leg reads the document norms
-  // from a driver lookup instead of a broadcast.
+  // scored on the driver, the free-text hybrid's keyword leg is a driver
+  // read of the query terms' postings, and the documents filter is a
+  // driver lookup of the passing ids.
   test("every serve request shape runs within its Spark job bound") {
     import org.apache.spark.sql.functions.col
     import graft.functions.CorpusLexicalEncoder
@@ -480,10 +495,10 @@ class PlanSpec extends AnyFunSuite {
       val shapes: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
         ("item", 1, () => VectorSearch.topK(spark, sf, 3L, 10)),
         ("filtered, labels", 1, () => VectorSearch.filteredTopK(spark, sf, 3L, 10, Seq(1, 3))),
-        ("filtered, lang/min_chars", 2,
+        ("filtered, lang/min_chars", 1,
           () => VectorSearch.metaFilteredTopK(spark, sf, 3L, 10, "en", 200L)),
         ("compare", 0, () => VectorSearch.simMatrix(spark, sf, Seq(1L, 2L, 3L))),
-        ("hybrid, free text", 2,
+        ("hybrid, free text", 1,
           () => TextRetrieval.hybridTopKFree(spark, sf, qv, text, 0.7, 10, None)),
         ("text", 1, () => VectorSearch.topKText(spark, sf, text, 10)),
         ("vec", 1, () => VectorSearch.topKVec(spark, sf, qv, 10)),
@@ -534,7 +549,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("filtered hybrid search pushes the metadata filters into the documents scan") {
     assertFiltersPushed(assertBlendShape("hybrid_filtered", maxJobs = 4))
-    assertFiltersPushed(assertBlendShape("hybrid_filtered_free", maxJobs = 3))
+    assertFiltersPushed(assertNoPostingsScan("hybrid_filtered_free",
+      assertBlendShape("hybrid_filtered_free", maxJobs = 2)))
   }
 
   test("random projection is a narrow map (no hash-partitioned shuffle)") {

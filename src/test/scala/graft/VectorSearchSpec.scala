@@ -101,6 +101,57 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(VF.memberVector(spark, dir, 0L).toSeq == Seq(1.0f, 0.0f))
   }
 
+  /** [[VectorSearch.metaFilteredTopK]]'s candidates as the join of the
+    * embeddings with the passing documents, scored by the same scan. */
+  private def metaJoinTopK(dir: String, id: Long, k: Int, lang: String,
+                           minChars: Long): Seq[org.apache.spark.sql.Row] = {
+    val docs = Tables.documents(spark, dir)
+      .where(col("lang") === lang && col("n_chars") >= minChars).select(col("doc_id"))
+    VectorSearch.topKVecOf(Tables.embeddings(spark, dir)
+        .join(docs, col("vec_id") === col("doc_id")).where(col("vec_id") =!= id)
+        .select(col("vec_id"), col("embedding")),
+      graft.functions.VectorFunctions.memberVector(spark, dir, id), k).collect().toSeq
+  }
+
+  test("the driver documents filter equals the join form over random (id, lang, min_chars)") {
+    val sf = TestSpark.sf
+    val ids = Tables.embeddings(spark, sf).select(col("vec_id")).collect().map(_.getLong(0))
+    val langs = Tables.documents(spark, sf).select(col("lang")).distinct().collect()
+      .map(_.getString(0)).filter(_ != null).sorted :+ "xx"
+    val rnd = new scala.util.Random(17)
+    (0 until 24).foreach { _ =>
+      val (id, lang) = (ids(rnd.nextInt(ids.length)), langs(rnd.nextInt(langs.length)))
+      val minChars = Seq(0L, 50L, 100L, 200L, 300L, 100000L)(rnd.nextInt(6))
+      assert(VectorSearch.metaFilteredTopK(spark, sf, id, 10, lang, minChars).collect().toSeq ==
+        metaJoinTopK(sf, id, 10, lang, minChars), s"id $id lang $lang min_chars $minChars")
+    }
+  }
+
+  test("the documents filter drops null lang and n_chars and fails by name on a duplicate id") {
+    def fixture(docs: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-meta-filter").toString
+      spark.sql(s"SELECT * FROM VALUES $docs AS t(doc_id, text, lang, source, n_chars)")
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      spark.sql("""SELECT * FROM VALUES (0L, array(1.0f, 0.0f), 0), (1L, array(1.0f, 1.0f), 0),
+          (2L, array(0.0f, 1.0f), 0), (3L, array(1.0f, 0.5f), 0), (4L, array(0.5f, 1.0f), 0)
+          AS t(vec_id, embedding, label)""").coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val clean = fixture("""(0L, 'a', 'en', 'g', 300L), (1L, 'b', CAST(NULL AS string), 'g', 300L),
+        (2L, 'c', 'en', 'g', CAST(NULL AS bigint)), (3L, 'd', 'en', 'g', 250L),
+        (4L, 'e', 'de', 'g', 400L), (4L, 'e', 'de', 'g', 400L)""")
+    val got = VectorSearch.metaFilteredTopK(spark, clean, 0L, 10, "en", 200L).collect().toSeq
+    assert(got.map(_.getLong(0)) == Seq(3L), got)
+    assert(got == metaJoinTopK(clean, 0L, 10, "en", 200L))
+    // doc 4 repeats, but only under a filter that does not pass it
+    assert(VectorSearch.metaFilteredTopK(spark, clean, 0L, 10, "en", 0L).collect()
+      .map(_.getLong(0)).toSeq == Seq(3L))
+    val e = intercept[IllegalArgumentException](
+      VectorSearch.metaFilteredTopK(spark, clean, 0L, 10, "de", 0L))
+    assert(e.getMessage ==
+      VectorSearch.duplicateDocument(s"$clean/documents.parquet", 4L).getMessage)
+  }
+
   test("by-id searches get their query only from memberVector (no in-plan member lookup)") {
     import java.nio.file.{Files, Paths}
     // the member's stored CODE is sq8's query, not its float vector
